@@ -31,7 +31,7 @@ mkdir -p "$WORK/logs" "$WORK/pids" "$WORK/work"
 
 [ -f "$JAR" ] || { echo "jar missing — run: sbt package"; exit 1; }
 
-if [ ! -f "$SNAP/manifest.bin" ]; then
+if [ ! -f "$SNAP/manifest.json" ]; then
   echo "[standalone] prebuilding snapshot ($CONVS convs, 64 parts, keyShift=20)"
   "$SPARK_HOME/bin/spark-submit" --master 'local[32]' --driver-memory 40g \
     --class graft.tools.GenEdges "$JAR" \

@@ -1,5 +1,9 @@
 package graft.engine
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+import scala.util.Using
+
 import org.apache.spark.{Partitioner, SparkContext, TaskContext}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
@@ -51,12 +55,17 @@ import graft.core.LinkGraph
   * "each superstep checkpoints per-partition frontier state plus lineage and
   * iteration metrics ... so runs resume mid-algorithm" — the throughput-path
   * twin of the Column engine's [[CheckpointConfig]]). Every `every`
-  * supersteps the full per-partition vertex state is committed under
-  * `dir/runId/` together with per-partition lineage (`partitions.json`) and
-  * per-superstep metrics (`metrics.jsonl`); `latest.json` is the commit
-  * pointer, written last. Pass to `pageRankConverged` / `minFixpoint` /
-  * `connectedComponents` / `bfs` / `sssp`: if a committed checkpoint already
-  * exists under `dir/runId`, the run RESUMES from it instead of restarting.
+  * supersteps (and at the stop) the full per-partition vertex state is
+  * written under `dir/runId/iter=N/state` together with per-partition
+  * lineage (`partitions.json`) and per-superstep metrics (`metrics.jsonl`);
+  * `latest.json` is the commit pointer, written last, and the only commit.
+  * A due checkpoint costs no Spark job of its own: the state write is the
+  * superstep's job (`writeBlocks` materializes the new state), and the text
+  * commit runs on a background thread while the next superstep computes;
+  * the run returns (or throws) only after its last commit is durable. Pass
+  * to `pageRankConverged` / `minFixpoint` / `connectedComponents` / `bfs` /
+  * `sssp` / `labelPropagation`: if a committed checkpoint already exists
+  * under `dir/runId`, the run RESUMES from it instead of restarting.
   * All durable IO goes through `store` ([[SnapshotStore]]); in production
   * these are Iceberg snapshot commits, and the default
   * [[HadoopSnapshotStore]] (object-files-with-a-pointer over the Hadoop
@@ -687,40 +696,40 @@ object GatherScatter {
    * WriteGraphMatBin/ReadGraphMatBin (`include/GMDP/...` via graph_converter):
    * persist the BUILT structures so later runs (or other sessions) skip
    * ingest+routing+layout entirely. One object file per partition for the
-   * edge blocks and the vertex/incoming-index metadata, plus a driver-side
-   * manifest with the global fields. `load` restores partition alignment by
-   * an explicit partitionBy on the stored partition ids.
+   * edge blocks and the vertex/incoming-index metadata, plus a text
+   * manifest (`manifest.json`) with the global fields. Every byte goes
+   * through `store`. `load` restores partition alignment by an explicit
+   * partitionBy on the stored partition ids.
    */
   def save(g: PrGraph, path: String,
            store: SnapshotStore = HadoopSnapshotStore): Unit = {
+    // an older snapshot's manifest must not vouch for half-written blocks
+    store.deleteIfExists(g.csr.sparkContext, s"$path/manifest.json")
     store.writeBlocks(
       g.csr.mapPartitionsWithIndex((p, it) => it.map(b => (p, b))), s"$path/csr")
     store.writeBlocks(
       g.meta.mapPartitionsWithIndex((p, it) => it.map(m => (p, m))), s"$path/meta")
-    // manifest through the SAME FileSystem the blocks used: a java.nio local
-    // write under an hdfs:// or s3a:// path would leave a half-written
-    // snapshot (blocks remote, manifest missing)
-    val hp = new org.apache.hadoop.fs.Path(s"$path/manifest.bin")
-    val fs = hp.getFileSystem(
-      g.csr.sparkContext.hadoopConfiguration)
-    val oos = new java.io.ObjectOutputStream(fs.create(hp, true))
-    try {
-      oos.writeInt(g.numPartitions); oos.writeLong(g.numEdges)
-      oos.writeLong(g.numVertices); oos.writeObject(g.hotIds)
-      oos.writeBoolean(g.weighted)
-    } finally oos.close()
+    // written last: a snapshot without its manifest does not load
+    store.writeText(g.csr.sparkContext, s"$path/manifest.json",
+      s"""{"partitions":${g.numPartitions},"edges":${g.numEdges},""" +
+      s""""vertices":${g.numVertices},"weighted":${g.weighted},""" +
+      s""""hotIds":${g.hotIds.mkString("[", ",", "]")}}""")
   }
 
   def load(spark: SparkSession, path: String,
            store: SnapshotStore = HadoopSnapshotStore): PrGraph = {
     val sc = spark.sparkContext
-    val hp = new org.apache.hadoop.fs.Path(s"$path/manifest.bin")
-    val ois = new java.io.ObjectInputStream(
-      hp.getFileSystem(sc.hadoopConfiguration).open(hp))
-    val (n, nE, nV, hotIds, wtd) =
-      try (ois.readInt(), ois.readLong(), ois.readLong(),
-           ois.readObject().asInstanceOf[Array[Long]], ois.readBoolean())
-      finally ois.close()
+    val manifest = store.readText(sc, s"$path/manifest.json").getOrElse(
+      throw new java.io.FileNotFoundException(s"no CSR snapshot at $path (manifest.json)"))
+    def field(k: String) = s""""$k":([^,}\\]]*)""".r.findFirstMatchIn(manifest)
+      .getOrElse(throw new IllegalArgumentException(s"$path/manifest.json has no $k"))
+      .group(1)
+    val (n, nE, nV, wtd) =
+      (field("partitions").toInt, field("edges").toLong, field("vertices").toLong,
+       field("weighted").toBoolean)
+    val hotIds = """"hotIds":\[([^\]]*)\]""".r.findFirstMatchIn(manifest)
+      .map(_.group(1)).filter(_.nonEmpty).map(_.split(',').map(_.toLong))
+      .getOrElse(Array.emptyLongArray)
     val idPart = new IdPartitioner(n)
     // CRITICAL: cache ONE combined (csr, meta) RDD, not two. Caching the two
     // object files separately puts partition i's CSR block and its vertex
@@ -763,83 +772,138 @@ object GatherScatter {
   private val metricLineRe =
     """\{"iteration":(\d+),"changed":(-?\d+),"millis":(\d+)\}""".r
 
-  private def writeCheckpoint(g: PrGraph, cp: CsrCheckpoint, iter: Int,
-      converged: Boolean, state: RDD[Array[Double]],
-      metrics: Seq[IterationMetrics]): Unit = {
-    val sc = g.csr.sparkContext
-    val root = s"${cp.dir}/${cp.runId}"
-    val statePath = s"$root/iter=$iter/state"
-    // writeBlocks deletes half-written state from a crash before saving
-    cp.store.writeBlocks(
-      state.zipPartitions(g.verts, preservesPartitioning = true) { (rIt, vIt) =>
-        val vm = vIt.next()
-        Iterator.single((TaskContext.getPartitionId(), RankBlock(vm.ids, rIt.next())))
-      }, statePath)
-    // per-partition lineage: the static layout a resumed run must reproduce
-    // (vertex/receiver/edge counts per partition) — written once per run
-    if (!cp.store.exists(sc, s"$root/partitions.json")) {
-      val rows = g.csr.zipPartitions(g.verts, preservesPartitioning = true) { (cIt, vIt) =>
-        val blk = cIt.next(); val vm = vIt.next()
-        var e = blk.hotEdgeSrcIdx.length
-        var tp = 0
-        while (tp < blk.edgeSrcIdx.length) {
-          if (blk.edgeSrcIdx(tp) != null) e += blk.edgeSrcIdx(tp).length
-          tp += 1
+  /** The checkpoint side of one CSR run ([[CsrCheckpoint]]); without a
+    * checkpoint, every method is the plain uncheckpointed step. A due
+    * checkpoint costs no Spark job of its own: its state write IS the
+    * superstep's job ([[materialize]]), and its text commit — metrics, then
+    * the `latest.json` pointer — runs on a background thread while the next
+    * superstep computes. At most one commit is in flight, so the pointer
+    * only moves forward; [[close]] awaits it and rethrows its failure on the
+    * caller's thread, and every exit of a run must close (`Using`). */
+  private final class Checkpoints(g: PrGraph, cp: Option[CsrCheckpoint],
+                                  maxIterations: Int) extends AutoCloseable {
+    private val sc = g.csr.sparkContext
+    private var metrics = Vector.empty[IterationMetrics]
+    private var lineageDone = false
+    private var inFlight: Future[Unit] = Future.unit
+
+    private def root(c: CsrCheckpoint) = s"${c.dir}/${c.runId}"
+    private def due(it: Int) = cp.exists(c => it % c.every == 0 || it >= maxIterations)
+
+    /** (state aligned to this graph's layout, superstep, converged) of the
+      * committed checkpoint; None when there is none. */
+    def resume(): Option[(RDD[Array[Double]], Int, Boolean)] = cp.flatMap { c =>
+      c.store.readText(sc, s"${root(c)}/latest.json").map { txt =>
+        val iter = """"iteration"\s*:\s*(\d+)""".r
+          .findFirstMatchIn(txt).get.group(1).toInt
+        val converged = txt.contains(""""converged":true""")
+        // driver-side pre-check: a partition-count mismatch must fail with a
+        // clear message, not an out-of-range shuffle key deep in a task
+        """"partitions"\s*:\s*(\d+)""".r.findFirstMatchIn(txt).foreach { m =>
+          require(m.group(1).toInt == g.numPartitions,
+            s"checkpoint ${c.runId}/iter=$iter does not align with this " +
+            s"graph: saved with ${m.group(1)} partitions, graph has " +
+            s"${g.numPartitions} (resume needs the same build parameters)")
         }
-        Iterator.single((TaskContext.getPartitionId(), vm.ids.length, vm.nRecv, e))
-      }.collect().sortBy(_._1)
-      cp.store.writeText(sc, s"$root/partitions.json", rows.map { case (p, v, r, e) =>
-        s"""{"partition":$p,"vertices":$v,"receivers":$r,"edges":$e}"""
-      }.mkString("[", ",", "]"))
+        val idPart = new IdPartitioner(g.numPartitions)
+        val state = c.store.readBlocks[RankBlock](sc, s"${root(c)}/iter=$iter/state")
+          .partitionBy(idPart)
+          .zipPartitions(g.verts, preservesPartitioning = true) { (lIt, vIt) =>
+            val rb = lIt.next()._2; val vm = vIt.next()
+            require(java.util.Arrays.equals(rb.ids, vm.ids),
+              s"checkpoint ${c.runId}/iter=$iter does not align with this " +
+              "graph: resume needs the same edge set built with the same " +
+              "numPartitions/keyShift/hotDegree (layouts are deterministic; " +
+              "see build())")
+            Iterator.single(rb.pr)
+          }
+        metrics = c.store.readText(sc, s"${root(c)}/metrics.jsonl").map {
+          _.linesIterator.collect {
+            case metricLineRe(i, ch, ms) if i.toInt <= iter =>
+              IterationMetrics(i.toInt, ch.toLong, ms.toLong)
+          }.toVector
+        }.getOrElse(Vector.empty)
+        (state, iter, converged)
+      }
     }
-    cp.store.writeText(sc, s"$root/metrics.jsonl", metrics.map(m =>
-      s"""{"iteration":${m.iteration},"changed":${m.changed},"millis":${m.millis}}""")
-      .mkString("", "\n", "\n"))
-    // the pointer commits the checkpoint — written LAST, so a crash during
-    // any earlier write leaves the previous committed state resumable
-    cp.store.writeText(sc, s"$root/latest.json",
-      s"""{"iteration":$iter,"converged":$converged,"partitions":${g.numPartitions}}""")
+
+    /** Runs superstep `it`'s one job, which computes and caches the
+      * persisted `state`: when the checkpoint of `it` is due, the job writes
+      * `values` (a projection of `state`), else it is a bare count. */
+    def materialize(it: Int, state: RDD[_], values: => RDD[Array[Double]]): Unit =
+      cp match {
+        case Some(c) if due(it) => writeState(c, it, values)
+        case _ => state.count()
+      }
+
+    /** Records superstep `it` and commits its checkpoint when due, or when
+      * the run converged on a superstep that was not due: then the state
+      * (already cached) is written here, after the in-flight commit. */
+    def commit(it: Int, converged: Boolean, changed: Long, millis: Long,
+               values: => RDD[Array[Double]]): Unit = cp.foreach { c =>
+      metrics :+= IterationMetrics(it, changed, millis)
+      if (due(it) || converged) {
+        close() // the previous commit, which ran alongside this superstep
+        if (!due(it)) writeState(c, it, values)
+        val texts = lineage(c).toSeq ++ Seq(
+          s"${root(c)}/metrics.jsonl" -> metrics.map(m =>
+            s"""{"iteration":${m.iteration},"changed":${m.changed},"millis":${m.millis}}""")
+            .mkString("", "\n", "\n"),
+          // the pointer commits the checkpoint — written LAST, so a crash
+          // during any earlier write leaves the previous state resumable
+          s"${root(c)}/latest.json" ->
+            s"""{"iteration":$it,"converged":$converged,"partitions":${g.numPartitions}}""")
+        inFlight = Future(texts.foreach { case (p, t) => c.store.writeText(sc, p, t) })(commitPool)
+      }
+    }
+
+    /** Awaits the in-flight commit; rethrows its failure. */
+    def close(): Unit = {
+      val f = inFlight
+      inFlight = Future.unit
+      Await.result(f, Duration.Inf)
+    }
+
+    private def writeState(c: CsrCheckpoint, it: Int, values: RDD[Array[Double]]): Unit =
+      // writeBlocks deletes half-written state from a crash before saving
+      c.store.writeBlocks(
+        values.zipPartitions(g.verts, preservesPartitioning = true) { (rIt, vIt) =>
+          val vm = vIt.next()
+          Iterator.single((TaskContext.getPartitionId(), RankBlock(vm.ids, rIt.next())))
+        }, s"${root(c)}/iter=$it/state")
+
+    /** Per-partition lineage: the static layout a resumed run must reproduce
+      * (vertex/receiver/edge counts per partition) — written once per run
+      * directory, collected here on the caller's thread. */
+    private def lineage(c: CsrCheckpoint): Option[(String, String)] = {
+      val path = s"${root(c)}/partitions.json"
+      val first = !lineageDone
+      lineageDone = true
+      Option.when(first && !c.store.exists(sc, path)) {
+        val rows = g.csr.zipPartitions(g.verts, preservesPartitioning = true) { (cIt, vIt) =>
+          val blk = cIt.next(); val vm = vIt.next()
+          var e = blk.hotEdgeSrcIdx.length
+          var tp = 0
+          while (tp < blk.edgeSrcIdx.length) {
+            if (blk.edgeSrcIdx(tp) != null) e += blk.edgeSrcIdx(tp).length
+            tp += 1
+          }
+          Iterator.single((TaskContext.getPartitionId(), vm.ids.length, vm.nRecv, e))
+        }.collect().sortBy(_._1)
+        path -> rows.map { case (p, v, r, e) =>
+          s"""{"partition":$p,"vertices":$v,"receivers":$r,"edges":$e}"""
+        }.mkString("[", ",", "]")
+      }
+    }
   }
 
-  /** None when no committed checkpoint exists; else (state aligned to this
-    * graph's layout, iteration, converged, prior metrics). */
-  private def readCheckpoint(g: PrGraph, cp: CsrCheckpoint)
-      : Option[(RDD[Array[Double]], Int, Boolean, Vector[IterationMetrics])] = {
-    val sc = g.csr.sparkContext
-    val root = s"${cp.dir}/${cp.runId}"
-    cp.store.readText(sc, s"$root/latest.json").map { txt =>
-      val iter = """"iteration"\s*:\s*(\d+)""".r
-        .findFirstMatchIn(txt).get.group(1).toInt
-      val converged = txt.contains(""""converged":true""")
-      // driver-side pre-check: a partition-count mismatch must fail with a
-      // clear message, not an out-of-range shuffle key deep in a task
-      """"partitions"\s*:\s*(\d+)""".r.findFirstMatchIn(txt).foreach { m =>
-        require(m.group(1).toInt == g.numPartitions,
-          s"checkpoint ${cp.runId}/iter=$iter does not align with this " +
-          s"graph: saved with ${m.group(1)} partitions, graph has " +
-          s"${g.numPartitions} (resume needs the same build parameters)")
-      }
-      val idPart = new IdPartitioner(g.numPartitions)
-      val state = cp.store.readBlocks[RankBlock](sc, s"$root/iter=$iter/state")
-        .partitionBy(idPart)
-        .zipPartitions(g.verts, preservesPartitioning = true) { (lIt, vIt) =>
-          val rb = lIt.next()._2; val vm = vIt.next()
-          require(java.util.Arrays.equals(rb.ids, vm.ids),
-            s"checkpoint ${cp.runId}/iter=$iter does not align with this " +
-            "graph: resume needs the same edge set built with the same " +
-            "numPartitions/keyShift/hotDegree (layouts are deterministic; " +
-            "see build())")
-          Iterator.single(rb.pr)
-        }
-      val metrics = cp.store.readText(sc, s"$root/metrics.jsonl").map {
-        _.linesIterator.collect {
-          case metricLineRe(i, c, m) if i.toInt <= iter =>
-            IterationMetrics(i.toInt, c.toLong, m.toLong)
-        }.toVector
-      }.getOrElse(Vector.empty)
-      (state, iter, converged, metrics)
-    }
-  }
+  /** Background commits: no Spark jobs run here, only store text writes. */
+  private lazy val commitPool: ExecutionContext = ExecutionContext.fromExecutorService(
+    java.util.concurrent.Executors.newCachedThreadPool { r =>
+      val t = new Thread(r, "csr-checkpoint-commit")
+      t.setDaemon(true)
+      t
+    })
 
   /** Dense rank vectors, one Array[Double] per partition, aligned to VertexMeta.ids. */
   private def initRanks(g: PrGraph): RDD[Array[Double]] =
@@ -1200,43 +1264,38 @@ object GatherScatter {
    */
   def pageRankConverged(g: PrGraph, alpha: Double = 0.3, tol: Double = 1e-5,
                         maxIterations: Int = 200,
-                        cp: Option[CsrCheckpoint] = None): (RDD[RankBlock], Int) = {
-    val sc = g.csr.sparkContext
-    var it = 0
-    var converged = false
-    var metrics = Vector.empty[IterationMetrics]
-    var ranks = (cp.flatMap(readCheckpoint(g, _)) match {
-      case Some((r, i, conv, m)) => it = i; converged = conv; metrics = m; r
-      case None => initRanks(g)
-    }).persist(StorageLevel.MEMORY_AND_DISK)
-    ranks.count()
-    var prev = ranks
-    while (!converged && it < maxIterations) {
-      val t0 = System.nanoTime()
-      val changedAcc = sc.longAccumulator(s"changed-$it")
-      val hotPr = if (g.hotIds.isEmpty) null
-                  else sc.broadcast(hotMirror(g, ranks))
-      val (nr, gth) = superstep(g, ranks, alpha, tol, Some(changedAcc), hotPr)
-      val newRanks = nr.persist(StorageLevel.MEMORY_AND_DISK)
-      newRanks.count()
-      gth.unpersist(blocking = false)
-      if (hotPr != null) hotPr.unpersist(blocking = false)
-      prev.unpersist(blocking = false)
-      prev = newRanks
-      ranks = newRanks
-      it += 1
-      converged = changedAcc.value == 0L
-      cp.foreach { c =>
-        metrics :+= IterationMetrics(it, changedAcc.value,
-          (System.nanoTime() - t0) / 1000000)
-        if (it % c.every == 0 || converged || it >= maxIterations)
-          writeCheckpoint(g, c, it, converged, ranks, metrics)
+                        cp: Option[CsrCheckpoint] = None): (RDD[RankBlock], Int) =
+    Using.resource(new Checkpoints(g, cp, maxIterations)) { ck =>
+      val sc = g.csr.sparkContext
+      var it = 0
+      var converged = false
+      var ranks = (ck.resume() match {
+        case Some((r, i, conv)) => it = i; converged = conv; r
+        case None => initRanks(g)
+      }).persist(StorageLevel.MEMORY_AND_DISK)
+      ranks.count()
+      var prev = ranks
+      while (!converged && it < maxIterations) {
+        val t0 = System.nanoTime()
+        val changedAcc = sc.longAccumulator(s"changed-$it")
+        val hotPr = if (g.hotIds.isEmpty) null
+                    else sc.broadcast(hotMirror(g, ranks))
+        val (nr, gth) = superstep(g, ranks, alpha, tol, Some(changedAcc), hotPr)
+        val newRanks = nr.persist(StorageLevel.MEMORY_AND_DISK)
+        ck.materialize(it + 1, newRanks, newRanks)
+        gth.unpersist(blocking = false)
+        if (hotPr != null) hotPr.unpersist(blocking = false)
+        prev.unpersist(blocking = false)
+        prev = newRanks
+        ranks = newRanks
+        it += 1
+        converged = changedAcc.value == 0L
+        ck.commit(it, converged, changedAcc.value, (System.nanoTime() - t0) / 1000000, ranks)
       }
+      val out = materialize(g, ranks)
+      ranks.unpersist(blocking = false)
+      (out, it)
     }
-    val out = materialize(g, ranks)
-    ranks.unpersist(blocking = false)
-    (out, it)
-  }
 
   // ---- the (min, +) semiring on the same static exchange -----------------
   //
@@ -1376,61 +1435,56 @@ object GatherScatter {
                   cp: Option[CsrCheckpoint] = None): (RDD[RankBlock], Int) = {
     require(!useWeights || g.weighted,
       "weighted (min,+) needs build(..., weighted = true)")
-    val sc = g.csr.sparkContext
-    var it = 0
-    var converged = false
-    var metrics = Vector.empty[IterationMetrics]
-    // superstep 0 marks every partition active (correct for any init, and —
-    // see scaladoc — for any RESUMED state); thereafter a partition stays
-    // active only while its vertices change
-    var vals = (cp.flatMap(readCheckpoint(g, _)) match {
-      case Some((r, i, conv, m)) => it = i; converged = conv; metrics = m; r
-      case None => init
-    }).mapPartitions(x => x.map(a => (a, true)), preservesPartitioning = true)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    vals.count()
-    var prev = vals
-    // the hub MIRROR's own frontier: hot shard edges fire only on supersteps
-    // where some hot vertex's value actually moved (compared driver-side —
-    // the mirror is tiny by construction)
-    var prevHot: Array[Double] = null
-    while (!converged && it < maxIterations) {
-      val t0 = System.nanoTime()
-      val changedAcc = sc.longAccumulator(s"min-changed-$it")
-      var hotActive = false
-      val hotV = if (g.hotIds.isEmpty) null
-                 else {
-                   val cur = hotMirror(g, vals.mapPartitions(
-                     it => it.map(_._1), preservesPartitioning = true))
-                   hotActive = prevHot == null || !java.util.Arrays.equals(prevHot, cur)
-                   prevHot = cur
-                   sc.broadcast(cur)
-                 }
-      val (nv, gth) = minStep(g, vals, delta, changedAcc, hotV, hotActive, useWeights)
-      val newVals = nv.persist(StorageLevel.MEMORY_AND_DISK)
-      // long-diameter graphs (chains) run many supersteps: bound lineage
-      if ((it + 1) % 16 == 0) newVals.localCheckpoint()
-      newVals.count()
-      gth.unpersist(blocking = false)
-      if (hotV != null) hotV.unpersist(blocking = false)
-      prev.unpersist(blocking = false)
-      prev = newVals
-      vals = newVals
-      it += 1
-      converged = changedAcc.value == 0L
-      cp.foreach { c =>
-        metrics :+= IterationMetrics(it, changedAcc.value,
-          (System.nanoTime() - t0) / 1000000)
-        if (it % c.every == 0 || converged || it >= maxIterations)
-          writeCheckpoint(g, c, it, converged,
-            vals.mapPartitions(x => x.map(_._1), preservesPartitioning = true),
-            metrics)
+    Using.resource(new Checkpoints(g, cp, maxIterations)) { ck =>
+      val sc = g.csr.sparkContext
+      var it = 0
+      var converged = false
+      // superstep 0 marks every partition active (correct for any init, and —
+      // see scaladoc — for any RESUMED state); thereafter a partition stays
+      // active only while its vertices change
+      var vals = (ck.resume() match {
+        case Some((r, i, conv)) => it = i; converged = conv; r
+        case None => init
+      }).mapPartitions(x => x.map(a => (a, true)), preservesPartitioning = true)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      vals.count()
+      var prev = vals
+      // the hub MIRROR's own frontier: hot shard edges fire only on supersteps
+      // where some hot vertex's value actually moved (compared driver-side —
+      // the mirror is tiny by construction)
+      var prevHot: Array[Double] = null
+      while (!converged && it < maxIterations) {
+        val t0 = System.nanoTime()
+        val changedAcc = sc.longAccumulator(s"min-changed-$it")
+        var hotActive = false
+        val hotV = if (g.hotIds.isEmpty) null
+                   else {
+                     val cur = hotMirror(g, vals.mapPartitions(
+                       it => it.map(_._1), preservesPartitioning = true))
+                     hotActive = prevHot == null || !java.util.Arrays.equals(prevHot, cur)
+                     prevHot = cur
+                     sc.broadcast(cur)
+                   }
+        val (nv, gth) = minStep(g, vals, delta, changedAcc, hotV, hotActive, useWeights)
+        val newVals = nv.persist(StorageLevel.MEMORY_AND_DISK)
+        // long-diameter graphs (chains) run many supersteps: bound lineage
+        if ((it + 1) % 16 == 0) newVals.localCheckpoint()
+        def values = newVals.mapPartitions(x => x.map(_._1), preservesPartitioning = true)
+        ck.materialize(it + 1, newVals, values)
+        gth.unpersist(blocking = false)
+        if (hotV != null) hotV.unpersist(blocking = false)
+        prev.unpersist(blocking = false)
+        prev = newVals
+        vals = newVals
+        it += 1
+        converged = changedAcc.value == 0L
+        ck.commit(it, converged, changedAcc.value, (System.nanoTime() - t0) / 1000000, values)
       }
+      val out = materialize(g, vals.mapPartitions(
+        it => it.map(_._1), preservesPartitioning = true))
+      vals.unpersist(blocking = false)
+      (out, it)
     }
-    val out = materialize(g, vals.mapPartitions(
-      it => it.map(_._1), preservesPartitioning = true))
-    vals.unpersist(blocking = false)
-    (out, it)
   }
 
   /** HashMin connected components on the (min, +) kernel: every vertex
@@ -1682,54 +1736,49 @@ object GatherScatter {
     * (label blocks, supersteps run); resumable via `cp` (labels are exact
     * state and every superstep is dense, so a resumed run is identical). */
   def labelPropagation(g: PrGraph, iterations: Int,
-                       cp: Option[CsrCheckpoint] = None): (RDD[RankBlock], Int) = {
-    val sc = g.csr.sparkContext
-    var it = 0
-    var converged = false
-    var metrics = Vector.empty[IterationMetrics]
-    var labels = (cp.flatMap(readCheckpoint(g, _)) match {
-      case Some((r, i, conv, m)) => it = i; converged = conv; metrics = m; r
-      case None => g.verts.mapPartitions({ vIt =>
-        val vm = vIt.next()
-        val a = new Array[Double](vm.ids.length)
-        var i = 0
-        while (i < a.length) {
-          require(vm.ids(i) < (1L << 53) && vm.ids(i) > -(1L << 53),
-          s"vertex id ${vm.ids(i)} not exact in a Double label")
-          a(i) = vm.ids(i).toDouble
-          i += 1
-        }
-        Iterator.single(a)
-      }, preservesPartitioning = true)
-    }).persist(StorageLevel.MEMORY_AND_DISK)
-    labels.count()
-    var prev = labels
-    while (!converged && it < iterations) {
-      val t0 = System.nanoTime()
-      val changedAcc = sc.longAccumulator(s"lp-changed-$it")
-      val hotL = if (g.hotIds.isEmpty) null else sc.broadcast(hotMirror(g, labels))
-      val (nl, gth) = labelStep(g, labels, changedAcc, hotL)
-      val newLabels = nl.persist(StorageLevel.MEMORY_AND_DISK)
-      if ((it + 1) % 16 == 0) newLabels.localCheckpoint()
-      newLabels.count()
-      gth.unpersist(blocking = false)
-      if (hotL != null) hotL.unpersist(blocking = false)
-      prev.unpersist(blocking = false)
-      prev = newLabels
-      labels = newLabels
-      it += 1
-      converged = changedAcc.value == 0L
-      cp.foreach { c =>
-        metrics :+= IterationMetrics(it, changedAcc.value,
-          (System.nanoTime() - t0) / 1000000)
-        if (it % c.every == 0 || converged || it >= iterations)
-          writeCheckpoint(g, c, it, converged, labels, metrics)
+                       cp: Option[CsrCheckpoint] = None): (RDD[RankBlock], Int) =
+    Using.resource(new Checkpoints(g, cp, iterations)) { ck =>
+      val sc = g.csr.sparkContext
+      var it = 0
+      var converged = false
+      var labels = (ck.resume() match {
+        case Some((r, i, conv)) => it = i; converged = conv; r
+        case None => g.verts.mapPartitions({ vIt =>
+          val vm = vIt.next()
+          val a = new Array[Double](vm.ids.length)
+          var i = 0
+          while (i < a.length) {
+            require(vm.ids(i) < (1L << 53) && vm.ids(i) > -(1L << 53),
+            s"vertex id ${vm.ids(i)} not exact in a Double label")
+            a(i) = vm.ids(i).toDouble
+            i += 1
+          }
+          Iterator.single(a)
+        }, preservesPartitioning = true)
+      }).persist(StorageLevel.MEMORY_AND_DISK)
+      labels.count()
+      var prev = labels
+      while (!converged && it < iterations) {
+        val t0 = System.nanoTime()
+        val changedAcc = sc.longAccumulator(s"lp-changed-$it")
+        val hotL = if (g.hotIds.isEmpty) null else sc.broadcast(hotMirror(g, labels))
+        val (nl, gth) = labelStep(g, labels, changedAcc, hotL)
+        val newLabels = nl.persist(StorageLevel.MEMORY_AND_DISK)
+        if ((it + 1) % 16 == 0) newLabels.localCheckpoint()
+        ck.materialize(it + 1, newLabels, newLabels)
+        gth.unpersist(blocking = false)
+        if (hotL != null) hotL.unpersist(blocking = false)
+        prev.unpersist(blocking = false)
+        prev = newLabels
+        labels = newLabels
+        it += 1
+        converged = changedAcc.value == 0L
+        ck.commit(it, converged, changedAcc.value, (System.nanoTime() - t0) / 1000000, labels)
       }
+      val out = materialize(g, labels)
+      labels.unpersist(blocking = false)
+      (out, it)
     }
-    val out = materialize(g, labels)
-    labels.unpersist(blocking = false)
-    (out, it)
-  }
 
   private def singleSourceInit(g: PrGraph, source: Long): RDD[Array[Double]] =
     g.verts.mapPartitions({ it =>

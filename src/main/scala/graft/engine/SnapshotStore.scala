@@ -1,10 +1,16 @@
 package graft.engine
 
+import java.io.{IOException, ObjectOutputStream}
+
 import scala.reflect.ClassTag
 
-import org.apache.spark.SparkContext
+import org.apache.hadoop.fs.{FileContext, FileSystem, LocalFileSystem, Options, Path}
+import org.apache.hadoop.io.{BytesWritable, NullWritable, SequenceFile}
+import org.apache.hadoop.io.SequenceFile.CompressionType
+import org.apache.spark.{SparkContext, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.util.SerializableConfiguration
 
 /**
  * Storage seam for every durable artifact the engine commits mid-run:
@@ -19,12 +25,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * [[HadoopSnapshotStore]] renders the same commit discipline — data files
  * first, the `latest` pointer LAST, so a crash mid-write always leaves the
  * previous committed state resumable — over Hadoop `FileSystem` paths
- * (local, hdfs://, s3a://) with parquet/object-file payloads. An Iceberg
+ * (local, hdfs://, s3a://) with parquet/object-file payloads. The pointer
+ * is the only commit: data files need no commit protocol of their own,
+ * because nothing reads them before a pointer names them. An Iceberg
  * implementation is a drop-in: `writeState`/`readState` become table
  * appends/snapshot reads, `writeBlocks` a table of (partition, blob) rows,
  * and the text manifests snapshot properties/tags; callers ([[Superstep]],
  * [[GatherScatter]]) see only this trait via the `store` field on
  * [[CheckpointConfig]] / [[CsrCheckpoint]].
+ *
+ * Threading: the CSR engine commits a checkpoint's text artifacts on a
+ * background thread while the next superstep runs, so `writeText` may be
+ * called from another thread while `writeBlocks` runs (never two
+ * `writeText`s of one run at once).
  */
 trait SnapshotStore extends Serializable {
 
@@ -46,18 +59,22 @@ trait SnapshotStore extends Serializable {
   def readState(spark: SparkSession, path: String): DataFrame
 
   /** Partition-aligned binary blocks: element i of `blocks` carries its own
-    * partition id so a reader can restore alignment via `partitionBy`. */
+    * partition id so a reader can restore alignment via `partitionBy`.
+    * `blocks` may be unmaterialized: the CSR engine passes a superstep's
+    * own output, so this write is the job that computes (and caches) the
+    * new state. An implementation must therefore compute every partition
+    * of `blocks` before it returns. */
   def writeBlocks[T: ClassTag](blocks: RDD[(Int, T)], path: String): Unit
 
   def readBlocks[T: ClassTag](sc: SparkContext, path: String): RDD[(Int, T)]
 }
 
-/** The parquet/object-file rendering over Hadoop FileSystem — behaviorally
-  * identical to the engine's original direct writes. */
+/** The parquet/object-file rendering over Hadoop FileSystem. Blocks are
+  * written in the format `SparkContext.objectFile` reads. */
 object HadoopSnapshotStore extends SnapshotStore {
 
   private def fsOf(sc: SparkContext, path: String) = {
-    val hp = new org.apache.hadoop.fs.Path(path)
+    val hp = new Path(path)
     (hp, hp.getFileSystem(sc.hadoopConfiguration))
   }
 
@@ -67,21 +84,49 @@ object HadoopSnapshotStore extends SnapshotStore {
     // resume discipline the trait contract promises (rename is atomic on
     // local and HDFS; object stores substitute their own atomic PUT)
     val (hp, fs) = fsOf(sc, path)
-    val tmp = new org.apache.hadoop.fs.Path(
-      hp.getParent, s".${hp.getName}.tmp-${System.nanoTime()}")
+    val bytes = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    fs match {
+      case local: LocalFileSystem => writeLocal(local.pathToFile(hp).toPath, bytes)
+      case _ => writeHadoop(sc, fs, hp, bytes)
+    }
+  }
+
+  /** The local filesystem: a plain file write and rename(2), which replaces
+    * the target atomically. Hadoop's own create and FileContext rename fork
+    * `chmod` and `readlink` processes when the native library is absent,
+    * about 30 ms per text write. No checksum file is written; a stale one
+    * from an earlier Hadoop write goes first, so a read never checks new
+    * bytes against it. */
+  private def writeLocal(f: java.nio.file.Path, bytes: Array[Byte]): Unit = {
+    import java.nio.file.{Files, StandardCopyOption}
+    Files.createDirectories(f.getParent)
+    val tmp = f.resolveSibling(s".${f.getFileName}.tmp-${System.nanoTime()}")
+    Files.write(tmp, bytes)
+    Files.deleteIfExists(f.resolveSibling(s".${f.getFileName}.crc"))
+    Files.move(tmp, f, StandardCopyOption.ATOMIC_MOVE)
+  }
+
+  private def writeHadoop(sc: SparkContext, fs: FileSystem, hp: Path, bytes: Array[Byte]): Unit = {
+    val tmp = new Path(hp.getParent, s".${hp.getName}.tmp-${System.nanoTime()}")
     val out = fs.create(tmp, true)
-    try out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    try out.write(bytes)
     finally out.close()
-    try {
-      // FileContext rename with OVERWRITE is atomic on local/HDFS even when
-      // the destination exists (plain FileSystem.rename is not)
-      org.apache.hadoop.fs.FileContext.getFileContext(hp.toUri, sc.hadoopConfiguration)
-        .rename(tmp, hp, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    } catch {
-      case _: UnsupportedOperationException =>
-        if (fs.exists(hp)) fs.delete(hp, false)
-        if (!fs.rename(tmp, hp))
-          throw new java.io.IOException(s"rename $tmp -> $hp failed")
+    def replace(): Unit = {
+      if (fs.exists(hp)) fs.delete(hp, false)
+      if (!fs.rename(tmp, hp)) throw new IOException(s"rename $tmp -> $hp failed")
+    }
+    // FileContext rename with OVERWRITE is atomic on local/HDFS even when
+    // the destination exists (plain FileSystem.rename is not); a scheme with
+    // a FileSystem but no AbstractFileSystem binding (getFileContext throws
+    // UnsupportedFileSystemException) or no overwrite-rename gets
+    // delete + rename
+    val fc = try Some(FileContext.getFileContext(hp.toUri, sc.hadoopConfiguration))
+             catch { case _: IOException => None }
+    fc match {
+      case Some(c) =>
+        try c.rename(tmp, hp, Options.Rename.OVERWRITE)
+        catch { case _: UnsupportedOperationException => replace() }
+      case None => replace()
     }
   }
 
@@ -111,9 +156,42 @@ object HadoopSnapshotStore extends SnapshotStore {
   override def readState(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 
+  /** One `part-NNNNN` per partition, written by that partition's task: a
+    * `SequenceFile[NullWritable, BytesWritable]` of Java-serialized groups of
+    * up to 10 elements, uncompressed — what `saveAsObjectFile` writes,
+    * without its output committer (`_temporary` tree, task and job commit
+    * renames, `_SUCCESS`). Each task writes a hidden attempt-unique temp file
+    * and renames it into place; readers skip hidden names, so a failed
+    * attempt's leftover is never read. */
   override def writeBlocks[T: ClassTag](blocks: RDD[(Int, T)], path: String): Unit = {
-    deleteIfExists(blocks.sparkContext, path) // half-written blocks from a crash
-    blocks.saveAsObjectFile(path)
+    val sc = blocks.sparkContext
+    deleteIfExists(sc, path) // half-written blocks from a crash
+    val conf = new SerializableConfiguration(sc.hadoopConfiguration)
+    sc.runJob(blocks, (ctx: TaskContext, it: Iterator[(Int, T)]) => {
+      val dir = new Path(path)
+      val fs = dir.getFileSystem(conf.value)
+      val part = new Path(dir, f"part-${ctx.partitionId()}%05d")
+      val tmp = new Path(dir,
+        s".${part.getName}-${ctx.stageAttemptNumber()}-${ctx.taskAttemptId()}.tmp")
+      val w = SequenceFile.createWriter(conf.value, SequenceFile.Writer.file(tmp),
+        SequenceFile.Writer.keyClass(classOf[NullWritable]),
+        SequenceFile.Writer.valueClass(classOf[BytesWritable]),
+        SequenceFile.Writer.compression(CompressionType.NONE))
+      try it.grouped(10).foreach { g =>
+        val bytes = new java.io.ByteArrayOutputStream()
+        val oos = new ObjectOutputStream(bytes)
+        oos.writeObject(g.toArray)
+        oos.close()
+        w.append(NullWritable.get(), new BytesWritable(bytes.toByteArray))
+      } finally w.close()
+      // a retried or speculative attempt writes the same bytes: if another
+      // attempt already renamed its file into place, keep that one
+      if (!fs.rename(tmp, part)) {
+        if (!fs.exists(part)) throw new IOException(s"rename $tmp -> $part failed")
+        fs.delete(tmp, false)
+      }
+      ()
+    })
   }
 
   override def readBlocks[T: ClassTag](sc: SparkContext, path: String): RDD[(Int, T)] =

@@ -47,9 +47,10 @@ object ToposortCsr {
 
   /** One gather of per-src values through the static exchange; `contrib`
     * is a dense per-local-src array, `hot` a per-global-hot array. Returns
-    * fold sums for receivers (dense, 0 where nothing arrived). */
+    * fold sums for receivers (dense, 0 where nothing arrived), unmaterialized:
+    * the caller's one job computes them, then calls the returned release. */
   private def countGather(g: PrGraph, contrib: RDD[Array[Double]],
-                          hot: Array[Double]): RDD[Array[Double]] = {
+                          hot: Array[Double]): (RDD[Array[Double]], () => Unit) = {
     val idPart = new IdPartitioner(g.numPartitions)
     val sc = g.csr.sparkContext
     val hotBc = sc.broadcast(hot)
@@ -114,11 +115,8 @@ object ToposortCsr {
         lIt.foreach { case (tp, (q, vals)) => if (tp == p) fold(q, vals) }
         rIt.foreach { case (_, (q, vals)) => fold(q, vals) }
         Iterator.single(a)
-    }.persist(StorageLevel.MEMORY_AND_DISK)
-    acc.count()
-    gathered.unpersist(blocking = false)
-    hotBc.unpersist(blocking = false)
-    acc
+    }
+    (acc, () => { gathered.unpersist(blocking = false); hotBc.unpersist(blocking = false) })
   }
 
   /** Returns (order blocks — order −1 ⇒ on/behind a cycle, supersteps). */
@@ -128,7 +126,7 @@ object ToposortCsr {
     val ones = g.csr.mapPartitions(it =>
       Iterator.single(Array.fill(it.next().srcs.length)(1.0)),
       preservesPartitioning = true)
-    val inDeg0 = countGather(g, ones, Array.fill(g.hotIds.length)(1.0))
+    val (inDeg0, releaseInDeg) = countGather(g, ones, Array.fill(g.hotIds.length)(1.0))
     var state: RDD[TsState] = inDeg0.zipPartitions(g.verts, preservesPartitioning = true) {
       (dIt, vIt) =>
         val d = dIt.next(); val vm = vIt.next()
@@ -146,7 +144,7 @@ object ToposortCsr {
         Iterator.single(TsState(inDeg, order, act))
     }.persist(StorageLevel.MEMORY_AND_DISK)
     state.count()
-    inDeg0.unpersist(blocking = false)
+    releaseInDeg()
 
     var it = 0
     var converged = false
@@ -164,7 +162,7 @@ object ToposortCsr {
           }
           Iterator.single(c)
       }
-      val acc = countGather(g, announce, hotAnnounce(g, state))
+      val (acc, releaseAcc) = countGather(g, announce, hotAnnounce(g, state))
       val iterLoc = it
       val next = acc.zipPartitions(state, g.verts, preservesPartitioning = true) {
         (aIt, sIt, vIt) =>
@@ -194,7 +192,7 @@ object ToposortCsr {
           Iterator.single(TsState(inDeg, order, act))
       }.persist(StorageLevel.MEMORY_AND_DISK)
       next.count()
-      acc.unpersist(blocking = false)
+      releaseAcc()
       state.unpersist(blocking = false)
       state = next
       it += 1
