@@ -1,6 +1,6 @@
 package graft.tools
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -19,11 +19,29 @@ import graft.sources.{MtxReader, VertexDump}
  * independent sequential oracles, so the committed bytes are oracle-anchored,
  * not self-fulfilling.
  *
+ * Each graph is read through `fixturePath`; a graph found nowhere is
+ * reported and skipped, its golden files left as they are.
+ *
  * usage: runMain graft.tools.GoldenGen [outDir]
  */
 object GoldenGen {
 
   val fixtures = Seq("test.bin.mtx", "2_10_upper_triangle.bin.mtx")
+
+  /** Committed copies of the reference graphs (FIXTURES.md §2). */
+  private val committedData = "src/test/resources/data"
+
+  /** The `data/` directory of a GraphMat checkout: `$GRAPHMAT_DATA_DIR`, by
+    * default `reference/data` beside this repository. */
+  private val graphmatData: String = sys.env.getOrElse("GRAPHMAT_DATA_DIR", "../reference/data")
+
+  /** Where a reference graph is read from: the committed copy if there is
+    * one, else the GraphMat checkout's (which may not exist either). */
+  def fixturePath(name: String): Path = {
+    val committed = Paths.get(committedData, name)
+    if (Files.exists(committed)) committed
+    else Paths.get(graphmatData, name).toAbsolutePath.normalize
+  }
 
   /** (algo name, dump lines) for one reference graph — shared with the spec
     * so generator and checker cannot drift. */
@@ -49,15 +67,19 @@ object GoldenGen {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    for (name <- fixtures) {
-      val g = LinkGraph(MtxReader.read(spark, s"/root/reference/data/$name"), 8)
-      for ((algo, df) <- dumps(g)) {
-        val dir = Paths.get(s"$out/$name")
-        Files.createDirectories(dir)
-        Files.writeString(dir.resolve(s"$algo.txt"), render(df))
-        println(s"[golden] wrote $out/$name/$algo.txt")
+    for (name <- fixtures; path = fixturePath(name)) {
+      if (!Files.exists(path)) {
+        println(s"[golden] skipped $name: $path does not exist")
+      } else {
+        val g = LinkGraph(MtxReader.read(spark, path.toString), 8)
+        for ((algo, df) <- dumps(g)) {
+          val dir = Paths.get(s"$out/$name")
+          Files.createDirectories(dir)
+          Files.writeString(dir.resolve(s"$algo.txt"), render(df))
+          println(s"[golden] wrote $out/$name/$algo.txt")
+        }
+        g.unpersistAll()
       }
-      g.unpersistAll()
     }
     spark.stop()
   }

@@ -141,7 +141,7 @@ class GatherScatterSpec extends AnyFunSuite {
     // the exact weak-component fixpoint the declarative engine computes
     val cases = Seq(
       "test.bin.mtx" -> LinkGraph(
-        graft.sources.MtxReader.read(s, "/root/reference/data/test.bin.mtx"), 4),
+        graft.sources.MtxReader.read(s, SparkTestBase.refData("test.bin.mtx")), 4),
       "transcripts" -> Transcripts.toGraph(Transcripts.synthesize(s, 150)),
       // planted hub: vertex 1 fans out past any hot threshold, exercising
       // the mirror-broadcast path of the min kernel
@@ -173,7 +173,7 @@ class GatherScatterSpec extends AnyFunSuite {
     // must still yield the same mode the column engine's flat count does).
     val cases = Seq(
       "test.bin.mtx" -> LinkGraph(
-        graft.sources.MtxReader.read(s, "/root/reference/data/test.bin.mtx"), 4),
+        graft.sources.MtxReader.read(s, SparkTestBase.refData("test.bin.mtx")), 4),
       "transcripts" -> Transcripts.toGraph(Transcripts.synthesize(s, 150)),
       "hub" -> LinkGraph.fromSeq(s,
         (2L to 600L).map(i => Edge(1L, i, 1.0)) ++
@@ -197,7 +197,7 @@ class GatherScatterSpec extends AnyFunSuite {
 
   test("(min,+) kernel: BFS levels == column-engine BFS on the reference graph") {
     val g = LinkGraph(
-      graft.sources.MtxReader.read(s, "/root/reference/data/test.bin.mtx"), 4)
+      graft.sources.MtxReader.read(s, SparkTestBase.refData("test.bin.mtx")), 4)
     val want = graft.algos.Bfs.run(g, 1L).state
       .filter(org.apache.spark.sql.functions.col("depth") >= 0)
       .select("id", "depth").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -216,7 +216,7 @@ class GatherScatterSpec extends AnyFunSuite {
     // GoldenParitySpec ties to a Dijkstra oracle on the reference graph)
     val cases = Seq(
       "test.bin.mtx" -> LinkGraph(
-        graft.sources.MtxReader.read(s, "/root/reference/data/test.bin.mtx"), 4),
+        graft.sources.MtxReader.read(s, SparkTestBase.refData("test.bin.mtx")), 4),
       "transcripts" -> Transcripts.toGraph(Transcripts.synthesize(s, 150)),
       // planted hub with DISTINCT per-edge weights: the hub's edges ride the
       // mirror-broadcast path, so this pins hotEdgeW alignment specifically

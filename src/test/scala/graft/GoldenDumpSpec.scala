@@ -23,7 +23,7 @@ class GoldenDumpSpec extends AnyFunSuite {
   private val goldenDir = "src/test/resources/golden"
 
   for (name <- GoldenGen.fixtures) {
-    lazy val g = LinkGraph(MtxReader.read(s, s"/root/reference/data/$name"), 8)
+    lazy val g = LinkGraph(MtxReader.read(s, SparkTestBase.refData(name)), 8)
     // one engine run per fixture (the algorithm runs are eager), four diffs
     lazy val rendered: Map[String, String] =
       GoldenGen.dumps(g).map { case (k, df) => k -> GoldenGen.render(df) }.toMap

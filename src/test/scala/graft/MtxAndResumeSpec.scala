@@ -10,17 +10,16 @@ import graft.engine.{CheckpointConfig, Superstep}
 class MtxAndResumeSpec extends AnyFunSuite {
   lazy val s = SparkTestBase.spark
 
-  val refData = "/root/reference/data"
-
   test("mtx reader: test.bin.mtx decodes to the known 8v/13e literal") {
-    val got = MtxReader.read(s, s"$refData/test.bin.mtx").collect()
+    val got = MtxReader.read(s, SparkTestBase.refData("test.bin.mtx")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got === SparkTestBase.testGraphEdges.toSet)
   }
 
   test("binary writer round-trips the reference fixture byte-compatibly") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-mtx").toString
-    val orig = MtxReader.readMtx(s, s"$refData/test.bin.mtx")
+    val fixture = SparkTestBase.refData("test.bin.mtx")
+    val orig = MtxReader.readMtx(s, fixture)
     MtxReader.write(orig.edges, s"$tmp/rt.bin.mtx", m = orig.m, n = orig.n)
     val back = MtxReader.readMtx(s, s"$tmp/rt.bin.mtx")
     assert(back.m === orig.m && back.n === orig.n)
@@ -30,7 +29,7 @@ class MtxAndResumeSpec extends AnyFunSuite {
     // the declared record section is reproduced byte-for-byte (collect order
     // == file order); the fixture carries a 14th record beyond its nnz=13
     // header, which the reference itself never reads (edgelist.h:269-288)
-    val origBytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$refData/test.bin.mtx"))
+    val origBytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(fixture))
     val rtBytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$tmp/rt.bin.mtx"))
     val recLen = 13 * 12
     assert(rtBytes.length === 12 + recLen)
@@ -39,14 +38,14 @@ class MtxAndResumeSpec extends AnyFunSuite {
   }
 
   test("readSquare promotes a rectangular header to the square hull (ReadMTX semantics)") {
-    val r = MtxReader.readSquare(s, s"$refData/ratings7.bin.mtx")
+    val r = MtxReader.readSquare(s, SparkTestBase.refData("ratings7.bin.mtx"))
     assert(r.m === r.n, "square-ify must equalize dims")
-    val raw = MtxReader.readMtx(s, s"$refData/ratings7.bin.mtx")
+    val raw = MtxReader.readMtx(s, SparkTestBase.refData("ratings7.bin.mtx"))
     assert(r.m === math.max(raw.m, raw.n))
   }
 
   test("mtx reader honors header nnz (2_10_upper_triangle has a trailing extra record)") {
-    val e = MtxReader.read(s, s"$refData/2_10_upper_triangle.bin.mtx")
+    val e = MtxReader.read(s, SparkTestBase.refData("2_10_upper_triangle.bin.mtx"))
     assert(e.count() === 15069L)
     // DAG form: all src < dst, ids in 1..1024
     import org.apache.spark.sql.functions._
@@ -56,7 +55,7 @@ class MtxAndResumeSpec extends AnyFunSuite {
   private def EdgeOpsDims(df: org.apache.spark.sql.DataFrame) = graft.core.EdgeOps.dimensions(df)
 
   test("triangle count on the 1024-vertex reference DAG matches an independent local count") {
-    val edf = MtxReader.read(s, s"$refData/2_10_upper_triangle.bin.mtx")
+    val edf = MtxReader.read(s, SparkTestBase.refData("2_10_upper_triangle.bin.mtx"))
     val g = LinkGraph(edf, 8)
     val spark_total = TriangleCount.total(g)
     // independent oracle: local bitset intersection over collected edges
@@ -74,7 +73,7 @@ class MtxAndResumeSpec extends AnyFunSuite {
   }
 
   test("pagerank on 1024-vertex reference graph matches the reference fold allclose 1e-6") {
-    val edf = MtxReader.read(s, s"$refData/2_10_upper_triangle.bin.mtx")
+    val edf = MtxReader.read(s, SparkTestBase.refData("2_10_upper_triangle.bin.mtx"))
     val es = edf.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val want = SparkTestBase.refPageRank(es)
     val got = PageRank.run(LinkGraph(edf, 8)).state

@@ -17,6 +17,16 @@ object SparkTestBase {
     s
   }
 
+  /** Path of a bundled GraphMat reference graph (FIXTURES.md §2): the
+    * committed copy if there is one, else a GraphMat checkout's
+    * (`GoldenGen.fixturePath`). Cancels the calling test when neither exists. */
+  def refData(name: String): String = {
+    val path = graft.tools.GoldenGen.fixturePath(name)
+    org.scalatest.Assertions.assume(
+      java.nio.file.Files.exists(path), s"reference graph $path does not exist")
+    path.toString
+  }
+
   /** The reference's `data/test.bin.mtx` as a literal — 8 vertices, 13
     * unit-weight edges (FIXTURES.md §2, decoded from the binary fixture). */
   val testGraphEdges: Seq[(Long, Long)] = Seq(

@@ -35,7 +35,7 @@ class TriangleCsrSpec extends AnyFunSuite {
   test("CSR triangles == column engine (reference graph, transcripts, hub, community)") {
     val cases = Seq(
       "test.bin.mtx" -> LinkGraph(
-        graft.sources.MtxReader.read(s, "/root/reference/data/test.bin.mtx"), 4),
+        graft.sources.MtxReader.read(s, SparkTestBase.refData("test.bin.mtx")), 4),
       "transcripts" -> Transcripts.toGraph(Transcripts.synthesize(s, 150)),
       // planted hub inside a triangle-rich neighborhood: the hub's oriented
       // adjacency must stay O(sqrt E) and its remote-adjacency replies must
