@@ -2,9 +2,8 @@ package graft.engine
 
 import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
-import org.apache.spark.storage.StorageLevel
 
-import GatherScatter.{IdPartitioner, PrGraph, RankBlock}
+import GatherScatter.{PrGraph, RankBlock, Step, exchange, foldSum, hubMirror, iterate, materialize}
 
 /**
  * Incremental (delta) PageRank on the CSR gather-scatter structures —
@@ -29,13 +28,10 @@ import GatherScatter.{IdPartitioner, PrGraph, RankBlock}
  * exactly the column engine's join-matched test, with no extra mask bytes
  * in the exchange.
  *
- * Hub (degree-split) sources broadcast (delta·invDeg) masked by activity,
- * K=1 — the scalar hotMirror with the frontier folded in.
- *
- * The changed count rides an accumulator updated inside the apply task —
- * one-sided like the PageRank path's (a retried task can only inflate a
- * nonzero count, never fabricate zero), so the changed==0 stop rule is
- * unaffected.
+ * Hub (degree-split) sources broadcast their delta masked by activity
+ * (`GatherScatter.hubMirror`); the edge site multiplies it by invDeg. The
+ * exchange, the superstep loop and its changed==0 stop rule are
+ * `GatherScatter.exchange` and `GatherScatter.iterate`.
  *
  * Boundary: warm-starting after a GRAPH CHANGE
  * ([[graft.algos.DeltaPageRank.warmStart]]) lives on the column engine only.
@@ -54,112 +50,80 @@ object DeltaPrCsr {
   private final case class DprState(pr: Array[Double], delta: Array[Double],
                                     act: Array[Boolean])
 
-  /** Hub mirror: per hot vertex, its masked delta (0.0 when inactive —
-    * contributes nothing, keeping "received ⇔ sum>0"); multiplied by the
-    * hub's 1/globalDegree at the edge site. */
-  private def hotContrib(g: PrGraph, st: RDD[DprState]): Array[Double] = {
-    if (g.hotIds.isEmpty) return Array.emptyDoubleArray
-    val pairs = st.zipPartitions(g.verts) { (sIt, vIt) =>
-      val s = sIt.next(); val vm = vIt.next()
-      Iterator.range(0, vm.hotHomeGlobal.length).map { i =>
-        val li = vm.hotHomeLocal(i)
-        (vm.hotHomeGlobal(i), if (s.act(li)) s.delta(li) else 0.0)
-      }
-    }.collect()
-    val arr = new Array[Double](g.hotIds.length)
-    pairs.foreach { case (gi, d) => arr(gi) = d }
-    arr
-  }
-
   def run(g: PrGraph, alpha: Double = 0.3, maxIterations: Int = 1 << 20)
       : (RDD[RankBlock], Int) = {
     val sc = g.csr.sparkContext
-    val idPart = new IdPartitioner(g.numPartitions)
-    var state: RDD[DprState] = g.verts.mapPartitions({ it =>
+    val init = g.verts.mapPartitions({ it =>
       val vm = it.next()
       val n = vm.ids.length
       Iterator.single(DprState(Array.fill(n)(0.3), Array.fill(n)(0.3),
         Array.fill(n)(true)))
-    }, preservesPartitioning = true).persist(StorageLevel.MEMORY_AND_DISK)
-    state.count()
-
-    var it = 0
-    var converged = false
-    while (!converged && it < maxIterations) {
-      val hotBc = sc.broadcast(hotContrib(g, state))
-      val changedAcc = sc.longAccumulator(s"dpr-changed-$it")
-      val gathered = state.zipPartitions(g.csr, g.verts, preservesPartitioning = false) {
-        (sIt, cIt, vIt) =>
-          val s = sIt.next(); val blk = cIt.next(); val vm = vIt.next()
-          val p = TaskContext.getPartitionId()
-          val nS = blk.srcs.length
-          // masked contribution per local src: delta·invDeg, 0 when inactive
-          val contrib = new Array[Double](nS)
-          var any = false
-          var i = 0
-          while (i < nS) {
-            val li = vm.srcPrIdx(i)
-            if (s.act(li)) { contrib(i) = s.delta(li) * blk.invDeg(i); any = true }
-            i += 1
-          }
-          val hp = hotBc.value
-          var anyHot = false
-          if (blk.hotEdgeSrcIdx.length > 0) {
-            var h = 0
-            while (h < blk.hotLocal.length && !anyHot) {
-              if (hp(blk.hotLocal(h)) != 0.0) anyHot = true
-              h += 1
-            }
-          }
-          val out = new Array[Array[Double]](blk.outIds.length)
-          if (any) {
-            var tp = 0
-            while (tp < blk.outIds.length) {
-              val ids = blk.outIds(tp)
-              if (ids != null) {
-                val vals = new Array[Double](ids.length)
-                val es = blk.edgeSrcIdx(tp); val eo = blk.edgeOutIdx(tp)
-                var e = 0
-                while (e < es.length) { vals(eo(e)) += contrib(es(e)); e += 1 }
-                out(tp) = vals
-              }
-              tp += 1
-            }
-          }
-          if (anyHot) {
-            if (out(p) == null) out(p) = new Array[Double](
-              if (blk.outIds(p) == null) 0 else blk.outIds(p).length)
-            val vals = out(p)
-            val hs = blk.hotEdgeSrcIdx; val ho = blk.hotEdgeOutIdx
-            var e = 0
-            while (e < hs.length) {
-              vals(ho(e)) += hp(blk.hotLocal(hs(e))) * blk.hotLocalInvDeg(hs(e))
-              e += 1
-            }
-          }
-          // emit only blocks with at least one positive sum — sparse frontier
-          Iterator.range(0, out.length).filter { tp =>
-            val v = out(tp)
-            v != null && { var j = 0; var nz = false
-              while (j < v.length && !nz) { if (v(j) > 0.0) nz = true; j += 1 }; nz }
-          }.map(tp => (tp, (p, out(tp))))
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-      val remote = gathered.mapPartitionsWithIndex(
-          (p, itr) => itr.filter(_._1 != p), preservesPartitioning = false)
-        .partitionBy(idPart)
-      val aLoc = alpha
-      val next = remote.zipPartitions(gathered, g.meta, state, preservesPartitioning = true) {
-        (rIt, lIt, mIt, oIt) =>
-          val (vm, inIdx) = mIt.next(); val old = oIt.next()
-          val p = TaskContext.getPartitionId()
-          val acc = new Array[Double](vm.nRecv)
-          @inline def fold(q: Int, vals: Array[Double]): Unit = {
-            val idx = inIdx(q)
+    }, preservesPartitioning = true)
+    val (state, it) = iterate(g, Step(init), maxIterations, counted = true) {
+      (state, _, changedAcc) =>
+        // hub mirror: per hot vertex, its masked delta (0.0 when inactive —
+        // contributes nothing, keeping "received ⇔ sum>0"); multiplied by the
+        // hub's 1/globalDegree at the edge site
+        val hotBc = sc.broadcast(hubMirror(g, state)(
+          (s, ls) => ls.map(li => if (s.act(li)) s.delta(li) else 0.0)))
+        val gathered = state.zipPartitions(g.csr, g.verts, preservesPartitioning = false) {
+          (sIt, cIt, vIt) =>
+            val s = sIt.next(); val blk = cIt.next(); val vm = vIt.next()
+            val p = TaskContext.getPartitionId()
+            val nS = blk.srcs.length
+            // masked contribution per local src: delta·invDeg, 0 when inactive
+            val contrib = new Array[Double](nS)
+            var any = false
             var i = 0
-            while (i < vals.length) { acc(idx(i)) += vals(i); i += 1 }
-          }
-          lIt.foreach { case (tp, (q, vals)) => if (tp == p) fold(q, vals) }
-          rIt.foreach { case (_, (q, vals)) => fold(q, vals) }
+            while (i < nS) {
+              val li = vm.srcPrIdx(i)
+              if (s.act(li)) { contrib(i) = s.delta(li) * blk.invDeg(i); any = true }
+              i += 1
+            }
+            val hp = hotBc.value
+            var anyHot = false
+            if (blk.hotEdgeSrcIdx.length > 0) {
+              var h = 0
+              while (h < blk.hotLocal.length && !anyHot) {
+                if (hp(blk.hotLocal(h)) != 0.0) anyHot = true
+                h += 1
+              }
+            }
+            val out = new Array[Array[Double]](blk.outIds.length)
+            if (any) {
+              var tp = 0
+              while (tp < blk.outIds.length) {
+                val ids = blk.outIds(tp)
+                if (ids != null) {
+                  val vals = new Array[Double](ids.length)
+                  val es = blk.edgeSrcIdx(tp); val eo = blk.edgeOutIdx(tp)
+                  var e = 0
+                  while (e < es.length) { vals(eo(e)) += contrib(es(e)); e += 1 }
+                  out(tp) = vals
+                }
+                tp += 1
+              }
+            }
+            if (anyHot) {
+              if (out(p) == null) out(p) = new Array[Double](
+                if (blk.outIds(p) == null) 0 else blk.outIds(p).length)
+              val vals = out(p)
+              val hs = blk.hotEdgeSrcIdx; val ho = blk.hotEdgeOutIdx
+              var e = 0
+              while (e < hs.length) {
+                vals(ho(e)) += hp(blk.hotLocal(hs(e))) * blk.hotLocalInvDeg(hs(e))
+                e += 1
+              }
+            }
+            // emit only blocks with at least one positive sum — sparse frontier
+            Iterator.range(0, out.length).filter { tp =>
+              val v = out(tp)
+              v != null && { var j = 0; var nz = false
+                while (j < v.length && !nz) { if (v(j) > 0.0) nz = true; j += 1 }; nz }
+            }.map(tp => (tp, (p, out(tp))))
+        }
+        exchange(g, gathered, state, hotBc) { (vm, inIdx, blocks, old) =>
+          val acc = foldSum(vm.nRecv, inIdx, blocks)
           val n = vm.ids.length
           val pr = new Array[Double](n)
           val dl = new Array[Double](n)
@@ -169,7 +133,7 @@ object DeltaPrCsr {
           while (i < n) {
             if (i < vm.nRecv && acc(i) > 0.0) { // received (deltas positive)
               val d0 = if (math.abs(old.delta(i)) > 1e-8) 0.0 else old.delta(i)
-              val d1 = d0 + (1.0 - aLoc) * acc(i)
+              val d1 = d0 + (1.0 - alpha) * acc(i)
               val np = if (math.abs(d1) > 1e-8) old.pr(i) + d1 else old.pr(i)
               pr(i) = np; dl(i) = d1
               val ch = math.abs(np - old.pr(i)) > 1e-8
@@ -181,21 +145,9 @@ object DeltaPrCsr {
             i += 1
           }
           changedAcc.add(changed)
-          Iterator.single(DprState(pr, dl, ac))
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-      next.count()
-      gathered.unpersist(blocking = false)
-      hotBc.unpersist(blocking = false)
-      state.unpersist(blocking = false)
-      state = next
-      it += 1
-      converged = changedAcc.value == 0L
+          DprState(pr, dl, ac)
+        }
     }
-    val out = state.zipPartitions(g.verts, preservesPartitioning = true) { (sIt, vIt) =>
-      Iterator.single(RankBlock(vIt.next().ids, sIt.next().pr))
-    }.persist(StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    state.unpersist(blocking = false)
-    (out, it)
+    (materialize(g, state)(_.pr), it)
   }
 }

@@ -2,6 +2,7 @@ package graft.engine
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
+import scala.reflect.ClassTag
 import scala.util.Using
 
 import org.apache.spark.{Partitioner, SparkContext, TaskContext}
@@ -10,6 +11,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.util.LongAccumulator
 
 import graft.core.LinkGraph
 
@@ -46,9 +48,12 @@ import graft.core.LinkGraph
  * instead of one partition |E_hub|.
  *
  * One RDD job plus one (skippable) hot-mirror job per superstep, one shuffle,
- * no Catalyst re-planning, no per-row boxing. Throughput path only; semantics
- * verified against the Column-algebra engine (allclose 1e-9) in
- * GatherScatterSpec.
+ * no Catalyst re-planning, no per-row boxing. Every CSR kernel (here and in
+ * DeltaPrCsr, ToposortCsr, VectorSuperstep) keeps only its arithmetic and
+ * runs through the same plumbing: `exchange` (the split exchange) and
+ * `iterate` (the superstep loop) — see "the superstep plumbing" below.
+ * Throughput path only; semantics verified against the Column-algebra
+ * engine (allclose 1e-9) in GatherScatterSpec.
  */
 
 /** Durable mid-algorithm checkpoint/resume for the CSR engine (north rule:
@@ -910,18 +915,174 @@ object GatherScatter {
     g.verts.mapPartitions(it => Iterator.single(Array.fill(it.next().ids.length)(0.3)),
       preservesPartitioning = true)
 
-  /** Collect hot-vertex ranks (tiny) and broadcast — the per-superstep mirror. */
-  private def hotMirror(g: PrGraph, ranks: RDD[Array[Double]]): Array[Double] = {
-    if (g.hotIds.isEmpty) return Array.emptyDoubleArray
-    val pairs = ranks.zipPartitions(g.verts) { (rIt, vIt) =>
-      val pr = rIt.next(); val vm = vIt.next()
-      Iterator.range(0, vm.hotHomeGlobal.length)
-        .map(i => (vm.hotHomeGlobal(i), pr(vm.hotHomeLocal(i))))
-    }.collect()
-    val arr = new Array[Double](g.hotIds.length)
-    pairs.foreach { case (gIdx, v) => arr(gIdx) = v }
+  // ---- the superstep plumbing, written once -------------------------------
+  //
+  // Every CSR kernel runs GraphMat's `run_graph_program` superstep
+  // (`GraphMatRuntime.h:136-261`): gather (⊗ + per-target pre-sum) → split
+  // exchange → fold (⊕) + apply, then the land-reduce stop test. A kernel
+  // owns its arithmetic — the gather and the per-partition fold + apply;
+  // the plumbing between them exists once:
+  //  - `exchange`, the split exchange. A partition's contribution to ITSELF
+  //    is most of the exchange whenever the partitioning has locality
+  //    (keyShift co-location makes it ~all of it), and shipping it through
+  //    the shuffle pays serialize + disk write + read even when the bytes
+  //    never leave the executor. So the gathered blocks are lazily persisted
+  //    (deserialized MEMORY_AND_DISK = the live arrays, zero-copy): the apply
+  //    reads the self-contribution straight from the block cache, and only
+  //    tp != p records enter the shuffle, so cross-JVM bytes equal the true
+  //    partition cut. Placement stays process-local under the engine confs
+  //    (see engineConfs): reduce-locality off makes the cached graph blocks
+  //    the ONLY preferred location, so map output, block cache and apply
+  //    task never separate.
+  //  - `iterate`, the superstep loop: changed count, persist, lineage
+  //    truncation, durable checkpoints, and freeing each superstep's
+  //    gathered blocks, broadcasts and previous state once it has landed.
+  //  - `hubMirror`, the per-superstep collect of the hot vertices' values
+  //    for the mirror broadcast.
+
+  /** One superstep's lazy state and what [[iterate]] frees once that state
+    * is materialized: the gathered blocks and the superstep's broadcasts. */
+  private[engine] final case class Step[S](next: RDD[S], gathered: RDD[_] = null,
+                                           broadcasts: Seq[Broadcast[_]] = Nil)
+
+  /** The split exchange of `gather`'s (targetPartition, (sourcePartition,
+    * block)) records; persists them. `apply` runs once per partition with
+    * the partition's layout, its incoming-index table, the blocks addressed
+    * to it — its OWN block first, then the remote ones, the fold order that
+    * keeps every kernel's results bit-identical — and its `side` state
+    * (null when `side` is null: the apply then reads no previous state, so
+    * the kernel's input is consumed exactly once). */
+  private[engine] def exchange[T, S: ClassTag, R: ClassTag](
+      g: PrGraph, gather: RDD[(Int, (Int, T))], side: RDD[S], broadcasts: Broadcast[_]*)(
+      apply: (VertexMeta, Array[Array[Int]], Iterator[(Int, T)], S) => R): Step[R] = {
+    val gathered = gather.persist(StorageLevel.MEMORY_AND_DISK)
+    val remote = gathered.mapPartitionsWithIndex(
+        (p, it) => it.filter(_._1 != p), preservesPartitioning = false)
+      .partitionBy(new IdPartitioner(g.numPartitions))
+    val run = (rIt: Iterator[(Int, (Int, T))], lIt: Iterator[(Int, (Int, T))],
+               mIt: Iterator[(VertexMeta, Array[Array[Int]])], old: S) => {
+      val (vm, inIdx) = mIt.next()
+      val p = TaskContext.getPartitionId()
+      val blocks = lIt.collect { case (tp, b) if tp == p => b } ++ rIt.map(_._2)
+      Iterator.single(apply(vm, inIdx, blocks, old))
+    }
+    val next =
+      if (side == null)
+        remote.zipPartitions(gathered, g.meta, preservesPartitioning = true) {
+          (rIt, lIt, mIt) => run(rIt, lIt, mIt, null.asInstanceOf[S])
+        }
+      else
+        remote.zipPartitions(gathered, g.meta, side, preservesPartitioning = true) {
+          (rIt, lIt, mIt, oIt) => run(rIt, lIt, mIt, oIt.next())
+        }
+    Step(next, gathered, broadcasts)
+  }
+
+  /** ⊕ = + of received blocks into a dense per-receiver accumulator. */
+  private[engine] def foldSum(nRecv: Int, inIdx: Array[Array[Int]],
+                              blocks: Iterator[(Int, Array[Double])]): Array[Double] = {
+    val acc = new Array[Double](nRecv)
+    blocks.foreach { case (q, vals) =>
+      val idx = inIdx(q)
+      var i = 0
+      while (i < vals.length) { acc(idx(i)) += vals(i); i += 1 }
+    }
+    acc
+  }
+
+  /** The hub mirror, collected once per superstep: the K-wide values of
+    * every hot vertex, packed by global hot index. `at` runs once per
+    * partition and returns the packed values of the partition's hot
+    * vertices at the given local indices. Empty, with no job, on hubless
+    * graphs. */
+  private[engine] def hubMirror[S](g: PrGraph, state: RDD[S], k: Int = 1)
+                                  (at: (S, Array[Int]) => Array[Double]): Array[Double] = {
+    val arr = new Array[Double](g.hotIds.length * k)
+    if (arr.nonEmpty) state.zipPartitions(g.verts) { (sIt, vIt) =>
+      val vm = vIt.next()
+      Iterator.single((vm.hotHomeGlobal, at(sIt.next(), vm.hotHomeLocal)))
+    }.collect().foreach { case (gis, vs) =>
+      var i = 0
+      while (i < gis.length) { System.arraycopy(vs, i * k, arr, gis(i) * k, k); i += 1 }
+    }
     arr
   }
+
+  /** The broadcast hub mirror of a scalar state; null on hubless graphs,
+    * whose gathers never dereference it. */
+  private def mirror(g: PrGraph, ranks: RDD[Array[Double]]): Broadcast[Array[Double]] =
+    if (g.hotIds.isEmpty) null
+    else ranks.sparkContext.broadcast(hubMirror(g, ranks)((r, ls) => ls.map(li => r(li))))
+
+  /**
+   * The superstep loop, written once. `init` is superstep 0's state:
+   * iterate persists and counts it (the run's first job) and then frees its
+   * step's handles — unless the caller persisted it, in which case it stays
+   * the caller's to free. Each superstep runs `step(state, superstep,
+   * changed)`, persists the new state, truncates its lineage every 16th
+   * superstep (a long run's DAG and task closures stay bounded, and an
+   * executor loss recomputes at most 16 supersteps), runs the superstep's
+   * one job ([[Checkpoints.materialize]]), then frees the step's gathered
+   * blocks and broadcasts and the previous state. `counted` loops stop at
+   * GraphMat's land-reduce fixpoint (`GraphMatRuntime.h:208-226`): the
+   * kernel's apply adds its changed count to `changed`, and a superstep that
+   * changed no vertex ends the run. The count is updated inside a
+   * TRANSFORMATION, so a task retry or speculative duplicate can
+   * double-count — but only inflate a nonzero count (delaying the stop by
+   * one superstep), never fabricate zero from nonzero. Fixed-budget loops
+   * get a null `changed`.
+   *
+   * With `cp`, a committed checkpoint replaces `init` (`lift` turns its
+   * saved vectors into a state) and due checkpoints save `values` of the
+   * state. Returns (final state, cached; supersteps run, counting those
+   * before a resume).
+   */
+  private[engine] def iterate[S: ClassTag](
+      g: PrGraph, init: Step[S], maxIterations: Int, counted: Boolean,
+      cp: Option[CsrCheckpoint] = None,
+      values: S => Array[Double] = null, lift: Array[Double] => S = null)(
+      step: (RDD[S], Int, LongAccumulator) => Step[S]): (RDD[S], Int) =
+    Using.resource(new Checkpoints(g, cp, maxIterations)) { ck =>
+      val sc = g.csr.sparkContext
+      // unpersist, not destroy: a lineage recomputation replays closures
+      // that read the broadcasts (see build())
+      def free(s: Step[_]): Unit = {
+        if (s.gathered != null) s.gathered.unpersist(blocking = false)
+        s.broadcasts.foreach(b => if (b != null) b.unpersist(blocking = false))
+      }
+      def saved(st: RDD[S]) = st.mapPartitions(_.map(values), preservesPartitioning = true)
+      var it = 0
+      var converged = false
+      var state = ck.resume() match {
+        case Some((r, i, conv)) =>
+          it = i; converged = conv
+          r.mapPartitions(_.map(lift), preservesPartitioning = true)
+        case None => init.next
+      }
+      var owned = state.getStorageLevel == StorageLevel.NONE
+      if (owned) {
+        state.persist(StorageLevel.MEMORY_AND_DISK)
+        state.count()
+      }
+      free(init)
+      while (!converged && it < maxIterations) {
+        val t0 = System.nanoTime()
+        val changed = if (counted) sc.longAccumulator(s"changed-$it") else null
+        val s = step(state, it, changed)
+        val next = s.next.persist(StorageLevel.MEMORY_AND_DISK)
+        if ((it + 1) % 16 == 0) next.localCheckpoint()
+        ck.materialize(it + 1, next, saved(next))
+        free(s)
+        if (owned) state.unpersist(blocking = false)
+        owned = true
+        state = next
+        it += 1
+        val n = if (counted) changed.sum else -1L
+        converged = n == 0L
+        ck.commit(it, converged, n, (System.nanoTime() - t0) / 1000000, saved(state))
+      }
+      (state, it)
+    }
 
   /** The gather (⊗ + per-target pre-sum ⊕): emits (targetPartition,
     * (sourcePartition, packed partial sums aligned to outIds)). */
@@ -970,117 +1131,59 @@ object GatherScatter {
       Iterator.range(0, out.length).filter(out(_) != null).map(tp => (tp, (p, out(tp))))
     }
 
-  // ---- split exchange --------------------------------------------------
-  //
-  // A partition's contribution to ITSELF is most of the exchange whenever the
-  // partitioning has locality (keyShift co-location makes it ~all of it), and
-  // shipping it through the shuffle pays serialize + disk write + read even
-  // when the bytes never leave the executor. So each superstep SPLITS:
-  //  - the self-contribution stays in the lazily-persisted gather output
-  //    (deserialized MEMORY_AND_DISK = the live arrays, zero-copy) and the
-  //    apply stage reads it straight from the block cache;
-  //  - only tp != p records enter the shuffle, so cross-JVM bytes equal the
-  //    true partition cut.
-  // The caller owns the returned `gathered` handle and unpersists it once the
-  // superstep's consumer is materialized. Placement stays process-local under
-  // the engine confs (see engineConfs): reduce-locality off makes the cached
-  // graph blocks the ONLY preferred location, so map output, block cache and
-  // apply task never separate.
-
   /**
    * One LAZY superstep for the fixed-iteration path: gather → split exchange
    * → dense apply, with in-degree-0 slots pinned to their initial 0.3 (they
    * never receive, so the previous vector need not be read). The input rank
    * RDD is consumed exactly ONCE, which lets the driver chain K supersteps
    * into a single pipelined job — no per-superstep count, no per-superstep
-   * job-scheduling overhead. Returns (newRanks, gathered handle).
+   * job-scheduling overhead.
    */
   private def superstepLazy(g: PrGraph, ranks: RDD[Array[Double]],
-                            alpha: Double): (RDD[Array[Double]], RDD[_]) = {
-    val idPart = new IdPartitioner(g.numPartitions)
-    val gathered = gatherPhase(ranks, g, null)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val remote = gathered.mapPartitionsWithIndex(
-        (p, it) => it.filter(_._1 != p), preservesPartitioning = false)
-      .partitionBy(idPart)
-    val next = remote.zipPartitions(gathered, g.meta, preservesPartitioning = true) {
-      (rIt, lIt, mIt) =>
-        val (vm, inIdx) = mIt.next()
-        val p = TaskContext.getPartitionId()
-        val acc = new Array[Double](vm.nRecv)
-        @inline def fold(q: Int, vals: Array[Double]): Unit = {
-          val idx = inIdx(q)
-          var i = 0
-          while (i < vals.length) { acc(idx(i)) += vals(i); i += 1 }
-        }
-        lIt.foreach { case (tp, (q, vals)) => if (tp == p) fold(q, vals) }
-        rIt.foreach { case (_, (q, vals)) => fold(q, vals) }
-        val nV = vm.ids.length
-        val newPr = new Array[Double](nV)
-        var i = 0
-        while (i < vm.nRecv) { newPr(i) = alpha + (1.0 - alpha) * acc(i); i += 1 }
-        while (i < nV) { newPr(i) = 0.3; i += 1 } // in-degree-0: keep init
-        Iterator.single(newPr)
+                            alpha: Double): Step[Array[Double]] =
+    exchange(g, gatherPhase(ranks, g, null), null) { (vm, inIdx, blocks, _: Null) =>
+      val acc = foldSum(vm.nRecv, inIdx, blocks)
+      val nV = vm.ids.length
+      val newPr = new Array[Double](nV)
+      var i = 0
+      while (i < vm.nRecv) { newPr(i) = alpha + (1.0 - alpha) * acc(i); i += 1 }
+      while (i < nV) { newPr(i) = 0.3; i += 1 } // in-degree-0: keep init
+      newPr
     }
-    (next, gathered)
-  }
 
-  /** One superstep: gather → split exchange → dense apply. Returns the new
-    * rank vectors, the gathered handle (caller unpersists after the superstep
-    * materializes) and (when `tol` >= 0) counts vertices that moved more than
-    * tol. `hotPr` is the per-superstep hub mirror (null on hubless graphs,
-    * never dereferenced then); the caller owns it too. */
+  /** One superstep: gather → split exchange → dense apply. When `tol` >= 0,
+    * counts into `changedAcc` the vertices that moved more than tol. `hotPr`
+    * is the hub mirror (null on hubless graphs, never dereferenced then). */
   private def superstep(g: PrGraph, ranks: RDD[Array[Double]], alpha: Double,
-                        tol: Double,
-                        changedAcc: Option[org.apache.spark.util.LongAccumulator],
-                        hotPr: Broadcast[Array[Double]])
-  : (RDD[Array[Double]], RDD[_]) = {
-    val idPart = new IdPartitioner(g.numPartitions)
-    val gathered = gatherPhase(ranks, g, hotPr)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val remote = gathered.mapPartitionsWithIndex(
-        (p, it) => it.filter(_._1 != p), preservesPartitioning = false)
-      .partitionBy(idPart)
-    val next = remote.zipPartitions(gathered, g.meta, ranks, preservesPartitioning = true) {
-      (rIt, lIt, mIt, oIt) =>
-        val (vm, inIdx) = mIt.next(); val old = oIt.next()
-        val p = TaskContext.getPartitionId()
-        val acc = new Array[Double](vm.nRecv)
-        @inline def fold(q: Int, vals: Array[Double]): Unit = {
-          val idx = inIdx(q)
-          var i = 0
-          while (i < vals.length) { acc(idx(i)) += vals(i); i += 1 }
-        }
-        lIt.foreach { case (tp, (q, vals)) => if (tp == p) fold(q, vals) }
-        rIt.foreach { case (_, (q, vals)) => fold(q, vals) }
-        val nV = vm.ids.length
-        val newPr = new Array[Double](nV)
-        var changed = 0L
-        var i = 0
-        while (i < vm.nRecv) {
-          val v = alpha + (1.0 - alpha) * acc(i)
-          newPr(i) = v
-          if (tol >= 0 && math.abs(v - old(i)) > tol) changed += 1
-          i += 1
-        }
-        while (i < nV) { newPr(i) = old(i); i += 1 } // in-degree-0: never receive
-        // accumulator updated inside a TRANSFORMATION: a task retry or
-        // speculative duplicate can double-count moved vertices. That error
-        // is one-sided by construction — the stop rule is `changed == 0`, and
-        // duplication can only inflate a nonzero count (delaying convergence
-        // by one extra superstep), never fabricate zero from nonzero — so
-        // correctness of the fixpoint is unaffected.
-        changedAcc.foreach(_.add(changed))
-        Iterator.single(newPr)
+                        tol: Double, changedAcc: LongAccumulator,
+                        hotPr: Broadcast[Array[Double]]): Step[Array[Double]] =
+    exchange(g, gatherPhase(ranks, g, hotPr), ranks, hotPr) { (vm, inIdx, blocks, old) =>
+      val acc = foldSum(vm.nRecv, inIdx, blocks)
+      val nV = vm.ids.length
+      val newPr = new Array[Double](nV)
+      var changed = 0L
+      var i = 0
+      while (i < vm.nRecv) {
+        val v = alpha + (1.0 - alpha) * acc(i)
+        newPr(i) = v
+        if (tol >= 0 && math.abs(v - old(i)) > tol) changed += 1
+        i += 1
+      }
+      while (i < nV) { newPr(i) = old(i); i += 1 } // in-degree-0: never receive
+      if (changedAcc != null) changedAcc.add(changed)
+      newPr
     }
-    (next, gathered)
-  }
 
-  private def materialize(g: PrGraph, ranks: RDD[Array[Double]]): RDD[RankBlock] = {
-    val out = ranks.zipPartitions(g.verts, preservesPartitioning = true) { (rIt, vIt) =>
-      Iterator.single(RankBlock(vIt.next().ids, rIt.next()))
+  /** The result blocks of a run's final state, `pr` projecting each
+    * partition's state onto its values — the run's last job. Frees `state`
+    * when it is persisted. */
+  private[engine] def materialize[S](g: PrGraph, state: RDD[S])
+                                    (pr: S => Array[Double]): RDD[RankBlock] = {
+    val out = state.zipPartitions(g.verts, preservesPartitioning = true) { (sIt, vIt) =>
+      Iterator.single(RankBlock(vIt.next().ids, pr(sIt.next())))
     }.persist(StorageLevel.MEMORY_AND_DISK)
     out.count()
+    if (state.getStorageLevel != StorageLevel.NONE) state.unpersist(blocking = false)
     out
   }
 
@@ -1090,11 +1193,10 @@ object GatherScatter {
    * receive and keep their initial 0.3 (`src/PageRank.cpp:81-161`,
    * apply-on-receive per `GraphMatRuntime.h:195-225`).
    */
-  def pageRank(g: PrGraph, alpha: Double, iterations: Int,
-               checkpointEvery: Int = 4): RDD[RankBlock] = {
+  def pageRank(g: PrGraph, alpha: Double, iterations: Int): RDD[RankBlock] =
     if (g.hotIds.isEmpty) {
       // hub-less graph: chain all supersteps LAZILY — one pipelined job per
-      // `checkpointEvery`-superstep segment instead of 2 jobs per superstep
+      // `segment`-superstep segment instead of one job per superstep
       // (valid because the lazy superstep consumes its input exactly once;
       // see superstepLazy). A segment barrier is a BARE count(): completed
       // shuffle-map stages are skipped by later jobs (shuffle-file reuse),
@@ -1109,16 +1211,16 @@ object GatherScatter {
       var it = 0
       var pending = List.empty[RDD[_]]
       var lastCp: Option[RDD[Array[Double]]] = None
-      val segment = math.max(1, checkpointEvery)
+      val segment = 4
       // the bare count() barrier does NOT truncate lineage; without a real
       // checkpoint the DAG deepens linearly with `iterations` (segment jobs
       // re-walk the whole chain, executor loss cascades recomputation toward
       // iteration 0). Truncate every `lineageEvery` supersteps.
-      val lineageEvery = math.max(segment, 32 / segment * segment)
+      val lineageEvery = 32
       while (it < iterations) {
-        val (nr, gth) = superstepLazy(g, ranks, alpha)
-        ranks = nr
-        pending ::= gth
+        val s = superstepLazy(g, ranks, alpha)
+        ranks = s.next
+        pending ::= s.gathered
         it += 1
         if (it % segment == 0 && it < iterations) {
           if (it % lineageEvery == 0) {
@@ -1142,44 +1244,18 @@ object GatherScatter {
           }
         }
       }
-      val out = materialize(g, ranks)
+      val out = materialize(g, ranks)(identity)
       pending.foreach(_.unpersist(blocking = false))
       lastCp.foreach(_.unpersist(blocking = false))
       out
     } else {
       // hub graphs need the per-superstep mirror broadcast (a driver action),
       // so each superstep is materialized
-      val sc = g.csr.sparkContext
-      var ranks = initRanks(g).persist(StorageLevel.MEMORY_AND_DISK)
-      ranks.count()
-      var prev = ranks
-      var it = 0
-      val iterLog = sys.env.contains("SPARK_GRAFT_ITERLOG")
-      while (it < iterations) {
-        val t0 = if (iterLog) System.nanoTime() else 0L
-        val hotPr = sc.broadcast(hotMirror(g, ranks))
-        val (nr, gth) = superstep(g, ranks, alpha, tol = -1.0, changedAcc = None,
-            hotPr)
-        val newRanks = nr.persist(StorageLevel.MEMORY_AND_DISK)
-        if ((it + 1) % checkpointEvery == 0) newRanks.localCheckpoint()
-        newRanks.count()
-        // free the mirror's executor copies and the superstep's gathered
-        // blocks now that the superstep is materialized (unpersist, not
-        // destroy — see build()); without this a long run accumulates one
-        // broadcast + one gather snapshot per superstep until GC
-        gth.unpersist(blocking = false)
-        hotPr.unpersist(blocking = false)
-        if (iterLog) println(f"[iter] superstep $it: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-        prev.unpersist(blocking = false)
-        prev = newRanks
-        ranks = newRanks
-        it += 1
+      val (ranks, _) = iterate(g, Step(initRanks(g)), iterations, counted = false) {
+        (ranks, _, _) => superstep(g, ranks, alpha, tol = -1.0, null, mirror(g, ranks))
       }
-      val out = materialize(g, ranks)
-      ranks.unpersist(blocking = false)
-      out
+      materialize(g, ranks)(identity)
     }
-  }
 
   /**
    * Personalized PageRank on the CSR path — the same gather/split-exchange
@@ -1192,10 +1268,7 @@ object GatherScatter {
    * (CoreMetricsSpec parity; g_ppr_csr shares g_ppr's unrolled oracle).
    */
   def personalizedPageRank(g: PrGraph, isSource: Long => Boolean,
-                           alpha: Double, iterations: Int,
-                           checkpointEvery: Int = 8): RDD[RankBlock] = {
-    val sc = g.csr.sparkContext
-    val idPart = new IdPartitioner(g.numPartitions)
+                           alpha: Double, iterations: Int): RDD[RankBlock] = {
     val base = g.verts.mapPartitions({ it =>
       val vm = it.next()
       val b = new Array[Double](vm.ids.length)
@@ -1203,28 +1276,11 @@ object GatherScatter {
       while (i < b.length) { if (isSource(vm.ids(i))) b(i) = 1.0; i += 1 }
       Iterator.single(b)
     }, preservesPartitioning = true).persist(StorageLevel.MEMORY_AND_DISK)
-    var ranks: RDD[Array[Double]] = base // init pr0 = s
-    var prev: RDD[Array[Double]] = null
-    var it = 0
-    while (it < iterations) {
-      val hotPr = sc.broadcast(hotMirror(g, ranks))
-      val gathered = gatherPhase(ranks, g, hotPr)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val remote = gathered.mapPartitionsWithIndex(
-          (p, itr) => itr.filter(_._1 != p), preservesPartitioning = false)
-        .partitionBy(idPart)
-      val nr = remote.zipPartitions(gathered, g.meta, base,
-          preservesPartitioning = true) { (rIt, lIt, mIt, bIt) =>
-        val (vm, inIdx) = mIt.next(); val b = bIt.next()
-        val p = TaskContext.getPartitionId()
-        val acc = new Array[Double](vm.nRecv)
-        @inline def fold(q: Int, vals: Array[Double]): Unit = {
-          val idx = inIdx(q)
-          var i = 0
-          while (i < vals.length) { acc(idx(i)) += vals(i); i += 1 }
-        }
-        lIt.foreach { case (tp, (q, vals)) => if (tp == p) fold(q, vals) }
-        rIt.foreach { case (_, (q, vals)) => fold(q, vals) }
+    // init pr0 = s; persisted here, so the loop leaves `base` to this caller
+    val (ranks, _) = iterate(g, Step(base), iterations, counted = false) { (ranks, _, _) =>
+      val hotPr = mirror(g, ranks)
+      exchange(g, gatherPhase(ranks, g, hotPr), base, hotPr) { (vm, inIdx, blocks, b) =>
+        val acc = foldSum(vm.nRecv, inIdx, blocks)
         val nV = vm.ids.length
         val newPr = new Array[Double](nV)
         var i = 0
@@ -1232,20 +1288,10 @@ object GatherScatter {
           newPr(i) = alpha * b(i) + (1.0 - alpha) * acc(i); i += 1
         }
         while (i < nV) { newPr(i) = alpha * b(i); i += 1 }
-        Iterator.single(newPr)
+        newPr
       }
-      val newRanks = nr.persist(StorageLevel.MEMORY_AND_DISK)
-      if ((it + 1) % checkpointEvery == 0) newRanks.localCheckpoint()
-      newRanks.count()
-      gathered.unpersist(blocking = false)
-      hotPr.unpersist(blocking = false)
-      if (prev != null) prev.unpersist(blocking = false)
-      prev = newRanks
-      ranks = newRanks
-      it += 1
     }
-    val out = materialize(g, ranks)
-    if (prev != null) prev.unpersist(blocking = false)
+    val out = materialize(g, ranks)(identity)
     base.unpersist(blocking = false)
     out
   }
@@ -1264,38 +1310,13 @@ object GatherScatter {
    */
   def pageRankConverged(g: PrGraph, alpha: Double = 0.3, tol: Double = 1e-5,
                         maxIterations: Int = 200,
-                        cp: Option[CsrCheckpoint] = None): (RDD[RankBlock], Int) =
-    Using.resource(new Checkpoints(g, cp, maxIterations)) { ck =>
-      val sc = g.csr.sparkContext
-      var it = 0
-      var converged = false
-      var ranks = (ck.resume() match {
-        case Some((r, i, conv)) => it = i; converged = conv; r
-        case None => initRanks(g)
-      }).persist(StorageLevel.MEMORY_AND_DISK)
-      ranks.count()
-      var prev = ranks
-      while (!converged && it < maxIterations) {
-        val t0 = System.nanoTime()
-        val changedAcc = sc.longAccumulator(s"changed-$it")
-        val hotPr = if (g.hotIds.isEmpty) null
-                    else sc.broadcast(hotMirror(g, ranks))
-        val (nr, gth) = superstep(g, ranks, alpha, tol, Some(changedAcc), hotPr)
-        val newRanks = nr.persist(StorageLevel.MEMORY_AND_DISK)
-        ck.materialize(it + 1, newRanks, newRanks)
-        gth.unpersist(blocking = false)
-        if (hotPr != null) hotPr.unpersist(blocking = false)
-        prev.unpersist(blocking = false)
-        prev = newRanks
-        ranks = newRanks
-        it += 1
-        converged = changedAcc.value == 0L
-        ck.commit(it, converged, changedAcc.value, (System.nanoTime() - t0) / 1000000, ranks)
-      }
-      val out = materialize(g, ranks)
-      ranks.unpersist(blocking = false)
-      (out, it)
+                        cp: Option[CsrCheckpoint] = None): (RDD[RankBlock], Int) = {
+    val (ranks, it) = iterate[Array[Double]](g, Step(initRanks(g)), maxIterations,
+        counted = true, cp, identity, identity) {
+      (ranks, _, changed) => superstep(g, ranks, alpha, tol, changed, mirror(g, ranks))
     }
+    (materialize(g, ranks)(identity), it)
+  }
 
   // ---- the (min, +) semiring on the same static exchange -----------------
   //
@@ -1382,27 +1403,18 @@ object GatherScatter {
     }
 
   private def minStep(g: PrGraph, vals: RDD[(Array[Double], Boolean)], delta: Double,
-                      changedAcc: org.apache.spark.util.LongAccumulator,
+                      changedAcc: LongAccumulator,
                       hotV: Broadcast[Array[Double]], hotActive: Boolean,
-                      useW: Boolean): (RDD[(Array[Double], Boolean)], RDD[_]) = {
-    val idPart = new IdPartitioner(g.numPartitions)
-    val gathered = gatherMinPhase(vals, g, delta, hotV, hotActive, useW)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val remote = gathered.mapPartitionsWithIndex(
-        (p, it) => it.filter(_._1 != p), preservesPartitioning = false)
-      .partitionBy(idPart)
-    val next = remote.zipPartitions(gathered, g.meta, vals, preservesPartitioning = true) {
-      (rIt, lIt, mIt, oIt) =>
-        val (vm, inIdx) = mIt.next(); val old = oIt.next()._1
-        val p = TaskContext.getPartitionId()
+                      useW: Boolean): Step[(Array[Double], Boolean)] =
+    exchange(g, gatherMinPhase(vals, g, delta, hotV, hotActive, useW), vals, hotV) {
+      (vm, inIdx, blocks, o) =>
+        val old = o._1
         val acc = Array.fill(vm.nRecv)(Double.PositiveInfinity)
-        @inline def fold(q: Int, vs: Array[Double]): Unit = {
+        blocks.foreach { case (q, vs) =>
           val idx = inIdx(q)
           var i = 0
           while (i < vs.length) { if (vs(i) < acc(idx(i))) acc(idx(i)) = vs(i); i += 1 }
         }
-        lIt.foreach { case (tp, (q, vs)) => if (tp == p) fold(q, vs) }
-        rIt.foreach { case (_, (q, vs)) => fold(q, vs) }
         val nV = vm.ids.length
         val out = new Array[Double](nV)
         var changed = 0L
@@ -1415,10 +1427,8 @@ object GatherScatter {
         }
         while (i < nV) { out(i) = old(i); i += 1 }
         changedAcc.add(changed)
-        Iterator.single((out, changed > 0L))
+        (out, changed > 0L)
     }
-    (next, gathered)
-  }
 
   /** Run the (min, +) propagation from `init` to its exact fixpoint.
     * Returns (value blocks, supersteps run). Vertices never reached keep
@@ -1435,66 +1445,35 @@ object GatherScatter {
                   cp: Option[CsrCheckpoint] = None): (RDD[RankBlock], Int) = {
     require(!useWeights || g.weighted,
       "weighted (min,+) needs build(..., weighted = true)")
-    Using.resource(new Checkpoints(g, cp, maxIterations)) { ck =>
-      val sc = g.csr.sparkContext
-      var it = 0
-      var converged = false
-      // superstep 0 marks every partition active (correct for any init, and —
-      // see scaladoc — for any RESUMED state); thereafter a partition stays
-      // active only while its vertices change
-      var vals = (ck.resume() match {
-        case Some((r, i, conv)) => it = i; converged = conv; r
-        case None => init
-      }).mapPartitions(x => x.map(a => (a, true)), preservesPartitioning = true)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      vals.count()
-      var prev = vals
-      // the hub MIRROR's own frontier: hot shard edges fire only on supersteps
-      // where some hot vertex's value actually moved (compared driver-side —
-      // the mirror is tiny by construction)
-      var prevHot: Array[Double] = null
-      while (!converged && it < maxIterations) {
-        val t0 = System.nanoTime()
-        val changedAcc = sc.longAccumulator(s"min-changed-$it")
-        var hotActive = false
-        val hotV = if (g.hotIds.isEmpty) null
-                   else {
-                     val cur = hotMirror(g, vals.mapPartitions(
-                       it => it.map(_._1), preservesPartitioning = true))
-                     hotActive = prevHot == null || !java.util.Arrays.equals(prevHot, cur)
-                     prevHot = cur
-                     sc.broadcast(cur)
-                   }
-        val (nv, gth) = minStep(g, vals, delta, changedAcc, hotV, hotActive, useWeights)
-        val newVals = nv.persist(StorageLevel.MEMORY_AND_DISK)
-        // long-diameter graphs (chains) run many supersteps: bound lineage
-        if ((it + 1) % 16 == 0) newVals.localCheckpoint()
-        def values = newVals.mapPartitions(x => x.map(_._1), preservesPartitioning = true)
-        ck.materialize(it + 1, newVals, values)
-        gth.unpersist(blocking = false)
-        if (hotV != null) hotV.unpersist(blocking = false)
-        prev.unpersist(blocking = false)
-        prev = newVals
-        vals = newVals
-        it += 1
-        converged = changedAcc.value == 0L
-        ck.commit(it, converged, changedAcc.value, (System.nanoTime() - t0) / 1000000, values)
-      }
-      val out = materialize(g, vals.mapPartitions(
-        it => it.map(_._1), preservesPartitioning = true))
-      vals.unpersist(blocking = false)
-      (out, it)
+    val sc = g.csr.sparkContext
+    // superstep 0 marks every partition active (correct for any init, and —
+    // see scaladoc — for any RESUMED state); thereafter a partition stays
+    // active only while its vertices change
+    val active = (a: Array[Double]) => (a, true)
+    // the hub MIRROR's own frontier: hot shard edges fire only on supersteps
+    // where some hot vertex's value actually moved (compared driver-side —
+    // the mirror is tiny by construction)
+    var prevHot: Array[Double] = null
+    val (vals, it) = iterate[(Array[Double], Boolean)](g,
+        Step(init.mapPartitions(_.map(active), preservesPartitioning = true)),
+        maxIterations, counted = true, cp, _._1, active) { (vals, _, changed) =>
+      var hotActive = false
+      val hotV = if (g.hotIds.isEmpty) null
+                 else {
+                   val cur = hubMirror(g, vals)((v, ls) => ls.map(li => v._1(li)))
+                   hotActive = prevHot == null || !java.util.Arrays.equals(prevHot, cur)
+                   prevHot = cur
+                   sc.broadcast(cur)
+                 }
+      minStep(g, vals, delta, changed, hotV, hotActive, useWeights)
     }
+    (materialize(g, vals)(_._1), it)
   }
 
-  /** HashMin connected components on the (min, +) kernel: every vertex
-    * starts as its own label and adopts the minimum label reachable along
-    * the graph's edges. For the reference's WEAK components semantics
-    * (`src/ConnectedComponents.cpp`; undirected ⊕=min), build the PrGraph on
-    * a bidirectional edge set (e.g. `LinkGraph.undirected`). */
-  def connectedComponents(g: PrGraph, maxIterations: Int = 1 << 20,
-                          cp: Option[CsrCheckpoint] = None): (RDD[RankBlock], Int) = {
-    val init = g.verts.mapPartitions({ it =>
+  /** Every vertex labelled with its own id, as an exact Double — so ids
+    * must lie within ±2^53. */
+  private def idLabels(g: PrGraph): RDD[Array[Double]] =
+    g.verts.mapPartitions({ it =>
       val vm = it.next()
       val a = new Array[Double](vm.ids.length)
       var i = 0
@@ -1506,8 +1485,15 @@ object GatherScatter {
       }
       Iterator.single(a)
     }, preservesPartitioning = true)
-    minFixpoint(g, init, delta = 0.0, maxIterations, cp = cp)
-  }
+
+  /** HashMin connected components on the (min, +) kernel: every vertex
+    * starts as its own label and adopts the minimum label reachable along
+    * the graph's edges. For the reference's WEAK components semantics
+    * (`src/ConnectedComponents.cpp`; undirected ⊕=min), build the PrGraph on
+    * a bidirectional edge set (e.g. `LinkGraph.undirected`). */
+  def connectedComponents(g: PrGraph, maxIterations: Int = 1 << 20,
+                          cp: Option[CsrCheckpoint] = None): (RDD[RankBlock], Int) =
+    minFixpoint(g, idLabels(g), delta = 0.0, maxIterations, cp = cp)
 
   /** BFS levels from `source` on the (min, +) kernel (delta = 1 along
     * out-edges). Unreached vertices keep +∞ (the column engine's -1 analog). */
@@ -1657,28 +1643,18 @@ object GatherScatter {
     }
 
   private def labelStep(g: PrGraph, labels: RDD[Array[Double]],
-      changedAcc: org.apache.spark.util.LongAccumulator,
-      hotL: Broadcast[Array[Double]]): (RDD[Array[Double]], RDD[_]) = {
-    val idPart = new IdPartitioner(g.numPartitions)
-    val gathered = gatherLabelPhase(labels, g, hotL)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val remote = gathered.mapPartitionsWithIndex(
-        (p, it) => it.filter(_._1 != p), preservesPartitioning = false)
-      .partitionBy(idPart)
-    val next = remote.zipPartitions(gathered, g.meta, labels, preservesPartitioning = true) {
-      (rIt, lIt, mIt, oIt) =>
-        val (vm, inIdx) = mIt.next(); val old = oIt.next()
-        val p = TaskContext.getPartitionId()
+      changedAcc: LongAccumulator,
+      hotL: Broadcast[Array[Double]]): Step[Array[Double]] =
+    exchange(g, gatherLabelPhase(labels, g, hotL), labels, hotL) {
+      (vm, inIdx, blocks, old) =>
         // collect (recvIdx, label, count) from every source partition
         val rc = new IntPairBuf // (recvIdx, count)
         val lb = new DblBuf
-        @inline def fold(q: Int, t: (Array[Int], Array[Double], Array[Int])): Unit = {
-          val idx = inIdx(q); val pos = t._1; val labv = t._2; val c = t._3
+        blocks.foreach { case (q, (pos, labv, c)) =>
+          val idx = inIdx(q)
           var i = 0
           while (i < pos.length) { rc.add(idx(pos(i)), c(i)); lb.add(labv(i)); i += 1 }
         }
-        lIt.foreach { case (tp, (q, t)) => if (tp == p) fold(q, t) }
-        rIt.foreach { case (_, (q, t)) => fold(q, t) }
         val m = rc.m
         val recv = rc.trimA; val cnts = rc.trimB; val labv = lb.trim
         // counting sort by receiver, then per-receiver label merge + mode
@@ -1722,10 +1698,8 @@ object GatherScatter {
         }
         while (r < nV) { out(r) = old(r); r += 1 } // in-degree-0: keep label
         changedAcc.add(changed)
-        Iterator.single(out)
+        out
     }
-    (next, gathered)
-  }
 
   /** Community label propagation on the CSR exchange (semantics: column
     * engine's `LabelPropagation` — synchronous, mode-of-neighbor-labels,
@@ -1736,49 +1710,13 @@ object GatherScatter {
     * (label blocks, supersteps run); resumable via `cp` (labels are exact
     * state and every superstep is dense, so a resumed run is identical). */
   def labelPropagation(g: PrGraph, iterations: Int,
-                       cp: Option[CsrCheckpoint] = None): (RDD[RankBlock], Int) =
-    Using.resource(new Checkpoints(g, cp, iterations)) { ck =>
-      val sc = g.csr.sparkContext
-      var it = 0
-      var converged = false
-      var labels = (ck.resume() match {
-        case Some((r, i, conv)) => it = i; converged = conv; r
-        case None => g.verts.mapPartitions({ vIt =>
-          val vm = vIt.next()
-          val a = new Array[Double](vm.ids.length)
-          var i = 0
-          while (i < a.length) {
-            require(vm.ids(i) < (1L << 53) && vm.ids(i) > -(1L << 53),
-            s"vertex id ${vm.ids(i)} not exact in a Double label")
-            a(i) = vm.ids(i).toDouble
-            i += 1
-          }
-          Iterator.single(a)
-        }, preservesPartitioning = true)
-      }).persist(StorageLevel.MEMORY_AND_DISK)
-      labels.count()
-      var prev = labels
-      while (!converged && it < iterations) {
-        val t0 = System.nanoTime()
-        val changedAcc = sc.longAccumulator(s"lp-changed-$it")
-        val hotL = if (g.hotIds.isEmpty) null else sc.broadcast(hotMirror(g, labels))
-        val (nl, gth) = labelStep(g, labels, changedAcc, hotL)
-        val newLabels = nl.persist(StorageLevel.MEMORY_AND_DISK)
-        if ((it + 1) % 16 == 0) newLabels.localCheckpoint()
-        ck.materialize(it + 1, newLabels, newLabels)
-        gth.unpersist(blocking = false)
-        if (hotL != null) hotL.unpersist(blocking = false)
-        prev.unpersist(blocking = false)
-        prev = newLabels
-        labels = newLabels
-        it += 1
-        converged = changedAcc.value == 0L
-        ck.commit(it, converged, changedAcc.value, (System.nanoTime() - t0) / 1000000, labels)
-      }
-      val out = materialize(g, labels)
-      labels.unpersist(blocking = false)
-      (out, it)
+                       cp: Option[CsrCheckpoint] = None): (RDD[RankBlock], Int) = {
+    val (labels, it) = iterate[Array[Double]](g, Step(idLabels(g)), iterations,
+        counted = true, cp, identity, identity) {
+      (labels, _, changed) => labelStep(g, labels, changed, mirror(g, labels))
     }
+    (materialize(g, labels)(identity), it)
+  }
 
   private def singleSourceInit(g: PrGraph, source: Long): RDD[Array[Double]] =
     g.verts.mapPartitions({ it =>

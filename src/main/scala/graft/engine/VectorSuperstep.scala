@@ -1,13 +1,12 @@
 package graft.engine
 
 import org.apache.spark.TaskContext
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
-import GatherScatter.{IdPartitioner, PrGraph}
+import GatherScatter.{IdPartitioner, PrGraph, Step, exchange, hubMirror, iterate}
 
 /**
  * K-vector-payload supersteps on the CSR gather-scatter structures — the
@@ -26,9 +25,10 @@ import GatherScatter.{IdPartitioner, PrGraph}
  *  2. gather: per-edge ⊗(srcVec, weight, dstVec) computed where the edges
  *     live, pre-summed (⊕ = elementwise vector add) into one K-slot per
  *     unique dst — hub fan-in stays structurally two-phase;
- *  3. the row-reduce all-to-all: the scalar kernel's split exchange, K-wide
- *     (self-contributions never enter the shuffle), folded through the
- *     static incoming-index tables, then the dense apply.
+ *  3. the row-reduce all-to-all: the scalar kernel's split exchange
+ *     (`GatherScatter.exchange`), K-wide, folded through the static
+ *     incoming-index tables, then the dense apply. The superstep loop is
+ *     `GatherScatter.iterate`.
  *
  * Cross-executor bytes per superstep = 2 × (partition cut) × K doubles
  * (mirrors out, contributions back) — zero under conversation co-location,
@@ -88,22 +88,6 @@ object VectorSuperstep {
       Iterator.single(a)
     }, preservesPartitioning = true)
 
-  /** K-wide hub mirror: collect the (few) hot vertices' vectors, broadcast. */
-  private def hotVecs(g: PrGraph, state: RDD[Array[Double]], k: Int): Array[Double] = {
-    if (g.hotIds.isEmpty) return Array.emptyDoubleArray
-    val pairs = state.zipPartitions(g.verts) { (sIt, vIt) =>
-      val st = sIt.next(); val vm = vIt.next()
-      Iterator.range(0, vm.hotHomeGlobal.length).map { i =>
-        val seg = new Array[Double](k)
-        System.arraycopy(st, vm.hotHomeLocal(i) * k, seg, 0, k)
-        (vm.hotHomeGlobal(i), seg)
-      }
-    }.collect()
-    val arr = new Array[Double](g.hotIds.length * k)
-    pairs.foreach { case (gi, seg) => System.arraycopy(seg, 0, arr, gi * k, k) }
-    arr
-  }
-
   /** Phase 1: ship each source block the receiver vectors its edges need —
     * packed in the SAME order as its unique-dst table, so the gather indexes
     * them positionally (the incoming-index table run in reverse). Self
@@ -127,16 +111,16 @@ object VectorSuperstep {
         }
     }
 
-  /** One synchronous vector superstep. Returns (next state — lazy, caller
-    * persists+counts, the gathered split-exchange handle and the hub
-    * broadcast — caller frees both after materializing). */
+  /** One synchronous vector superstep (lazy; [[GatherScatter.iterate]]
+    * runs it and frees its handles). */
   private def step(g: PrGraph, state: RDD[Array[Double]], kern: VecKernel,
-                   globalsArr: Array[Double])
-      : (RDD[Array[Double]], RDD[_], Broadcast[Array[Double]]) = {
+                   globalsArr: Array[Double]): Step[Array[Double]] = {
     val sc = state.sparkContext
     val k = kern.k
     val idPart = new IdPartitioner(g.numPartitions)
-    val hotBc = sc.broadcast(hotVecs(g, state, k))
+    // K-wide hub mirror: the (few) hot vertices' vectors
+    val hotBc = sc.broadcast(hubMirror(g, state, k)(
+      (st, ls) => ls.flatMap(li => st.slice(li * k, li * k + k))))
     val globalsBc = sc.broadcast(globalsArr)
     val hotIdsLoc = g.hotIds
     val mirrors: RDD[(Int, (Int, Array[Double]))] =
@@ -211,70 +195,32 @@ object VectorSuperstep {
           }
           Iterator.range(0, out.length).filter(out(_) != null)
             .map(tp => (tp, (p, out(tp))))
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-    // split exchange: self-contributions stay in the cached gather output
-    val remote = gathered.mapPartitionsWithIndex(
-        (p, it) => it.filter(_._1 != p), preservesPartitioning = false)
-      .partitionBy(idPart)
-    val next = remote.zipPartitions(gathered, g.meta, state, preservesPartitioning = true) {
-      (rIt, lIt, mIt, oIt) =>
-        val (vm, inIdx) = mIt.next(); val old = oIt.next()
-        val gl = globalsBc.value
-        val p = TaskContext.getPartitionId()
-        val acc = new Array[Double](vm.nRecv * k)
-        @inline def fold(q: Int, vals: Array[Double]): Unit = {
-          val idx = inIdx(q)
-          var j = 0
-          while (j < idx.length) {
-            val dst = idx(j) * k; val src = j * k
-            var d = 0
-            while (d < k) { acc(dst + d) += vals(src + d); d += 1 }
-            j += 1
-          }
+      }
+    exchange(g, gathered, state, hotBc, globalsBc) { (vm, inIdx, blocks, old) =>
+      val gl = globalsBc.value
+      val acc = new Array[Double](vm.nRecv * k)
+      blocks.foreach { case (q, vals) =>
+        val idx = inIdx(q)
+        var j = 0
+        while (j < idx.length) {
+          val dst = idx(j) * k; val src = j * k
+          var d = 0
+          while (d < k) { acc(dst + d) += vals(src + d); d += 1 }
+          j += 1
         }
-        lIt.foreach { case (tp, (q, vals)) => if (tp == p) fold(q, vals) }
-        rIt.foreach { case (_, (q, vals)) => fold(q, vals) }
-        val nV = vm.ids.length
-        val out = new Array[Double](nV * k)
-        var i = 0
-        while (i < vm.nRecv) {
-          kern.applyRecv(old, acc, out, i * k, vm.ids(i), gl)
-          i += 1
-        }
-        // in-degree-0 vertices never receive: keep their vectors
-        val nR = vm.nRecv * k
-        System.arraycopy(old, nR, out, nR, nV * k - nR)
-        Iterator.single(out)
+      }
+      val nV = vm.ids.length
+      val out = new Array[Double](nV * k)
+      var i = 0
+      while (i < vm.nRecv) {
+        kern.applyRecv(old, acc, out, i * k, vm.ids(i), gl)
+        i += 1
+      }
+      // in-degree-0 vertices never receive: keep their vectors
+      val nR = vm.nRecv * k
+      System.arraycopy(old, nR, out, nR, nV * k - nR)
+      out
     }
-    (next, gathered, hotBc)
-  }
-
-  /** Drive `iterations` supersteps of `kern` from `state0` (consumed:
-    * unpersisted as soon as the first step lands). `globalsFn` recomputes
-    * the broadcast globals before every superstep (LDA's
-    * do_every_iteration); null-safe default = none. */
-  private def drive(g: PrGraph, state0: RDD[Array[Double]], kern: VecKernel,
-                    iterations: Int,
-                    globalsFn: RDD[Array[Double]] => Array[Double] = null)
-      : RDD[Array[Double]] = {
-    var state = state0
-    var it = 0
-    while (it < iterations) {
-      val gl = if (globalsFn == null) Array.emptyDoubleArray else globalsFn(state)
-      val (nextLazy, gathered, hotBc) = step(g, state, kern, gl)
-      val next = nextLazy.persist(StorageLevel.MEMORY_AND_DISK)
-      // bound lineage depth for long runs: every 16 supersteps the persisted
-      // state also truncates its chain (executor loss then recomputes at
-      // most 16 steps, never back to iteration 0)
-      if (it % 16 == 15) next.localCheckpoint()
-      next.count()
-      gathered.unpersist(blocking = false)
-      hotBc.unpersist(blocking = false)
-      state.unpersist(blocking = false)
-      state = next
-      it += 1
-    }
-    state
   }
 
   private def toBlocks(g: PrGraph, state: RDD[Array[Double]], k: Int): RDD[VecBlock] = {
@@ -331,9 +277,11 @@ object VectorSuperstep {
           init: (Long, Int) => Double): RDD[VecBlock] = {
     require(g.weighted,
       "sgd needs per-edge ratings: build the graph with weighted = true")
-    val state0 = initState(g, k, init).persist(StorageLevel.MEMORY_AND_DISK)
-    state0.count()
-    toBlocks(g, drive(g, state0, new SgdKernel(k, lambda, stepSize), iterations), k)
+    val kern = new SgdKernel(k, lambda, stepSize)
+    val (done, _) = iterate(g, Step(initState(g, k, init)), iterations, counted = false) {
+      (state, _, _) => step(g, state, kern, Array.emptyDoubleArray)
+    }
+    toBlocks(g, done, k)
   }
 
   // ---- LDA ----------------------------------------------------------------
@@ -438,12 +386,15 @@ object VectorSuperstep {
         Iterator.single(acc)
       }.reduce { (a, b) => var d = 0; while (d < k) { a(d) += b(d); d += 1 }; a }
 
-    val zeros = initState(g, k, (_, _) => 0.0).persist(StorageLevel.MEMORY_AND_DISK)
-    zeros.count()
-    val inited = drive(g, zeros, new LdaInitKernel(k, gnTab), 1)
+    val initKern = new LdaInitKernel(k, gnTab)
     val kern = new LdaKernel(k, alpha, eta, termMinId)
-    val done = drive(g, inited, kern, iterations,
-      globalsFn = st => globalN(st).map(_ + v * (eta - 1.0)))
+    // superstep 0 is the init pass; the global topic vector is refreshed
+    // before every later one
+    val (done, _) = iterate(g, Step(initState(g, k, (_, _) => 0.0)), 1 + iterations,
+        counted = false) { (state, it, _) =>
+      if (it == 0) step(g, state, initKern, Array.emptyDoubleArray)
+      else step(g, state, kern, globalN(state).map(_ + v * (eta - 1.0)))
+    }
     toBlocks(g, done, k)
   }
 

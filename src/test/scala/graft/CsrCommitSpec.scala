@@ -3,11 +3,11 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{Edge, LinkGraph}
 import graft.engine.{CsrCheckpoint, GatherScatter, HadoopSnapshotStore, SnapshotStore}
+import SparkTestBase.jobsOf
 
 /** The cost side of CSR checkpointing: a due checkpoint's state write is the
   * superstep's own Spark job, its blocks land as one file per partition with
@@ -27,36 +27,6 @@ class CsrCommitSpec extends AnyFunSuite {
 
   private def ranksMap(r: org.apache.spark.rdd.RDD[GatherScatter.RankBlock]) =
     r.flatMap(b => b.ids.zip(b.pr)).collect().toMap
-
-  /** Spark jobs started by `body`. Listener events arrive asynchronously but
-    * in order, so a marker job seen by the listener closes the count. */
-  private def jobsOf[A](body: => A): (A, Int) = {
-    val sc = s.sparkContext
-    val jobs = new AtomicInteger
-    val markers = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("graft.marker") != null))
-          markers.incrementAndGet()
-        else jobs.incrementAndGet()
-    }
-    def marker(): Unit = {
-      val seen = markers.get
-      sc.setLocalProperty("graft.marker", "1")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.marker", null)
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (markers.get == seen && System.nanoTime() < deadline) Thread.sleep(5)
-      assert(markers.get > seen, "listener bus did not deliver the marker job")
-    }
-    sc.addSparkListener(l)
-    try {
-      marker()
-      jobs.set(0)
-      val a = body
-      marker()
-      (a, jobs.get)
-    } finally sc.removeSparkListener(l)
-  }
 
   private def partFiles(dir: String): Set[String] =
     new java.io.File(dir).list().filterNot(_.startsWith(".")).toSet

@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (sbt forks one JVM for tests). */
@@ -15,6 +18,37 @@ object SparkTestBase {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** Spark jobs started by `body`. Listener events arrive asynchronously but
+    * in order, so a marker job seen by the listener closes the count. */
+  def jobsOf[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val markers = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.marker") != null))
+          markers.incrementAndGet()
+        else jobs.incrementAndGet()
+    }
+    def marker(): Unit = {
+      val seen = markers.get
+      sc.setLocalProperty("graft.marker", "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.marker", null)
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (markers.get == seen && System.nanoTime() < deadline) Thread.sleep(5)
+      org.scalatest.Assertions.assert(markers.get > seen,
+        "listener bus did not deliver the marker job")
+    }
+    sc.addSparkListener(l)
+    try {
+      marker()
+      jobs.set(0)
+      val a = body
+      marker()
+      (a, jobs.get)
+    } finally sc.removeSparkListener(l)
   }
 
   /** Path of a bundled GraphMat reference graph (FIXTURES.md §2): the
