@@ -216,16 +216,12 @@ object Scc {
               (col("id") =!= col("bf") || col("id") =!= col("bb"))).as("chg")),
            Seq.empty[() => Unit])
         } else {
-          val t0 = System.nanoTime()
           val fwd = GatherScatter.build(LinkGraph(inBlock, nP), nP)
           val bwd = GatherScatter.build(LinkGraph(
             inBlock.select(col("dst").as("src"), col("src").as("dst"), col("weight")),
             nP), nP)
-          val t1 = System.nanoTime()
-          val (fL, fIt) = GatherScatter.connectedComponents(fwd)
-          val (bL, bIt) = GatherScatter.connectedComponents(bwd)
-          if (sys.env.contains("SPARK_GRAFT_ITERLOG"))
-            println(f"[scc] round=$round build=${(t1 - t0) / 1e9}%.2fs fix=${(System.nanoTime() - t1) / 1e9}%.2fs fwdIters=$fIt bwdIters=$bIt")
+          val (fL, _) = GatherScatter.connectedComponents(fwd)
+          val (bL, _) = GatherScatter.connectedComponents(bwd)
           val f = GatherScatter.toDF(spark, fL)
             .select(col("id"), col("pagerank").cast("long").as("f"))
           val b = GatherScatter.toDF(spark, bL)
@@ -257,8 +253,6 @@ object Scc {
         sum(when(col("nbf") === col("nbb"), 0L).otherwise(1L))).head()
       val liveLeft = if (sig.isNullAt(1)) 0L else sig.getLong(1)
       changed = if (liveLeft == 0L || sig.isNullAt(0)) 0L else sig.getLong(0)
-      if (sys.env.contains("SPARK_GRAFT_ITERLOG"))
-        println(s"[scc] round=$round changed=$changed liveLeft=$liveLeft")
       val prev = state
       val (stNew, stNewIds) = tracked(
         nextP.select(col("id"), col("nbf").as("bf"), col("nbb").as("bb"),

@@ -242,10 +242,7 @@ object LinkGraph {
       try df.queryExecution.optimizedPlan.stats.sizeInBytes
       catch { case _: Exception => BigInt(Long.MaxValue) }
     val est = bytes / partitionTargetBytes + 1
-    val n = if (est >= cap) cap else math.max(1, est.toInt)
-    if (sys.env.contains("SPARK_GRAFT_ITERLOG"))
-      System.err.println(s"[adaptive-parts] bytes=$bytes -> n=$n (cap=$cap)")
-    n
+    if (est >= cap) cap else math.max(1, est.toInt)
   }
 
   /** Partition count for a known row count (callers that track cardinality

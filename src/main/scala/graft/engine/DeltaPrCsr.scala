@@ -1,9 +1,9 @@
 package graft.engine
 
-import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 
-import GatherScatter.{PrGraph, RankBlock, Step, exchange, foldSum, hubMirror, iterate, materialize}
+import GatherScatter.{PrGraph, RankBlock, Step, Sum, exchange, fold, gather, hotValues, iterate,
+  materialize, mirror}
 
 /**
  * Incremental (delta) PageRank on the CSR gather-scatter structures —
@@ -19,8 +19,8 @@ import GatherScatter.{PrGraph, RankBlock, Step, exchange, foldSum, hubMirror, it
  * Unlike the (min,+) kernel's partition-granularity frontier (sound there
  * because min is idempotent — resending can't corrupt), sum ⊕ would
  * double-count a resent delta, so the frontier here is a PER-VERTEX mask:
- * the gather multiplies each source's contribution by its mask and a
- * partition with no active sources (and no active hubs) emits nothing.
+ * the gather multiplies each source's contribution by its mask, and a
+ * block with no positive sum is not shipped.
  * "Received" detection rides an invariant of the program: deltas are
  * strictly positive (init 0.3; d1 = (1−α)·Σ of positive messages; senders
  * are vertices whose rank moved, so their delta exceeds the 1e-8 gate), so
@@ -28,8 +28,10 @@ import GatherScatter.{PrGraph, RankBlock, Step, exchange, foldSum, hubMirror, it
  * exactly the column engine's join-matched test, with no extra mask bytes
  * in the exchange.
  *
- * Hub (degree-split) sources broadcast their delta masked by activity
- * (`GatherScatter.hubMirror`); the edge site multiplies it by invDeg. The
+ * The gather is `GatherScatter.gather` with ⊕ = Sum: the kernel supplies
+ * the masked delta·invDeg per local source (null when no source here is
+ * active). Hub (degree-split) sources broadcast their delta masked by
+ * activity (`GatherScatter.mirror`), scaled by invDeg per hot source. The
  * exchange, the superstep loop and its changed==0 stop rule are
  * `GatherScatter.exchange` and `GatherScatter.iterate`.
  *
@@ -52,7 +54,6 @@ object DeltaPrCsr {
 
   def run(g: PrGraph, alpha: Double = 0.3, maxIterations: Int = 1 << 20)
       : (RDD[RankBlock], Int) = {
-    val sc = g.csr.sparkContext
     val init = g.verts.mapPartitions({ it =>
       val vm = it.next()
       val n = vm.ids.length
@@ -62,68 +63,24 @@ object DeltaPrCsr {
     val (state, it) = iterate(g, Step(init), maxIterations, counted = true) {
       (state, _, changedAcc) =>
         // hub mirror: per hot vertex, its masked delta (0.0 when inactive —
-        // contributes nothing, keeping "received ⇔ sum>0"); multiplied by the
-        // hub's 1/globalDegree at the edge site
-        val hotBc = sc.broadcast(hubMirror(g, state)(
-          (s, ls) => ls.map(li => if (s.act(li)) s.delta(li) else 0.0)))
-        val gathered = state.zipPartitions(g.csr, g.verts, preservesPartitioning = false) {
-          (sIt, cIt, vIt) =>
-            val s = sIt.next(); val blk = cIt.next(); val vm = vIt.next()
-            val p = TaskContext.getPartitionId()
-            val nS = blk.srcs.length
-            // masked contribution per local src: delta·invDeg, 0 when inactive
-            val contrib = new Array[Double](nS)
-            var any = false
-            var i = 0
-            while (i < nS) {
-              val li = vm.srcPrIdx(i)
-              if (s.act(li)) { contrib(i) = s.delta(li) * blk.invDeg(i); any = true }
-              i += 1
-            }
-            val hp = hotBc.value
-            var anyHot = false
-            if (blk.hotEdgeSrcIdx.length > 0) {
-              var h = 0
-              while (h < blk.hotLocal.length && !anyHot) {
-                if (hp(blk.hotLocal(h)) != 0.0) anyHot = true
-                h += 1
-              }
-            }
-            val out = new Array[Array[Double]](blk.outIds.length)
-            if (any) {
-              var tp = 0
-              while (tp < blk.outIds.length) {
-                val ids = blk.outIds(tp)
-                if (ids != null) {
-                  val vals = new Array[Double](ids.length)
-                  val es = blk.edgeSrcIdx(tp); val eo = blk.edgeOutIdx(tp)
-                  var e = 0
-                  while (e < es.length) { vals(eo(e)) += contrib(es(e)); e += 1 }
-                  out(tp) = vals
-                }
-                tp += 1
-              }
-            }
-            if (anyHot) {
-              if (out(p) == null) out(p) = new Array[Double](
-                if (blk.outIds(p) == null) 0 else blk.outIds(p).length)
-              val vals = out(p)
-              val hs = blk.hotEdgeSrcIdx; val ho = blk.hotEdgeOutIdx
-              var e = 0
-              while (e < hs.length) {
-                vals(ho(e)) += hp(blk.hotLocal(hs(e))) * blk.hotLocalInvDeg(hs(e))
-                e += 1
-              }
-            }
-            // emit only blocks with at least one positive sum — sparse frontier
-            Iterator.range(0, out.length).filter { tp =>
-              val v = out(tp)
-              v != null && { var j = 0; var nz = false
-                while (j < v.length && !nz) { if (v(j) > 0.0) nz = true; j += 1 }; nz }
-            }.map(tp => (tp, (p, out(tp))))
-        }
+        // contributes nothing, keeping "received ⇔ sum>0"); the gather
+        // multiplies it by the hub's 1/globalDegree
+        val hotBc = mirror(g, state)(
+          (s, ls) => ls.map(li => if (s.act(li)) s.delta(li) else 0.0))
+        val gathered = gather(g, state, Sum)((s, blk, vm) => {
+          // masked contribution per local src: delta·invDeg, 0 when inactive
+          val c = new Array[Double](blk.srcs.length)
+          var any = false
+          var i = 0
+          while (i < c.length) {
+            val li = vm.srcPrIdx(i)
+            if (s.act(li)) { c(i) = s.delta(li) * blk.invDeg(i); any = true }
+            i += 1
+          }
+          if (any) c else null
+        }, blk => hotValues(blk, hotBc.value, perDegree = true))
         exchange(g, gathered, state, hotBc) { (vm, inIdx, blocks, old) =>
-          val acc = foldSum(vm.nRecv, inIdx, blocks)
+          val acc = fold(Sum, vm.nRecv, inIdx, blocks)
           val n = vm.ids.length
           val pr = new Array[Double](n)
           val dl = new Array[Double](n)

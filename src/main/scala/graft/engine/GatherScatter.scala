@@ -774,9 +774,6 @@ object GatherScatter {
   // precisely so that a rebuild with the same numPartitions/keyShift/
   // hotDegree reproduces the layout deterministically (see sortWithPerm).
 
-  private val metricLineRe =
-    """\{"iteration":(\d+),"changed":(-?\d+),"millis":(\d+)\}""".r
-
   /** The checkpoint side of one CSR run ([[CsrCheckpoint]]); without a
     * checkpoint, every method is the plain uncheckpointed step. A due
     * checkpoint costs no Spark job of its own: its state write IS the
@@ -822,12 +819,8 @@ object GatherScatter {
               "see build())")
             Iterator.single(rb.pr)
           }
-        metrics = c.store.readText(sc, s"${root(c)}/metrics.jsonl").map {
-          _.linesIterator.collect {
-            case metricLineRe(i, ch, ms) if i.toInt <= iter =>
-              IterationMetrics(i.toInt, ch.toLong, ms.toLong)
-          }.toVector
-        }.getOrElse(Vector.empty)
+        metrics = c.store.readText(sc, s"${root(c)}/metrics.jsonl")
+          .map(IterationMetrics.parse(_, iter)).getOrElse(Vector.empty)
         (state, iter, converged)
       }
     }
@@ -851,9 +844,7 @@ object GatherScatter {
         close() // the previous commit, which ran alongside this superstep
         if (!due(it)) writeState(c, it, values)
         val texts = lineage(c).toSeq ++ Seq(
-          s"${root(c)}/metrics.jsonl" -> metrics.map(m =>
-            s"""{"iteration":${m.iteration},"changed":${m.changed},"millis":${m.millis}}""")
-            .mkString("", "\n", "\n"),
+          s"${root(c)}/metrics.jsonl" -> IterationMetrics.jsonl(metrics),
           // the pointer commits the checkpoint — written LAST, so a crash
           // during any earlier write leaves the previous state resumable
           s"${root(c)}/latest.json" ->
@@ -918,10 +909,16 @@ object GatherScatter {
   // ---- the superstep plumbing, written once -------------------------------
   //
   // Every CSR kernel runs GraphMat's `run_graph_program` superstep
-  // (`GraphMatRuntime.h:136-261`): gather (⊗ + per-target pre-sum) → split
+  // (`GraphMatRuntime.h:136-261`): gather (⊗ + per-target pre-⊕) → split
   // exchange → fold (⊕) + apply, then the land-reduce stop test. A kernel
-  // owns its arithmetic — the gather and the per-partition fold + apply;
-  // the plumbing between them exists once:
+  // owns its ⊗ and its per-partition apply; the rest exists once:
+  //  - `gather`, the scalar gather of every sum or min kernel (PageRank,
+  //    PPR, CC/BFS/SSSP, delta PageRank, the Kahn peel): the kernel's ⊗
+  //    runs once per partition into a dense per-source array, and `scatter`
+  //    ⊕-folds it along each target block's edges and the hub-shard edges,
+  //    with ⊕ (a `Monoid`: `Sum` or `Min`) picked once per block. LP's label
+  //    histograms and VectorSuperstep's K-wide payloads keep their own
+  //    gathers.
   //  - `exchange`, the split exchange. A partition's contribution to ITSELF
   //    is most of the exchange whenever the partitioning has locality
   //    (keyShift co-location makes it ~all of it), and shipping it through
@@ -934,11 +931,12 @@ object GatherScatter {
   //    (see engineConfs): reduce-locality off makes the cached graph blocks
   //    the ONLY preferred location, so map output, block cache and apply
   //    task never separate.
+  //  - `fold`, the ⊕ of the received blocks into a dense accumulator.
   //  - `iterate`, the superstep loop: changed count, persist, lineage
   //    truncation, durable checkpoints, and freeing each superstep's
   //    gathered blocks, broadcasts and previous state once it has landed.
-  //  - `hubMirror`, the per-superstep collect of the hot vertices' values
-  //    for the mirror broadcast.
+  //  - `hubMirror` / `mirror`, the per-superstep collect of the hot
+  //    vertices' values for the mirror broadcast.
 
   /** One superstep's lazy state and what [[iterate]] frees once that state
     * is materialized: the gathered blocks and the superstep's broadcasts. */
@@ -978,14 +976,107 @@ object GatherScatter {
     Step(next, gathered, broadcasts)
   }
 
-  /** ⊕ = + of received blocks into a dense per-receiver accumulator. */
-  private[engine] def foldSum(nRecv: Int, inIdx: Array[Array[Int]],
-                              blocks: Iterator[(Int, Array[Double])]): Array[Double] = {
+  /** The ⊕ of the scalar gather and fold with its identity: GraphMat's
+    * `reduce_function`, specialized to the two the CSR kernels use. */
+  private[engine] sealed abstract class Monoid(val zero: Double)
+  private[engine] case object Sum extends Monoid(0.0)
+  private[engine] case object Min extends Monoid(Double.PositiveInfinity)
+
+  /**
+   * The scalar gather, written once. Per partition, `contrib` is the
+   * kernel's ⊗: the dense per-local-source contributions, or null when no
+   * source here is active. `hot` gives the per-`hotLocal` contributions of
+   * the hub-shard edges, or null when no hub is active; it is called only
+   * on blocks that have hot edges. Each target block is the ⊕-scatter of
+   * its edges (plus the per-edge weight when `useW`, weighted Min only);
+   * the hub-shard edges were routed here by dst, so they scatter into the
+   * partition's own block, after its edges, unless every hub contribution
+   * is ⊕'s identity. Emits (targetPartition, (sourcePartition, packed block
+   * aligned to outIds)) for every block with a slot off ⊕'s identity.
+   * Skipping identity contributions is exact — `acc + 0.0 == acc` for the
+   * sums, which start at +0.0 and never go negative, and
+   * `min(acc, +∞) == acc` — and for the positive-contribution sum kernels
+   * (delta PageRank, the peel) it is their sparse frontier.
+   */
+  private[engine] def gather[S](g: PrGraph, state: RDD[S], op: Monoid, useW: Boolean = false)(
+      contrib: (S, CsrBlock, VertexMeta) => Array[Double],
+      hot: CsrBlock => Array[Double]): RDD[(Int, (Int, Array[Double]))] = {
+    val sum = op eq Sum
+    val zero = op.zero
+    state.zipPartitions(g.csr, g.verts, preservesPartitioning = false) { (sIt, cIt, vIt) =>
+      val blk = cIt.next()
+      val c = contrib(sIt.next(), blk, vIt.next())
+      val p = TaskContext.getPartitionId()
+      val out = new Array[Array[Double]](blk.outIds.length)
+      def block(tp: Int) = {
+        val o = new Array[Double](if (blk.outIds(tp) == null) 0 else blk.outIds(tp).length)
+        if (!sum) java.util.Arrays.fill(o, zero)
+        o
+      }
+      var tp = 0
+      while (c != null && tp < out.length) {
+        if (blk.outIds(tp) != null) {
+          out(tp) = block(tp)
+          scatter(sum, c, blk.edgeSrcIdx(tp), blk.edgeOutIdx(tp),
+            if (useW) blk.edgeW(tp) else null, out(tp))
+        }
+        tp += 1
+      }
+      val hc = if (blk.hotEdgeSrcIdx.length > 0) hot(blk) else null
+      if (hc != null && offZero(hc, zero)) {
+        if (out(p) == null) out(p) = block(p)
+        scatter(sum, hc, blk.hotEdgeSrcIdx, blk.hotEdgeOutIdx,
+          if (useW) blk.hotEdgeW else null, out(p))
+      }
+      Iterator.range(0, out.length).filter(tp => out(tp) != null && offZero(out(tp), zero))
+        .map(tp => (tp, (p, out(tp))))
+    }
+  }
+
+  /** Whether some slot of `a` differs from `zero`. */
+  private def offZero(a: Array[Double], zero: Double): Boolean = {
+    var j = 0
+    while (j < a.length && a(j) == zero) j += 1
+    j < a.length
+  }
+
+  /** `o(eo(e)) ⊕= c(es(e))`, plus `ws(e)` when `ws` is non-null (weighted
+    * Min only), over one block's edges: ⊕ and the weight are picked once
+    * per block, never per edge. */
+  private def scatter(sum: Boolean, c: Array[Double], es: Array[Int], eo: Array[Int],
+                      ws: Array[Double], o: Array[Double]): Unit = {
+    var e = 0
+    if (sum) while (e < es.length) { o(eo(e)) += c(es(e)); e += 1 }
+    else if (ws == null)
+      while (e < es.length) { val x = c(es(e)); if (x < o(eo(e))) o(eo(e)) = x; e += 1 }
+    else
+      while (e < es.length) { val x = c(es(e)) + ws(e); if (x < o(eo(e))) o(eo(e)) = x; e += 1 }
+  }
+
+  /** The mirrored values of a block's hot sources, aligned to `hotLocal`;
+    * `perDegree` multiplies each by its hub's 1/globalDegree. */
+  private[engine] def hotValues(blk: CsrBlock, mirrored: Array[Double],
+                                perDegree: Boolean = false): Array[Double] = {
+    val h = new Array[Double](blk.hotLocal.length)
+    var i = 0
+    if (perDegree)
+      while (i < h.length) { h(i) = mirrored(blk.hotLocal(i)) * blk.hotLocalInvDeg(i); i += 1 }
+    else while (i < h.length) { h(i) = mirrored(blk.hotLocal(i)); i += 1 }
+    h
+  }
+
+  /** ⊕ of the received blocks into a dense per-receiver accumulator that
+    * starts at ⊕'s identity. */
+  private[engine] def fold(op: Monoid, nRecv: Int, inIdx: Array[Array[Int]],
+                           blocks: Iterator[(Int, Array[Double])]): Array[Double] = {
+    val sum = op eq Sum
     val acc = new Array[Double](nRecv)
-    blocks.foreach { case (q, vals) =>
+    if (!sum) java.util.Arrays.fill(acc, op.zero)
+    blocks.foreach { case (q, vs) =>
       val idx = inIdx(q)
       var i = 0
-      while (i < vals.length) { acc(idx(i)) += vals(i); i += 1 }
+      if (sum) while (i < vs.length) { acc(idx(i)) += vs(i); i += 1 }
+      else while (i < vs.length) { if (vs(i) < acc(idx(i))) acc(idx(i)) = vs(i); i += 1 }
     }
     acc
   }
@@ -1008,11 +1099,15 @@ object GatherScatter {
     arr
   }
 
-  /** The broadcast hub mirror of a scalar state; null on hubless graphs,
-    * whose gathers never dereference it. */
-  private def mirror(g: PrGraph, ranks: RDD[Array[Double]]): Broadcast[Array[Double]] =
+  /** The projection of a value vector onto the given local indices. */
+  private val scalarAt = (r: Array[Double], ls: Array[Int]) => ls.map(li => r(li))
+
+  /** The broadcast hub mirror of a scalar projection of `state` (`at` as
+    * in [[hubMirror]]); null on hubless graphs, whose gathers never read it. */
+  private[engine] def mirror[S](g: PrGraph, state: RDD[S])
+                               (at: (S, Array[Int]) => Array[Double]): Broadcast[Array[Double]] =
     if (g.hotIds.isEmpty) null
-    else ranks.sparkContext.broadcast(hubMirror(g, ranks)((r, ls) => ls.map(li => r(li))))
+    else state.sparkContext.broadcast(hubMirror(g, state)(at))
 
   /**
    * The superstep loop, written once. `init` is superstep 0's state:
@@ -1084,52 +1179,16 @@ object GatherScatter {
       (state, it)
     }
 
-  /** The gather (⊗ + per-target pre-sum ⊕): emits (targetPartition,
-    * (sourcePartition, packed partial sums aligned to outIds)). */
-  private def gatherPhase(ranks: RDD[Array[Double]], g: PrGraph,
-                          hotPr: Broadcast[Array[Double]]): RDD[(Int, (Int, Array[Double]))] =
-    ranks.zipPartitions(g.csr, g.verts, preservesPartitioning = false) { (rIt, cIt, vIt) =>
-      val pr = rIt.next(); val blk = cIt.next(); val vm = vIt.next()
-      val p = TaskContext.getPartitionId()
-      val nS = blk.srcs.length
-      val contrib = new Array[Double](nS)
+  /** PageRank's gather: ⊗ = rank / out-degree, ⊕ = +. `hotPr` is the hub
+    * mirror (null on hubless graphs, never read then). */
+  private def rankGather(g: PrGraph, ranks: RDD[Array[Double]],
+                         hotPr: Broadcast[Array[Double]]): RDD[(Int, (Int, Array[Double]))] =
+    gather(g, ranks, Sum)((pr, blk, vm) => {
+      val c = new Array[Double](blk.srcs.length)
       var i = 0
-      while (i < nS) {
-        contrib(i) = pr(vm.srcPrIdx(i)) * blk.invDeg(i)
-        i += 1
-      }
-      val out = new Array[Array[Double]](blk.outIds.length)
-      var tp = 0
-      while (tp < blk.outIds.length) {
-        val ids = blk.outIds(tp)
-        if (ids != null) {
-          val vals = new Array[Double](ids.length)
-          val es = blk.edgeSrcIdx(tp); val eo = blk.edgeOutIdx(tp)
-          var e = 0
-          while (e < es.length) { vals(eo(e)) += contrib(es(e)); e += 1 }
-          out(tp) = vals
-        }
-        tp += 1
-      }
-      // hot-shard edges: contrib from the broadcast mirror; target bucket is
-      // this partition itself (they were routed here by dst)
-      if (blk.hotEdgeSrcIdx.length > 0) {
-        val hp = hotPr.value
-        val hc = new Array[Double](blk.hotLocal.length)
-        i = 0
-        while (i < hc.length) {
-          hc(i) = hp(blk.hotLocal(i)) * blk.hotLocalInvDeg(i)
-          i += 1
-        }
-        if (out(p) == null) out(p) = new Array[Double](
-          if (blk.outIds(p) == null) 0 else blk.outIds(p).length)
-        val vals = out(p)
-        val hs = blk.hotEdgeSrcIdx; val ho = blk.hotEdgeOutIdx
-        var e = 0
-        while (e < hs.length) { vals(ho(e)) += hc(hs(e)); e += 1 }
-      }
-      Iterator.range(0, out.length).filter(out(_) != null).map(tp => (tp, (p, out(tp))))
-    }
+      while (i < c.length) { c(i) = pr(vm.srcPrIdx(i)) * blk.invDeg(i); i += 1 }
+      c
+    }, blk => hotValues(blk, hotPr.value, perDegree = true))
 
   /**
    * One LAZY superstep for the fixed-iteration path: gather → split exchange
@@ -1141,8 +1200,8 @@ object GatherScatter {
    */
   private def superstepLazy(g: PrGraph, ranks: RDD[Array[Double]],
                             alpha: Double): Step[Array[Double]] =
-    exchange(g, gatherPhase(ranks, g, null), null) { (vm, inIdx, blocks, _: Null) =>
-      val acc = foldSum(vm.nRecv, inIdx, blocks)
+    exchange(g, rankGather(g, ranks, null), null) { (vm, inIdx, blocks, _: Null) =>
+      val acc = fold(Sum, vm.nRecv, inIdx, blocks)
       val nV = vm.ids.length
       val newPr = new Array[Double](nV)
       var i = 0
@@ -1157,8 +1216,8 @@ object GatherScatter {
   private def superstep(g: PrGraph, ranks: RDD[Array[Double]], alpha: Double,
                         tol: Double, changedAcc: LongAccumulator,
                         hotPr: Broadcast[Array[Double]]): Step[Array[Double]] =
-    exchange(g, gatherPhase(ranks, g, hotPr), ranks, hotPr) { (vm, inIdx, blocks, old) =>
-      val acc = foldSum(vm.nRecv, inIdx, blocks)
+    exchange(g, rankGather(g, ranks, hotPr), ranks, hotPr) { (vm, inIdx, blocks, old) =>
+      val acc = fold(Sum, vm.nRecv, inIdx, blocks)
       val nV = vm.ids.length
       val newPr = new Array[Double](nV)
       var changed = 0L
@@ -1252,7 +1311,7 @@ object GatherScatter {
       // hub graphs need the per-superstep mirror broadcast (a driver action),
       // so each superstep is materialized
       val (ranks, _) = iterate(g, Step(initRanks(g)), iterations, counted = false) {
-        (ranks, _, _) => superstep(g, ranks, alpha, tol = -1.0, null, mirror(g, ranks))
+        (ranks, _, _) => superstep(g, ranks, alpha, tol = -1.0, null, mirror(g, ranks)(scalarAt))
       }
       materialize(g, ranks)(identity)
     }
@@ -1278,9 +1337,9 @@ object GatherScatter {
     }, preservesPartitioning = true).persist(StorageLevel.MEMORY_AND_DISK)
     // init pr0 = s; persisted here, so the loop leaves `base` to this caller
     val (ranks, _) = iterate(g, Step(base), iterations, counted = false) { (ranks, _, _) =>
-      val hotPr = mirror(g, ranks)
-      exchange(g, gatherPhase(ranks, g, hotPr), base, hotPr) { (vm, inIdx, blocks, b) =>
-        val acc = foldSum(vm.nRecv, inIdx, blocks)
+      val hotPr = mirror(g, ranks)(scalarAt)
+      exchange(g, rankGather(g, ranks, hotPr), base, hotPr) { (vm, inIdx, blocks, b) =>
+        val acc = fold(Sum, vm.nRecv, inIdx, blocks)
         val nV = vm.ids.length
         val newPr = new Array[Double](nV)
         var i = 0
@@ -1313,7 +1372,7 @@ object GatherScatter {
                         cp: Option[CsrCheckpoint] = None): (RDD[RankBlock], Int) = {
     val (ranks, it) = iterate[Array[Double]](g, Step(initRanks(g)), maxIterations,
         counted = true, cp, identity, identity) {
-      (ranks, _, changed) => superstep(g, ranks, alpha, tol, changed, mirror(g, ranks))
+      (ranks, _, changed) => superstep(g, ranks, alpha, tol, changed, mirror(g, ranks)(scalarAt))
     }
     (materialize(g, ranks)(identity), it)
   }
@@ -1322,113 +1381,31 @@ object GatherScatter {
   //
   // GraphMat's core claim is vertex-programs-as-semiring-SpMV
   // (`include/GMDP/...`, VLDB'15 §3). The PageRank path above is the (+, ×)
-  // instance; this is the (min, +) instance over the IDENTICAL build-time
-  // structures — same routed CSR blocks, same split exchange, same hub
-  // mirror. Gather: out(o) = min(out(o), v(src) + delta); the exchange ships
-  // the same packed Array[Double] records (absent contributions = +∞, the
-  // semiring zero); apply: min(old, acc) with a changed count; loop to the
-  // exact fixpoint. Two bundled users: HashMin connected components
-  // (delta = 0, bidirectional edges — `src/ConnectedComponents.cpp`) and BFS
-  // levels (delta = 1, out-edges — `src/BFS.cpp:40-156`). Unlike PageRank's
-  // float ⊕, min is idempotent, so a task retry or speculative duplicate
-  // cannot corrupt the fixpoint at all; the accumulator argument in
-  // `superstep` applies one-sided here too.
+  // instance; this is the (min, +) instance through the same `gather` with
+  // ⊕ = Min: ⊗ = v(src) + delta (+ w(e) when weighted), absent
+  // contributions = +∞, the semiring zero; apply: min(old, acc) with a
+  // changed count; loop to the exact fixpoint. Two bundled users: HashMin
+  // connected components (delta = 0, bidirectional edges —
+  // `src/ConnectedComponents.cpp`) and BFS levels (delta = 1, out-edges —
+  // `src/BFS.cpp:40-156`). Unlike PageRank's float ⊕, min is idempotent, so
+  // a task retry or speculative duplicate cannot corrupt the fixpoint at
+  // all; the one-sided accumulator argument of `iterate`'s scaladoc holds
+  // here too.
   //
   // Values ride the rank plumbing as Doubles; vertex LABELS (CC) must
   // therefore be exact in a Double — enforced as ids < 2^53 at init.
-
+  //
   // Internal per-superstep state: values plus "did any vertex here change
   // last superstep". Because min is MONOTONE and IDEMPOTENT, a partition
   // whose vertices are all unchanged would re-send contributions every
-  // receiver has already folded — min(old, same) = old — so it can skip its
-  // whole gather: a partition-granularity sparse frontier (GraphMat's
-  // ACTIVE_ONLY sparse vectors, `src/BFS.cpp` frontier semantics, at block
-  // grain). On single-source BFS/SSSP most partitions go quiet after the
-  // first superstep and each level touches only the frontier's blocks.
-  // The hot-mirror part is gated separately (`hotActive`): hub sources are
-  // HOMED elsewhere, so their shard edges must fire when the MIRROR changed,
-  // even in otherwise-quiet partitions.
-  private def gatherMinPhase(vals: RDD[(Array[Double], Boolean)], g: PrGraph,
-                             delta: Double,
-                             hotV: Broadcast[Array[Double]], hotActive: Boolean,
-                             useW: Boolean): RDD[(Int, (Int, Array[Double]))] =
-    vals.zipPartitions(g.csr, g.verts, preservesPartitioning = false) { (rIt, cIt, vIt) =>
-      val (v, act) = rIt.next(); val blk = cIt.next(); val vm = vIt.next()
-      val p = TaskContext.getPartitionId()
-      val out = new Array[Array[Double]](blk.outIds.length)
-      // unweighted: fold the uniform delta into the per-src contribution once;
-      // weighted: contribution is per-EDGE (v(src) + w(e)), so keep v(src)
-      val base = if (useW) 0.0 else delta
-      if (act) {
-        val nS = blk.srcs.length
-        val contrib = new Array[Double](nS)
-        var i = 0
-        while (i < nS) { contrib(i) = v(vm.srcPrIdx(i)) + base; i += 1 }
-        var tp = 0
-        while (tp < blk.outIds.length) {
-          val ids = blk.outIds(tp)
-          if (ids != null) {
-            val o = Array.fill(ids.length)(Double.PositiveInfinity)
-            val es = blk.edgeSrcIdx(tp); val eo = blk.edgeOutIdx(tp)
-            val ws = if (useW) blk.edgeW(tp) else null
-            var e = 0
-            while (e < es.length) {
-              val c = if (ws == null) contrib(es(e)) else contrib(es(e)) + ws(e)
-              if (c < o(eo(e))) o(eo(e)) = c
-              e += 1
-            }
-            out(tp) = o
-          }
-          tp += 1
-        }
-      }
-      if (hotActive && blk.hotEdgeSrcIdx.length > 0) {
-        val hp = hotV.value
-        val hc = new Array[Double](blk.hotLocal.length)
-        var i = 0
-        while (i < hc.length) { hc(i) = hp(blk.hotLocal(i)) + base; i += 1 }
-        if (out(p) == null) out(p) = Array.fill(
-          if (blk.outIds(p) == null) 0 else blk.outIds(p).length)(Double.PositiveInfinity)
-        val o = out(p)
-        val hs = blk.hotEdgeSrcIdx; val ho = blk.hotEdgeOutIdx
-        val hw = if (useW) blk.hotEdgeW else null
-        var e = 0
-        while (e < hs.length) {
-          val c = if (hw == null) hc(hs(e)) else hc(hs(e)) + hw(e)
-          if (c < o(ho(e))) o(ho(e)) = c
-          e += 1
-        }
-      }
-      Iterator.range(0, out.length).filter(out(_) != null).map(tp => (tp, (p, out(tp))))
-    }
-
-  private def minStep(g: PrGraph, vals: RDD[(Array[Double], Boolean)], delta: Double,
-                      changedAcc: LongAccumulator,
-                      hotV: Broadcast[Array[Double]], hotActive: Boolean,
-                      useW: Boolean): Step[(Array[Double], Boolean)] =
-    exchange(g, gatherMinPhase(vals, g, delta, hotV, hotActive, useW), vals, hotV) {
-      (vm, inIdx, blocks, o) =>
-        val old = o._1
-        val acc = Array.fill(vm.nRecv)(Double.PositiveInfinity)
-        blocks.foreach { case (q, vs) =>
-          val idx = inIdx(q)
-          var i = 0
-          while (i < vs.length) { if (vs(i) < acc(idx(i))) acc(idx(i)) = vs(i); i += 1 }
-        }
-        val nV = vm.ids.length
-        val out = new Array[Double](nV)
-        var changed = 0L
-        var i = 0
-        while (i < vm.nRecv) {
-          val nv = if (acc(i) < old(i)) acc(i) else old(i)
-          out(i) = nv
-          if (nv < old(i)) changed += 1
-          i += 1
-        }
-        while (i < nV) { out(i) = old(i); i += 1 }
-        changedAcc.add(changed)
-        (out, changed > 0L)
-    }
+  // receiver has already folded — min(old, same) = old — so its ⊗ is null
+  // and it skips its whole gather: a partition-granularity sparse frontier
+  // (GraphMat's ACTIVE_ONLY sparse vectors, `src/BFS.cpp` frontier
+  // semantics, at block grain). On single-source BFS/SSSP most partitions
+  // go quiet after the first superstep and each level touches only the
+  // frontier's blocks. The hub-shard edges are gated separately: hub
+  // sources are HOMED elsewhere, so their edges fire when the MIRROR
+  // changed, even in otherwise-quiet partitions.
 
   /** Run the (min, +) propagation from `init` to its exact fixpoint.
     * Returns (value blocks, supersteps run). Vertices never reached keep
@@ -1454,18 +1431,48 @@ object GatherScatter {
     // where some hot vertex's value actually moved (compared driver-side —
     // the mirror is tiny by construction)
     var prevHot: Array[Double] = null
+    // unweighted: fold the uniform delta into the per-src ⊗ once; weighted:
+    // the ⊗ is per EDGE (v(src) + w(e)), and the gather adds w(e)
+    val base = if (useWeights) 0.0 else delta
     val (vals, it) = iterate[(Array[Double], Boolean)](g,
         Step(init.mapPartitions(_.map(active), preservesPartitioning = true)),
         maxIterations, counted = true, cp, _._1, active) { (vals, _, changed) =>
-      var hotActive = false
-      val hotV = if (g.hotIds.isEmpty) null
-                 else {
-                   val cur = hubMirror(g, vals)((v, ls) => ls.map(li => v._1(li)))
-                   hotActive = prevHot == null || !java.util.Arrays.equals(prevHot, cur)
-                   prevHot = cur
-                   sc.broadcast(cur)
-                 }
-      minStep(g, vals, delta, changed, hotV, hotActive, useWeights)
+      val cur = if (g.hotIds.isEmpty) null else hubMirror(g, vals)((v, ls) => scalarAt(v._1, ls))
+      val hotActive = cur != null && (prevHot == null || !java.util.Arrays.equals(prevHot, cur))
+      prevHot = cur
+      val hotV = if (cur == null) null else sc.broadcast(cur)
+      val gathered = gather(g, vals, Min, useWeights)((v, blk, vm) =>
+        if (!v._2) null
+        else {
+          val c = new Array[Double](blk.srcs.length)
+          var i = 0
+          while (i < c.length) { c(i) = v._1(vm.srcPrIdx(i)) + base; i += 1 }
+          c
+        }, blk =>
+        if (!hotActive) null
+        else {
+          val h = hotValues(blk, hotV.value)
+          var i = 0
+          while (i < h.length) { h(i) += base; i += 1 }
+          h
+        })
+      exchange(g, gathered, vals, hotV) { (vm, inIdx, blocks, o) =>
+        val old = o._1
+        val acc = fold(Min, vm.nRecv, inIdx, blocks)
+        val nV = vm.ids.length
+        val out = new Array[Double](nV)
+        var n = 0L
+        var i = 0
+        while (i < vm.nRecv) {
+          val nv = if (acc(i) < old(i)) acc(i) else old(i)
+          out(i) = nv
+          if (nv < old(i)) n += 1
+          i += 1
+        }
+        while (i < nV) { out(i) = old(i); i += 1 }
+        changed.add(n)
+        (out, n > 0L)
+      }
     }
     (materialize(g, vals)(_._1), it)
   }
@@ -1713,7 +1720,7 @@ object GatherScatter {
                        cp: Option[CsrCheckpoint] = None): (RDD[RankBlock], Int) = {
     val (labels, it) = iterate[Array[Double]](g, Step(idLabels(g)), iterations,
         counted = true, cp, identity, identity) {
-      (labels, _, changed) => labelStep(g, labels, changed, mirror(g, labels))
+      (labels, _, changed) => labelStep(g, labels, changed, mirror(g, labels)(scalarAt))
     }
     (materialize(g, labels)(identity), it)
   }

@@ -117,6 +117,23 @@ object Reduce {
 
 final case class IterationMetrics(iteration: Int, changed: Long, millis: Long)
 
+/** The `metrics.jsonl` record of a checkpointed run, shared by both engines:
+  * one `{"iteration":…,"changed":…,"millis":…}` line per superstep. */
+object IterationMetrics {
+  private val line = """\{"iteration":(\d+),"changed":(-?\d+),"millis":(\d+)\}""".r
+
+  /** The `metrics.jsonl` text of `ms`, one newline-terminated line each. */
+  def jsonl(ms: Seq[IterationMetrics]): String =
+    ms.map(m => s"""{"iteration":${m.iteration},"changed":${m.changed},"millis":${m.millis}}""")
+      .mkString("", "\n", "\n")
+
+  /** The supersteps up to `upTo` recorded in a `metrics.jsonl` text. */
+  def parse(text: String, upTo: Int): Vector[IterationMetrics] =
+    text.linesIterator.collect {
+      case line(i, c, m) if i.toInt <= upTo => IterationMetrics(i.toInt, c.toLong, m.toLong)
+    }.toVector
+}
+
 final case class RunResult(
     state: DataFrame, iterations: Int, converged: Boolean,
     metrics: Seq[IterationMetrics])
@@ -151,12 +168,8 @@ object Superstep {
     val iter = """"iteration"\s*:\s*(\d+)""".r.findFirstMatchIn(txt).get.group(1).toInt
     val state = cp.store.readState(spark, s"${cp.dir}/${cp.runId}/iter=$iter/state")
     // carry forward the pre-crash iteration history so metrics.jsonl stays complete
-    val lineRe = """\{"iteration":(\d+),"changed":(-?\d+),"millis":(\d+)\}""".r
     val prior = cp.store.readText(sc, s"${cp.dir}/${cp.runId}/metrics.jsonl")
-      .map(_.linesIterator.toSeq.collect {
-        case lineRe(i, c, m) if i.toInt <= iter =>
-          IterationMetrics(i.toInt, c.toLong, m.toLong)
-      }).getOrElse(Nil)
+      .map(IterationMetrics.parse(_, iter)).getOrElse(Nil)
     loop(graph, state, spec, Some(cp), startIteration = iter, priorMetrics = prior)
   }
 
@@ -289,8 +302,6 @@ object Superstep {
 
       converged = changed == 0
       metrics += IterationMetrics(iter, changed, (System.nanoTime() - t0) / 1000000)
-      if (sys.env.contains("SPARK_GRAFT_ITERLOG"))
-        System.err.println(s"[superstep] n=$n iter=$iter changed=$changed ms=${metrics.last.millis}")
 
       cp match {
         case Some(c) if iter % c.every == 0 || converged =>
@@ -343,9 +354,7 @@ object Superstep {
     // per-partition lineage record + iteration metrics (north rule)
     val partRows = reloaded.groupBy(spark_partition_id().as("p")).count()
       .collect().map(r => s"""{"partition":${r.getInt(0)},"rows":${r.getLong(1)}}""")
-    val mLines = metrics.map(m =>
-      s"""{"iteration":${m.iteration},"changed":${m.changed},"millis":${m.millis}}""")
-    c.store.writeText(sc, s"$root/metrics.jsonl", mLines.mkString("", "\n", "\n"))
+    c.store.writeText(sc, s"$root/metrics.jsonl", IterationMetrics.jsonl(metrics))
     c.store.writeText(sc, s"$base/partitions.jsonl", partRows.mkString("", "\n", "\n"))
     // the pointer commits the snapshot — written LAST, so a crash during any
     // earlier write leaves the previous committed state resumable

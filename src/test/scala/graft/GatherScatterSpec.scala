@@ -196,18 +196,29 @@ class GatherScatterSpec extends AnyFunSuite {
   }
 
   test("(min,+) kernel: BFS levels == column-engine BFS on the reference graph") {
-    val g = LinkGraph(
-      graft.sources.MtxReader.read(s, SparkTestBase.refData("test.bin.mtx")), 4)
-    val want = graft.algos.Bfs.run(g, 1L).state
-      .filter(org.apache.spark.sql.functions.col("depth") >= 0)
-      .select("id", "depth").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val built = GatherScatter.build(g, 4)
-    val (depths, _) = GatherScatter.bfs(built, 1L)
-    val got = GatherScatter.toDF(s, depths).collect()
-      .filter(!_.getDouble(1).isInfinity)
-      .map(r => r.getLong(0) -> r.getDouble(1).toLong).toMap
-    assert(got === want)
-    depths.unpersist(false); built.unpersist(); g.unpersistAll()
+    val cases = Seq(
+      ("test.bin.mtx", LinkGraph(
+        graft.sources.MtxReader.read(s, SparkTestBase.refData("test.bin.mtx")), 4), 1L),
+      // planted hub: 1 fans out to 600 spokes over the mirror-broadcast path.
+      // BFS from 800 reaches the hub first, so its level arrives through the
+      // mirror one superstep late, and each spoke's level is the mirrored
+      // level plus the ⊗ constant 1 — added exactly once
+      ("hub", LinkGraph.fromSeq(s,
+        (2L to 601L).map(i => Edge(1L, i, 1.0)) :+ Edge(800L, 1L, 1.0), 4), 800L))
+    for ((name, g, src) <- cases) {
+      val want = graft.algos.Bfs.run(g, src).state
+        .filter(org.apache.spark.sql.functions.col("depth") >= 0)
+        .select("id", "depth").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val built = GatherScatter.build(g, 4, hotDegree = if (name == "hub") 100 else 0)
+      if (name == "hub") assert(built.hotIds.toSeq === Seq(1L))
+      val (depths, _) = GatherScatter.bfs(built, src)
+      val got = GatherScatter.toDF(s, depths).collect()
+        .filter(!_.getDouble(1).isInfinity)
+        .map(r => r.getLong(0) -> r.getDouble(1).toLong).toMap
+      assert(got === want, s"case $name")
+      if (name == "hub") assert(got(1L) === 1L && got(600L) === 2L)
+      depths.unpersist(false); built.unpersist(); g.unpersistAll()
+    }
   }
 
   test("weighted (min,+) kernel: SSSP == column-engine SSSP (reference graph + transcripts + planted hub)") {
