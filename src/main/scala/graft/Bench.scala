@@ -429,6 +429,28 @@ object Bench {
   private def jarr(xs: Seq[Double]): String =
     xs.map(x => f"$x%.3f").mkString("[", ",", "]")
 
+  /** The compact bench line: the (key, JSON value) `parts` as one JSON
+    * object of at most `limit` chars, so a reader that keeps only the
+    * last ~2000 chars of stdout always parses it. While the line is longer, keys leave it — every
+    * key stays in bench_full.json, which "full" names: first
+    * `catalog_scale` and `queries_slowest`, then the other optional keys,
+    * latest-added first, and the per-query seconds (`queries`) last, since
+    * they carry the end-to-end reading. `metric`, `value`, `unit`, `sf` and
+    * `full` always stay. */
+  private[graft] def compactLine(parts: Seq[(String, String)], limit: Int = 1800): String = {
+    val fixed = Set("metric", "value", "unit", "sf", "full")
+    val first = Seq("catalog_scale", "queries_slowest")
+    val keys = parts.map(_._1)
+    val dropOrder = first.filter(keys.contains) ++
+      keys.reverse.filterNot(k => fixed(k) || first.contains(k) || k == "queries") ++
+      Seq("queries").filter(keys.contains)
+    def render(dropped: Set[String]): String =
+      parts.filterNot { case (k, _) => dropped(k) }
+        .map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
+    dropOrder.scanLeft(Set.empty[String])(_ + _).iterator.map(render)
+      .find(_.length <= limit).getOrElse(render(dropOrder.toSet))
+  }
+
   def main(args: Array[String]): Unit = {
     calibKernel() // JIT-warm the calibration kernel so phase 1's reading
     //               prices the host window, not first-call compilation
@@ -483,23 +505,10 @@ object Bench {
       val full = fullParts.map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
       val fullPath = java.nio.file.Paths.get("bench_full.json").toAbsolutePath
       java.nio.file.Files.writeString(fullPath, full + "\n")
-      // compact line: every load-bearing number, no notes, no rep lists —
-      // MUST stay well under the driver's ~2000-char stdout tail capture.
-      // Belt-and-braces: drop the bulkiest optional keys one at a time
-      // (per-query seconds first, then the 10-slowest list) until it fits —
-      // a line the tail TRUNCATES would parse as null, losing the round.
-      def render(dropped: Set[String]): String =
-        lineParts.map { case (k, v) =>
-          s"${jstr(k)}:${if (dropped(k)) jstr("see bench_full.json") else v}"
-        }.mkString("{", ",", "}")
-      var dropped = Set.empty[String]
-      var line = render(dropped)
-      for (k <- Seq("queries", "queries_slowest", "catalog_scale")
-           if line.length > 1800 && lineParts.contains(k)) {
-        dropped += k
-        line = render(dropped)
-      }
-      println(line)
+      // compact line: every load-bearing number that fits, no notes, no
+      // rep lists — a line the tail TRUNCATES would parse as null, losing
+      // the round (see compactLine)
+      println(compactLine(lineParts.toSeq))
     }
 
     // a KILLED bench never reaches its own cleanup, and each run parks
@@ -642,9 +651,8 @@ object Bench {
     fullParts("cache_leaks_after_sweep") = leaks.toString
     lineParts("cache_leaks") = leaks.toString
     lineParts("query_errors") = qErrs
-    // the compact line can't fit all 55 per-query timings (the >1800-char
-    // guard would drop them wholesale); carry the 10 slowest — the ones a
-    // perf reader actually asks about — and point at the file for the rest
+    // the 10 slowest queries ride along while the line has room for them
+    // beside the per-query seconds (compactLine drops them first)
     lineParts("queries_slowest") = results.sortBy(-_._2).take(10)
       .map { case (k, v) => "\"" + k + f"""":$v%.2f""" }.mkString("{", ",", "}")
     lineParts("queries") = qs

@@ -47,8 +47,9 @@ import graft.core.LinkGraph
  * million-out-degree hub therefore costs every partition |E_hub|/n edges
  * instead of one partition |E_hub|.
  *
- * One RDD job plus one (skippable) hot-mirror job per superstep, one shuffle,
- * no Catalyst re-planning, no per-row boxing. Every CSR kernel (here and in
+ * One RDD job plus one (skippable) hot-mirror job per superstep, at most one
+ * shuffle (none on a cut-free layout), no Catalyst re-planning, no per-row
+ * boxing. Every CSR kernel (here and in
  * DeltaPrCsr, ToposortCsr, VectorSuperstep) keeps only its arithmetic and
  * runs through the same plumbing: `exchange` (the split exchange) and
  * `iterate` (the superstep loop) — see "the superstep plumbing" below.
@@ -261,7 +262,10 @@ object GatherScatter {
       // snapshot loads cache ONE (csr, meta) RDD and expose views — see load()
       private val backing: Option[RDD[_]] = None,
       // built with per-edge weights (build(..., weighted = true))
-      weighted: Boolean = false) {
+      weighted: Boolean = false,
+      // (p, tp != p) out-blocks in `csr`, counted by build; -1 = unknown.
+      // 0 runs every superstep without a shuffle (see `exchange`)
+      cut: Long = -1L) {
     /** The one persisted (VertexMeta, inIdx) RDD — supersteps zip against
       * this single handle so zipPartitions arity stays within bounds. */
     def meta: RDD[(VertexMeta, Array[Array[Int]])] =
@@ -333,12 +337,17 @@ object GatherScatter {
    * sharing their high bits land in one partition. Transcript vertex ids are
    * hierarchical (`convOrd * 2^20 + turn_idx`, Transcripts.vertices), and
    * every reply/tool edge is intra-conversation — keyShift=20 therefore
-   * makes the gather target of every edge the edge's OWN partition: the
-   * per-superstep all-to-all carries (near) zero cross-executor bytes, while
+   * makes the gather target of every edge the edge's OWN partition, while
    * load stays balanced because conversation ordinals are dense and hashed.
    * This is the Spark analog of GraphMat's cache-blocking vertex permutation
    * (`Graph.h:111-150`) lifted to the cluster level. 0 = pure hash (the
    * right default for ids with no exploitable structure).
+   *
+   * The build measures the resulting cut (`PrGraph.cut`, the out-blocks
+   * addressed to another partition) in the job that materializes the edge
+   * blocks. A cut-free layout runs every superstep as narrow zips with no
+   * shuffle stage, so chained supersteps pipeline in one stage; any other
+   * layout pays the split exchange's shuffle (see `exchange`).
    */
   def build(graph: LinkGraph, numPartitions: Int = 0, hotDegree: Long = 0L,
             keyShift: Int = 0, weighted: Boolean = false): PrGraph = {
@@ -585,7 +594,13 @@ object GatherScatter {
           eW, if (wLoc) hwbuf.trim else null))
       }, preservesPartitioning = true)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    csr.count()
+    // the job that materializes `csr` also counts its cut: the out-blocks
+    // a partition addresses to ANOTHER partition (hot edges target their
+    // own partition, so they never add to it)
+    val cut = csr.mapPartitionsWithIndex { (p, it) =>
+      val blk = it.next()
+      Iterator.single(blk.outIds.indices.count(tp => tp != p && blk.outIds(tp) != null).toLong)
+    }.reduce(_ + _)
     edgePairs.unpersist(blocking = false) // both passes are materialized
 
     // hot srcs are vertices of their HOME partition even when their edges
@@ -693,7 +708,7 @@ object GatherScatter {
     hotBc.unpersist(blocking = false)
     hotDegBc.unpersist(blocking = false)
     PrGraph(csr, verts, inIdx, hotIds, n, numEdges, nV, Some(vertsAndIdx),
-      weighted = weighted)
+      weighted = weighted, cut = cut)
   }
 
   /**
@@ -717,7 +732,7 @@ object GatherScatter {
     // written last: a snapshot without its manifest does not load
     store.writeText(g.csr.sparkContext, s"$path/manifest.json",
       s"""{"partitions":${g.numPartitions},"edges":${g.numEdges},""" +
-      s""""vertices":${g.numVertices},"weighted":${g.weighted},""" +
+      s""""vertices":${g.numVertices},"weighted":${g.weighted},"cut":${g.cut},""" +
       s""""hotIds":${g.hotIds.mkString("[", ",", "]")}}""")
   }
 
@@ -726,12 +741,15 @@ object GatherScatter {
     val sc = spark.sparkContext
     val manifest = store.readText(sc, s"$path/manifest.json").getOrElse(
       throw new java.io.FileNotFoundException(s"no CSR snapshot at $path (manifest.json)"))
-    def field(k: String) = s""""$k":([^,}\\]]*)""".r.findFirstMatchIn(manifest)
+    def optField(k: String) = s""""$k":([^,}\\]]*)""".r.findFirstMatchIn(manifest).map(_.group(1))
+    def field(k: String) = optField(k)
       .getOrElse(throw new IllegalArgumentException(s"$path/manifest.json has no $k"))
-      .group(1)
     val (n, nE, nV, wtd) =
       (field("partitions").toInt, field("edges").toLong, field("vertices").toLong,
        field("weighted").toBoolean)
+    // snapshots saved before the cut was measured load as unknown (-1),
+    // which keeps them on the shuffle path
+    val cut = optField("cut").fold(-1L)(_.toLong)
     val hotIds = """"hotIds":\[([^\]]*)\]""".r.findFirstMatchIn(manifest)
       .map(_.group(1)).filter(_.nonEmpty).map(_.split(',').map(_.toLong))
       .getOrElse(Array.emptyLongArray)
@@ -762,7 +780,7 @@ object GatherScatter {
     val verts = meta.mapPartitions(it => it.map(_._1), preservesPartitioning = true)
     val inIdx = meta.mapPartitions(it => it.map(_._2), preservesPartitioning = true)
     PrGraph(csr, verts, inIdx, hotIds, n, nE, nV, Some(meta), Some(all),
-      weighted = wtd)
+      weighted = wtd, cut = cut)
   }
 
   // ---- durable mid-algorithm checkpoint/resume ---------------------------
@@ -930,7 +948,10 @@ object GatherScatter {
   //    partition cut. Placement stays process-local under the engine confs
   //    (see engineConfs): reduce-locality off makes the cached graph blocks
   //    the ONLY preferred location, so map output, block cache and apply
-  //    task never separate.
+  //    task never separate. On a cut-free layout (`PrGraph.cut == 0`, as
+  //    measured by build) there is nothing to ship: the exchange builds no
+  //    shuffle at all, the apply is a narrow zip of the gathered blocks with
+  //    the layout, and chained supersteps pipeline inside one stage.
   //  - `fold`, the ⊕ of the received blocks into a dense accumulator.
   //  - `iterate`, the superstep loop: changed count, persist, lineage
   //    truncation, durable checkpoints, and freeing each superstep's
@@ -949,32 +970,63 @@ object GatherScatter {
     * to it — its OWN block first, then the remote ones, the fold order that
     * keeps every kernel's results bit-identical — and its `side` state
     * (null when `side` is null: the apply then reads no previous state, so
-    * the kernel's input is consumed exactly once). */
+    * the kernel's input is consumed exactly once). Only the tp != p records
+    * are shuffled. On a cut-free layout (`g.cut == 0`) no record may leave
+    * its partition, so there is no shuffle: the apply zips the gathered
+    * blocks with the layout as narrow dependencies, in the same fold order,
+    * and a record addressed elsewhere fails the task instead of being
+    * dropped. The gathered blocks stay persisted either way: a job that
+    * resumes a chain of lazy supersteps restarts from the newest cached
+    * block. */
   private[engine] def exchange[T, S: ClassTag, R: ClassTag](
       g: PrGraph, gather: RDD[(Int, (Int, T))], side: RDD[S], broadcasts: Broadcast[_]*)(
       apply: (VertexMeta, Array[Array[Int]], Iterator[(Int, T)], S) => R): Step[R] = {
     val gathered = gather.persist(StorageLevel.MEMORY_AND_DISK)
-    val remote = gathered.mapPartitionsWithIndex(
-        (p, it) => it.filter(_._1 != p), preservesPartitioning = false)
-      .partitionBy(new IdPartitioner(g.numPartitions))
-    val run = (rIt: Iterator[(Int, (Int, T))], lIt: Iterator[(Int, (Int, T))],
-               mIt: Iterator[(VertexMeta, Array[Array[Int]])], old: S) => {
+    val run = (mIt: Iterator[(VertexMeta, Array[Array[Int]])],
+               blocks: Iterator[(Int, T)], old: S) => {
       val (vm, inIdx) = mIt.next()
-      val p = TaskContext.getPartitionId()
-      val blocks = lIt.collect { case (tp, b) if tp == p => b } ++ rIt.map(_._2)
       Iterator.single(apply(vm, inIdx, blocks, old))
     }
     val next =
-      if (side == null)
-        remote.zipPartitions(gathered, g.meta, preservesPartitioning = true) {
-          (rIt, lIt, mIt) => run(rIt, lIt, mIt, null.asInstanceOf[S])
+      if (g.cut == 0) {
+        val own = (lIt: Iterator[(Int, (Int, T))]) => {
+          val p = TaskContext.getPartitionId()
+          lIt.map { case (tp, b) => if (tp != p) throw cutFree(p, tp); b }
         }
-      else
-        remote.zipPartitions(gathered, g.meta, side, preservesPartitioning = true) {
-          (rIt, lIt, mIt, oIt) => run(rIt, lIt, mIt, oIt.next())
+        if (side == null)
+          g.meta.zipPartitions(gathered, preservesPartitioning = true) {
+            (mIt, lIt) => run(mIt, own(lIt), null.asInstanceOf[S])
+          }
+        else
+          g.meta.zipPartitions(gathered, side, preservesPartitioning = true) {
+            (mIt, lIt, oIt) => run(mIt, own(lIt), oIt.next())
+          }
+      } else {
+        val remote = gathered.mapPartitionsWithIndex(
+            (p, it) => it.filter(_._1 != p), preservesPartitioning = false)
+          .partitionBy(new IdPartitioner(g.numPartitions))
+        val split = (lIt: Iterator[(Int, (Int, T))], rIt: Iterator[(Int, (Int, T))]) => {
+          val p = TaskContext.getPartitionId()
+          lIt.collect { case (tp, b) if tp == p => b } ++ rIt.map(_._2)
         }
+        if (side == null)
+          remote.zipPartitions(gathered, g.meta, preservesPartitioning = true) {
+            (rIt, lIt, mIt) => run(mIt, split(lIt, rIt), null.asInstanceOf[S])
+          }
+        else
+          remote.zipPartitions(gathered, g.meta, side, preservesPartitioning = true) {
+            (rIt, lIt, mIt, oIt) => run(mIt, split(lIt, rIt), oIt.next())
+          }
+      }
     Step(next, gathered, broadcasts)
   }
+
+  /** The failure of a record addressed from partition `p` to partition
+    * `tp` on a layout whose measured cut is zero. */
+  private[engine] def cutFree(p: Int, tp: Int): IllegalStateException =
+    new IllegalStateException(
+      s"partition $p addressed a block to partition $tp on a layout built cut-free " +
+      "(PrGraph.cut == 0): the layout does not match its measured cut")
 
   /** The ⊕ of the scalar gather and fold with its identity: GraphMat's
     * `reduce_function`, specialized to the two the CSR kernels use. */
@@ -1257,15 +1309,16 @@ object GatherScatter {
       // hub-less graph: chain all supersteps LAZILY — one pipelined job per
       // `segment`-superstep segment instead of one job per superstep
       // (valid because the lazy superstep consumes its input exactly once;
-      // see superstepLazy). A segment barrier is a BARE count(): completed
-      // shuffle-map stages are skipped by later jobs (shuffle-file reuse),
-      // so the barrier serializes nothing — its only job is to bound how
-      // many per-superstep gathered blocks are live at once. All but the
-      // NEWEST gathered block can then be freed: superstep k+1's stage may
-      // re-run apply_k (a narrow pass over shuffle_k's files + gathered_k),
-      // but gathered_{<k}'s consumers are behind existing shuffle files and
-      // never re-read. An executor loss degrades to lineage recompute —
-      // unpersist does not truncate lineage.
+      // see superstepLazy). A segment barrier is a BARE count() — its only
+      // job is to bound how many per-superstep gathered blocks are live at
+      // once. The next segment's job resumes from the NEWEST cached gathered
+      // block: superstep k+1 re-runs apply_k over gathered_k (from the
+      // cache, plus shuffle_k's files on a layout with a cut), and nothing
+      // older is re-read — on a cut-free layout the whole segment is one
+      // narrow stage that starts at gathered_k, otherwise the completed
+      // shuffle-map stages before it are skipped. So all but the newest
+      // gathered block can be freed. An executor loss degrades to lineage
+      // recompute — unpersist does not truncate lineage.
       var ranks = initRanks(g)
       var it = 0
       var pending = List.empty[RDD[_]]

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
-import GatherScatter.{IdPartitioner, PrGraph, Step, exchange, hubMirror, iterate}
+import GatherScatter.{CsrBlock, IdPartitioner, PrGraph, Step, VertexMeta, exchange, hubMirror, iterate}
 
 /**
  * K-vector-payload supersteps on the CSR gather-scatter structures — the
@@ -31,11 +31,13 @@ import GatherScatter.{IdPartitioner, PrGraph, Step, exchange, hubMirror, iterate
  *     `GatherScatter.iterate`.
  *
  * Cross-executor bytes per superstep = 2 × (partition cut) × K doubles
- * (mirrors out, contributions back) — zero under conversation co-location,
- * and exactly GraphMat's x-broadcast + y-reduce volume in the general case.
- * 2-op vector programs ([[VecKernel.needsRecv]] = false, e.g. the LDA init
- * pass) skip the mirror phase entirely and pay the scalar kernel's single
- * exchange, K-wide.
+ * (mirrors out, contributions back) — exactly GraphMat's x-broadcast +
+ * y-reduce volume in the general case. A cut-free layout
+ * ([[GatherScatter.PrGraph.cut]] = 0, e.g. conversation co-location) runs
+ * neither shuffle: every receiver vector is local and the exchange is a
+ * narrow zip. 2-op vector programs ([[VecKernel.needsRecv]] = false, e.g.
+ * the LDA init pass) skip the mirror phase entirely and pay the scalar
+ * kernel's single exchange, K-wide.
  *
  * Hot (degree-split) srcs ride the existing mirror broadcast, K-wide: their
  * edges live with the RECEIVER partition, so the dst vectors are local and
@@ -123,79 +125,88 @@ object VectorSuperstep {
       (st, ls) => ls.flatMap(li => st.slice(li * k, li * k + k))))
     val globalsBc = sc.broadcast(globalsArr)
     val hotIdsLoc = g.hotIds
+    // a 2-op kernel needs no mirrors, and on a cut-free layout every
+    // receiver is local, so the mirror phase would ship nothing: both skip
+    // its shuffle
     val mirrors: RDD[(Int, (Int, Array[Double]))] =
-      if (kern.needsRecv) mirrorPhase(state, g, k).partitionBy(idPart)
-      else sc.emptyRDD[(Int, (Int, Array[Double]))].partitionBy(idPart)
-    val gathered: RDD[(Int, (Int, Array[Double]))] = mirrors
-      .zipPartitions(state, g.csr, g.meta, preservesPartitioning = false) {
-        (mIt, sIt, cIt, metaIt) =>
-          val st = sIt.next(); val blk = cIt.next(); val (vm, inIdx) = metaIt.next()
-          val gl = globalsBc.value
-          val scratch = new Array[Double](k)
-          val p = TaskContext.getPartitionId()
-          val need = kern.needsRecv
-          val recvVecs = new Array[Array[Double]](blk.outIds.length)
-          mIt.foreach { case (_, (tp, m)) => recvVecs(tp) = m }
-          if (need && blk.outIds(p) != null) { // self mirror: local state
-            val idx = inIdx(p)
-            val m = new Array[Double](idx.length * k)
-            var j = 0
-            while (j < idx.length) {
-              System.arraycopy(st, idx(j) * k, m, j * k, k)
-              j += 1
-            }
-            recvVecs(p) = m
-          }
-          // local src vectors, gathered once into edge-index order
-          val nS = blk.srcs.length
-          val srcVec = new Array[Double](nS * k)
-          var i = 0
-          while (i < nS) {
-            System.arraycopy(st, vm.srcPrIdx(i) * k, srcVec, i * k, k)
-            i += 1
-          }
-          val out = new Array[Array[Double]](blk.outIds.length)
-          var tp = 0
-          while (tp < blk.outIds.length) {
-            val ids = blk.outIds(tp)
-            if (ids != null) {
-              val acc = new Array[Double](ids.length * k)
-              val es = blk.edgeSrcIdx(tp); val eo = blk.edgeOutIdx(tp)
-              val ew = if (blk.edgeW == null) null else blk.edgeW(tp)
-              val rv = recvVecs(tp)
-              var e = 0
-              while (e < es.length) {
-                val si = es(e); val oi = eo(e)
-                kern.edge(srcVec, si * k, blk.srcs(si),
-                  if (ew == null) 1.0 else ew(e),
-                  rv, oi * k, ids(oi),
-                  acc, oi * k, gl, scratch)
-                e += 1
-              }
-              out(tp) = acc
-            }
-            tp += 1
-          }
-          // hub-shard edges: src vector from the broadcast mirror; dst is
-          // LOCAL (they were routed here by dst) — fold into the self bucket
-          if (blk.hotEdgeSrcIdx.length > 0) {
-            val hv = hotBc.value
-            val acc = out(p); val rv = recvVecs(p); val ids = blk.outIds(p)
-            val hs = blk.hotEdgeSrcIdx; val ho = blk.hotEdgeOutIdx
-            val hw = blk.hotEdgeW
-            var e = 0
-            while (e < hs.length) {
-              val hi = blk.hotLocal(hs(e)); val oi = ho(e)
-              kern.edge(hv, hi * k, hotIdsLoc(hi),
-                if (hw == null) 1.0 else hw(e),
-                rv, oi * k, ids(oi),
-                acc, oi * k, gl, scratch)
-              e += 1
-            }
-          }
-          Iterator.range(0, out.length).filter(out(_) != null)
-            .map(tp => (tp, (p, out(tp))))
+      if (kern.needsRecv && g.cut != 0) mirrorPhase(state, g, k).partitionBy(idPart)
+      else null
+    val gather = (mIt: Iterator[(Int, (Int, Array[Double]))], sIt: Iterator[Array[Double]],
+                  cIt: Iterator[CsrBlock], metaIt: Iterator[(VertexMeta, Array[Array[Int]])]) => {
+      val st = sIt.next(); val blk = cIt.next(); val (vm, inIdx) = metaIt.next()
+      val gl = globalsBc.value
+      val scratch = new Array[Double](k)
+      val p = TaskContext.getPartitionId()
+      val need = kern.needsRecv
+      val recvVecs = new Array[Array[Double]](blk.outIds.length)
+      mIt.foreach { case (_, (tp, m)) => recvVecs(tp) = m }
+      if (need && blk.outIds(p) != null) { // self mirror: local state
+        val idx = inIdx(p)
+        val m = new Array[Double](idx.length * k)
+        var j = 0
+        while (j < idx.length) {
+          System.arraycopy(st, idx(j) * k, m, j * k, k)
+          j += 1
+        }
+        recvVecs(p) = m
       }
+      // local src vectors, gathered once into edge-index order
+      val nS = blk.srcs.length
+      val srcVec = new Array[Double](nS * k)
+      var i = 0
+      while (i < nS) {
+        System.arraycopy(st, vm.srcPrIdx(i) * k, srcVec, i * k, k)
+        i += 1
+      }
+      val out = new Array[Array[Double]](blk.outIds.length)
+      var tp = 0
+      while (tp < blk.outIds.length) {
+        val ids = blk.outIds(tp)
+        if (ids != null) {
+          val acc = new Array[Double](ids.length * k)
+          val es = blk.edgeSrcIdx(tp); val eo = blk.edgeOutIdx(tp)
+          val ew = if (blk.edgeW == null) null else blk.edgeW(tp)
+          val rv = recvVecs(tp)
+          if (need && rv == null) throw GatherScatter.cutFree(p, tp)
+          var e = 0
+          while (e < es.length) {
+            val si = es(e); val oi = eo(e)
+            kern.edge(srcVec, si * k, blk.srcs(si),
+              if (ew == null) 1.0 else ew(e),
+              rv, oi * k, ids(oi),
+              acc, oi * k, gl, scratch)
+            e += 1
+          }
+          out(tp) = acc
+        }
+        tp += 1
+      }
+      // hub-shard edges: src vector from the broadcast mirror; dst is
+      // LOCAL (they were routed here by dst) — fold into the self bucket
+      if (blk.hotEdgeSrcIdx.length > 0) {
+        val hv = hotBc.value
+        val acc = out(p); val rv = recvVecs(p); val ids = blk.outIds(p)
+        val hs = blk.hotEdgeSrcIdx; val ho = blk.hotEdgeOutIdx
+        val hw = blk.hotEdgeW
+        var e = 0
+        while (e < hs.length) {
+          val hi = blk.hotLocal(hs(e)); val oi = ho(e)
+          kern.edge(hv, hi * k, hotIdsLoc(hi),
+            if (hw == null) 1.0 else hw(e),
+            rv, oi * k, ids(oi),
+            acc, oi * k, gl, scratch)
+          e += 1
+        }
+      }
+      Iterator.range(0, out.length).filter(out(_) != null)
+        .map(tp => (tp, (p, out(tp))))
+    }
+    val gathered: RDD[(Int, (Int, Array[Double]))] =
+      if (mirrors == null)
+        state.zipPartitions(g.csr, g.meta, preservesPartitioning = false) {
+          (sIt, cIt, metaIt) => gather(Iterator.empty, sIt, cIt, metaIt)
+        }
+      else mirrors.zipPartitions(state, g.csr, g.meta, preservesPartitioning = false)(gather)
     exchange(g, gathered, state, hotBc, globalsBc) { (vm, inIdx, blocks, old) =>
       val gl = globalsBc.value
       val acc = new Array[Double](vm.nRecv * k)

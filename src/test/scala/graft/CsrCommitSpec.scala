@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{Edge, LinkGraph}
 import graft.engine.{CsrCheckpoint, GatherScatter, HadoopSnapshotStore, SnapshotStore}
-import SparkTestBase.jobsOf
+import SparkTestBase.{jobsOf, withTempDir}
 
 /** The cost side of CSR checkpointing: a due checkpoint's state write is the
   * superstep's own Spark job, its blocks land as one file per partition with
@@ -32,28 +32,29 @@ class CsrCommitSpec extends AnyFunSuite {
     new java.io.File(dir).list().filterNot(_.startsWith(".")).toSet
 
   test("every = 1: the state write is the superstep's job; one part file per partition") {
-    val dir = Files.createTempDirectory("graft-commit").toString
-    val g = GatherScatter.build(fixture, 8, hotDegree = 100)
-    try {
-      val ((plainR, plainIters), plainJobs) =
-        jobsOf(GatherScatter.pageRankConverged(g, 0.3, 1e-5))
-      plainR.unpersist(false)
-      assert(plainIters > 4, s"fixture must take several supersteps, got $plainIters")
-      val cp = Some(CsrCheckpoint(dir, "jobs", every = 1))
-      val ((cpR, cpIters), cpJobs) =
-        jobsOf(GatherScatter.pageRankConverged(g, 0.3, 1e-5, cp = cp))
-      cpR.unpersist(false)
-      assert(cpIters === plainIters)
-      // + the one partitions.json collect; a separate write job per
-      // checkpoint would add plainIters more
-      assert(cpJobs <= plainJobs + 2,
-        s"$cpJobs jobs checkpointed vs $plainJobs plain over $plainIters supersteps")
-      for (i <- 1 to cpIters)
-        assert(partFiles(s"$dir/jobs/iter=$i/state") === (0 until 8).map(p => f"part-$p%05d").toSet,
-          s"iter=$i")
-    } finally {
-      g.unpersist()
-      fixture.unpersistAll()
+    withTempDir("graft-commit") { dir =>
+      val g = GatherScatter.build(fixture, 8, hotDegree = 100)
+      try {
+        val ((plainR, plainIters), plainJobs) =
+          jobsOf(GatherScatter.pageRankConverged(g, 0.3, 1e-5))
+        plainR.unpersist(false)
+        assert(plainIters > 4, s"fixture must take several supersteps, got $plainIters")
+        val cp = Some(CsrCheckpoint(dir, "jobs", every = 1))
+        val ((cpR, cpIters), cpJobs) =
+          jobsOf(GatherScatter.pageRankConverged(g, 0.3, 1e-5, cp = cp))
+        cpR.unpersist(false)
+        assert(cpIters === plainIters)
+        // + the one partitions.json collect; a separate write job per
+        // checkpoint would add plainIters more
+        assert(cpJobs <= plainJobs + 2,
+          s"$cpJobs jobs checkpointed vs $plainJobs plain over $plainIters supersteps")
+        for (i <- 1 to cpIters)
+          assert(partFiles(s"$dir/jobs/iter=$i/state") === (0 until 8).map(p => f"part-$p%05d").toSet,
+            s"iter=$i")
+      } finally {
+        g.unpersist()
+        fixture.unpersistAll()
+      }
     }
   }
 
@@ -81,33 +82,34 @@ class CsrCommitSpec extends AnyFunSuite {
   }
 
   test("a failed pointer commit fails the run; the committed state resumes bit-identically") {
-    val dir = Files.createTempDirectory("graft-commit").toString
-    val g = GatherScatter.build(fixture, 8, hotDegree = 100)
-    try {
-      val (refR, refIters) = GatherScatter.pageRankConverged(g, 0.3, 1e-5)
-      val ref = ranksMap(refR)
-      refR.unpersist(false)
-      assert(refIters > 4, s"fixture must take several supersteps, got $refIters")
+    withTempDir("graft-commit") { dir =>
+      val g = GatherScatter.build(fixture, 8, hotDegree = 100)
+      try {
+        val (refR, refIters) = GatherScatter.pageRankConverged(g, 0.3, 1e-5)
+        val ref = ranksMap(refR)
+        refR.unpersist(false)
+        assert(refIters > 4, s"fixture must take several supersteps, got $refIters")
 
-      val failing = Some(CsrCheckpoint(dir, "run", every = 1, store = new FailingPointerStore(3)))
-      val e = intercept[java.io.IOException] {
-        GatherScatter.pageRankConverged(g, 0.3, 1e-5, cp = failing)
+        val failing = Some(CsrCheckpoint(dir, "run", every = 1, store = new FailingPointerStore(3)))
+        val e = intercept[java.io.IOException] {
+          GatherScatter.pageRankConverged(g, 0.3, 1e-5, cp = failing)
+        }
+        assert(e.getMessage.contains("pointer write 3"))
+        val latest = new String(Files.readAllBytes(Paths.get(dir, "run", "latest.json")))
+        assert(latest.contains(""""iteration":2,"""), latest)
+        assert(partFiles(s"$dir/run/iter=2/state") === (0 until 8).map(p => f"part-$p%05d").toSet)
+
+        val (resR, iters) = GatherScatter.pageRankConverged(g, 0.3, 1e-5,
+          cp = Some(CsrCheckpoint(dir, "run", every = 1)))
+        val res = ranksMap(resR)
+        resR.unpersist(false)
+        assert(iters === refIters)
+        assert(res.keySet === ref.keySet)
+        for ((k, v) <- ref) assert(res(k) == v, s"vertex $k not bit-identical")
+      } finally {
+        g.unpersist()
+        fixture.unpersistAll()
       }
-      assert(e.getMessage.contains("pointer write 3"))
-      val latest = new String(Files.readAllBytes(Paths.get(dir, "run", "latest.json")))
-      assert(latest.contains(""""iteration":2,"""), latest)
-      assert(partFiles(s"$dir/run/iter=2/state") === (0 until 8).map(p => f"part-$p%05d").toSet)
-
-      val (resR, iters) = GatherScatter.pageRankConverged(g, 0.3, 1e-5,
-        cp = Some(CsrCheckpoint(dir, "run", every = 1)))
-      val res = ranksMap(resR)
-      resR.unpersist(false)
-      assert(iters === refIters)
-      assert(res.keySet === ref.keySet)
-      for ((k, v) <- ref) assert(res(k) == v, s"vertex $k not bit-identical")
-    } finally {
-      g.unpersist()
-      fixture.unpersistAll()
     }
   }
 }

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.core.{Edge, LinkGraph}
 import graft.engine.{DeltaPrCsr, GatherScatter, ToposortCsr}
 import graft.engine.GatherScatter.{PrGraph, RankBlock}
-import SparkTestBase.jobsOf
+import SparkTestBase.{jobsAndStagesOf, jobsOf}
 
 /** The cost side of the CSR superstep loop: a long run's lineage stays
   * bounded, and an uncheckpointed run on a hubless graph runs one Spark job
@@ -35,9 +35,10 @@ class CsrLoopSpec extends AnyFunSuite {
 
   private def chain(n: Int): Seq[Edge] = (0 until n - 1).map(i => Edge(i.toLong, i + 1L, 1.0))
 
-  private def withGraph[A](es: Seq[Edge], undirected: Boolean = false)(f: PrGraph => A): A = {
+  private def withGraph[A](es: Seq[Edge], undirected: Boolean = false, keyShift: Int = 0)
+                          (f: PrGraph => A): A = {
     val lg = LinkGraph.fromSeq(s, es, 4)
-    val g = GatherScatter.build(if (undirected) lg.undirected else lg, 4)
+    val g = GatherScatter.build(if (undirected) lg.undirected else lg, 4, keyShift = keyShift)
     try f(g) finally { g.unpersist(); lg.unpersistAll() }
   }
 
@@ -91,6 +92,26 @@ class CsrLoopSpec extends AnyFunSuite {
       assert(g.hotIds.isEmpty)
       check("connectedComponents", GatherScatter.connectedComponents(g))
       check("labelPropagation", GatherScatter.labelPropagation(g, 20))
+    }
+  }
+
+  test("a cut-free pageRankConverged runs one stage per job") {
+    // chains inside conversation-shaped ids (c << 20 | i): keyShift 20
+    // keeps every chain in one partition, so the layout has no cut
+    val es = (0 until 10).flatMap(c =>
+      (0 until 12).map(i => Edge((c.toLong << 20) + i, (c.toLong << 20) + i + 1, 1.0)))
+    withGraph(es, keyShift = 20) { g =>
+      assert(g.cut === 0L)
+      val ((r, iters), jobs, stages) =
+        jobsAndStagesOf(GatherScatter.pageRankConverged(g, 0.3, 1e-5))
+      r.unpersist(false)
+      assert(iters > 2, s"the fixture must take several supersteps, ran $iters")
+      assert(stages === jobs, s"$stages stages over $jobs jobs")
+      // the same layout through the shuffle: a second stage per superstep
+      val ((sr, _), sJobs, sStages) =
+        jobsAndStagesOf(GatherScatter.pageRankConverged(g.copy(cut = -1L), 0.3, 1e-5))
+      sr.unpersist(false)
+      assert(sJobs === jobs && sStages > sJobs, s"shuffle path: $sStages stages over $sJobs jobs")
     }
   }
 }

@@ -2,9 +2,12 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.rdd.RDD
+
 import graft.core.{Edge, LinkGraph, Transcripts}
-import graft.engine.GatherScatter
+import graft.engine.{DeltaPrCsr, GatherScatter, HadoopSnapshotStore, ToposortCsr, VectorSuperstep}
 import graft.algos.PageRank
+import SparkTestBase.withTempDir
 
 class GatherScatterSpec extends AnyFunSuite {
   lazy val s = SparkTestBase.spark
@@ -110,12 +113,71 @@ class GatherScatterSpec extends AnyFunSuite {
     for ((k, v) <- a) assert(math.abs(b(k) - v) < 1e-12, s"keyShift parity, vertex $k")
     // transcript edges are intra-conversation, and ids are convOrd<<20|turn:
     // with keyShift=20 every gather target must be the edge's own partition
-    val crossTargets = coloc.csr.mapPartitionsWithIndex { (p, it) =>
+    def crossTargets(g: GatherScatter.PrGraph) = g.csr.mapPartitionsWithIndex { (p, it) =>
       val blk = it.next()
       Iterator.single(blk.outIds.indices.count(tp => tp != p && blk.outIds(tp) != null))
-    }.sum()
-    assert(crossTargets === 0.0, "conversation partitioning must leave no cross-partition targets")
+    }.sum().toLong
+    assert(crossTargets(coloc) === 0L, "conversation partitioning must leave no cross-partition targets")
+    // build measures the same cut
+    assert(coloc.cut === 0L)
+    assert(hashed.cut === crossTargets(hashed))
+    assert(hashed.cut > 0L, "hash partitioning must cut some conversations")
+    // a layout with a cut that claims none fails loudly, never drops blocks
+    val before = s.sparkContext.getPersistentRDDs.keySet
+    val e = intercept[org.apache.spark.SparkException] {
+      GatherScatter.pageRank(hashed.copy(cut = 0L), 0.3, 8)
+    }
+    assert(e.getMessage.contains("cut-free") && e.getMessage.contains("addressed a block"),
+      e.getMessage)
+    s.sparkContext.getPersistentRDDs.foreach { case (id, r) =>
+      if (!before(id)) r.unpersist(blocking = false)
+    }
     hashed.unpersist(); coloc.unpersist()
+  }
+
+  test("a cut-free layout's narrow supersteps equal the shuffle path bit for bit") {
+    // the same cut-free layout run twice: as measured (cut 0: no shuffle)
+    // and as unknown (cut -1: the split exchange's shuffle), every kernel
+    val graph = Transcripts.toGraph(Transcripts.synthesize(s, 300))
+    val und = graph.undirected
+    val g = GatherScatter.build(graph, 4, keyShift = 20)
+    val gu = GatherScatter.build(und, 4, keyShift = 20, weighted = true)
+    assert(g.cut === 0L && gu.cut === 0L)
+    type Run = GatherScatter.PrGraph => (Map[Long, Seq[Long]], Int)
+    def bits(r: RDD[GatherScatter.RankBlock]) = {
+      val m = r.flatMap(b => b.ids.zip(b.pr.map(v => Seq(java.lang.Double.doubleToRawLongBits(v)))))
+        .collect().toMap
+      r.unpersist(false)
+      m
+    }
+    val kernels: Seq[(String, Run)] = Seq(
+      "pageRank" -> (x => (bits(GatherScatter.pageRank(x, 0.3, 8)), 8)),
+      "pageRankConverged" -> { x =>
+        val (r, it) = GatherScatter.pageRankConverged(x, 0.3, 1e-5); (bits(r), it) },
+      "personalizedPageRank" -> (x =>
+        (bits(GatherScatter.personalizedPageRank(x, id => (id >>> 20) % 3 == 0, 0.3, 8)), 8)),
+      "DeltaPrCsr.run" -> { x => val (r, it) = DeltaPrCsr.run(x); (bits(r), it) },
+      "ToposortCsr.run" -> { x => val (r, it) = ToposortCsr.run(x); (bits(r), it) })
+    val undirected: Seq[(String, Run)] = Seq(
+      "connectedComponents" -> { x =>
+        val (r, it) = GatherScatter.connectedComponents(x); (bits(r), it) },
+      "labelPropagation" -> { x =>
+        val (r, it) = GatherScatter.labelPropagation(x, 5); (bits(r), it) },
+      "VectorSuperstep.sgd" -> { x =>
+        val r = VectorSuperstep.sgd(x, k = 4, iterations = 3, init = graft.algos.Sgd.initLv)
+        val m = r.flatMap(b => Iterator.range(0, b.ids.length).map(i =>
+          b.ids(i) -> b.vecs.slice(i * b.k, (i + 1) * b.k)
+            .map(java.lang.Double.doubleToRawLongBits).toSeq)).collect().toMap
+        r.unpersist(false)
+        (m, 3)
+      })
+    for ((gr, ks) <- Seq(g -> kernels, gu -> undirected); (name, run) <- ks) {
+      val (narrow, narrowSteps) = run(gr)
+      val (shuffled, shuffledSteps) = run(gr.copy(cut = -1L))
+      assert(narrowSteps === shuffledSteps, s"$name supersteps")
+      assert(narrow.nonEmpty && narrow === shuffled, s"$name results")
+    }
+    g.unpersist(); gu.unpersist(); und.unpersistAll(); graph.unpersistAll()
   }
 
   test("CSR snapshot save/load round-trip: loaded graph computes identical ranks") {
@@ -123,17 +185,32 @@ class GatherScatterSpec extends AnyFunSuite {
     val built = GatherScatter.build(graph, 4, keyShift = 20)
     val want = GatherScatter.toDF(s, GatherScatter.pageRank(built, 0.3, 6))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val dir = java.nio.file.Files.createTempDirectory("graft-snap").toString
-    GatherScatter.save(built, s"$dir/g")
-    built.unpersist()
-    val loaded = GatherScatter.load(s, s"$dir/g")
-    assert(loaded.numPartitions === 4)
-    assert(loaded.numEdges === graph.numEdges)
-    val got = GatherScatter.toDF(s, GatherScatter.pageRank(loaded, 0.3, 6))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(got.keySet === want.keySet)
-    for ((k, v) <- want) assert(got(k) === v, s"bit-for-bit parity, vertex $k")
-    loaded.unpersist()
+    withTempDir("graft-snap") { dir =>
+      GatherScatter.save(built, s"$dir/g")
+      built.unpersist()
+      def ranksOf(path: String) = {
+        val loaded = GatherScatter.load(s, path)
+        val got = GatherScatter.toDF(s, GatherScatter.pageRank(loaded, 0.3, 6))
+          .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+        loaded.unpersist()
+        (loaded, got)
+      }
+      val (loaded, got) = ranksOf(s"$dir/g")
+      assert(loaded.numPartitions === 4)
+      assert(loaded.numEdges === graph.numEdges)
+      assert(loaded.cut === 0L, "the manifest carries the measured cut")
+      assert(got.keySet === want.keySet)
+      for ((k, v) <- want) assert(got(k) === v, s"bit-for-bit parity, vertex $k")
+      // a snapshot saved before the cut was measured loads as unknown and
+      // runs the shuffle path to the same ranks
+      val manifest = s"$dir/g/manifest.json"
+      val text = HadoopSnapshotStore.readText(s.sparkContext, manifest).get
+      assert(text.contains("\"cut\":0,"))
+      HadoopSnapshotStore.writeText(s.sparkContext, manifest, text.replace("\"cut\":0,", ""))
+      val (old, oldGot) = ranksOf(s"$dir/g")
+      assert(old.cut === -1L)
+      for ((k, v) <- want) assert(oldGot(k) === v, s"bit-for-bit parity without a cut, vertex $k")
+    }
   }
 
   test("(min,+) kernel: connected components == column-engine HashMin (reference graph + transcripts + planted hub)") {
@@ -262,15 +339,16 @@ class GatherScatterSpec extends AnyFunSuite {
     val g = LinkGraph.fromSeq(s,
       Seq(Edge(1L, 2L, 3.0), Edge(2L, 3L, 1.5), Edge(1L, 3L, 10.0), Edge(3L, 4L, 0.25)), 2)
     val built = GatherScatter.build(g, 2, weighted = true)
-    val dir = java.nio.file.Files.createTempDirectory("gs-wsnap").toString
-    GatherScatter.save(built, dir)
-    val loaded = GatherScatter.load(s, dir)
-    assert(loaded.weighted)
-    val got = GatherScatter.toDF(s, GatherScatter.sssp(loaded, 1L)._1).collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(got(1L) === 0.0); assert(got(2L) === 3.0)
-    assert(got(3L) === 4.5); assert(got(4L) === 4.75)
-    loaded.unpersist(); built.unpersist(); g.unpersistAll()
+    withTempDir("gs-wsnap") { dir =>
+      GatherScatter.save(built, dir)
+      val loaded = GatherScatter.load(s, dir)
+      assert(loaded.weighted)
+      val got = GatherScatter.toDF(s, GatherScatter.sssp(loaded, 1L)._1).collect()
+        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      assert(got(1L) === 0.0); assert(got(2L) === 3.0)
+      assert(got(3L) === 4.5); assert(got(4L) === 4.75)
+      loaded.unpersist(); built.unpersist(); g.unpersistAll()
+    }
   }
 
   test("load() caches ONE combined block RDD (csr+meta co-placement is structural)") {
@@ -282,17 +360,18 @@ class GatherScatterSpec extends AnyFunSuite {
     // RDD makes the alignment structural; this pins the invariant.
     val graph = Transcripts.toGraph(Transcripts.synthesize(s, 100))
     val built = GatherScatter.build(graph, 4)
-    val dir = java.nio.file.Files.createTempDirectory("graft-snap1").toString
-    GatherScatter.save(built, s"$dir/g")
-    built.unpersist()
-    graph.unpersistAll()
-    val before = s.sparkContext.getPersistentRDDs.keySet
-    val loaded = GatherScatter.load(s, s"$dir/g")
-    val added = s.sparkContext.getPersistentRDDs.keySet -- before
-    assert(added.size === 1,
-      s"load() must persist exactly one combined RDD, persisted ${added.size}")
-    loaded.unpersist()
-    assert((s.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
-      "unpersist() must free the backing RDD")
+    withTempDir("graft-snap1") { dir =>
+      GatherScatter.save(built, s"$dir/g")
+      built.unpersist()
+      graph.unpersistAll()
+      val before = s.sparkContext.getPersistentRDDs.keySet
+      val loaded = GatherScatter.load(s, s"$dir/g")
+      val added = s.sparkContext.getPersistentRDDs.keySet -- before
+      assert(added.size === 1,
+        s"load() must persist exactly one combined RDD, persisted ${added.size}")
+      loaded.unpersist()
+      assert((s.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
+        "unpersist() must free the backing RDD")
+    }
   }
 }

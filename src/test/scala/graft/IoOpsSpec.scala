@@ -5,23 +5,25 @@ import org.apache.spark.sql.functions._
 
 import graft.core.{Edge, LinkGraph, VertexOps}
 import graft.sources.{TextEdgeList, VertexDump}
+import SparkTestBase.withTempDir
 
 class IoOpsSpec extends AnyFunSuite {
   lazy val s = SparkTestBase.spark
   import s.implicits._
 
   test("text edge-list round-trip preserves edges; header lines are tolerated") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-txt").toString
-    val es = Seq(Edge(1, 2, 1.0), Edge(2, 3, 5.0), Edge(3, 4, 2.5))
-    TextEdgeList.write(es.toDF(), s"$dir/out")
-    val back = TextEdgeList.read(s, s"$dir/out").as[Edge].collect().toSet
-    assert(back === es.toSet)
-    // loader drops a "m n nnz" header-style line gracefully
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "withheader.txt"),
-      "4 4 2\n1 2\n3 4 7\n".getBytes)
-    val h = TextEdgeList.read(s, s"$dir/withheader.txt").as[Edge].collect().toSet
-    assert(h === Set(Edge(4L, 4L, 2.0), Edge(1, 2, 1.0), Edge(3, 4, 7.0)) ||
-           h === Set(Edge(1, 2, 1.0), Edge(3, 4, 7.0)))
+    withTempDir("graft-txt") { dir =>
+      val es = Seq(Edge(1, 2, 1.0), Edge(2, 3, 5.0), Edge(3, 4, 2.5))
+      TextEdgeList.write(es.toDF(), s"$dir/out")
+      val back = TextEdgeList.read(s, s"$dir/out").as[Edge].collect().toSet
+      assert(back === es.toSet)
+      // loader drops a "m n nnz" header-style line gracefully
+      java.nio.file.Files.write(java.nio.file.Paths.get(dir, "withheader.txt"),
+        "4 4 2\n1 2\n3 4 7\n".getBytes)
+      val h = TextEdgeList.read(s, s"$dir/withheader.txt").as[Edge].collect().toSet
+      assert(h === Set(Edge(4L, 4L, 2.0), Edge(1, 2, 1.0), Edge(3, 4, 7.0)) ||
+             h === Set(Edge(1, 2, 1.0), Edge(3, 4, 7.0)))
+    }
   }
 
   test("vertex dump lines: sorted by id, golden '<id> <value>' shape") {

@@ -6,6 +6,7 @@ import graft.core.LinkGraph
 import graft.sources.MtxReader
 import graft.algos.{PageRank, TriangleCount, ConnectedComponents}
 import graft.engine.{CheckpointConfig, Superstep}
+import SparkTestBase.withTempDir
 
 class MtxAndResumeSpec extends AnyFunSuite {
   lazy val s = SparkTestBase.spark
@@ -17,24 +18,25 @@ class MtxAndResumeSpec extends AnyFunSuite {
   }
 
   test("binary writer round-trips the reference fixture byte-compatibly") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-mtx").toString
-    val fixture = SparkTestBase.refData("test.bin.mtx")
-    val orig = MtxReader.readMtx(s, fixture)
-    MtxReader.write(orig.edges, s"$tmp/rt.bin.mtx", m = orig.m, n = orig.n)
-    val back = MtxReader.readMtx(s, s"$tmp/rt.bin.mtx")
-    assert(back.m === orig.m && back.n === orig.n)
-    val a = orig.edges.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val b = back.edges.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(a === b)
-    // the declared record section is reproduced byte-for-byte (collect order
-    // == file order); the fixture carries a 14th record beyond its nnz=13
-    // header, which the reference itself never reads (edgelist.h:269-288)
-    val origBytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(fixture))
-    val rtBytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$tmp/rt.bin.mtx"))
-    val recLen = 13 * 12
-    assert(rtBytes.length === 12 + recLen)
-    assert(java.util.Arrays.equals(
-      origBytes.slice(12, 12 + recLen), rtBytes.slice(12, 12 + recLen)))
+    withTempDir("graft-mtx") { tmp =>
+      val fixture = SparkTestBase.refData("test.bin.mtx")
+      val orig = MtxReader.readMtx(s, fixture)
+      MtxReader.write(orig.edges, s"$tmp/rt.bin.mtx", m = orig.m, n = orig.n)
+      val back = MtxReader.readMtx(s, s"$tmp/rt.bin.mtx")
+      assert(back.m === orig.m && back.n === orig.n)
+      val a = orig.edges.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      val b = back.edges.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      assert(a === b)
+      // the declared record section is reproduced byte-for-byte (collect order
+      // == file order); the fixture carries a 14th record beyond its nnz=13
+      // header, which the reference itself never reads (edgelist.h:269-288)
+      val origBytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(fixture))
+      val rtBytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$tmp/rt.bin.mtx"))
+      val recLen = 13 * 12
+      assert(rtBytes.length === 12 + recLen)
+      assert(java.util.Arrays.equals(
+        origBytes.slice(12, 12 + recLen), rtBytes.slice(12, 12 + recLen)))
+    }
   }
 
   test("readSquare promotes a rectangular header to the square hull (ReadMTX semantics)") {
@@ -83,33 +85,34 @@ class MtxAndResumeSpec extends AnyFunSuite {
   }
 
   test("checkpoint/resume: interrupted CC resumes to the identical fixpoint") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-cc-cp").toString
-    val es = (1L until 14L).map(i => (i, i + 1)) // path: slow HashMin convergence
-    val g = LinkGraph.fromSeq(s, es.map { case (a, b) => graft.core.Edge(a, b, 1.0) }, 4)
-    val cp = CheckpointConfig(dir, "cc", every = 3)
+    withTempDir("graft-cc-cp") { dir =>
+      val es = (1L until 14L).map(i => (i, i + 1)) // path: slow HashMin convergence
+      val g = LinkGraph.fromSeq(s, es.map { case (a, b) => graft.core.Edge(a, b, 1.0) }, 4)
+      val cp = CheckpointConfig(dir, "cc", every = 3)
 
-    // full uninterrupted run
-    val full = ConnectedComponents.run(g).state
-      .select("id", "component").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      // full uninterrupted run
+      val full = ConnectedComponents.run(g).state
+        .select("id", "component").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
-    // interrupted: rebuild the spec with a 5-iteration budget, snapshots every 3
-    val und = g.undirected
-    import org.apache.spark.sql.functions._
-    val init = und.vertices.select(col("id"), lit(true).as("active"), col("id").as("component"))
-    val spec0 = ccSpec(maxIter = 6)
-    Superstep.run(und, init, spec0, Some(cp))
-    // resume from latest snapshot (iter 6) with no budget
-    val resumed = Superstep.resume(und, ccSpec(maxIter = -1), cp)
-    val got = resumed.state.select("id", "component").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got === full)
-    assert(resumed.converged)
-    // metrics file covers pre- and post-resume iterations contiguously
-    val lines = java.nio.file.Files.readAllLines(
-      java.nio.file.Paths.get(dir, "cc", "metrics.jsonl"))
-    val iters = (0 until lines.size()).map(i =>
-      """"iteration":(\d+)""".r.findFirstMatchIn(lines.get(i)).get.group(1).toInt)
-    assert(iters === (1 to iters.max))
+      // interrupted: rebuild the spec with a 5-iteration budget, snapshots every 3
+      val und = g.undirected
+      import org.apache.spark.sql.functions._
+      val init = und.vertices.select(col("id"), lit(true).as("active"), col("id").as("component"))
+      val spec0 = ccSpec(maxIter = 6)
+      Superstep.run(und, init, spec0, Some(cp))
+      // resume from latest snapshot (iter 6) with no budget
+      val resumed = Superstep.resume(und, ccSpec(maxIter = -1), cp)
+      val got = resumed.state.select("id", "component").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(got === full)
+      assert(resumed.converged)
+      // metrics file covers pre- and post-resume iterations contiguously
+      val lines = java.nio.file.Files.readAllLines(
+        java.nio.file.Paths.get(dir, "cc", "metrics.jsonl"))
+      val iters = (0 until lines.size()).map(i =>
+        """"iteration":(\d+)""".r.findFirstMatchIn(lines.get(i)).get.group(1).toInt)
+      assert(iters === (1 to iters.max))
+    }
   }
 
   private def ccSpec(maxIter: Int) = {

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.{CheckpointConfig, GatherScatter, HadoopSnapshotStore, SnapshotStore, Superstep}
+import SparkTestBase.withTempDir
 
 /**
  * The durable-IO seam ([[SnapshotStore]]): the Hadoop/parquet rendering's
@@ -18,53 +19,57 @@ class SnapshotStoreSpec extends AnyFunSuite {
   private def sc = spark.sparkContext
 
   test("HadoopSnapshotStore: text round-trip, overwrite, exists, delete") {
-    val dir = Files.createTempDirectory("graft-snapstore").toString
-    val p = s"$dir/nested/latest.json"
-    assert(HadoopSnapshotStore.readText(sc, p).isEmpty)
-    assert(!HadoopSnapshotStore.exists(sc, p))
-    HadoopSnapshotStore.writeText(sc, p, """{"iteration":3}""")
-    assert(HadoopSnapshotStore.readText(sc, p).contains("""{"iteration":3}"""))
-    HadoopSnapshotStore.writeText(sc, p, """{"iteration":7}""") // overwrite
-    assert(HadoopSnapshotStore.readText(sc, p).contains("""{"iteration":7}"""))
-    HadoopSnapshotStore.deleteIfExists(sc, p)
-    assert(!HadoopSnapshotStore.exists(sc, p))
-    HadoopSnapshotStore.deleteIfExists(sc, p) // idempotent on absent paths
+    withTempDir("graft-snapstore") { dir =>
+      val p = s"$dir/nested/latest.json"
+      assert(HadoopSnapshotStore.readText(sc, p).isEmpty)
+      assert(!HadoopSnapshotStore.exists(sc, p))
+      HadoopSnapshotStore.writeText(sc, p, """{"iteration":3}""")
+      assert(HadoopSnapshotStore.readText(sc, p).contains("""{"iteration":3}"""))
+      HadoopSnapshotStore.writeText(sc, p, """{"iteration":7}""") // overwrite
+      assert(HadoopSnapshotStore.readText(sc, p).contains("""{"iteration":7}"""))
+      HadoopSnapshotStore.deleteIfExists(sc, p)
+      assert(!HadoopSnapshotStore.exists(sc, p))
+      HadoopSnapshotStore.deleteIfExists(sc, p) // idempotent on absent paths
+    }
   }
 
   test("HadoopSnapshotStore: partition-aligned block round-trip") {
-    val dir = Files.createTempDirectory("graft-snapstore").toString
-    val blocks = sc.parallelize(0 until 4, 4)
-      .map(p => (p, Array.tabulate(3)(i => p * 10L + i)))
-    HadoopSnapshotStore.writeBlocks(blocks, s"$dir/blocks")
-    // second write to the same path must replace, not fail (crash recovery)
-    HadoopSnapshotStore.writeBlocks(blocks, s"$dir/blocks")
-    val back = HadoopSnapshotStore.readBlocks[Array[Long]](sc, s"$dir/blocks")
-      .collect().sortBy(_._1)
-    assert(back.map(_._1).toSeq == Seq(0, 1, 2, 3))
-    assert(back.map(_._2.toSeq).toSeq ==
-      Seq(Seq(0L, 1L, 2L), Seq(10L, 11L, 12L), Seq(20L, 21L, 22L), Seq(30L, 31L, 32L)))
+    withTempDir("graft-snapstore") { dir =>
+      val blocks = sc.parallelize(0 until 4, 4)
+        .map(p => (p, Array.tabulate(3)(i => p * 10L + i)))
+      HadoopSnapshotStore.writeBlocks(blocks, s"$dir/blocks")
+      // second write to the same path must replace, not fail (crash recovery)
+      HadoopSnapshotStore.writeBlocks(blocks, s"$dir/blocks")
+      val back = HadoopSnapshotStore.readBlocks[Array[Long]](sc, s"$dir/blocks")
+        .collect().sortBy(_._1)
+      assert(back.map(_._1).toSeq == Seq(0, 1, 2, 3))
+      assert(back.map(_._2.toSeq).toSeq ==
+        Seq(Seq(0L, 1L, 2L), Seq(10L, 11L, 12L), Seq(20L, 21L, 22L), Seq(30L, 31L, 32L)))
+    }
   }
 
   test("HadoopSnapshotStore: one part file per partition, no committer leftovers") {
-    val dir = Files.createTempDirectory("graft-snapstore").toString
-    val blocks = sc.parallelize(0 until 5, 5).map(p => (p, Array.fill(p)(p.toLong)))
-    HadoopSnapshotStore.writeBlocks(blocks, s"$dir/blocks")
-    val names = new java.io.File(s"$dir/blocks").list().toSet
-    assert(names.filterNot(_.startsWith(".")) ===
-      (0 until 5).map(p => f"part-$p%05d").toSet, s"files: $names")
+    withTempDir("graft-snapstore") { dir =>
+      val blocks = sc.parallelize(0 until 5, 5).map(p => (p, Array.fill(p)(p.toLong)))
+      HadoopSnapshotStore.writeBlocks(blocks, s"$dir/blocks")
+      val names = new java.io.File(s"$dir/blocks").list().toSet
+      assert(names.filterNot(_.startsWith(".")) ===
+        (0 until 5).map(p => f"part-$p%05d").toSet, s"files: $names")
+    }
   }
 
   test("HadoopSnapshotStore: readBlocks ignores a failed attempt's hidden temp file") {
-    val dir = Files.createTempDirectory("graft-snapstore").toString
-    val blocks = sc.parallelize(0 until 3, 3).map(p => (p, Array(p.toLong)))
-    HadoopSnapshotStore.writeBlocks(blocks, s"$dir/blocks")
-    // an attempt that died after writing part of its temp file
-    Files.write(java.nio.file.Paths.get(dir, "blocks", ".part-00001-0-99.tmp"),
-      "not a sequence file".getBytes)
-    val back = HadoopSnapshotStore.readBlocks[Array[Long]](sc, s"$dir/blocks")
-      .collect().sortBy(_._1)
-    assert(back.map { case (p, a) => (p, a.toSeq) }.toSeq ===
-      Seq((0, Seq(0L)), (1, Seq(1L)), (2, Seq(2L))))
+    withTempDir("graft-snapstore") { dir =>
+      val blocks = sc.parallelize(0 until 3, 3).map(p => (p, Array(p.toLong)))
+      HadoopSnapshotStore.writeBlocks(blocks, s"$dir/blocks")
+      // an attempt that died after writing part of its temp file
+      Files.write(java.nio.file.Paths.get(dir, "blocks", ".part-00001-0-99.tmp"),
+        "not a sequence file".getBytes)
+      val back = HadoopSnapshotStore.readBlocks[Array[Long]](sc, s"$dir/blocks")
+        .collect().sortBy(_._1)
+      assert(back.map { case (p, a) => (p, a.toSeq) }.toSeq ===
+        Seq((0, Seq(0L)), (1, Seq(1L)), (2, Seq(2L))))
+    }
   }
 
   test("HadoopSnapshotStore: writeText falls back when the scheme has no FileContext binding") {
@@ -73,13 +78,14 @@ class SnapshotStoreSpec extends AnyFunSuite {
     val conf = sc.hadoopConfiguration
     conf.set("fs.noafs.impl", classOf[SnapshotStoreSpec.NoFileContextFs].getName)
     conf.setBoolean("fs.noafs.impl.disable.cache", true)
-    val dir = Files.createTempDirectory("graft-snapstore").toString
-    val p = s"noafs://$dir/latest.json"
-    HadoopSnapshotStore.writeText(sc, p, "one")
-    HadoopSnapshotStore.writeText(sc, p, "two") // overwrite through the fallback
-    assert(HadoopSnapshotStore.readText(sc, p).contains("two"))
-    assert(new String(Files.readAllBytes(java.nio.file.Paths.get(dir, "latest.json"))) === "two")
-    assert(new java.io.File(dir).list().toSeq === Seq("latest.json"))
+    withTempDir("graft-snapstore") { dir =>
+      val p = s"noafs://$dir/latest.json"
+      HadoopSnapshotStore.writeText(sc, p, "one")
+      HadoopSnapshotStore.writeText(sc, p, "two") // overwrite through the fallback
+      assert(HadoopSnapshotStore.readText(sc, p).contains("two"))
+      assert(new String(Files.readAllBytes(java.nio.file.Paths.get(dir, "latest.json"))) === "two")
+      assert(new java.io.File(dir).list().toSeq === Seq("latest.json"))
+    }
   }
 
   /** Counting decorator: delegates to the Hadoop store under `physical`,
@@ -127,26 +133,27 @@ class SnapshotStoreSpec extends AnyFunSuite {
     assert(built.hotIds.nonEmpty, "the manifest must carry hub ids")
     val want = GatherScatter.toDF(spark, GatherScatter.pageRank(built, 0.3, 4))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val dir = Files.createTempDirectory("graft-snapstore").toString
-    val logical = s"$dir/logical"
-    val store = new CountingStore(logical, s"$dir/physical")
-    GatherScatter.save(built, s"$logical/g", store)
-    built.unpersist()
-    assert(!new java.io.File(logical).exists(), "save wrote around the store")
-    assert(new java.io.File(s"$dir/physical/g").list().filterNot(_.startsWith(".")).toSet ===
-      Set("csr", "meta", "manifest.json"))
-    store.paths.clear()
-    val loaded = GatherScatter.load(spark, s"$logical/g", store)
-    assert(store.paths.toSet === Set(s"$logical/g/manifest.json", s"$logical/g/csr", s"$logical/g/meta"))
-    assert(!new java.io.File(logical).exists(), "load wrote around the store")
-    assert(loaded.hotIds.toSeq === built.hotIds.toSeq)
-    assert((loaded.numPartitions, loaded.numEdges, loaded.numVertices, loaded.weighted) ===
-      (built.numPartitions, built.numEdges, built.numVertices, built.weighted))
-    val got = GatherScatter.toDF(spark, GatherScatter.pageRank(loaded, 0.3, 4))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(got === want)
-    loaded.unpersist()
-    graph.unpersistAll()
+    withTempDir("graft-snapstore") { dir =>
+      val logical = s"$dir/logical"
+      val store = new CountingStore(logical, s"$dir/physical")
+      GatherScatter.save(built, s"$logical/g", store)
+      built.unpersist()
+      assert(!new java.io.File(logical).exists(), "save wrote around the store")
+      assert(new java.io.File(s"$dir/physical/g").list().filterNot(_.startsWith(".")).toSet ===
+        Set("csr", "meta", "manifest.json"))
+      store.paths.clear()
+      val loaded = GatherScatter.load(spark, s"$logical/g", store)
+      assert(store.paths.toSet === Set(s"$logical/g/manifest.json", s"$logical/g/csr", s"$logical/g/meta"))
+      assert(!new java.io.File(logical).exists(), "load wrote around the store")
+      assert(loaded.hotIds.toSeq === built.hotIds.toSeq)
+      assert((loaded.numPartitions, loaded.numEdges, loaded.numVertices, loaded.weighted) ===
+        (built.numPartitions, built.numEdges, built.numVertices, built.weighted))
+      val got = GatherScatter.toDF(spark, GatherScatter.pageRank(loaded, 0.3, 4))
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      assert(got === want)
+      loaded.unpersist()
+      graph.unpersistAll()
+    }
   }
 
   test("a custom store is a drop-in: checkpointed run + resume flow through it") {
@@ -155,18 +162,19 @@ class SnapshotStoreSpec extends AnyFunSuite {
         SparkTestBase.testGraphEdges.map { case (s, d) => (s, d, 1.0) })
       .toDF("src", "dst", "weight")
     val g = LinkGraph(edges, 2)
-    val dir = Files.createTempDirectory("graft-snapstore").toString
-    val store = new CountingStore
-    val cp = CheckpointConfig(dir, "runA", every = 2, store = store)
-    val res = graft.algos.PageRank.run(g, tol = -1.0, maxIterations = 4, cp = Some(cp))
-    res.state.count()
-    assert(store.states >= 2, s"snapshots must go through the store (${store.states})")
-    assert(store.texts >= 3, "metrics/lineage/pointer must go through the store")
-    // the store-written pointer is the one resume reads
-    val latest = HadoopSnapshotStore.readText(sc, s"$dir/runA/latest.json")
-    assert(latest.exists(_.contains(""""iteration":4""")), s"latest=$latest")
-    g.unpersistAll()
-    res.state.unpersist()
+    withTempDir("graft-snapstore") { dir =>
+      val store = new CountingStore
+      val cp = CheckpointConfig(dir, "runA", every = 2, store = store)
+      val res = graft.algos.PageRank.run(g, tol = -1.0, maxIterations = 4, cp = Some(cp))
+      res.state.count()
+      assert(store.states >= 2, s"snapshots must go through the store (${store.states})")
+      assert(store.texts >= 3, "metrics/lineage/pointer must go through the store")
+      // the store-written pointer is the one resume reads
+      val latest = HadoopSnapshotStore.readText(sc, s"$dir/runA/latest.json")
+      assert(latest.exists(_.contains(""""iteration":4""")), s"latest=$latest")
+      g.unpersistAll()
+      res.state.unpersist()
+    }
   }
 }
 

@@ -1,8 +1,11 @@
 package graft
 
+import java.nio.file.{Files, Path}
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import scala.util.Using
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (sbt forks one JVM for tests). */
@@ -20,17 +23,29 @@ object SparkTestBase {
     s
   }
 
-  /** Spark jobs started by `body`. Listener events arrive asynchronously but
-    * in order, so a marker job seen by the listener closes the count. */
+  /** Spark jobs started by `body`. */
   def jobsOf[A](body: => A): (A, Int) = {
+    val (a, jobs, _) = jobsAndStagesOf(body)
+    (a, jobs)
+  }
+
+  /** Spark jobs started and stages run by `body`; a stage skipped because
+    * its shuffle output already exists is never submitted, so it does not
+    * count. Listener events arrive asynchronously but in order, so a marker
+    * job seen by the listener closes the count. */
+  def jobsAndStagesOf[A](body: => A): (A, Int, Int) = {
     val sc = spark.sparkContext
     val jobs = new AtomicInteger
+    val stages = new AtomicInteger
     val markers = new AtomicInteger
     val l = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).exists(_.getProperty("graft.marker") != null))
           markers.incrementAndGet()
         else jobs.incrementAndGet()
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (!Option(e.properties).exists(_.getProperty("graft.marker") != null))
+          stages.incrementAndGet()
     }
     def marker(): Unit = {
       val seen = markers.get
@@ -45,10 +60,21 @@ object SparkTestBase {
     try {
       marker()
       jobs.set(0)
+      stages.set(0)
       val a = body
       marker()
-      (a, jobs.get)
+      (a, jobs.get, stages.get)
     } finally sc.removeSparkListener(l)
+  }
+
+  /** Runs `f` on a fresh temporary directory named `prefix…` and deletes
+    * the directory with everything in it afterwards. */
+  def withTempDir[A](prefix: String)(f: String => A): A = {
+    val dir = Files.createTempDirectory(prefix)
+    try f(dir.toString)
+    finally Using.resource(Files.walk(dir)) { paths =>
+      paths.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(p => Files.deleteIfExists(p))
+    }
   }
 
   /** Path of a bundled GraphMat reference graph (FIXTURES.md §2): the
