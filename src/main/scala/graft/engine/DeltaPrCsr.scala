@@ -3,7 +3,7 @@ package graft.engine
 import org.apache.spark.rdd.RDD
 
 import GatherScatter.{PrGraph, RankBlock, Step, Sum, exchange, fold, gather, hotValues, iterate,
-  materialize, mirror}
+  mirror}
 
 /**
  * Incremental (delta) PageRank on the CSR gather-scatter structures —
@@ -60,7 +60,7 @@ object DeltaPrCsr {
       Iterator.single(DprState(Array.fill(n)(0.3), Array.fill(n)(0.3),
         Array.fill(n)(true)))
     }, preservesPartitioning = true)
-    val (state, it) = iterate(g, Step(init), maxIterations, counted = true) {
+    iterate(g, Step(init), maxIterations, counted = true)((ids, s) => RankBlock(ids, s.pr)) {
       (state, _, changedAcc) =>
         // hub mirror: per hot vertex, its masked delta (0.0 when inactive —
         // contributes nothing, keeping "received ⇔ sum>0"); the gather
@@ -105,6 +105,5 @@ object DeltaPrCsr {
           DprState(pr, dl, ac)
         }
     }
-    (materialize(g, state)(_.pr), it)
   }
 }

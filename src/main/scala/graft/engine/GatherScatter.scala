@@ -47,12 +47,14 @@ import graft.core.LinkGraph
  * million-out-degree hub therefore costs every partition |E_hub|/n edges
  * instead of one partition |E_hub|.
  *
- * One RDD job plus one (skippable) hot-mirror job per superstep, at most one
- * shuffle (none on a cut-free layout), no Catalyst re-planning, no per-row
- * boxing. Every CSR kernel (here and in
- * DeltaPrCsr, ToposortCsr, VectorSuperstep) keeps only its arithmetic and
- * runs through the same plumbing: `exchange` (the split exchange) and
- * `iterate` (the superstep loop) — see "the superstep plumbing" below.
+ * At most one shuffle per superstep (none on a cut-free layout), no
+ * Catalyst re-planning, no per-row boxing. A convergence loop runs one
+ * Spark job per superstep; a fixed-budget loop chains four supersteps per
+ * job; a hub layout adds one mirror collect per superstep. Every CSR
+ * kernel (here and in DeltaPrCsr, ToposortCsr, VectorSuperstep) keeps only
+ * its arithmetic and runs through the same plumbing: `exchange` (the split
+ * exchange) and `iterate` (the whole run: superstep loop and result job) —
+ * see "the superstep plumbing" below.
  * Throughput path only; semantics verified against the Column-algebra
  * engine (allclose 1e-9) in GatherScatterSpec.
  */
@@ -919,10 +921,20 @@ object GatherScatter {
       t
     })
 
-  /** Dense rank vectors, one Array[Double] per partition, aligned to VertexMeta.ids. */
-  private def initRanks(g: PrGraph): RDD[Array[Double]] =
-    g.verts.mapPartitions(it => Iterator.single(Array.fill(it.next().ids.length)(0.3)),
-      preservesPartitioning = true)
+  /** Dense per-vertex state, one K-packed Array[Double] per partition
+    * aligned to VertexMeta.ids: slot `d` of vertex `id` holds `f(id, d)`. */
+  private[engine] def initState(g: PrGraph, k: Int, f: (Long, Int) => Double): RDD[Array[Double]] =
+    g.verts.mapPartitions({ it =>
+      val vm = it.next()
+      val a = new Array[Double](vm.ids.length * k)
+      var i = 0
+      while (i < vm.ids.length) {
+        var d = 0
+        while (d < k) { a(i * k + d) = f(vm.ids(i), d); d += 1 }
+        i += 1
+      }
+      Iterator.single(a)
+    }, preservesPartitioning = true)
 
   // ---- the superstep plumbing, written once -------------------------------
   //
@@ -951,37 +963,42 @@ object GatherScatter {
   //    task never separate. On a cut-free layout (`PrGraph.cut == 0`, as
   //    measured by build) there is nothing to ship: the exchange builds no
   //    shuffle at all, the apply is a narrow zip of the gathered blocks with
-  //    the layout, and chained supersteps pipeline inside one stage.
+  //    the layout (read once, so not persisted), and chained supersteps
+  //    pipeline inside one stage.
   //  - `fold`, the ⊕ of the received blocks into a dense accumulator.
-  //  - `iterate`, the superstep loop: changed count, persist, lineage
-  //    truncation, durable checkpoints, and freeing each superstep's
-  //    gathered blocks, broadcasts and previous state once it has landed.
+  //  - `iterate`, the whole run: the superstep loop and its one barrier rule
+  //    (a convergence loop lands every superstep, a fixed-budget loop every
+  //    4th), changed count, lineage truncation, durable checkpoints, freeing
+  //    each segment's gathered blocks, broadcasts and superseded states once
+  //    a barrier has landed, and the run's result job.
   //  - `hubMirror` / `mirror`, the per-superstep collect of the hot
   //    vertices' values for the mirror broadcast.
 
-  /** One superstep's lazy state and what [[iterate]] frees once that state
-    * is materialized: the gathered blocks and the superstep's broadcasts. */
+  /** One superstep's lazy state and what [[iterate]] frees once a later
+    * state has landed: the persisted gathered blocks (null when none are)
+    * and the superstep's broadcasts. */
   private[engine] final case class Step[S](next: RDD[S], gathered: RDD[_] = null,
                                            broadcasts: Seq[Broadcast[_]] = Nil)
 
   /** The split exchange of `gather`'s (targetPartition, (sourcePartition,
-    * block)) records; persists them. `apply` runs once per partition with
+    * block)) records. `apply` runs once per partition with
     * the partition's layout, its incoming-index table, the blocks addressed
     * to it — its OWN block first, then the remote ones, the fold order that
     * keeps every kernel's results bit-identical — and its `side` state
     * (null when `side` is null: the apply then reads no previous state, so
     * the kernel's input is consumed exactly once). Only the tp != p records
-    * are shuffled. On a cut-free layout (`g.cut == 0`) no record may leave
+    * are shuffled, so the gathered blocks, read by both sides of the split,
+    * are persisted. On a cut-free layout (`g.cut == 0`) no record may leave
     * its partition, so there is no shuffle: the apply zips the gathered
     * blocks with the layout as narrow dependencies, in the same fold order,
     * and a record addressed elsewhere fails the task instead of being
-    * dropped. The gathered blocks stay persisted either way: a job that
-    * resumes a chain of lazy supersteps restarts from the newest cached
-    * block. */
+    * dropped; each block is then read exactly once and is not persisted.
+    * A job that resumes a chain of lazy supersteps restarts from the
+    * newest cached state ([[iterate]] persists every state). */
   private[engine] def exchange[T, S: ClassTag, R: ClassTag](
       g: PrGraph, gather: RDD[(Int, (Int, T))], side: RDD[S], broadcasts: Broadcast[_]*)(
       apply: (VertexMeta, Array[Array[Int]], Iterator[(Int, T)], S) => R): Step[R] = {
-    val gathered = gather.persist(StorageLevel.MEMORY_AND_DISK)
+    val gathered = if (g.cut == 0) gather else gather.persist(StorageLevel.MEMORY_AND_DISK)
     val run = (mIt: Iterator[(VertexMeta, Array[Array[Int]])],
                blocks: Iterator[(Int, T)], old: S) => {
       val (vm, inIdx) = mIt.next()
@@ -1018,7 +1035,7 @@ object GatherScatter {
             (rIt, lIt, mIt, oIt) => run(mIt, split(lIt, rIt), oIt.next())
           }
       }
-    Step(next, gathered, broadcasts)
+    Step(next, if (g.cut == 0) null else gathered, broadcasts)
   }
 
   /** The failure of a record addressed from partition `p` to partition
@@ -1162,41 +1179,44 @@ object GatherScatter {
     else state.sparkContext.broadcast(hubMirror(g, state)(at))
 
   /**
-   * The superstep loop, written once. `init` is superstep 0's state:
-   * iterate persists and counts it (the run's first job) and then frees its
-   * step's handles — unless the caller persisted it, in which case it stays
-   * the caller's to free. Each superstep runs `step(state, superstep,
-   * changed)`, persists the new state, truncates its lineage every 16th
-   * superstep (a long run's DAG and task closures stay bounded, and an
-   * executor loss recomputes at most 16 supersteps), runs the superstep's
-   * one job ([[Checkpoints.materialize]]), then frees the step's gathered
-   * blocks and broadcasts and the previous state. `counted` loops stop at
-   * GraphMat's land-reduce fixpoint (`GraphMatRuntime.h:208-226`): the
-   * kernel's apply adds its changed count to `changed`, and a superstep that
-   * changed no vertex ends the run. The count is updated inside a
-   * TRANSFORMATION, so a task retry or speculative duplicate can
-   * double-count — but only inflate a nonzero count (delaying the stop by
-   * one superstep), never fabricate zero from nonzero. Fixed-budget loops
-   * get a null `changed`.
+   * A CSR run, written once: the superstep loop, then the run's result job.
+   * `init` is superstep 0's state. Each superstep runs `step(state,
+   * superstep, changed)` and lazily persists the new state, so a state read
+   * twice (by the gather and by the apply's `side`) is computed once, and a
+   * job resumes from the newest cached state. A barrier is a superstep whose
+   * Spark job runs ([[Checkpoints.materialize]]); the rule has two cases:
+   *  - `counted` loops, and every checkpointed run, land every superstep.
+   *    A counted loop stops at GraphMat's land-reduce fixpoint
+   *    (`GraphMatRuntime.h:208-226`): the kernel's apply adds its changed
+   *    count to `changed`, and a superstep that changed no vertex ends the
+   *    run. The count is updated inside a TRANSFORMATION, so a task retry or
+   *    speculative duplicate can double-count — but only inflate a nonzero
+   *    count (delaying the stop by one superstep), never fabricate zero from
+   *    nonzero.
+   *  - fixed-budget loops (`changed` is null) land every 4th superstep, and
+   *    the result job computes the supersteps after the last barrier:
+   *    `pageRank(10)` runs 3 jobs instead of 11. A step that runs a driver
+   *    action itself (a hub-mirror collect) computes the state it reads.
+   * Every 16th superstep truncates lineage (a multiple of 4, so always on a
+   * barrier), so a long run's DAG and task closures stay bounded. After each
+   * barrier, the gathered blocks, broadcasts and states made since the
+   * previous one are freed, all but the newest state; the last segment's are
+   * freed after the result job. An `init` the caller persisted stays the
+   * caller's to free.
    *
    * With `cp`, a committed checkpoint replaces `init` (`lift` turns its
    * saved vectors into a state) and due checkpoints save `values` of the
-   * state. Returns (final state, cached; supersteps run, counting those
-   * before a resume).
+   * state. Returns (one `result(ids, state)` block per partition, persisted;
+   * supersteps run, counting those before a resume).
    */
-  private[engine] def iterate[S: ClassTag](
+  private[engine] def iterate[S: ClassTag, B: ClassTag](
       g: PrGraph, init: Step[S], maxIterations: Int, counted: Boolean,
       cp: Option[CsrCheckpoint] = None,
       values: S => Array[Double] = null, lift: Array[Double] => S = null)(
-      step: (RDD[S], Int, LongAccumulator) => Step[S]): (RDD[S], Int) =
+      result: (Array[Long], S) => B)(
+      step: (RDD[S], Int, LongAccumulator) => Step[S]): (RDD[B], Int) =
     Using.resource(new Checkpoints(g, cp, maxIterations)) { ck =>
       val sc = g.csr.sparkContext
-      // unpersist, not destroy: a lineage recomputation replays closures
-      // that read the broadcasts (see build())
-      def free(s: Step[_]): Unit = {
-        if (s.gathered != null) s.gathered.unpersist(blocking = false)
-        s.broadcasts.foreach(b => if (b != null) b.unpersist(blocking = false))
-      }
       def saved(st: RDD[S]) = st.mapPartitions(_.map(values), preservesPartitioning = true)
       var it = 0
       var converged = false
@@ -1206,29 +1226,47 @@ object GatherScatter {
           r.mapPartitions(_.map(lift), preservesPartitioning = true)
         case None => init.next
       }
-      var owned = state.getStorageLevel == StorageLevel.NONE
-      if (owned) {
-        state.persist(StorageLevel.MEMORY_AND_DISK)
-        state.count()
+      // what no barrier has freed yet: the steps' handles and the states
+      // this run persisted (an init the caller persisted is not one)
+      var steps: List[Step[_]] = List(init)
+      var states: List[RDD[S]] =
+        if (state.getStorageLevel != StorageLevel.NONE) Nil
+        else List(state.persist(StorageLevel.MEMORY_AND_DISK))
+      // unpersist, not destroy: a lineage recomputation replays closures
+      // that read the broadcasts (see build())
+      def free(keep: RDD[S]): Unit = {
+        steps.foreach { s =>
+          if (s.gathered != null) s.gathered.unpersist(blocking = false)
+          s.broadcasts.foreach(b => if (b != null) b.unpersist(blocking = false))
+        }
+        steps = Nil
+        states.foreach(st => if (st ne keep) st.unpersist(blocking = false))
+        states = states.filter(_ eq keep)
       }
-      free(init)
+      var t0 = System.nanoTime()
       while (!converged && it < maxIterations) {
-        val t0 = System.nanoTime()
         val changed = if (counted) sc.longAccumulator(s"changed-$it") else null
         val s = step(state, it, changed)
-        val next = s.next.persist(StorageLevel.MEMORY_AND_DISK)
-        if ((it + 1) % 16 == 0) next.localCheckpoint()
-        ck.materialize(it + 1, next, saved(next))
-        free(s)
-        if (owned) state.unpersist(blocking = false)
-        owned = true
-        state = next
+        state = s.next.persist(StorageLevel.MEMORY_AND_DISK)
         it += 1
-        val n = if (counted) changed.sum else -1L
-        converged = n == 0L
-        ck.commit(it, converged, n, (System.nanoTime() - t0) / 1000000, saved(state))
+        if (it % 16 == 0) state.localCheckpoint()
+        steps ::= s
+        states ::= state
+        if (counted || cp.isDefined || (it % 4 == 0 && it < maxIterations)) {
+          ck.materialize(it, state, saved(state))
+          free(keep = state)
+          val n = if (counted) changed.sum else -1L
+          converged = n == 0L
+          ck.commit(it, converged, n, (System.nanoTime() - t0) / 1000000, saved(state))
+          t0 = System.nanoTime()
+        }
       }
-      (state, it)
+      val out = state.zipPartitions(g.verts, preservesPartitioning = true) { (sIt, vIt) =>
+        Iterator.single(result(vIt.next().ids, sIt.next()))
+      }.persist(StorageLevel.MEMORY_AND_DISK)
+      out.count()
+      free(keep = null)
+      (out, it)
     }
 
   /** PageRank's gather: ⊗ = rank / out-degree, ⊕ = +. `hotPr` is the hub
@@ -1242,28 +1280,10 @@ object GatherScatter {
       c
     }, blk => hotValues(blk, hotPr.value, perDegree = true))
 
-  /**
-   * One LAZY superstep for the fixed-iteration path: gather → split exchange
-   * → dense apply, with in-degree-0 slots pinned to their initial 0.3 (they
-   * never receive, so the previous vector need not be read). The input rank
-   * RDD is consumed exactly ONCE, which lets the driver chain K supersteps
-   * into a single pipelined job — no per-superstep count, no per-superstep
-   * job-scheduling overhead.
-   */
-  private def superstepLazy(g: PrGraph, ranks: RDD[Array[Double]],
-                            alpha: Double): Step[Array[Double]] =
-    exchange(g, rankGather(g, ranks, null), null) { (vm, inIdx, blocks, _: Null) =>
-      val acc = fold(Sum, vm.nRecv, inIdx, blocks)
-      val nV = vm.ids.length
-      val newPr = new Array[Double](nV)
-      var i = 0
-      while (i < vm.nRecv) { newPr(i) = alpha + (1.0 - alpha) * acc(i); i += 1 }
-      while (i < nV) { newPr(i) = 0.3; i += 1 } // in-degree-0: keep init
-      newPr
-    }
-
   /** One superstep: gather → split exchange → dense apply. When `tol` >= 0,
-    * counts into `changedAcc` the vertices that moved more than tol. `hotPr`
+    * counts into `changedAcc` the vertices that moved more than tol; the
+    * fixed-budget `pageRank` passes a negative tol and no count. In-degree-0
+    * slots keep their previous value, which is their initial 0.3. `hotPr`
     * is the hub mirror (null on hubless graphs, never dereferenced then). */
   private def superstep(g: PrGraph, ranks: RDD[Array[Double]], alpha: Double,
                         tol: Double, changedAcc: LongAccumulator,
@@ -1285,19 +1305,6 @@ object GatherScatter {
       newPr
     }
 
-  /** The result blocks of a run's final state, `pr` projecting each
-    * partition's state onto its values — the run's last job. Frees `state`
-    * when it is persisted. */
-  private[engine] def materialize[S](g: PrGraph, state: RDD[S])
-                                    (pr: S => Array[Double]): RDD[RankBlock] = {
-    val out = state.zipPartitions(g.verts, preservesPartitioning = true) { (sIt, vIt) =>
-      Iterator.single(RankBlock(vIt.next().ids, pr(sIt.next())))
-    }.persist(StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    if (state.getStorageLevel != StorageLevel.NONE) state.unpersist(blocking = false)
-    out
-  }
-
   /**
    * GraphMat-semantics PageRank, fixed iteration count: pr' = α + (1−α)·Σ
    * pr/outdeg applied to message receivers only; in-degree-0 vertices never
@@ -1305,91 +1312,25 @@ object GatherScatter {
    * apply-on-receive per `GraphMatRuntime.h:195-225`).
    */
   def pageRank(g: PrGraph, alpha: Double, iterations: Int): RDD[RankBlock] =
-    if (g.hotIds.isEmpty) {
-      // hub-less graph: chain all supersteps LAZILY — one pipelined job per
-      // `segment`-superstep segment instead of one job per superstep
-      // (valid because the lazy superstep consumes its input exactly once;
-      // see superstepLazy). A segment barrier is a BARE count() — its only
-      // job is to bound how many per-superstep gathered blocks are live at
-      // once. The next segment's job resumes from the NEWEST cached gathered
-      // block: superstep k+1 re-runs apply_k over gathered_k (from the
-      // cache, plus shuffle_k's files on a layout with a cut), and nothing
-      // older is re-read — on a cut-free layout the whole segment is one
-      // narrow stage that starts at gathered_k, otherwise the completed
-      // shuffle-map stages before it are skipped. So all but the newest
-      // gathered block can be freed. An executor loss degrades to lineage
-      // recompute — unpersist does not truncate lineage.
-      var ranks = initRanks(g)
-      var it = 0
-      var pending = List.empty[RDD[_]]
-      var lastCp: Option[RDD[Array[Double]]] = None
-      val segment = 4
-      // the bare count() barrier does NOT truncate lineage; without a real
-      // checkpoint the DAG deepens linearly with `iterations` (segment jobs
-      // re-walk the whole chain, executor loss cascades recomputation toward
-      // iteration 0). Truncate every `lineageEvery` supersteps.
-      val lineageEvery = 32
-      while (it < iterations) {
-        val s = superstepLazy(g, ranks, alpha)
-        ranks = s.next
-        pending ::= s.gathered
-        it += 1
-        if (it % segment == 0 && it < iterations) {
-          if (it % lineageEvery == 0) {
-            ranks.persist(StorageLevel.MEMORY_AND_DISK)
-            ranks.localCheckpoint()
-            ranks.count()
-            // lineage now starts at `ranks`: every older gathered block and
-            // the previous checkpoint are unreachable — free them all
-            pending.foreach(_.unpersist(blocking = false))
-            pending = Nil
-            lastCp.foreach(_.unpersist(blocking = false))
-            lastCp = Some(ranks)
-          } else {
-            ranks.count()
-            pending match {
-              case keep :: olds =>
-                olds.foreach(_.unpersist(blocking = false))
-                pending = List(keep)
-              case Nil =>
-            }
-          }
-        }
-      }
-      val out = materialize(g, ranks)(identity)
-      pending.foreach(_.unpersist(blocking = false))
-      lastCp.foreach(_.unpersist(blocking = false))
-      out
-    } else {
-      // hub graphs need the per-superstep mirror broadcast (a driver action),
-      // so each superstep is materialized
-      val (ranks, _) = iterate(g, Step(initRanks(g)), iterations, counted = false) {
-        (ranks, _, _) => superstep(g, ranks, alpha, tol = -1.0, null, mirror(g, ranks)(scalarAt))
-      }
-      materialize(g, ranks)(identity)
-    }
+    iterate(g, Step(initState(g, 1, (_, _) => 0.3)), iterations, counted = false)(RankBlock) {
+      (ranks, _, _) => superstep(g, ranks, alpha, tol = -1.0, null, mirror(g, ranks)(scalarAt))
+    }._1
 
   /**
    * Personalized PageRank on the CSR path — the same gather/split-exchange
    * as `pageRank` with a per-vertex teleport base instead of the constant α:
    * pr' = α·s(v) + (1−α)·Σ pr/outdeg, init pr = s, s = 1 on the source set.
    * Never-receivers hold α·s(v) (their Σ is empty), so the apply reads the
-   * cached base vector, not the previous ranks — the loop therefore keeps
-   * exactly two rank generations plus one K-doubles base block per
-   * partition live. Matches algos.PageRank.personalized within ⊕ order
-   * (CoreMetricsSpec parity; g_ppr_csr shares g_ppr's unrolled oracle).
+   * cached base vector, not the previous ranks. Matches
+   * algos.PageRank.personalized within ⊕ order (CoreMetricsSpec parity;
+   * g_ppr_csr shares g_ppr's unrolled oracle).
    */
   def personalizedPageRank(g: PrGraph, isSource: Long => Boolean,
                            alpha: Double, iterations: Int): RDD[RankBlock] = {
-    val base = g.verts.mapPartitions({ it =>
-      val vm = it.next()
-      val b = new Array[Double](vm.ids.length)
-      var i = 0
-      while (i < b.length) { if (isSource(vm.ids(i))) b(i) = 1.0; i += 1 }
-      Iterator.single(b)
-    }, preservesPartitioning = true).persist(StorageLevel.MEMORY_AND_DISK)
+    val base = initState(g, 1, (id, _) => if (isSource(id)) 1.0 else 0.0)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     // init pr0 = s; persisted here, so the loop leaves `base` to this caller
-    val (ranks, _) = iterate(g, Step(base), iterations, counted = false) { (ranks, _, _) =>
+    val ranks = iterate(g, Step(base), iterations, counted = false)(RankBlock) { (ranks, _, _) =>
       val hotPr = mirror(g, ranks)(scalarAt)
       exchange(g, rankGather(g, ranks, hotPr), base, hotPr) { (vm, inIdx, blocks, b) =>
         val acc = fold(Sum, vm.nRecv, inIdx, blocks)
@@ -1402,10 +1343,9 @@ object GatherScatter {
         while (i < nV) { newPr(i) = alpha * b(i); i += 1 }
         newPr
       }
-    }
-    val out = materialize(g, ranks)(identity)
+    }._1
     base.unpersist(blocking = false)
-    out
+    ranks
   }
 
   /**
@@ -1422,13 +1362,11 @@ object GatherScatter {
    */
   def pageRankConverged(g: PrGraph, alpha: Double = 0.3, tol: Double = 1e-5,
                         maxIterations: Int = 200,
-                        cp: Option[CsrCheckpoint] = None): (RDD[RankBlock], Int) = {
-    val (ranks, it) = iterate[Array[Double]](g, Step(initRanks(g)), maxIterations,
-        counted = true, cp, identity, identity) {
+                        cp: Option[CsrCheckpoint] = None): (RDD[RankBlock], Int) =
+    iterate[Array[Double], RankBlock](g, Step(initState(g, 1, (_, _) => 0.3)), maxIterations,
+        counted = true, cp, identity, identity)(RankBlock) {
       (ranks, _, changed) => superstep(g, ranks, alpha, tol, changed, mirror(g, ranks)(scalarAt))
     }
-    (materialize(g, ranks)(identity), it)
-  }
 
   // ---- the (min, +) semiring on the same static exchange -----------------
   //
@@ -1487,9 +1425,9 @@ object GatherScatter {
     // unweighted: fold the uniform delta into the per-src ⊗ once; weighted:
     // the ⊗ is per EDGE (v(src) + w(e)), and the gather adds w(e)
     val base = if (useWeights) 0.0 else delta
-    val (vals, it) = iterate[(Array[Double], Boolean)](g,
-        Step(init.mapPartitions(_.map(active), preservesPartitioning = true)),
-        maxIterations, counted = true, cp, _._1, active) { (vals, _, changed) =>
+    iterate[(Array[Double], Boolean), RankBlock](g,
+        Step(init.mapPartitions(_.map(active), preservesPartitioning = true)), maxIterations,
+        counted = true, cp, _._1, active)((ids, v) => RankBlock(ids, v._1)) { (vals, _, changed) =>
       val cur = if (g.hotIds.isEmpty) null else hubMirror(g, vals)((v, ls) => scalarAt(v._1, ls))
       val hotActive = cur != null && (prevHot == null || !java.util.Arrays.equals(prevHot, cur))
       prevHot = cur
@@ -1527,24 +1465,15 @@ object GatherScatter {
         (out, n > 0L)
       }
     }
-    (materialize(g, vals)(_._1), it)
   }
 
   /** Every vertex labelled with its own id, as an exact Double — so ids
     * must lie within ±2^53. */
   private def idLabels(g: PrGraph): RDD[Array[Double]] =
-    g.verts.mapPartitions({ it =>
-      val vm = it.next()
-      val a = new Array[Double](vm.ids.length)
-      var i = 0
-      while (i < a.length) {
-        require(vm.ids(i) < (1L << 53) && vm.ids(i) > -(1L << 53),
-          s"vertex id ${vm.ids(i)} not exact in a Double label")
-        a(i) = vm.ids(i).toDouble
-        i += 1
-      }
-      Iterator.single(a)
-    }, preservesPartitioning = true)
+    initState(g, 1, (id, _) => {
+      require(id < (1L << 53) && id > -(1L << 53), s"vertex id $id not exact in a Double label")
+      id.toDouble
+    })
 
   /** HashMin connected components on the (min, +) kernel: every vertex
     * starts as its own label and adopts the minimum label reachable along
@@ -1770,22 +1699,14 @@ object GatherScatter {
     * (label blocks, supersteps run); resumable via `cp` (labels are exact
     * state and every superstep is dense, so a resumed run is identical). */
   def labelPropagation(g: PrGraph, iterations: Int,
-                       cp: Option[CsrCheckpoint] = None): (RDD[RankBlock], Int) = {
-    val (labels, it) = iterate[Array[Double]](g, Step(idLabels(g)), iterations,
-        counted = true, cp, identity, identity) {
+                       cp: Option[CsrCheckpoint] = None): (RDD[RankBlock], Int) =
+    iterate[Array[Double], RankBlock](g, Step(idLabels(g)), iterations,
+        counted = true, cp, identity, identity)(RankBlock) {
       (labels, _, changed) => labelStep(g, labels, changed, mirror(g, labels)(scalarAt))
     }
-    (materialize(g, labels)(identity), it)
-  }
 
   private def singleSourceInit(g: PrGraph, source: Long): RDD[Array[Double]] =
-    g.verts.mapPartitions({ it =>
-      val vm = it.next()
-      val a = Array.fill(vm.ids.length)(Double.PositiveInfinity)
-      var i = 0
-      while (i < a.length) { if (vm.ids(i) == source) a(i) = 0.0; i += 1 }
-      Iterator.single(a)
-    }, preservesPartitioning = true)
+    initState(g, 1, (id, _) => if (id == source) 0.0 else Double.PositiveInfinity)
 
   /** DataFrame view of the final ranks (conformance tests / sinks). */
   def toDF(spark: SparkSession, ranks: RDD[RankBlock]): DataFrame = {

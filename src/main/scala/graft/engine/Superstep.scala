@@ -67,29 +67,9 @@ final case class VertexProgramSpec(
     needsRecvState: Boolean = false,
     maxIterations: Int = -1, // -1 = UNTIL_CONVERGENCE (`GraphMatRuntime.h:51`)
     /** false = fixed-iteration run: skip the per-superstep changed-count job
-      * (one action instead of two); convergence is then budget-only. */
-    trackChanges: Boolean = true,
-    /** Fixed-iteration runs only (`trackChanges=false`, no checkpointing):
-      * number of supersteps to CHAIN lazily before materializing, executing a
-      * segment as ONE pipelined Spark job. MEASURED on the 7.8M-edge bench
-      * graph (SqlProbe): k=1 6.18s, k=2 6.15s, k=4 11.6s for 5 supersteps —
-      * ReuseExchange does dedup each intermediate state's ⊕ exchange, but
-      * everything ABOVE the exchange (sort-merge of the apply join, the apply
-      * projection) re-executes once per consuming branch and the branch count
-      * doubles per chained superstep, so chaining k>2 LOSES. Default 1; the
-      * knob stays for narrow-state programs where the recompute is cheaper
-      * than the job-launch + checkpoint serialization it saves.
-      * Tracked/checkpointed runs pin this to 1 (the changed count is an
-      * action per superstep by definition).
-      * Default 0 = AUTO (r06): chain 2 when the graph's partition count sits
-      * BELOW the session's shuffle width (a small graph, where the
-      * per-superstep floor is Catalyst planning + job latency and halving
-      * the action count halves the floor), 1 once the size-adaptive
-      * partitioning hits the cap (a large graph, where the recompute above
-      * the reused exchange is real data — measured at 7.8M edges k=2 swings
-      * between ~equal and 40% SLOWER with the host window, so big graphs
-      * keep one job per superstep). Explicit values are honored as given. */
-    chainDepth: Int = 0)
+      * (one action instead of two); convergence is then budget-only, and
+      * uncheckpointed small graphs chain two supersteps per job (see `run`). */
+    trackChanges: Boolean = true)
 
 object Reduce {
   /** Standard ⊕ as aggregate expressions over the gathered frame, grouped by receiver. */
@@ -220,18 +200,24 @@ object Superstep {
     var iter = startIteration
     var converged = false
 
-    // Effective chain length: only fixed-iteration, non-checkpointed runs can
-    // defer materialization; 3-op programs put state in the plan 3x per
-    // superstep (frontier + recv-state + apply join), so cap their growth.
-    // chainDepth 0 = AUTO (see the field doc): chain small graphs only.
-    val requested =
-      if (spec.chainDepth > 0) spec.chainDepth
-      else if (n < scala.util.Try(shufBefore.toInt).getOrElse(200)) 2
-      else 1
+    // Supersteps CHAINED lazily per materialization, each segment ONE
+    // pipelined Spark job. Tracked and checkpointed runs materialize every
+    // superstep (the changed count and the snapshot are per-superstep
+    // actions). Fixed-iteration runs chain 2 when the graph's partition
+    // count sits BELOW the session's shuffle width: a small graph, whose
+    // per-superstep floor is Catalyst planning + job latency, so halving the
+    // action count halves the floor. Measured on the 7.8M-edge bench graph,
+    // 5 supersteps: k=1 6.18s, k=2 6.15s, k=4 11.6s — ReuseExchange dedups
+    // each intermediate state's ⊕ exchange, but everything ABOVE it (the
+    // apply join's sort-merge, the apply projection) re-executes once per
+    // consuming branch and the branch count doubles per chained superstep,
+    // so k>2 loses; and at 7.8M edges k=2 swings between ~equal and 40%
+    // SLOWER with the host window. So a graph at the partition cap (a large
+    // one, where that recompute is real data) keeps one job per superstep.
     val chain =
       if (spec.trackChanges || cp.isDefined) 1
-      else if (spec.needsRecvState) math.min(requested, 2)
-      else math.max(1, requested)
+      else if (n < scala.util.Try(shufBefore.toInt).getOrElse(200)) 2
+      else 1
     var sinceMat = 0
 
     while (!converged && (spec.maxIterations < 0 || iter - startIteration < spec.maxIterations)) {

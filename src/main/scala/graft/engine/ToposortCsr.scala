@@ -2,8 +2,7 @@ package graft.engine
 
 import org.apache.spark.rdd.RDD
 
-import GatherScatter.{PrGraph, RankBlock, Sum, exchange, fold, gather, hotValues, iterate,
-  materialize, mirror}
+import GatherScatter.{PrGraph, RankBlock, Sum, exchange, fold, gather, hotValues, iterate, mirror}
 
 /**
  * Topological sort (Kahn peel) on the CSR gather-scatter structures —
@@ -59,7 +58,7 @@ object ToposortCsr {
         }
         TsState(inDeg, order, act)
     }
-    val (state, it) = iterate(g, init, maxIterations, counted = true) {
+    iterate(g, init, maxIterations, counted = true)((ids, s) => RankBlock(ids, s.order)) {
       (state, it, changedAcc) =>
         // the just-peeled vertices (active ∧ in-degree 0) announce 1.0
         val hotBc = mirror(g, state)(
@@ -103,6 +102,5 @@ object ToposortCsr {
             TsState(inDeg, order, act)
         }
     }
-    (materialize(g, state)(_.order), it)
   }
 }

@@ -4,9 +4,9 @@ import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
-import org.apache.spark.storage.StorageLevel
 
-import GatherScatter.{CsrBlock, IdPartitioner, PrGraph, Step, VertexMeta, exchange, hubMirror, iterate}
+import GatherScatter.{CsrBlock, IdPartitioner, PrGraph, Step, VertexMeta, exchange, hubMirror,
+  initState, iterate}
 
 /**
  * K-vector-payload supersteps on the CSR gather-scatter structures — the
@@ -75,20 +75,6 @@ object VectorSuperstep {
                   off: Int, id: Long, globals: Array[Double]): Unit =
       System.arraycopy(acc, off, out, off, k)
   }
-
-  /** Dense K-packed state aligned to the partition's VertexMeta layout. */
-  def initState(g: PrGraph, k: Int, f: (Long, Int) => Double): RDD[Array[Double]] =
-    g.verts.mapPartitions({ it =>
-      val vm = it.next()
-      val a = new Array[Double](vm.ids.length * k)
-      var i = 0
-      while (i < vm.ids.length) {
-        var d = 0
-        while (d < k) { a(i * k + d) = f(vm.ids(i), d); d += 1 }
-        i += 1
-      }
-      Iterator.single(a)
-    }, preservesPartitioning = true)
 
   /** Phase 1: ship each source block the receiver vectors its edges need —
     * packed in the SAME order as its unique-dst table, so the gather indexes
@@ -234,15 +220,6 @@ object VectorSuperstep {
     }
   }
 
-  private def toBlocks(g: PrGraph, state: RDD[Array[Double]], k: Int): RDD[VecBlock] = {
-    val out = state.zipPartitions(g.verts, preservesPartitioning = true) { (sIt, vIt) =>
-      Iterator.single(VecBlock(vIt.next().ids, k, sIt.next()))
-    }.persist(StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    state.unpersist(blocking = false)
-    out
-  }
-
   /** One result block per partition: `vecs` is K-packed, aligned to ids. */
   final case class VecBlock(ids: Array[Long], k: Int, vecs: Array[Double])
 
@@ -289,10 +266,9 @@ object VectorSuperstep {
     require(g.weighted,
       "sgd needs per-edge ratings: build the graph with weighted = true")
     val kern = new SgdKernel(k, lambda, stepSize)
-    val (done, _) = iterate(g, Step(initState(g, k, init)), iterations, counted = false) {
+    iterate(g, Step(initState(g, k, init)), iterations, counted = false)(VecBlock(_, k, _)) {
       (state, _, _) => step(g, state, kern, Array.emptyDoubleArray)
-    }
-    toBlocks(g, done, k)
+    }._1
   }
 
   // ---- LDA ----------------------------------------------------------------
@@ -401,12 +377,11 @@ object VectorSuperstep {
     val kern = new LdaKernel(k, alpha, eta, termMinId)
     // superstep 0 is the init pass; the global topic vector is refreshed
     // before every later one
-    val (done, _) = iterate(g, Step(initState(g, k, (_, _) => 0.0)), 1 + iterations,
-        counted = false) { (state, it, _) =>
+    iterate(g, Step(initState(g, k, (_, _) => 0.0)), 1 + iterations,
+        counted = false)(VecBlock(_, k, _)) { (state, it, _) =>
       if (it == 0) step(g, state, initKern, Array.emptyDoubleArray)
       else step(g, state, kern, globalN(state).map(_ + v * (eta - 1.0)))
-    }
-    toBlocks(g, done, k)
+    }._1
   }
 
   /** Deterministic bipartite rating fixture for benchmarks: `nUsers` users,

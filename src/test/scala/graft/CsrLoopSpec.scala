@@ -6,13 +6,14 @@ import org.apache.spark.rdd.RDD
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{Edge, LinkGraph}
-import graft.engine.{DeltaPrCsr, GatherScatter, ToposortCsr}
+import graft.engine.{DeltaPrCsr, GatherScatter, ToposortCsr, VectorSuperstep}
 import graft.engine.GatherScatter.{PrGraph, RankBlock}
 import SparkTestBase.{jobsAndStagesOf, jobsOf}
 
 /** The cost side of the CSR superstep loop: a long run's lineage stays
-  * bounded, and an uncheckpointed run on a hubless graph runs one Spark job
-  * per superstep plus the initial state's and the result's. */
+  * bounded; an uncheckpointed convergence loop on a hubless graph runs one
+  * Spark job per superstep plus the result's, and a fixed-budget loop one
+  * job per 4 supersteps; and a run leaves persisted only its result. */
 class CsrLoopSpec extends AnyFunSuite {
   lazy val s = SparkTestBase.spark
 
@@ -35,12 +36,25 @@ class CsrLoopSpec extends AnyFunSuite {
 
   private def chain(n: Int): Seq[Edge] = (0 until n - 1).map(i => Edge(i.toLong, i + 1L, 1.0))
 
-  private def withGraph[A](es: Seq[Edge], undirected: Boolean = false, keyShift: Int = 0)
+  private def withGraph[A](es: Seq[Edge], undirected: Boolean = false, keyShift: Int = 0,
+                           hotDegree: Long = 0L, weighted: Boolean = false)
                           (f: PrGraph => A): A = {
     val lg = LinkGraph.fromSeq(s, es, 4)
-    val g = GatherScatter.build(if (undirected) lg.undirected else lg, 4, keyShift = keyShift)
+    val g = GatherScatter.build(if (undirected) lg.undirected else lg, 4,
+      hotDegree = hotDegree, keyShift = keyShift, weighted = weighted)
     try f(g) finally { g.unpersist(); lg.unpersistAll() }
   }
+
+  /** 10 chains of 13 vertices: several supersteps to converge, and no
+    * vertex reaches the hub threshold. */
+  private val chains = (0 until 10).flatMap(c =>
+    (0 until 12).map(i => Edge(10000L + c * 100 + i, 10000L + c * 100 + i + 1, 1.0)))
+
+  /** [[chains]] plus vertex 1 fanning out to 2000 spokes: built with
+    * `hotDegree = 100`, vertex 1 is the one hub. */
+  private val hubAndChains = (2L to 2001L).map(d => Edge(1L, d, 1.0)) ++ chains
+
+  private val isChainHead: Long => Boolean = id => id >= 10000L && id % 100 == 0
 
   test("toposort on 48- and 96-vertex chains keeps a lineage bounded by 16 supersteps") {
     for (n <- Seq(48, 96)) withGraph(chain(n)) { g =>
@@ -55,7 +69,7 @@ class CsrLoopSpec extends AnyFunSuite {
     }
   }
 
-  test("pageRankConverged past 32 supersteps keeps a lineage bounded by 16 supersteps") {
+  test("PageRank runs past 32 supersteps keep a lineage bounded by 16 supersteps") {
     // 3-cycles: every rank moves by 0.21·0.7^k at superstep k, so tol 1e-7
     // takes about 40 supersteps
     val cycles = (0 until 4).flatMap { c =>
@@ -63,35 +77,86 @@ class CsrLoopSpec extends AnyFunSuite {
       Seq(Edge(b, b + 1, 1.0), Edge(b + 1, b + 2, 1.0), Edge(b + 2, b, 1.0))
     }
     withGraph(cycles) { g =>
+      def check(name: String, r: RDD[RankBlock], iters: Int): Unit =
+        try {
+          assert(iters > 32, s"$name: the fixture must need more than 32 supersteps, ran $iters")
+          assert(lineage(r) <= bound(g),
+            s"$name: ${lineage(r)} RDDs reachable after $iters supersteps")
+        } finally r.unpersist(false)
       val (r, iters) = GatherScatter.pageRankConverged(g, 0.3, 1e-7)
-      try {
-        assert(iters > 32, s"the fixture must need more than 32 supersteps, ran $iters")
-        assert(lineage(r) <= bound(g), s"${lineage(r)} RDDs reachable after $iters supersteps")
-      } finally r.unpersist(false)
+      check("pageRankConverged", r, iters)
+      check("pageRank", GatherScatter.pageRank(g, 0.3, 40), 40)
+      check("personalizedPageRank",
+        GatherScatter.personalizedPageRank(g, _ % 10 == 0, 0.3, 40), 40)
     }
   }
 
-  test("uncheckpointed hubless loops run at most supersteps + 2 jobs") {
-    // chains: several supersteps; no vertex reaches the hub threshold
-    val es = (0 until 10).flatMap(c =>
-      (0 until 12).map(i => Edge(10000L + c * 100 + i, 10000L + c * 100 + i + 1, 1.0)))
+  test("uncheckpointed hubless loops run at most supersteps + 1 jobs") {
     def check(name: String, run: => (RDD[RankBlock], Int)): Unit = {
       val ((r, iters), jobs) = jobsOf(run)
       r.unpersist(false)
       assert(iters > 2, s"$name: the fixture must take several supersteps, ran $iters")
-      // the initial state's count, one per superstep, the result's count
-      assert(jobs <= iters + 2, s"$name: $jobs jobs over $iters supersteps")
+      // one per superstep, which also computes the initial state, and the
+      // result's
+      assert(jobs <= iters + 1, s"$name: $jobs jobs over $iters supersteps")
     }
-    withGraph(es) { g =>
+    withGraph(chains) { g =>
       assert(g.hotIds.isEmpty)
       check("pageRankConverged", GatherScatter.pageRankConverged(g, 0.3, 1e-5))
       check("DeltaPrCsr.run", DeltaPrCsr.run(g))
       check("ToposortCsr.run", ToposortCsr.run(g))
     }
-    withGraph(es, undirected = true) { g =>
+    withGraph(chains, undirected = true) { g =>
       assert(g.hotIds.isEmpty)
       check("connectedComponents", GatherScatter.connectedComponents(g))
       check("labelPropagation", GatherScatter.labelPropagation(g, 20))
+    }
+  }
+
+  test("fixed-budget loops chain four supersteps per job") {
+    withGraph(chains) { g =>
+      assert(g.hotIds.isEmpty)
+      // barriers at supersteps 4 and 8; the result's job computes 9 and 10
+      val (pr, prJobs) = jobsOf(GatherScatter.pageRank(g, 0.3, 10))
+      pr.unpersist(false)
+      assert(prJobs === 3, "hubless pageRank(10)")
+      val (ppr, pprJobs) = jobsOf(GatherScatter.personalizedPageRank(g, isChainHead, 0.3, 10))
+      ppr.unpersist(false)
+      assert(pprJobs <= 3, "hubless personalizedPageRank(10)")
+    }
+    withGraph(hubAndChains, hotDegree = 100) { g =>
+      assert(g.hotIds.toSeq === Seq(1L))
+      // plus one hub-mirror collect per superstep
+      val (pr, jobs) = jobsOf(GatherScatter.pageRank(g, 0.3, 10))
+      pr.unpersist(false)
+      assert(jobs <= 10 + 4, s"hub pageRank(10): $jobs jobs")
+    }
+  }
+
+  test("every CSR run leaves persisted only its result") {
+    def check(name: String, run: => RDD[_]): Unit = {
+      val before = s.sparkContext.getPersistentRDDs.keySet.toSet
+      val r = run
+      val after = s.sparkContext.getPersistentRDDs.keySet.toSet
+      r.unpersist(false)
+      assert(after === before + r.id, s"$name: persisted RDDs other than the result")
+    }
+    for ((es, hotDegree) <- Seq(chains -> 0L, hubAndChains -> 100L)) {
+      val kind = if (hotDegree > 0) "hub" else "hubless"
+      withGraph(es, hotDegree = hotDegree) { g =>
+        check(s"$kind pageRank", GatherScatter.pageRank(g, 0.3, 10))
+        check(s"$kind personalizedPageRank",
+          GatherScatter.personalizedPageRank(g, isChainHead, 0.3, 10))
+        check(s"$kind pageRankConverged", GatherScatter.pageRankConverged(g, 0.3, 1e-5)._1)
+        check(s"$kind DeltaPrCsr.run", DeltaPrCsr.run(g)._1)
+        check(s"$kind ToposortCsr.run", ToposortCsr.run(g)._1)
+      }
+      withGraph(es, undirected = true, hotDegree = hotDegree, weighted = true) { g =>
+        check(s"$kind connectedComponents", GatherScatter.connectedComponents(g)._1)
+        check(s"$kind labelPropagation", GatherScatter.labelPropagation(g, 5)._1)
+        check(s"$kind VectorSuperstep.sgd",
+          VectorSuperstep.sgd(g, k = 2, iterations = 10, init = (id, d) => 0.1 * (d + 1)))
+      }
     }
   }
 
