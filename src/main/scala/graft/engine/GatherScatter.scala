@@ -1,7 +1,5 @@
 package graft.engine
 
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
 import scala.reflect.ClassTag
 import scala.util.Using
 
@@ -54,33 +52,12 @@ import graft.core.LinkGraph
  * kernel (here and in DeltaPrCsr, ToposortCsr, VectorSuperstep) keeps only
  * its arithmetic and runs through the same plumbing: `exchange` (the split
  * exchange) and `iterate` (the whole run: superstep loop and result job) —
- * see "the superstep plumbing" below.
+ * see "the superstep plumbing" below. Checkpoints follow the Column
+ * engine's protocol ([[Checkpoints]]); only the state's blocks are the CSR
+ * engine's own.
  * Throughput path only; semantics verified against the Column-algebra
  * engine (allclose 1e-9) in GatherScatterSpec.
  */
-
-/** Durable mid-algorithm checkpoint/resume for the CSR engine (north rule:
-  * "each superstep checkpoints per-partition frontier state plus lineage and
-  * iteration metrics ... so runs resume mid-algorithm" — the throughput-path
-  * twin of the Column engine's [[CheckpointConfig]]). Every `every`
-  * supersteps (and at the stop) the full per-partition vertex state is
-  * written under `dir/runId/iter=N/state` together with per-partition
-  * lineage (`partitions.json`) and per-superstep metrics (`metrics.jsonl`);
-  * `latest.json` is the commit pointer, written last, and the only commit.
-  * A due checkpoint costs no Spark job of its own: the state write is the
-  * superstep's job (`writeBlocks` materializes the new state), and the text
-  * commit runs on a background thread while the next superstep computes;
-  * the run returns (or throws) only after its last commit is durable. Pass
-  * to `pageRankConverged` / `minFixpoint` / `connectedComponents` / `bfs` /
-  * `sssp` / `labelPropagation`: if a committed checkpoint already exists
-  * under `dir/runId`, the run RESUMES from it instead of restarting.
-  * All durable IO goes through `store` ([[SnapshotStore]]); in production
-  * these are Iceberg snapshot commits, and the default
-  * [[HadoopSnapshotStore]] (object-files-with-a-pointer over the Hadoop
-  * FileSystem of `dir` — local, hdfs://, s3a://) is the sandbox stand-in
-  * (no Iceberg jars). */
-final case class CsrCheckpoint(dir: String, runId: String, every: Int = 8,
-                               store: SnapshotStore = HadoopSnapshotStore)
 
 object GatherScatter {
 
@@ -785,141 +762,41 @@ object GatherScatter {
       weighted = wtd, cut = cut)
   }
 
-  // ---- durable mid-algorithm checkpoint/resume ---------------------------
-  //
-  // See [[CsrCheckpoint]]. State is saved WITH its per-partition id layout
-  // (one (partition, RankBlock) object file per partition), so resume can
-  // VERIFY alignment against the live graph instead of trusting that the
-  // caller rebuilt it identically — build() sorts every per-partition array
-  // precisely so that a rebuild with the same numPartitions/keyShift/
-  // hotDegree reproduces the layout deterministically (see sortWithPerm).
-
-  /** The checkpoint side of one CSR run ([[CsrCheckpoint]]); without a
-    * checkpoint, every method is the plain uncheckpointed step. A due
-    * checkpoint costs no Spark job of its own: its state write IS the
-    * superstep's job ([[materialize]]), and its text commit — metrics, then
-    * the `latest.json` pointer — runs on a background thread while the next
-    * superstep computes. At most one commit is in flight, so the pointer
-    * only moves forward; [[close]] awaits it and rethrows its failure on the
-    * caller's thread, and every exit of a run must close (`Using`). */
-  private final class Checkpoints(g: PrGraph, cp: Option[CsrCheckpoint],
-                                  maxIterations: Int) extends AutoCloseable {
-    private val sc = g.csr.sparkContext
-    private var metrics = Vector.empty[IterationMetrics]
-    private var lineageDone = false
-    private var inFlight: Future[Unit] = Future.unit
-
-    private def root(c: CsrCheckpoint) = s"${c.dir}/${c.runId}"
-    private def due(it: Int) = cp.exists(c => it % c.every == 0 || it >= maxIterations)
-
-    /** (state aligned to this graph's layout, superstep, converged) of the
-      * committed checkpoint; None when there is none. */
-    def resume(): Option[(RDD[Array[Double]], Int, Boolean)] = cp.flatMap { c =>
-      c.store.readText(sc, s"${root(c)}/latest.json").map { txt =>
-        val iter = """"iteration"\s*:\s*(\d+)""".r
-          .findFirstMatchIn(txt).get.group(1).toInt
-        val converged = txt.contains(""""converged":true""")
-        // driver-side pre-check: a partition-count mismatch must fail with a
-        // clear message, not an out-of-range shuffle key deep in a task
-        """"partitions"\s*:\s*(\d+)""".r.findFirstMatchIn(txt).foreach { m =>
-          require(m.group(1).toInt == g.numPartitions,
-            s"checkpoint ${c.runId}/iter=$iter does not align with this " +
-            s"graph: saved with ${m.group(1)} partitions, graph has " +
-            s"${g.numPartitions} (resume needs the same build parameters)")
-        }
-        val idPart = new IdPartitioner(g.numPartitions)
-        val state = c.store.readBlocks[RankBlock](sc, s"${root(c)}/iter=$iter/state")
-          .partitionBy(idPart)
-          .zipPartitions(g.verts, preservesPartitioning = true) { (lIt, vIt) =>
-            val rb = lIt.next()._2; val vm = vIt.next()
-            require(java.util.Arrays.equals(rb.ids, vm.ids),
-              s"checkpoint ${c.runId}/iter=$iter does not align with this " +
-              "graph: resume needs the same edge set built with the same " +
-              "numPartitions/keyShift/hotDegree (layouts are deterministic; " +
-              "see build())")
-            Iterator.single(rb.pr)
-          }
-        metrics = c.store.readText(sc, s"${root(c)}/metrics.jsonl")
-          .map(IterationMetrics.parse(_, iter)).getOrElse(Vector.empty)
-        (state, iter, converged)
+  /** The committed CSR checkpoint `at` ([[Checkpoints]]), read from `path`
+    * and lifted into a state. A state is saved WITH its per-partition id
+    * layout (see `iterate`), so this VERIFIES alignment with the live graph
+    * instead of trusting the rebuild: build() sorts every per-partition
+    * array, so a rebuild with the same numPartitions/keyShift/hotDegree
+    * reproduces the layout (see sortWithPerm). */
+  private def readState[S: ClassTag](g: PrGraph, c: CheckpointConfig, at: Committed,
+                                     path: String, lift: Array[Double] => S): RDD[S] = {
+    def misaligned(why: String) =
+      s"checkpoint ${c.runId}/iter=${at.iteration} does not align with this graph: $why"
+    // driver-side pre-check: a partition-count mismatch must fail with a
+    // clear message, not an out-of-range shuffle key deep in a task
+    at.partitions.foreach(p => require(p == g.numPartitions, misaligned(
+      s"saved with $p partitions, graph has ${g.numPartitions} " +
+      "(resume needs the same build parameters)")))
+    val moved = misaligned("resume needs the same edge set built with the same " +
+      "numPartitions/keyShift/hotDegree (layouts are deterministic; see build())")
+    c.store.readBlocks[RankBlock](g.csr.sparkContext, path)
+      .partitionBy(new IdPartitioner(g.numPartitions))
+      .zipPartitions(g.verts, preservesPartitioning = true) { (lIt, vIt) =>
+        val rb = lIt.next()._2
+        require(java.util.Arrays.equals(rb.ids, vIt.next().ids), moved)
+        Iterator.single(lift(rb.pr))
       }
-    }
-
-    /** Runs superstep `it`'s one job, which computes and caches the
-      * persisted `state`: when the checkpoint of `it` is due, the job writes
-      * `values` (a projection of `state`), else it is a bare count. */
-    def materialize(it: Int, state: RDD[_], values: => RDD[Array[Double]]): Unit =
-      cp match {
-        case Some(c) if due(it) => writeState(c, it, values)
-        case _ => state.count()
-      }
-
-    /** Records superstep `it` and commits its checkpoint when due, or when
-      * the run converged on a superstep that was not due: then the state
-      * (already cached) is written here, after the in-flight commit. */
-    def commit(it: Int, converged: Boolean, changed: Long, millis: Long,
-               values: => RDD[Array[Double]]): Unit = cp.foreach { c =>
-      metrics :+= IterationMetrics(it, changed, millis)
-      if (due(it) || converged) {
-        close() // the previous commit, which ran alongside this superstep
-        if (!due(it)) writeState(c, it, values)
-        val texts = lineage(c).toSeq ++ Seq(
-          s"${root(c)}/metrics.jsonl" -> IterationMetrics.jsonl(metrics),
-          // the pointer commits the checkpoint — written LAST, so a crash
-          // during any earlier write leaves the previous state resumable
-          s"${root(c)}/latest.json" ->
-            s"""{"iteration":$it,"converged":$converged,"partitions":${g.numPartitions}}""")
-        inFlight = Future(texts.foreach { case (p, t) => c.store.writeText(sc, p, t) })(commitPool)
-      }
-    }
-
-    /** Awaits the in-flight commit; rethrows its failure. */
-    def close(): Unit = {
-      val f = inFlight
-      inFlight = Future.unit
-      Await.result(f, Duration.Inf)
-    }
-
-    private def writeState(c: CsrCheckpoint, it: Int, values: RDD[Array[Double]]): Unit =
-      // writeBlocks deletes half-written state from a crash before saving
-      c.store.writeBlocks(
-        values.zipPartitions(g.verts, preservesPartitioning = true) { (rIt, vIt) =>
-          val vm = vIt.next()
-          Iterator.single((TaskContext.getPartitionId(), RankBlock(vm.ids, rIt.next())))
-        }, s"${root(c)}/iter=$it/state")
-
-    /** Per-partition lineage: the static layout a resumed run must reproduce
-      * (vertex/receiver/edge counts per partition) — written once per run
-      * directory, collected here on the caller's thread. */
-    private def lineage(c: CsrCheckpoint): Option[(String, String)] = {
-      val path = s"${root(c)}/partitions.json"
-      val first = !lineageDone
-      lineageDone = true
-      Option.when(first && !c.store.exists(sc, path)) {
-        val rows = g.csr.zipPartitions(g.verts, preservesPartitioning = true) { (cIt, vIt) =>
-          val blk = cIt.next(); val vm = vIt.next()
-          var e = blk.hotEdgeSrcIdx.length
-          var tp = 0
-          while (tp < blk.edgeSrcIdx.length) {
-            if (blk.edgeSrcIdx(tp) != null) e += blk.edgeSrcIdx(tp).length
-            tp += 1
-          }
-          Iterator.single((TaskContext.getPartitionId(), vm.ids.length, vm.nRecv, e))
-        }.collect().sortBy(_._1)
-        path -> rows.map { case (p, v, r, e) =>
-          s"""{"partition":$p,"vertices":$v,"receivers":$r,"edges":$e}"""
-        }.mkString("[", ",", "]")
-      }
-    }
   }
 
-  /** Background commits: no Spark jobs run here, only store text writes. */
-  private lazy val commitPool: ExecutionContext = ExecutionContext.fromExecutorService(
-    java.util.concurrent.Executors.newCachedThreadPool { r =>
-      val t = new Thread(r, "csr-checkpoint-commit")
-      t.setDaemon(true)
-      t
-    })
+  /** Per-partition lineage: the static layout a resumed run must reproduce
+    * (vertex, receiver and edge counts per partition). */
+  private def layout(g: PrGraph): Seq[Seq[(String, Long)]] =
+    g.csr.zipPartitions(g.verts, preservesPartitioning = true) { (cIt, vIt) =>
+      val blk = cIt.next(); val vm = vIt.next()
+      val edges = blk.edgeSrcIdx.iterator.filter(_ != null).map(_.length).sum
+      Iterator.single(Seq("vertices" -> vm.ids.length.toLong, "receivers" -> vm.nRecv.toLong,
+        "edges" -> (edges + blk.hotEdgeSrcIdx.length).toLong))
+    }.collect().toSeq
 
   /** Dense per-vertex state, one K-packed Array[Double] per partition
     * aligned to VertexMeta.ids: slot `d` of vertex `id` holds `f(id, d)`. */
@@ -1184,7 +1061,7 @@ object GatherScatter {
    * superstep, changed)` and lazily persists the new state, so a state read
    * twice (by the gather and by the apply's `side`) is computed once, and a
    * job resumes from the newest cached state. A barrier is a superstep whose
-   * Spark job runs ([[Checkpoints.materialize]]); the rule has two cases:
+   * Spark job runs; the rule has two cases:
    *  - `counted` loops, and every checkpointed run, land every superstep.
    *    A counted loop stops at GraphMat's land-reduce fixpoint
    *    (`GraphMatRuntime.h:208-226`): the kernel's apply adds its changed
@@ -1198,32 +1075,38 @@ object GatherScatter {
    *    `pageRank(10)` runs 3 jobs instead of 11. A step that runs a driver
    *    action itself (a hub-mirror collect) computes the state it reads.
    * Every 16th superstep truncates lineage (a multiple of 4, so always on a
-   * barrier), so a long run's DAG and task closures stay bounded. After each
-   * barrier, the gathered blocks, broadcasts and states made since the
-   * previous one are freed, all but the newest state; the last segment's are
-   * freed after the result job. An `init` the caller persisted stays the
-   * caller's to free.
+   * barrier unless it is the last), so a long run's DAG and task closures
+   * stay bounded. After each barrier, the gathered blocks, broadcasts and
+   * states made since the previous one are freed, all but the newest state
+   * and the newest truncation point, which later states read as their
+   * lineage root; the last segment's are freed after the result job, which
+   * past 16 supersteps makes the result its own lineage root first. An
+   * `init` the caller persisted stays the caller's to free.
    *
-   * With `cp`, a committed checkpoint replaces `init` (`lift` turns its
-   * saved vectors into a state) and due checkpoints save `values` of the
-   * state. Returns (one `result(ids, state)` block per partition, persisted;
-   * supersteps run, counting those before a resume).
+   * With `cp` ([[Checkpoints]]), a committed checkpoint replaces `init`
+   * (`lift` turns its saved vectors into a state), and a due checkpoint
+   * saves `values` of the state in the superstep's own job. Returns (one
+   * `result(ids, state)` block per partition, persisted; supersteps run).
    */
   private[engine] def iterate[S: ClassTag, B: ClassTag](
       g: PrGraph, init: Step[S], maxIterations: Int, counted: Boolean,
-      cp: Option[CsrCheckpoint] = None,
+      cp: Option[CheckpointConfig] = None,
       values: S => Array[Double] = null, lift: Array[Double] => S = null)(
       result: (Array[Long], S) => B)(
-      step: (RDD[S], Int, LongAccumulator) => Step[S]): (RDD[B], Int) =
-    Using.resource(new Checkpoints(g, cp, maxIterations)) { ck =>
-      val sc = g.csr.sparkContext
-      def saved(st: RDD[S]) = st.mapPartitions(_.map(values), preservesPartitioning = true)
+      step: (RDD[S], Int, LongAccumulator) => Step[S]): (RDD[B], Int) = {
+    val sc = g.csr.sparkContext
+    Using.resource(new Checkpoints(cp, sc, maxIterations, g.numPartitions)(() => layout(g))) { ck =>
+      // `writeBlocks` deletes half-written state from a crash before saving
+      def save(path: String, st: RDD[S]): Unit = cp.get.store.writeBlocks(
+        st.zipPartitions(g.verts, preservesPartitioning = true) { (sIt, vIt) =>
+          sIt.map(s => TaskContext.getPartitionId() -> RankBlock(vIt.next().ids, values(s)))
+        }, path)
       var it = 0
       var converged = false
       var state = ck.resume() match {
-        case Some((r, i, conv)) =>
-          it = i; converged = conv
-          r.mapPartitions(_.map(lift), preservesPartitioning = true)
+        case Some(c) =>
+          it = c.iteration; converged = c.converged
+          readState(g, cp.get, c, ck.statePath(c.iteration), lift)
         case None => init.next
       }
       // what no barrier has freed yet: the steps' handles and the states
@@ -1232,6 +1115,8 @@ object GatherScatter {
       var states: List[RDD[S]] =
         if (state.getStorageLevel != StorageLevel.NONE) Nil
         else List(state.persist(StorageLevel.MEMORY_AND_DISK))
+      // the newest truncation point that has landed
+      var root: RDD[S] = null
       // unpersist, not destroy: a lineage recomputation replays closures
       // that read the broadcasts (see build())
       def free(keep: RDD[S]): Unit = {
@@ -1240,8 +1125,8 @@ object GatherScatter {
           s.broadcasts.foreach(b => if (b != null) b.unpersist(blocking = false))
         }
         steps = Nil
-        states.foreach(st => if (st ne keep) st.unpersist(blocking = false))
-        states = states.filter(_ eq keep)
+        states.foreach(st => if ((st ne keep) && (st ne root)) st.unpersist(blocking = false))
+        states = states.filter(st => (st eq keep) || (st eq root))
       }
       var t0 = System.nanoTime()
       while (!converged && it < maxIterations) {
@@ -1253,21 +1138,27 @@ object GatherScatter {
         steps ::= s
         states ::= state
         if (counted || cp.isDefined || (it % 4 == 0 && it < maxIterations)) {
-          ck.materialize(it, state, saved(state))
+          // the superstep's one job: a due checkpoint's state write, else a count
+          val written = ck.due(it)
+          if (written) save(ck.statePath(it), state) else state.count()
+          if (it % 16 == 0) root = state
           free(keep = state)
           val n = if (counted) changed.sum else -1L
           converged = n == 0L
-          ck.commit(it, converged, n, (System.nanoTime() - t0) / 1000000, saved(state))
+          ck.commit(it, converged, n, (System.nanoTime() - t0) / 1000000, written)(save(_, state))
           t0 = System.nanoTime()
         }
       }
       val out = state.zipPartitions(g.verts, preservesPartitioning = true) { (sIt, vIt) =>
         Iterator.single(result(vIt.next().ids, sIt.next()))
       }.persist(StorageLevel.MEMORY_AND_DISK)
+      if (it >= 16) out.localCheckpoint()
       out.count()
+      root = null
       free(keep = null)
       (out, it)
     }
+  }
 
   /** PageRank's gather: ⊗ = rank / out-degree, ⊕ = +. `hotPr` is the hub
     * mirror (null on hubless graphs, never read then). */
@@ -1352,17 +1243,14 @@ object GatherScatter {
    * PageRank until convergence, GraphMat stop rule: terminate when no vertex
    * moved by more than `tol` (`PR::operator!=`, `src/PageRank.cpp:43-45`;
    * land-reduce `GraphMatRuntime.h:208-226` — here a Spark accumulator).
-   * Returns (final ranks, supersteps run). With `cp` set, the state is
-   * durably checkpointed every `cp.every` supersteps (and at termination),
-   * and a run finding a committed checkpoint under `cp.dir/cp.runId` RESUMES
-   * from it — the returned superstep count is then the GLOBAL count
-   * including pre-crash supersteps, and a resumed-after-interrupt run
-   * produces bit-identical ranks to an uninterrupted one (the state is the
-   * exact doubles; supersteps are deterministic).
+   * Returns (final ranks, supersteps run). With `cp`, the run checkpoints
+   * and resumes ([[CheckpointConfig]]); a resumed run's ranks are
+   * bit-identical to an uninterrupted run's (the state is the exact
+   * doubles; supersteps are deterministic).
    */
   def pageRankConverged(g: PrGraph, alpha: Double = 0.3, tol: Double = 1e-5,
                         maxIterations: Int = 200,
-                        cp: Option[CsrCheckpoint] = None): (RDD[RankBlock], Int) =
+                        cp: Option[CheckpointConfig] = None): (RDD[RankBlock], Int) =
     iterate[Array[Double], RankBlock](g, Step(initState(g, 1, (_, _) => 0.3)), maxIterations,
         counted = true, cp, identity, identity)(RankBlock) {
       (ranks, _, changed) => superstep(g, ranks, alpha, tol, changed, mirror(g, ranks)(scalarAt))
@@ -1400,9 +1288,8 @@ object GatherScatter {
 
   /** Run the (min, +) propagation from `init` to its exact fixpoint.
     * Returns (value blocks, supersteps run). Vertices never reached keep
-    * their init value (+∞ for single-source inits). With `cp`, state is
-    * durably checkpointed and a committed checkpoint is RESUMED (see
-    * [[CsrCheckpoint]]); only VALUES are saved — resume re-activates every
+    * their init value (+∞ for single-source inits). With `cp` (see
+    * [[CheckpointConfig]]), only VALUES are saved — resume re-activates every
     * partition, which is sound because min is monotone and idempotent
     * (re-sent contributions fold to the values already held), so a resumed
     * run reaches the identical fixpoint with identical changed counts, at
@@ -1410,7 +1297,7 @@ object GatherScatter {
   def minFixpoint(g: PrGraph, init: RDD[Array[Double]], delta: Double,
                   maxIterations: Int = 1 << 20,
                   useWeights: Boolean = false,
-                  cp: Option[CsrCheckpoint] = None): (RDD[RankBlock], Int) = {
+                  cp: Option[CheckpointConfig] = None): (RDD[RankBlock], Int) = {
     require(!useWeights || g.weighted,
       "weighted (min,+) needs build(..., weighted = true)")
     val sc = g.csr.sparkContext
@@ -1481,13 +1368,13 @@ object GatherScatter {
     * (`src/ConnectedComponents.cpp`; undirected ⊕=min), build the PrGraph on
     * a bidirectional edge set (e.g. `LinkGraph.undirected`). */
   def connectedComponents(g: PrGraph, maxIterations: Int = 1 << 20,
-                          cp: Option[CsrCheckpoint] = None): (RDD[RankBlock], Int) =
+                          cp: Option[CheckpointConfig] = None): (RDD[RankBlock], Int) =
     minFixpoint(g, idLabels(g), delta = 0.0, maxIterations, cp = cp)
 
   /** BFS levels from `source` on the (min, +) kernel (delta = 1 along
     * out-edges). Unreached vertices keep +∞ (the column engine's -1 analog). */
   def bfs(g: PrGraph, source: Long, maxIterations: Int = 1 << 20,
-          cp: Option[CsrCheckpoint] = None): (RDD[RankBlock], Int) = {
+          cp: Option[CheckpointConfig] = None): (RDD[RankBlock], Int) = {
     minFixpoint(g, singleSourceInit(g, source), delta = 1.0, maxIterations,
       cp = cp)
   }
@@ -1498,7 +1385,7 @@ object GatherScatter {
     * for the fixpoint to be the true distances). Needs
     * `build(..., weighted = true)`; unreached vertices keep +∞. */
   def sssp(g: PrGraph, source: Long, maxIterations: Int = 1 << 20,
-           cp: Option[CsrCheckpoint] = None): (RDD[RankBlock], Int) = {
+           cp: Option[CheckpointConfig] = None): (RDD[RankBlock], Int) = {
     minFixpoint(g, singleSourceInit(g, source), delta = 0.0, maxIterations,
       useWeights = true, cp = cp)
   }
@@ -1699,7 +1586,7 @@ object GatherScatter {
     * (label blocks, supersteps run); resumable via `cp` (labels are exact
     * state and every superstep is dense, so a resumed run is identical). */
   def labelPropagation(g: PrGraph, iterations: Int,
-                       cp: Option[CsrCheckpoint] = None): (RDD[RankBlock], Int) =
+                       cp: Option[CheckpointConfig] = None): (RDD[RankBlock], Int) =
     iterate[Array[Double], RankBlock](g, Step(idLabels(g)), iterations,
         counted = true, cp, identity, identity)(RankBlock) {
       (labels, _, changed) => labelStep(g, labels, changed, mirror(g, labels)(scalarAt))

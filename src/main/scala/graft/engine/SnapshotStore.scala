@@ -13,31 +13,27 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.util.SerializableConfiguration
 
 /**
- * Storage seam for every durable artifact the engine commits mid-run:
- * checkpoint manifests / latest-pointers / metrics (small driver-side
- * text), columnar state tables (the Column engine's per-iteration
- * snapshots), and partition-aligned binary state blocks (the CSR engine's
- * snapshots and mid-algorithm checkpoints).
+ * Storage seam for every durable artifact the engine commits mid-run: small
+ * driver-side text (pointers, metrics, manifests), columnar state tables
+ * (the Column engine's checkpoints) and partition-aligned binary state
+ * blocks (the CSR engine's snapshots and checkpoints). [[Checkpoints]] and
+ * the CSR snapshot `save`/`load` see only this trait, via the `store` field
+ * of [[CheckpointConfig]] or their `store` parameter.
  *
- * The north rule names Iceberg as the production substrate ("each superstep
- * checkpoints per-partition frontier state plus lineage and iteration
- * metrics to Iceberg"). This sandbox ships no Iceberg jars, so
- * [[HadoopSnapshotStore]] renders the same commit discipline — data files
- * first, the `latest` pointer LAST, so a crash mid-write always leaves the
- * previous committed state resumable — over Hadoop `FileSystem` paths
- * (local, hdfs://, s3a://) with parquet/object-file payloads. The pointer
- * is the only commit: data files need no commit protocol of their own,
- * because nothing reads them before a pointer names them. An Iceberg
- * implementation is a drop-in: `writeState`/`readState` become table
- * appends/snapshot reads, `writeBlocks` a table of (partition, blob) rows,
- * and the text manifests snapshot properties/tags; callers ([[Superstep]],
- * [[GatherScatter]]) see only this trait via the `store` field on
- * [[CheckpointConfig]] / [[CsrCheckpoint]].
+ * The north rule names Iceberg as the production substrate. Where no
+ * Iceberg jars are on the classpath, [[HadoopSnapshotStore]] renders the
+ * same commit discipline over Hadoop `FileSystem` paths (local, hdfs://,
+ * s3a://) with parquet/object-file payloads: data files first, then the
+ * pointer, the only commit — nothing reads data files before a pointer
+ * names them, so a crash mid-write leaves the previous commit resumable. An
+ * Iceberg implementation is a drop-in: `writeState`/`readState` become
+ * table appends/snapshot reads, `writeBlocks` a table of (partition, blob)
+ * rows, and the text artifacts snapshot properties/tags.
  *
- * Threading: the CSR engine commits a checkpoint's text artifacts on a
- * background thread while the next superstep runs, so `writeText` may be
- * called from another thread while `writeBlocks` runs (never two
- * `writeText`s of one run at once).
+ * Threading: both engines commit a checkpoint's text artifacts on a
+ * background thread while the next superstep runs ([[Checkpoints]]), so
+ * `writeText` may run alongside `writeState`, `readState` or `writeBlocks`
+ * on the caller's thread (never two `writeText`s of one run at once).
  */
 trait SnapshotStore extends Serializable {
 

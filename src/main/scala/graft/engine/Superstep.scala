@@ -1,6 +1,6 @@
 package graft.engine
 
-import scala.collection.mutable.ArrayBuffer
+import scala.util.Using
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -118,50 +118,35 @@ final case class RunResult(
     state: DataFrame, iterations: Int, converged: Boolean,
     metrics: Seq[IterationMetrics])
 
-/**
- * Durable checkpoint/resume (north rule): every `every` supersteps the full
- * vertex state (the frontier is its `active` column) is snapshotted to
- * `dir/runId/iter=N/state` as parquet, with per-partition row counts and
- * per-iteration metrics appended to `dir/runId/metrics.jsonl` and a
- * `latest.json` pointer enabling mid-algorithm resume. In production these
- * are Iceberg table snapshots; all durable IO goes through `store`
- * ([[SnapshotStore]]) so the Iceberg rendering is a drop-in — the default
- * [[HadoopSnapshotStore]] is the parquet-with-manifest sandbox stand-in
- * (no Iceberg jars in this image).
- */
-final case class CheckpointConfig(dir: String, runId: String, every: Int = 8,
-                                  store: SnapshotStore = HadoopSnapshotStore)
-
 object Superstep {
 
+  /** Runs `spec` from `init`, or, with `cp`, from its committed checkpoint
+    * when there is one ([[CheckpointConfig]]). */
   def run(graph: LinkGraph, init: DataFrame, spec: VertexProgramSpec,
-          cp: Option[CheckpointConfig] = None): RunResult =
-    loop(graph, init, spec, cp, startIteration = 0, priorMetrics = Nil)
-
-  /** Resume a checkpointed run mid-algorithm from its latest snapshot. */
-  def resume(graph: LinkGraph, spec: VertexProgramSpec, cp: CheckpointConfig): RunResult = {
-    val spark = graph.edges.sparkSession
-    val sc = spark.sparkContext
-    val txt = cp.store.readText(sc, s"${cp.dir}/${cp.runId}/latest.json")
-      .getOrElse(throw new java.util.NoSuchElementException(
-        s"no committed checkpoint at ${cp.dir}/${cp.runId}/latest.json"))
-    val iter = """"iteration"\s*:\s*(\d+)""".r.findFirstMatchIn(txt).get.group(1).toInt
-    val state = cp.store.readState(spark, s"${cp.dir}/${cp.runId}/iter=$iter/state")
-    // carry forward the pre-crash iteration history so metrics.jsonl stays complete
-    val prior = cp.store.readText(sc, s"${cp.dir}/${cp.runId}/metrics.jsonl")
-      .map(IterationMetrics.parse(_, iter)).getOrElse(Nil)
-    loop(graph, state, spec, Some(cp), startIteration = iter, priorMetrics = prior)
-  }
-
-  private def loop(graph: LinkGraph, init: DataFrame, spec: VertexProgramSpec,
-                   cp: Option[CheckpointConfig], startIteration: Int,
-                   priorMetrics: Seq[IterationMetrics]): RunResult = {
+          cp: Option[CheckpointConfig] = None): RunResult = {
     val n = graph.numPartitions
-    val stateCols = init.columns.toSeq
-    require(stateCols.contains("id") && stateCols.contains("active"),
-      s"state needs id+active, got $stateCols")
     require(spec.maxIterations >= 0 || spec.trackChanges,
       "trackChanges=false with maxIterations<0 can never converge (the changed count is the only stop rule)")
+    val spark = init.sparkSession
+    val sc = spark.sparkContext
+
+    // `cached` is always the exact DataFrame persist() was called on (the
+    // only handle unpersist() frees); `state` may be a cheap projection of it.
+    // localCheckpoint()ed states need separate handling: their storage is an
+    // RDD-level persist that Dataset.unpersist (a CacheManager lookup) cannot
+    // free, so we capture the backing RDD handles via a before/after diff of
+    // getPersistentRDDs and unpersist those directly — otherwise every
+    // superstep's serialized blocks linger until driver GC notices. Its rows
+    // per partition are the run's lineage record.
+    var cached: DataFrame = null
+    Using.resource(new Checkpoints(cp, sc, spec.maxIterations, n)(() =>
+        cached.queryExecution.toRdd.mapPartitions(it => Iterator.single(it.size.toLong))
+          .collect().toSeq.map(rows => Seq("rows" -> rows)))) { ck =>
+    val resumed = ck.resume()
+    val start = resumed.fold(init)(c => cp.get.store.readState(spark, ck.statePath(c.iteration)))
+    val stateCols = start.columns.toSeq
+    require(stateCols.contains("id") && stateCols.contains("active"),
+      s"state needs id+active, got $stateCols")
 
     // AQE re-plans and re-compiles codegen for every superstep's jobs, which
     // at graph scale costs more than it saves (measured ~2x per-superstep
@@ -175,30 +160,19 @@ object Superstep {
     // exchange matches the state/edge partitioning — same width at scale,
     // far fewer tasks on small graphs, and the ⊕ output arrives already
     // co-partitioned with the state for the apply join (guide §2.2, §2.4).
-    val spark = init.sparkSession
     val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled", "true")
     val shufBefore = spark.conf.get("spark.sql.shuffle.partitions", "200")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.conf.set("spark.sql.shuffle.partitions", n.toString)
     try {
-
-    // `cached` is always the exact DataFrame persist() was called on (the
-    // only handle unpersist() frees); `state` may be a cheap projection of it.
-    // localCheckpoint()ed states need separate handling: their storage is an
-    // RDD-level persist that Dataset.unpersist (a CacheManager lookup) cannot
-    // free, so we capture the backing RDD handles via a before/after diff of
-    // getPersistentRDDs and unpersist those directly — otherwise every
-    // superstep's serialized blocks linger until driver GC notices.
-    val sc = spark.sparkContext
-    var cached = init.repartition(n, col("id"))
+    cached = start.repartition(n, col("id"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     cached.count()
     var state = cached
     var cachedRdds: Iterable[org.apache.spark.rdd.RDD[_]] = Nil
 
-    val metrics = ArrayBuffer[IterationMetrics](priorMetrics: _*)
-    var iter = startIteration
-    var converged = false
+    var iter = resumed.fold(0)(_.iteration)
+    var converged = resumed.exists(_.converged)
 
     // Supersteps CHAINED lazily per materialization, each segment ONE
     // pipelined Spark job. Tracked and checkpointed runs materialize every
@@ -220,7 +194,7 @@ object Superstep {
       else 1
     var sinceMat = 0
 
-    while (!converged && (spec.maxIterations < 0 || iter - startIteration < spec.maxIterations)) {
+    while (!converged && (spec.maxIterations < 0 || iter < spec.maxIterations)) {
       val t0 = System.nanoTime()
 
       val frontier = spec.activity match {
@@ -248,7 +222,7 @@ object Superstep {
       require(applied.columns.contains("_changed"), "apply must emit _changed")
 
       iter += 1
-      val isLast = spec.maxIterations >= 0 && iter - startIteration >= spec.maxIterations
+      val isLast = spec.maxIterations >= 0 && iter >= spec.maxIterations
       var changed = -1L
       if (sinceMat + 1 >= chain || isLast || spec.trackChanges) {
         // Materialize: localCheckpoint truncates the lineage — `apply` joins
@@ -287,25 +261,26 @@ object Superstep {
       }
 
       converged = changed == 0
-      metrics += IterationMetrics(iter, changed, (System.nanoTime() - t0) / 1000000)
-
-      cp match {
-        case Some(c) if iter % c.every == 0 || converged =>
-          val reloaded = snapshot(c, iter, state, metrics.toSeq)
-          cached.unpersist()
-          cachedRdds.foreach(_.unpersist(blocking = false))
-          cachedRdds = Nil
-          cached = reloaded
-          state = reloaded
-        case _ => // durable snapshots only at the configured cadence
+      if (ck.commit(iter, converged, changed, (System.nanoTime() - t0) / 1000000)(
+            cp.get.store.writeState(state, _))) {
+        // the run continues from the snapshot it just wrote
+        val reloaded = cp.get.store.readState(spark, ck.statePath(iter))
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        reloaded.count()
+        cached.unpersist()
+        cachedRdds.foreach(_.unpersist(blocking = false))
+        cachedRdds = Nil
+        cached = reloaded
+        state = reloaded
       }
     }
-    RunResult(state, iter - startIteration, converged, metrics.toSeq)
+    RunResult(state, iter, converged, ck.metrics)
     } finally {
       // exception-safe: a failed superstep must not leave the whole session
       // with AQE off (the toggles are loop-scoped, not session-scoped)
       spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
       spark.conf.set("spark.sql.shuffle.partitions", shufBefore)
+    }
     }
   }
 
@@ -325,26 +300,5 @@ object Superstep {
       case Direction.In  => along("dst", "src")
       case Direction.All => along("src", "dst").unionByName(along("dst", "src"))
     }
-  }
-
-  private def snapshot(c: CheckpointConfig, iteration: Int, state: DataFrame,
-                       metrics: Seq[IterationMetrics]): DataFrame = {
-    val spark = state.sparkSession
-    val sc = spark.sparkContext
-    val root = s"${c.dir}/${c.runId}"
-    val base = s"$root/iter=$iteration"
-    c.store.writeState(state, s"$base/state")
-    val reloaded = c.store.readState(spark, s"$base/state")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    reloaded.count()
-    // per-partition lineage record + iteration metrics (north rule)
-    val partRows = reloaded.groupBy(spark_partition_id().as("p")).count()
-      .collect().map(r => s"""{"partition":${r.getInt(0)},"rows":${r.getLong(1)}}""")
-    c.store.writeText(sc, s"$root/metrics.jsonl", IterationMetrics.jsonl(metrics))
-    c.store.writeText(sc, s"$base/partitions.jsonl", partRows.mkString("", "\n", "\n"))
-    // the pointer commits the snapshot — written LAST, so a crash during any
-    // earlier write leaves the previous committed state resumable
-    c.store.writeText(sc, s"$root/latest.json", s"""{"iteration":$iteration}""")
-    reloaded
   }
 }

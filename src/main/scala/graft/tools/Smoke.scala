@@ -24,16 +24,16 @@ object Smoke {
     require(n > 0, "entry returned no rows")
 
     // checkpoint/resume round-trip: run PageRank 5 supersteps with durable
-    // snapshots, "crash", resume from the latest snapshot to convergence,
-    // and compare against an uninterrupted run.
+    // snapshots, "crash", resume from the latest snapshot to convergence
+    // (the same config names it), and compare against an uninterrupted run.
     import graft.core.Transcripts
     import graft.algos.PageRank
-    import graft.engine.{CheckpointConfig, Superstep}
+    import graft.engine.CheckpointConfig
     val cpDir = java.nio.file.Files.createTempDirectory("graft-cp").toString
     val graph = Transcripts.toGraph(Transcripts.synthesize(spark, 200))
     val cp = CheckpointConfig(cpDir, "pr-run", every = 5)
     PageRank.run(graph, maxIterations = 5, cp = Some(cp)) // interrupted run
-    val resumed = Superstep.resume(graph, PageRank.spec(0.3, 1e-5, -1), cp)
+    val resumed = PageRank.run(graph, cp = Some(cp))
     val full = PageRank.run(graph)
     val diff = resumed.state.alias("r")
       .join(full.state.alias("f"), org.apache.spark.sql.functions.expr("r.id = f.id"))

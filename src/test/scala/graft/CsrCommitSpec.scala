@@ -6,14 +6,16 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{Edge, LinkGraph}
-import graft.engine.{CsrCheckpoint, GatherScatter, HadoopSnapshotStore, SnapshotStore}
+import graft.algos.ConnectedComponents
+import graft.engine.{CheckpointConfig, CsrCheckpoint, GatherScatter, HadoopSnapshotStore, RunResult,
+  SnapshotStore}
 import SparkTestBase.{jobsOf, withTempDir}
 
 /** The cost side of CSR checkpointing: a due checkpoint's state write is the
   * superstep's own Spark job, its blocks land as one file per partition with
   * no output-committer leftovers, and a pointer commit that fails on its
   * background thread fails the run while the last committed state stays
-  * resumable. */
+  * resumable — on the Column engine too, which commits on the same thread. */
 class CsrCommitSpec extends AnyFunSuite {
   lazy val s = SparkTestBase.spark
 
@@ -110,6 +112,34 @@ class CsrCommitSpec extends AnyFunSuite {
         g.unpersist()
         fixture.unpersistAll()
       }
+    }
+  }
+
+  test("a failed pointer commit fails a Column run; the committed state resumes to the same result") {
+    withTempDir("graft-commit") { dir =>
+      def components(r: RunResult) = {
+        val m = r.state.select("id", "component").collect()
+          .map(x => x.getLong(0) -> x.getLong(1)).toMap
+        r.state.unpersist()
+        m
+      }
+      try {
+        val ref = ConnectedComponents.run(fixture)
+        val refIters = ref.iterations
+        val want = components(ref)
+        assert(refIters > 4, s"fixture must take several supersteps, got $refIters")
+
+        val failing = Some(CheckpointConfig(dir, "col", every = 1, store = new FailingPointerStore(3)))
+        val e = intercept[java.io.IOException](ConnectedComponents.run(fixture, failing))
+        assert(e.getMessage.contains("pointer write 3"))
+        val latest = new String(Files.readAllBytes(Paths.get(dir, "col", "latest.json")))
+        assert(latest.contains(""""iteration":2,"""), latest)
+
+        val res = ConnectedComponents.run(fixture, Some(CheckpointConfig(dir, "col", every = 1)))
+        assert(res.iterations === refIters)
+        assert(res.converged)
+        assert(components(res) === want)
+      } finally fixture.unpersistAll()
     }
   }
 }

@@ -3,6 +3,7 @@ package graft
 import scala.collection.mutable
 
 import org.apache.spark.rdd.RDD
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{Edge, LinkGraph}
@@ -11,24 +12,36 @@ import graft.engine.GatherScatter.{PrGraph, RankBlock}
 import SparkTestBase.{jobsAndStagesOf, jobsOf}
 
 /** The cost side of the CSR superstep loop: a long run's lineage stays
-  * bounded; an uncheckpointed convergence loop on a hubless graph runs one
-  * Spark job per superstep plus the result's, and a fixed-budget loop one
-  * job per 4 supersteps; and a run leaves persisted only its result. */
+  * bounded and its lineage roots stay persisted; an uncheckpointed
+  * convergence loop on a hubless graph runs one Spark job per superstep plus
+  * the result's, and a fixed-budget loop one job per 4 supersteps; and a run
+  * leaves persisted only its result. */
 class CsrLoopSpec extends AnyFunSuite {
   lazy val s = SparkTestBase.spark
 
   /** RDDs reachable from `roots` through `dependencies`; a checkpointed
     * RDD's dependencies end at its checkpoint. */
-  private def lineage(roots: RDD[_]*): Int = {
-    val seen = mutable.Set.empty[Int]
+  private def reachable(roots: RDD[_]*): Seq[RDD[_]] = {
+    val seen = mutable.LinkedHashMap.empty[Int, RDD[_]]
     var todo = roots.toList
     while (todo.nonEmpty) {
       val r = todo.head
       todo = todo.tail
-      if (seen.add(r.id)) todo = r.dependencies.map(_.rdd).toList ::: todo
+      if (!seen.contains(r.id)) {
+        seen(r.id) = r
+        todo = r.dependencies.map(_.rdd).toList ::: todo
+      }
     }
-    seen.size
+    seen.values.toSeq
   }
+
+  private def lineage(roots: RDD[_]*): Int = reachable(roots: _*).size
+
+  /** The locally checkpointed RDDs reachable from `r` that are no longer
+    * persisted: their blocks are the lineage of everything after them, so
+    * losing one makes `r` unrecoverable. */
+  private def freedRoots(r: RDD[_]): Seq[Int] =
+    reachable(r).filter(x => x.isCheckpointed && x.getStorageLevel == StorageLevel.NONE).map(_.id)
 
   /** The graph's own RDDs plus at most 16 supersteps (the truncation
     * cadence) of at most 8 RDDs each, whatever the superstep count. */
@@ -65,6 +78,7 @@ class CsrLoopSpec extends AnyFunSuite {
         assert(orders === (0 until n).map(i => i.toLong -> i.toDouble).toMap)
         assert(lineage(r) <= bound(g),
           s"$n-vertex chain: ${lineage(r)} RDDs reachable after $iters supersteps")
+        assert(freedRoots(r).isEmpty, s"$n-vertex chain: freed lineage roots ${freedRoots(r)}")
       } finally r.unpersist(false)
     }
   }
@@ -82,6 +96,7 @@ class CsrLoopSpec extends AnyFunSuite {
           assert(iters > 32, s"$name: the fixture must need more than 32 supersteps, ran $iters")
           assert(lineage(r) <= bound(g),
             s"$name: ${lineage(r)} RDDs reachable after $iters supersteps")
+          assert(freedRoots(r).isEmpty, s"$name: freed lineage roots ${freedRoots(r)}")
         } finally r.unpersist(false)
       val (r, iters) = GatherScatter.pageRankConverged(g, 0.3, 1e-7)
       check("pageRankConverged", r, iters)

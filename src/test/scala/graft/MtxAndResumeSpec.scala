@@ -100,8 +100,8 @@ class MtxAndResumeSpec extends AnyFunSuite {
       val init = und.vertices.select(col("id"), lit(true).as("active"), col("id").as("component"))
       val spec0 = ccSpec(maxIter = 6)
       Superstep.run(und, init, spec0, Some(cp))
-      // resume from latest snapshot (iter 6) with no budget
-      val resumed = Superstep.resume(und, ccSpec(maxIter = -1), cp)
+      // the same config resumes from the latest snapshot (iter 6), now with no budget
+      val resumed = Superstep.run(und, init, ccSpec(maxIter = -1), Some(cp))
       val got = resumed.state.select("id", "component").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got === full)

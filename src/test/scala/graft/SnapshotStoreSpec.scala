@@ -156,6 +156,44 @@ class SnapshotStoreSpec extends AnyFunSuite {
     }
   }
 
+  test("checkpointed runs and their resumes on both engines touch no path but the store's") {
+    val graph = graft.core.LinkGraph.fromSeq(spark,
+      SparkTestBase.testGraphEdges.map { case (s, d) => graft.core.Edge(s, d, 1.0) }, 2)
+    val built = GatherScatter.build(graph, 2)
+    withTempDir("graft-snapstore") { dir =>
+      val logical = s"$dir/logical"
+      val store = new CountingStore(logical, s"$dir/physical")
+      def cp(run: String) = Some(CheckpointConfig(s"$logical/runs", run, every = 2, store = store))
+      // each run stops at superstep 3, then the same config resumes it
+      graft.algos.PageRank.run(graph, maxIterations = 3, cp = cp("column")).state.unpersist()
+      val column = graft.algos.PageRank.run(graph, cp = cp("column"))
+      column.state.unpersist()
+      assert(column.converged && column.iterations > 3, s"column: ${column.iterations}")
+      GatherScatter.pageRankConverged(built, maxIterations = 3, cp = cp("csr"))._1.unpersist(false)
+      val (csrR, csrIters) = GatherScatter.pageRankConverged(built, cp = cp("csr"))
+      csrR.unpersist(false)
+      assert(csrIters > 3, s"csr: $csrIters")
+      assert(!new java.io.File(logical).exists(), "a run wrote around the store")
+      // the artifact names of a run directory, with every iter=N/ holding
+      // only its state
+      def artifacts(run: String): Set[String] = {
+        def names(d: java.io.File) = d.list().filterNot(_.startsWith(".")).toSet
+        val root = new java.io.File(s"$dir/physical/runs/$run")
+        names(root).map { n =>
+          if (!n.startsWith("iter=")) n
+          else {
+            assert(names(new java.io.File(root, n)) === Set("state"), s"$run/$n")
+            "iter=N"
+          }
+        }
+      }
+      assert(artifacts("column") === Set("latest.json", "metrics.jsonl", "partitions.json", "iter=N"))
+      assert(artifacts("csr") === artifacts("column"))
+    }
+    built.unpersist()
+    graph.unpersistAll()
+  }
+
   test("a custom store is a drop-in: checkpointed run + resume flow through it") {
     import graft.core.LinkGraph
     val edges = spark.createDataFrame(
