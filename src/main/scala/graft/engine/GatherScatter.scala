@@ -46,9 +46,9 @@ import graft.core.LinkGraph
  * instead of one partition |E_hub|.
  *
  * At most one shuffle per superstep (none on a cut-free layout), no
- * Catalyst re-planning, no per-row boxing. A convergence loop runs one
- * Spark job per superstep; a fixed-budget loop chains four supersteps per
- * job; a hub layout adds one mirror collect per superstep. Every CSR
+ * Catalyst re-planning, no per-row boxing. An uncheckpointed loop chains
+ * four supersteps per Spark job, a checkpointed one runs one job per
+ * superstep, and a hub layout adds one mirror collect per superstep. Every CSR
  * kernel (here and in DeltaPrCsr, ToposortCsr, VectorSuperstep) keeps only
  * its arithmetic and runs through the same plumbing: `exchange` (the split
  * exchange) and `iterate` (the whole run: superstep loop and result job) —
@@ -844,8 +844,9 @@ object GatherScatter {
   //    pipeline inside one stage.
   //  - `fold`, the ⊕ of the received blocks into a dense accumulator.
   //  - `iterate`, the whole run: the superstep loop and its one barrier rule
-  //    (a convergence loop lands every superstep, a fixed-budget loop every
-  //    4th), changed count, lineage truncation, durable checkpoints, freeing
+  //    (an uncheckpointed run lands every 4th superstep and picks a counted
+  //    loop's stop after the job, a checkpointed run lands every superstep),
+  //    changed count, lineage truncation, durable checkpoints, freeing
   //    each segment's gathered blocks, broadcasts and superseded states once
   //    a barrier has landed, and the run's result job.
   //  - `hubMirror` / `mirror`, the per-superstep collect of the hot
@@ -1062,26 +1063,32 @@ object GatherScatter {
    * twice (by the gather and by the apply's `side`) is computed once, and a
    * job resumes from the newest cached state. A barrier is a superstep whose
    * Spark job runs; the rule has two cases:
-   *  - `counted` loops, and every checkpointed run, land every superstep.
-   *    A counted loop stops at GraphMat's land-reduce fixpoint
-   *    (`GraphMatRuntime.h:208-226`): the kernel's apply adds its changed
-   *    count to `changed`, and a superstep that changed no vertex ends the
-   *    run. The count is updated inside a TRANSFORMATION, so a task retry or
+   *  - uncheckpointed runs land every 4th superstep, and a `counted` one
+   *    also on its budget's last. A fixed-budget loop (`changed` is null)
+   *    leaves the supersteps after its last barrier to the result job:
+   *    `pageRank(10)` runs 3 jobs instead of 11. A counted loop stops at
+   *    GraphMat's land-reduce fixpoint (`GraphMatRuntime.h:208-226`): the
+   *    kernel's apply adds its changed count to the superstep's own
+   *    `changed`, and after a barrier the batch's first superstep that
+   *    changed no vertex is the stop. The run returns that superstep's own
+   *    persisted state and count, so results and superstep counts are those
+   *    of a run that lands every superstep; the at most 3 supersteps the
+   *    batch ran past the stop only computed states that are freed. The
+   *    count is updated inside a TRANSFORMATION, so a task retry or
    *    speculative duplicate can double-count — but only inflate a nonzero
    *    count (delaying the stop by one superstep), never fabricate zero from
    *    nonzero.
-   *  - fixed-budget loops (`changed` is null) land every 4th superstep, and
-   *    the result job computes the supersteps after the last barrier:
-   *    `pageRank(10)` runs 3 jobs instead of 11. A step that runs a driver
-   *    action itself (a hub-mirror collect) computes the state it reads.
-   * Every 16th superstep truncates lineage (a multiple of 4, so always on a
-   * barrier unless it is the last), so a long run's DAG and task closures
-   * stay bounded. After each barrier, the gathered blocks, broadcasts and
-   * states made since the previous one are freed, all but the newest state
-   * and the newest truncation point, which later states read as their
-   * lineage root; the last segment's are freed after the result job, which
-   * past 16 supersteps makes the result its own lineage root first. An
-   * `init` the caller persisted stays the caller's to free.
+   *  - checkpointed runs land every superstep.
+   * A step that runs a driver action itself (a hub-mirror collect) computes
+   * the state it reads, so batching saves hub layouts only the count jobs.
+   * Every 16th superstep truncates lineage (a multiple of 4, so always the
+   * last of a batch), so a long run's DAG and task closures stay bounded.
+   * After each barrier, the gathered blocks, broadcasts and states made
+   * since the previous one are freed, all but the stop's state and the
+   * newest truncation point at or before it, which later states read as
+   * their lineage root; the last segment's are freed after the result job,
+   * which past 16 supersteps makes the result its own lineage root first.
+   * An `init` the caller persisted stays the caller's to free.
    *
    * With `cp` ([[Checkpoints]]), a committed checkpoint replaces `init`
    * (`lift` turns its saved vectors into a state), and a due checkpoint
@@ -1128,6 +1135,9 @@ object GatherScatter {
         states.foreach(st => if ((st ne keep) && (st ne root)) st.unpersist(blocking = false))
         states = states.filter(st => (st eq keep) || (st eq root))
       }
+      // the supersteps since the last barrier, oldest first: (superstep,
+      // state, changed count)
+      var batch = Vector.empty[(Int, RDD[S], LongAccumulator)]
       var t0 = System.nanoTime()
       while (!converged && it < maxIterations) {
         val changed = if (counted) sc.longAccumulator(s"changed-$it") else null
@@ -1137,15 +1147,27 @@ object GatherScatter {
         if (it % 16 == 0) state.localCheckpoint()
         steps ::= s
         states ::= state
-        if (counted || cp.isDefined || (it % 4 == 0 && it < maxIterations)) {
-          // the superstep's one job: a due checkpoint's state write, else a count
+        batch :+= ((it, state, changed))
+        if (cp.isDefined || (if (it < maxIterations) it % 4 == 0 else counted)) {
+          // the barrier's one job: a due checkpoint's state write, else a
+          // count; a checkpointed run's batch is this one superstep
           val written = ck.due(it)
           if (written) save(ck.statePath(it), state) else state.count()
+          // the stop: the batch's first superstep that changed no vertex
+          val stop = if (counted) batch.indexWhere(_._3.sum == 0L) else -1
+          val landed = if (stop < 0) batch else batch.take(stop + 1)
+          it = landed.last._1
+          state = landed.last._2
           if (it % 16 == 0) root = state
           free(keep = state)
-          val n = if (counted) changed.sum else -1L
-          converged = n == 0L
-          ck.commit(it, converged, n, (System.nanoTime() - t0) / 1000000, written)(save(_, state))
+          // the batch's wall, split evenly over its supersteps
+          val millis = (System.nanoTime() - t0) / 1000000 / batch.size
+          landed.foreach { case (i, _, c) =>
+            val n = if (counted) c.sum else -1L
+            converged = n == 0L
+            ck.commit(i, converged, n, millis, written)(save(_, state))
+          }
+          batch = Vector.empty
           t0 = System.nanoTime()
         }
       }

@@ -1,5 +1,9 @@
 package graft.tools
 
+import java.nio.file.{Files, Path}
+
+import scala.util.Using
+
 import org.apache.spark.sql.SparkSession
 
 /** End-to-end smoke drive of the public surface, the way the round driver
@@ -29,19 +33,24 @@ object Smoke {
     import graft.core.Transcripts
     import graft.algos.PageRank
     import graft.engine.CheckpointConfig
-    val cpDir = java.nio.file.Files.createTempDirectory("graft-cp").toString
-    val graph = Transcripts.toGraph(Transcripts.synthesize(spark, 200))
-    val cp = CheckpointConfig(cpDir, "pr-run", every = 5)
-    PageRank.run(graph, maxIterations = 5, cp = Some(cp)) // interrupted run
-    val resumed = PageRank.run(graph, cp = Some(cp))
-    val full = PageRank.run(graph)
-    val diff = resumed.state.alias("r")
-      .join(full.state.alias("f"), org.apache.spark.sql.functions.expr("r.id = f.id"))
-      .filter("abs(r.pagerank - f.pagerank) > 1e-9").count()
-    val mets = java.nio.file.Paths.get(cpDir, "pr-run", "metrics.jsonl")
-    println(s"[smoke] resume-after-crash: mismatched=$diff resumedIters=${resumed.iterations} " +
-      s"metricsLines=${java.nio.file.Files.readAllLines(mets).size()}")
-    require(diff == 0, "resumed result differs from uninterrupted run")
+    val cpDir = Files.createTempDirectory("graft-cp")
+    try {
+      val graph = Transcripts.toGraph(Transcripts.synthesize(spark, 200))
+      val cp = CheckpointConfig(cpDir.toString, "pr-run", every = 5)
+      PageRank.run(graph, maxIterations = 5, cp = Some(cp)) // interrupted run
+      val resumed = PageRank.run(graph, cp = Some(cp))
+      val full = PageRank.run(graph)
+      val diff = resumed.state.alias("r")
+        .join(full.state.alias("f"), org.apache.spark.sql.functions.expr("r.id = f.id"))
+        .filter("abs(r.pagerank - f.pagerank) > 1e-9").count()
+      val mets = cpDir.resolve("pr-run").resolve("metrics.jsonl")
+      println(s"[smoke] resume-after-crash: mismatched=$diff resumedIters=${resumed.iterations} " +
+        s"metricsLines=${Files.readAllLines(mets).size()}")
+      require(diff == 0, "resumed result differs from uninterrupted run")
+    } finally Using.resource(Files.walk(cpDir)) { paths =>
+      paths.sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(p => Files.deleteIfExists(p))
+    }
     spark.stop()
   }
 }
