@@ -2,8 +2,7 @@ package graft.engine
 
 import org.apache.spark.rdd.RDD
 
-import GatherScatter.{PrGraph, RankBlock, Step, Sum, exchange, fold, gather, hotValues, iterate,
-  mirror}
+import GatherScatter.{PerDegree, PrGraph, RankBlock, Step, Sum, iterate, program}
 
 /**
  * Incremental (delta) PageRank on the CSR gather-scatter structures —
@@ -16,11 +15,10 @@ import GatherScatter.{PrGraph, RankBlock, Step, Sum, exchange, fold, gather, hot
  *   |delta|>1e-8, delta += (1−α)·Σ, fold into pagerank when |delta|>1e-8;
  *   active' ⇔ |Δpagerank| > 1e-8. Fixpoint when no vertex changes.
  *
- * Unlike the (min,+) kernel's partition-granularity frontier (sound there
- * because min is idempotent — resending can't corrupt), sum ⊕ would
- * double-count a resent delta, so the frontier here is a PER-VERTEX mask:
- * the gather multiplies each source's contribution by its mask, and a
- * block with no positive sum is not shipped.
+ * The frontier is PER VERTEX, as in the (min,+) kernel and the peel: only
+ * an active vertex sends its delta (the rest send 0.0), and a block with no
+ * positive sum is not shipped. Sum ⊕ would count a resent delta twice, so
+ * here the frontier is needed for correctness, not only to save work.
  * "Received" detection rides an invariant of the program: deltas are
  * strictly positive (init 0.3; d1 = (1−α)·Σ of positive messages; senders
  * are vertices whose rank moved, so their delta exceeds the 1e-8 gate), so
@@ -28,12 +26,9 @@ import GatherScatter.{PrGraph, RankBlock, Step, Sum, exchange, fold, gather, hot
  * exactly the column engine's join-matched test, with no extra mask bytes
  * in the exchange.
  *
- * The gather is `GatherScatter.gather` with ⊕ = Sum: the kernel supplies
- * the masked delta·invDeg per local source (null when no source here is
- * active). Hub (degree-split) sources broadcast their delta masked by
- * activity (`GatherScatter.mirror`), scaled by invDeg per hot source. The
- * exchange, the superstep loop and its changed==0 stop rule are
- * `GatherScatter.exchange` and `GatherScatter.iterate`.
+ * A superstep is one `GatherScatter.program` with ⊕ = Sum and ⊗ =
+ * `PerDegree`: the kernel supplies the send rule and the apply. The
+ * superstep loop and its changed==0 stop rule are `GatherScatter.iterate`.
  *
  * Boundary: warm-starting after a GRAPH CHANGE
  * ([[graft.algos.DeltaPageRank.warmStart]]) lives on the column engine only.
@@ -60,27 +55,19 @@ object DeltaPrCsr {
       Iterator.single(DprState(Array.fill(n)(0.3), Array.fill(n)(0.3),
         Array.fill(n)(true)))
     }, preservesPartitioning = true)
+    val send = (s: DprState) => {
+      val m = new Array[Double](s.delta.length)
+      var any = false
+      var i = 0
+      while (i < m.length) {
+        if (s.act(i)) { m(i) = s.delta(i); any = true }
+        i += 1
+      }
+      if (any) m else null
+    }
     iterate(g, Step(init), maxIterations, counted = true)((ids, s) => RankBlock(ids, s.pr)) {
       (state, _, changedAcc) =>
-        // hub mirror: per hot vertex, its masked delta (0.0 when inactive —
-        // contributes nothing, keeping "received ⇔ sum>0"); the gather
-        // multiplies it by the hub's 1/globalDegree
-        val hotBc = mirror(g, state)(
-          (s, ls) => ls.map(li => if (s.act(li)) s.delta(li) else 0.0))
-        val gathered = gather(g, state, Sum)((s, blk, vm) => {
-          // masked contribution per local src: delta·invDeg, 0 when inactive
-          val c = new Array[Double](blk.srcs.length)
-          var any = false
-          var i = 0
-          while (i < c.length) {
-            val li = vm.srcPrIdx(i)
-            if (s.act(li)) { c(i) = s.delta(li) * blk.invDeg(i); any = true }
-            i += 1
-          }
-          if (any) c else null
-        }, blk => hotValues(blk, hotBc.value, perDegree = true))
-        exchange(g, gathered, state, hotBc) { (vm, inIdx, blocks, old) =>
-          val acc = fold(Sum, vm.nRecv, inIdx, blocks)
+        program(g, state, Sum, PerDegree, state)(send) { (vm, acc, old) =>
           val n = vm.ids.length
           val pr = new Array[Double](n)
           val dl = new Array[Double](n)

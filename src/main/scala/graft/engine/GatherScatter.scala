@@ -48,13 +48,14 @@ import graft.core.LinkGraph
  * At most one shuffle per superstep (none on a cut-free layout), no
  * Catalyst re-planning, no per-row boxing. An uncheckpointed loop chains
  * four supersteps per Spark job, a checkpointed one runs one job per
- * superstep, and a hub layout adds one mirror collect per superstep. Every CSR
- * kernel (here and in DeltaPrCsr, ToposortCsr, VectorSuperstep) keeps only
- * its arithmetic and runs through the same plumbing: `exchange` (the split
- * exchange) and `iterate` (the whole run: superstep loop and result job) —
- * see "the superstep plumbing" below. Checkpoints follow the Column
- * engine's protocol ([[Checkpoints]]); only the state's blocks are the CSR
- * engine's own.
+ * superstep, and a hub layout adds one mirror collect per superstep. Every
+ * scalar kernel (PageRank, PPR, CC/BFS/SSSP here; DeltaPrCsr, ToposortCsr)
+ * is a send + apply spec over `program`, which owns the hub mirror, gather,
+ * split exchange and fold of one superstep; LP and VectorSuperstep keep
+ * their own gathers over the same `exchange`; `iterate` runs every kernel's
+ * superstep loop and result job — see "the superstep plumbing" below.
+ * Checkpoints follow the Column engine's protocol ([[Checkpoints]]); only
+ * the state's blocks are the CSR engine's own.
  * Throughput path only; semantics verified against the Column-algebra
  * engine (allclose 1e-9) in GatherScatterSpec.
  */
@@ -230,14 +231,13 @@ object GatherScatter {
 
   final case class PrGraph(
       csr: RDD[CsrBlock],
-      verts: RDD[VertexMeta],
-      inIdx: RDD[Array[Array[Int]]],          // per partition: source block q -> local recv indices
+      // per partition: the layout and its incoming-index table (source
+      // block q -> local recv indices), ONE persisted RDD
+      meta: RDD[(VertexMeta, Array[Array[Int]])],
       hotIds: Array[Long],                     // globally sorted hot vertex ids
       numPartitions: Int,
       numEdges: Long,
       numVertices: Long,
-      // the persisted RDD `verts`/`inIdx` are views of (kept for unpersist)
-      private val combined: Option[RDD[(VertexMeta, Array[Array[Int]])]] = None,
       // snapshot loads cache ONE (csr, meta) RDD and expose views — see load()
       private val backing: Option[RDD[_]] = None,
       // built with per-edge weights (build(..., weighted = true))
@@ -245,16 +245,12 @@ object GatherScatter {
       // (p, tp != p) out-blocks in `csr`, counted by build; -1 = unknown.
       // 0 runs every superstep without a shuffle (see `exchange`)
       cut: Long = -1L) {
-    /** The one persisted (VertexMeta, inIdx) RDD — supersteps zip against
-      * this single handle so zipPartitions arity stays within bounds. */
-    def meta: RDD[(VertexMeta, Array[Array[Int]])] =
-      combined.getOrElse(verts.zip(inIdx))
+    /** The per-partition vertex layout, a view of `meta`. */
+    lazy val verts: RDD[VertexMeta] = meta.mapPartitions(_.map(_._1), preservesPartitioning = true)
     def unpersist(): Unit = {
       backing.foreach(_.unpersist(blocking = false))
       csr.unpersist(blocking = false)
-      combined.foreach(_.unpersist(blocking = false))
-      verts.unpersist(blocking = false)
-      inIdx.unpersist(blocking = false)
+      meta.unpersist(blocking = false)
     }
   }
 
@@ -673,11 +669,6 @@ object GatherScatter {
       }.persist(StorageLevel.MEMORY_AND_DISK)
     vertsAndIdx.count()
 
-    val verts: RDD[VertexMeta] =
-      vertsAndIdx.mapPartitions(it => it.map(_._1), preservesPartitioning = true)
-    val inIdx: RDD[Array[Array[Int]]] =
-      vertsAndIdx.mapPartitions(it => it.map(_._2), preservesPartitioning = true)
-
     val nV = vertsAndIdx.map(_._1.ids.length.toLong).sum().toLong
     // free executor-side copies of the build-time broadcasts: every RDD that
     // reads them is materialized above. unpersist, NOT destroy — a lineage
@@ -686,8 +677,7 @@ object GatherScatter {
     // driver on demand where a destroyed one would crash the replay.
     hotBc.unpersist(blocking = false)
     hotDegBc.unpersist(blocking = false)
-    PrGraph(csr, verts, inIdx, hotIds, n, numEdges, nV, Some(vertsAndIdx),
-      weighted = weighted, cut = cut)
+    PrGraph(csr, vertsAndIdx, hotIds, n, numEdges, nV, weighted = weighted, cut = cut)
   }
 
   /**
@@ -756,10 +746,7 @@ object GatherScatter {
     all.count()
     val csr = all.mapPartitions(it => it.map(_._1), preservesPartitioning = true)
     val meta = all.mapPartitions(it => it.map(_._2), preservesPartitioning = true)
-    val verts = meta.mapPartitions(it => it.map(_._1), preservesPartitioning = true)
-    val inIdx = meta.mapPartitions(it => it.map(_._2), preservesPartitioning = true)
-    PrGraph(csr, verts, inIdx, hotIds, n, nE, nV, Some(meta), Some(all),
-      weighted = wtd, cut = cut)
+    PrGraph(csr, meta, hotIds, n, nE, nV, Some(all), weighted = wtd, cut = cut)
   }
 
   /** The committed CSR checkpoint `at` ([[Checkpoints]]), read from `path`
@@ -816,16 +803,17 @@ object GatherScatter {
   // ---- the superstep plumbing, written once -------------------------------
   //
   // Every CSR kernel runs GraphMat's `run_graph_program` superstep
-  // (`GraphMatRuntime.h:136-261`): gather (⊗ + per-target pre-⊕) → split
-  // exchange → fold (⊕) + apply, then the land-reduce stop test. A kernel
-  // owns its ⊗ and its per-partition apply; the rest exists once:
-  //  - `gather`, the scalar gather of every sum or min kernel (PageRank,
-  //    PPR, CC/BFS/SSSP, delta PageRank, the Kahn peel): the kernel's ⊗
-  //    runs once per partition into a dense per-source array, and `scatter`
-  //    ⊕-folds it along each target block's edges and the hub-shard edges,
-  //    with ⊕ (a `Monoid`: `Sum` or `Min`) picked once per block. LP's label
+  // (`GraphMatRuntime.h:136-261`): send_message → SpMSpV with
+  // process_message as ⊗ and reduce_function as ⊕ → apply, then the
+  // land-reduce stop test. A kernel owns its messages and its per-partition
+  // apply; the rest exists once:
+  //  - `program`, one superstep of a scalar vertex program (PageRank, PPR,
+  //    CC/BFS/SSSP, delta PageRank, the Kahn peel). The kernel gives ⊕ (a
+  //    `Monoid`: `Sum` or `Min`), ⊗ (a `Times`: `PerDegree` or `Plus`),
+  //    `send` (each vertex's message) and `apply`; `program` owns the hub
+  //    mirror, the gather, the split exchange and the fold. LP's label
   //    histograms and VectorSuperstep's K-wide payloads keep their own
-  //    gathers.
+  //    gathers and call `hubMirror` and `exchange` directly.
   //  - `exchange`, the split exchange. A partition's contribution to ITSELF
   //    is most of the exchange whenever the partitioning has locality
   //    (keyShift co-location makes it ~all of it), and shipping it through
@@ -842,15 +830,14 @@ object GatherScatter {
   //    shuffle at all, the apply is a narrow zip of the gathered blocks with
   //    the layout (read once, so not persisted), and chained supersteps
   //    pipeline inside one stage.
-  //  - `fold`, the ⊕ of the received blocks into a dense accumulator.
+  //  - `hubMirror`, the per-superstep collect of the hot vertices' values
+  //    for the mirror broadcast.
   //  - `iterate`, the whole run: the superstep loop and its one barrier rule
   //    (an uncheckpointed run lands every 4th superstep and picks a counted
   //    loop's stop after the job, a checkpointed run lands every superstep),
   //    changed count, lineage truncation, durable checkpoints, freeing
   //    each segment's gathered blocks, broadcasts and superseded states once
   //    a barrier has landed, and the run's result job.
-  //  - `hubMirror` / `mirror`, the per-superstep collect of the hot
-  //    vertices' values for the mirror broadcast.
 
   /** One superstep's lazy state and what [[iterate]] frees once a later
     * state has landed: the persisted gathered blocks (null when none are)
@@ -858,15 +845,13 @@ object GatherScatter {
   private[engine] final case class Step[S](next: RDD[S], gathered: RDD[_] = null,
                                            broadcasts: Seq[Broadcast[_]] = Nil)
 
-  /** The split exchange of `gather`'s (targetPartition, (sourcePartition,
-    * block)) records. `apply` runs once per partition with
-    * the partition's layout, its incoming-index table, the blocks addressed
-    * to it — its OWN block first, then the remote ones, the fold order that
-    * keeps every kernel's results bit-identical — and its `side` state
-    * (null when `side` is null: the apply then reads no previous state, so
-    * the kernel's input is consumed exactly once). Only the tp != p records
-    * are shuffled, so the gathered blocks, read by both sides of the split,
-    * are persisted. On a cut-free layout (`g.cut == 0`) no record may leave
+  /** The split exchange of a gather's (targetPartition, (sourcePartition,
+    * block)) records. `apply` runs once per partition with the partition's
+    * layout, its incoming-index table, the blocks addressed to it — its OWN
+    * block first, then the remote ones, the fold order that keeps every
+    * kernel's results bit-identical — and its `side` state. Only the tp != p
+    * records are shuffled, so the gathered blocks, read by both sides of the
+    * split, are persisted. On a cut-free layout (`g.cut == 0`) no record may leave
     * its partition, so there is no shuffle: the apply zips the gathered
     * blocks with the layout as narrow dependencies, in the same fold order,
     * and a record addressed elsewhere fails the task instead of being
@@ -883,36 +868,20 @@ object GatherScatter {
       Iterator.single(apply(vm, inIdx, blocks, old))
     }
     val next =
-      if (g.cut == 0) {
-        val own = (lIt: Iterator[(Int, (Int, T))]) => {
+      if (g.cut == 0)
+        g.meta.zipPartitions(gathered, side, preservesPartitioning = true) { (mIt, lIt, oIt) =>
           val p = TaskContext.getPartitionId()
-          lIt.map { case (tp, b) => if (tp != p) throw cutFree(p, tp); b }
+          run(mIt, lIt.map { case (tp, b) => if (tp != p) throw cutFree(p, tp); b }, oIt.next())
         }
-        if (side == null)
-          g.meta.zipPartitions(gathered, preservesPartitioning = true) {
-            (mIt, lIt) => run(mIt, own(lIt), null.asInstanceOf[S])
-          }
-        else
-          g.meta.zipPartitions(gathered, side, preservesPartitioning = true) {
-            (mIt, lIt, oIt) => run(mIt, own(lIt), oIt.next())
-          }
-      } else {
-        val remote = gathered.mapPartitionsWithIndex(
+      else
+        gathered.mapPartitionsWithIndex(
             (p, it) => it.filter(_._1 != p), preservesPartitioning = false)
           .partitionBy(new IdPartitioner(g.numPartitions))
-        val split = (lIt: Iterator[(Int, (Int, T))], rIt: Iterator[(Int, (Int, T))]) => {
-          val p = TaskContext.getPartitionId()
-          lIt.collect { case (tp, b) if tp == p => b } ++ rIt.map(_._2)
-        }
-        if (side == null)
-          remote.zipPartitions(gathered, g.meta, preservesPartitioning = true) {
-            (rIt, lIt, mIt) => run(mIt, split(lIt, rIt), null.asInstanceOf[S])
+          .zipPartitions(gathered, g.meta, side, preservesPartitioning = true) {
+            (rIt, lIt, mIt, oIt) =>
+              val p = TaskContext.getPartitionId()
+              run(mIt, lIt.collect { case (tp, b) if tp == p => b } ++ rIt.map(_._2), oIt.next())
           }
-        else
-          remote.zipPartitions(gathered, g.meta, side, preservesPartitioning = true) {
-            (rIt, lIt, mIt, oIt) => run(mIt, split(lIt, rIt), oIt.next())
-          }
-      }
     Step(next, if (g.cut == 0) null else gathered, broadcasts)
   }
 
@@ -923,61 +892,99 @@ object GatherScatter {
       s"partition $p addressed a block to partition $tp on a layout built cut-free " +
       "(PrGraph.cut == 0): the layout does not match its measured cut")
 
-  /** The ⊕ of the scalar gather and fold with its identity: GraphMat's
+  /** The ⊕ of a scalar program with its identity: GraphMat's
     * `reduce_function`, specialized to the two the CSR kernels use. */
   private[engine] sealed abstract class Monoid(val zero: Double)
   private[engine] case object Sum extends Monoid(0.0)
   private[engine] case object Min extends Monoid(Double.PositiveInfinity)
 
+  /** The ⊗ of a scalar program: GraphMat's `process_message`, specialized
+    * to the two the CSR kernels use: `PerDegree`, the message times its
+    * source's 1/out-degree, and `Plus(k, weighted)`, the message plus k,
+    * plus the edge's weight when `weighted`. Each maps ⊕'s identity to
+    * itself (0 · x = 0, +∞ + k = +∞, and the sum kernels add k = 0), so a
+    * vertex that sends nothing contributes nothing. */
+  private[engine] sealed abstract class Times
+  private[engine] case object PerDegree extends Times
+  private[engine] final case class Plus(k: Double, weighted: Boolean = false) extends Times
+
   /**
-   * The scalar gather, written once. Per partition, `contrib` is the
-   * kernel's ⊗: the dense per-local-source contributions, or null when no
-   * source here is active. `hot` gives the per-`hotLocal` contributions of
-   * the hub-shard edges, or null when no hub is active; it is called only
-   * on blocks that have hot edges. Each target block is the ⊕-scatter of
-   * its edges (plus the per-edge weight when `useW`, weighted Min only);
-   * the hub-shard edges were routed here by dst, so they scatter into the
-   * partition's own block, after its edges, unless every hub contribution
-   * is ⊕'s identity. Emits (targetPartition, (sourcePartition, packed block
-   * aligned to outIds)) for every block with a slot off ⊕'s identity.
-   * Skipping identity contributions is exact — `acc + 0.0 == acc` for the
-   * sums, which start at +0.0 and never go negative, and
-   * `min(acc, +∞) == acc` — and for the positive-contribution sum kernels
-   * (delta PageRank, the peel) it is their sparse frontier.
+   * One superstep of a scalar vertex program, written once. `send` gives
+   * each vertex's message, aligned to `VertexMeta.ids`: ⊕'s identity for a
+   * vertex that sends nothing, and null for a partition where no vertex
+   * sends. Per partition, each local source's message goes through ⊗, each
+   * target block is the ⊕-scatter of its edges, and the hub-shard edges,
+   * routed here by dst, scatter the ⊗ of the broadcast hub mirror (`send`
+   * read at the hot vertices' home slots) into the partition's own block,
+   * after its edges. Blocks whose every slot is ⊕'s identity are not
+   * emitted. That skip is exact: `acc + 0.0 == acc` for the sums, which
+   * start at +0.0 and never go negative, and `min(acc, +∞) == acc`; for
+   * the sparse kernels (the (min,+) fixpoint, delta PageRank, the peel) it
+   * is their frontier. The blocks then go through `exchange`, and each
+   * receiver's ⊕-fold reaches `apply` with the partition's layout and its
+   * `side` state.
    */
-  private[engine] def gather[S](g: PrGraph, state: RDD[S], op: Monoid, useW: Boolean = false)(
-      contrib: (S, CsrBlock, VertexMeta) => Array[Double],
-      hot: CsrBlock => Array[Double]): RDD[(Int, (Int, Array[Double]))] = {
-    val sum = op eq Sum
+  private[engine] def program[S, T: ClassTag, R: ClassTag](
+      g: PrGraph, state: RDD[S], op: Monoid, times: Times, side: RDD[T])(
+      send: S => Array[Double])(
+      apply: (VertexMeta, Array[Double], T) => R): Step[R] = {
     val zero = op.zero
-    state.zipPartitions(g.csr, g.verts, preservesPartitioning = false) { (sIt, cIt, vIt) =>
-      val blk = cIt.next()
-      val c = contrib(sIt.next(), blk, vIt.next())
-      val p = TaskContext.getPartitionId()
-      val out = new Array[Array[Double]](blk.outIds.length)
-      def block(tp: Int) = {
-        val o = new Array[Double](if (blk.outIds(tp) == null) 0 else blk.outIds(tp).length)
-        if (!sum) java.util.Arrays.fill(o, zero)
-        o
-      }
-      var tp = 0
-      while (c != null && tp < out.length) {
-        if (blk.outIds(tp) != null) {
-          out(tp) = block(tp)
-          scatter(sum, c, blk.edgeSrcIdx(tp), blk.edgeOutIdx(tp),
-            if (useW) blk.edgeW(tp) else null, out(tp))
+    val weighted = times match { case Plus(_, w) => w; case PerDegree => false }
+    val hot = if (g.hotIds.isEmpty) null else state.sparkContext.broadcast(
+      hubMirror(g, state) { (st, ls) =>
+        val m = send(st)
+        if (m == null) Array.fill(ls.length)(zero) else ls.map(li => m(li))
+      })
+    val gathered = state.zipPartitions(g.csr, g.verts, preservesPartitioning = false) {
+      (sIt, cIt, vIt) =>
+        val blk = cIt.next(); val vm = vIt.next()
+        val m = send(sIt.next())
+        val p = TaskContext.getPartitionId()
+        val out = new Array[Array[Double]](blk.outIds.length)
+        def block(tp: Int) = {
+          val o = new Array[Double](if (blk.outIds(tp) == null) 0 else blk.outIds(tp).length)
+          if (op ne Sum) java.util.Arrays.fill(o, zero)
+          o
         }
-        tp += 1
-      }
-      val hc = if (blk.hotEdgeSrcIdx.length > 0) hot(blk) else null
-      if (hc != null && offZero(hc, zero)) {
-        if (out(p) == null) out(p) = block(p)
-        scatter(sum, hc, blk.hotEdgeSrcIdx, blk.hotEdgeOutIdx,
-          if (useW) blk.hotEdgeW else null, out(p))
-      }
-      Iterator.range(0, out.length).filter(tp => out(tp) != null && offZero(out(tp), zero))
-        .map(tp => (tp, (p, out(tp))))
+        if (m != null) {
+          val c = messages(times, m, vm.srcPrIdx, blk.invDeg)
+          var tp = 0
+          while (tp < out.length) {
+            if (blk.outIds(tp) != null) {
+              out(tp) = block(tp)
+              scatter(op, c, blk.edgeSrcIdx(tp), blk.edgeOutIdx(tp),
+                if (weighted) blk.edgeW(tp) else null, out(tp))
+            }
+            tp += 1
+          }
+        }
+        if (blk.hotEdgeSrcIdx.length > 0) {
+          val h = messages(times, hot.value, blk.hotLocal, blk.hotLocalInvDeg)
+          if (offZero(h, zero)) {
+            if (out(p) == null) out(p) = block(p)
+            scatter(op, h, blk.hotEdgeSrcIdx, blk.hotEdgeOutIdx,
+              if (weighted) blk.hotEdgeW else null, out(p))
+          }
+        }
+        Iterator.range(0, out.length).filter(tp => out(tp) != null && offZero(out(tp), zero))
+          .map(tp => (tp, (p, out(tp))))
     }
+    exchange(g, gathered, side, hot) { (vm, inIdx, blocks, old) =>
+      apply(vm, fold(op, vm.nRecv, inIdx, blocks), old)
+    }
+  }
+
+  /** ⊗ of the messages `m(at(i))` of the sources `i`, whose 1/out-degrees
+    * are `invDeg`. */
+  private def messages(t: Times, m: Array[Double], at: Array[Int],
+                       invDeg: Array[Double]): Array[Double] = {
+    val c = new Array[Double](at.length)
+    var i = 0
+    t match {
+      case PerDegree => while (i < c.length) { c(i) = m(at(i)) * invDeg(i); i += 1 }
+      case Plus(k, _) => while (i < c.length) { c(i) = m(at(i)) + k; i += 1 }
+    }
+    c
   }
 
   /** Whether some slot of `a` differs from `zero`. */
@@ -990,32 +997,20 @@ object GatherScatter {
   /** `o(eo(e)) ⊕= c(es(e))`, plus `ws(e)` when `ws` is non-null (weighted
     * Min only), over one block's edges: ⊕ and the weight are picked once
     * per block, never per edge. */
-  private def scatter(sum: Boolean, c: Array[Double], es: Array[Int], eo: Array[Int],
+  private def scatter(op: Monoid, c: Array[Double], es: Array[Int], eo: Array[Int],
                       ws: Array[Double], o: Array[Double]): Unit = {
     var e = 0
-    if (sum) while (e < es.length) { o(eo(e)) += c(es(e)); e += 1 }
+    if (op eq Sum) while (e < es.length) { o(eo(e)) += c(es(e)); e += 1 }
     else if (ws == null)
       while (e < es.length) { val x = c(es(e)); if (x < o(eo(e))) o(eo(e)) = x; e += 1 }
     else
       while (e < es.length) { val x = c(es(e)) + ws(e); if (x < o(eo(e))) o(eo(e)) = x; e += 1 }
   }
 
-  /** The mirrored values of a block's hot sources, aligned to `hotLocal`;
-    * `perDegree` multiplies each by its hub's 1/globalDegree. */
-  private[engine] def hotValues(blk: CsrBlock, mirrored: Array[Double],
-                                perDegree: Boolean = false): Array[Double] = {
-    val h = new Array[Double](blk.hotLocal.length)
-    var i = 0
-    if (perDegree)
-      while (i < h.length) { h(i) = mirrored(blk.hotLocal(i)) * blk.hotLocalInvDeg(i); i += 1 }
-    else while (i < h.length) { h(i) = mirrored(blk.hotLocal(i)); i += 1 }
-    h
-  }
-
   /** ⊕ of the received blocks into a dense per-receiver accumulator that
     * starts at ⊕'s identity. */
-  private[engine] def fold(op: Monoid, nRecv: Int, inIdx: Array[Array[Int]],
-                           blocks: Iterator[(Int, Array[Double])]): Array[Double] = {
+  private def fold(op: Monoid, nRecv: Int, inIdx: Array[Array[Int]],
+                   blocks: Iterator[(Int, Array[Double])]): Array[Double] = {
     val sum = op eq Sum
     val acc = new Array[Double](nRecv)
     if (!sum) java.util.Arrays.fill(acc, op.zero)
@@ -1045,16 +1040,6 @@ object GatherScatter {
     }
     arr
   }
-
-  /** The projection of a value vector onto the given local indices. */
-  private val scalarAt = (r: Array[Double], ls: Array[Int]) => ls.map(li => r(li))
-
-  /** The broadcast hub mirror of a scalar projection of `state` (`at` as
-    * in [[hubMirror]]); null on hubless graphs, whose gathers never read it. */
-  private[engine] def mirror[S](g: PrGraph, state: RDD[S])
-                               (at: (S, Array[Int]) => Array[Double]): Broadcast[Array[Double]] =
-    if (g.hotIds.isEmpty) null
-    else state.sparkContext.broadcast(hubMirror(g, state)(at))
 
   /**
    * A CSR run, written once: the superstep loop, then the run's result job.
@@ -1088,7 +1073,9 @@ object GatherScatter {
    * newest truncation point at or before it, which later states read as
    * their lineage root; the last segment's are freed after the result job,
    * which past 16 supersteps makes the result its own lineage root first.
-   * An `init` the caller persisted stays the caller's to free.
+   * An `init` the caller persisted stays the caller's to free. A run whose
+   * job fails frees every state, gathered block and broadcast it made, and
+   * its result, before it rethrows.
    *
    * With `cp` ([[Checkpoints]]), a committed checkpoint replaces `init`
    * (`lift` turns its saved vectors into a state), and a due checkpoint
@@ -1135,74 +1122,68 @@ object GatherScatter {
         states.foreach(st => if ((st ne keep) && (st ne root)) st.unpersist(blocking = false))
         states = states.filter(st => (st eq keep) || (st eq root))
       }
-      // the supersteps since the last barrier, oldest first: (superstep,
-      // state, changed count)
-      var batch = Vector.empty[(Int, RDD[S], LongAccumulator)]
-      var t0 = System.nanoTime()
-      while (!converged && it < maxIterations) {
-        val changed = if (counted) sc.longAccumulator(s"changed-$it") else null
-        val s = step(state, it, changed)
-        state = s.next.persist(StorageLevel.MEMORY_AND_DISK)
-        it += 1
-        if (it % 16 == 0) state.localCheckpoint()
-        steps ::= s
-        states ::= state
-        batch :+= ((it, state, changed))
-        if (cp.isDefined || (if (it < maxIterations) it % 4 == 0 else counted)) {
-          // the barrier's one job: a due checkpoint's state write, else a
-          // count; a checkpointed run's batch is this one superstep
-          val written = ck.due(it)
-          if (written) save(ck.statePath(it), state) else state.count()
-          // the stop: the batch's first superstep that changed no vertex
-          val stop = if (counted) batch.indexWhere(_._3.sum == 0L) else -1
-          val landed = if (stop < 0) batch else batch.take(stop + 1)
-          it = landed.last._1
-          state = landed.last._2
-          if (it % 16 == 0) root = state
-          free(keep = state)
-          // the batch's wall, split evenly over its supersteps
-          val millis = (System.nanoTime() - t0) / 1000000 / batch.size
-          landed.foreach { case (i, _, c) =>
-            val n = if (counted) c.sum else -1L
-            converged = n == 0L
-            ck.commit(i, converged, n, millis, written)(save(_, state))
+      var out: RDD[B] = null
+      // a failed job leaves nothing this run persisted behind
+      try {
+        // the supersteps since the last barrier, oldest first: (superstep,
+        // state, changed count)
+        var batch = Vector.empty[(Int, RDD[S], LongAccumulator)]
+        var t0 = System.nanoTime()
+        while (!converged && it < maxIterations) {
+          val changed = if (counted) sc.longAccumulator(s"changed-$it") else null
+          val s = step(state, it, changed)
+          state = s.next.persist(StorageLevel.MEMORY_AND_DISK)
+          it += 1
+          if (it % 16 == 0) state.localCheckpoint()
+          steps ::= s
+          states ::= state
+          batch :+= ((it, state, changed))
+          if (cp.isDefined || (if (it < maxIterations) it % 4 == 0 else counted)) {
+            // the barrier's one job: a due checkpoint's state write, else a
+            // count; a checkpointed run's batch is this one superstep
+            val written = ck.due(it)
+            if (written) save(ck.statePath(it), state) else state.count()
+            // the stop: the batch's first superstep that changed no vertex
+            val stop = if (counted) batch.indexWhere(_._3.sum == 0L) else -1
+            val landed = if (stop < 0) batch else batch.take(stop + 1)
+            it = landed.last._1
+            state = landed.last._2
+            if (it % 16 == 0) root = state
+            free(keep = state)
+            // the batch's wall, split evenly over its supersteps
+            val millis = (System.nanoTime() - t0) / 1000000 / batch.size
+            landed.foreach { case (i, _, c) =>
+              val n = if (counted) c.sum else -1L
+              converged = n == 0L
+              ck.commit(i, converged, n, millis, written)(save(_, state))
+            }
+            batch = Vector.empty
+            t0 = System.nanoTime()
           }
-          batch = Vector.empty
-          t0 = System.nanoTime()
         }
+        out = state.zipPartitions(g.verts, preservesPartitioning = true) { (sIt, vIt) =>
+          Iterator.single(result(vIt.next().ids, sIt.next()))
+        }.persist(StorageLevel.MEMORY_AND_DISK)
+        if (it >= 16) out.localCheckpoint()
+        out.count()
+        (out, it)
+      } catch {
+        case e: Throwable => if (out != null) out.unpersist(blocking = false); throw e
+      } finally {
+        root = null
+        free(keep = null)
       }
-      val out = state.zipPartitions(g.verts, preservesPartitioning = true) { (sIt, vIt) =>
-        Iterator.single(result(vIt.next().ids, sIt.next()))
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-      if (it >= 16) out.localCheckpoint()
-      out.count()
-      root = null
-      free(keep = null)
-      (out, it)
     }
   }
 
-  /** PageRank's gather: ⊗ = rank / out-degree, ⊕ = +. `hotPr` is the hub
-    * mirror (null on hubless graphs, never read then). */
-  private def rankGather(g: PrGraph, ranks: RDD[Array[Double]],
-                         hotPr: Broadcast[Array[Double]]): RDD[(Int, (Int, Array[Double]))] =
-    gather(g, ranks, Sum)((pr, blk, vm) => {
-      val c = new Array[Double](blk.srcs.length)
-      var i = 0
-      while (i < c.length) { c(i) = pr(vm.srcPrIdx(i)) * blk.invDeg(i); i += 1 }
-      c
-    }, blk => hotValues(blk, hotPr.value, perDegree = true))
-
-  /** One superstep: gather → split exchange → dense apply. When `tol` >= 0,
-    * counts into `changedAcc` the vertices that moved more than tol; the
-    * fixed-budget `pageRank` passes a negative tol and no count. In-degree-0
-    * slots keep their previous value, which is their initial 0.3. `hotPr`
-    * is the hub mirror (null on hubless graphs, never dereferenced then). */
+  /** One PageRank superstep: every vertex sends its rank, ⊗ = rank /
+    * out-degree, ⊕ = +. When `tol` >= 0, counts into `changedAcc` the
+    * vertices that moved more than tol; the fixed-budget `pageRank` passes
+    * a negative tol and no count. In-degree-0 slots keep their previous
+    * value, which is their initial 0.3. */
   private def superstep(g: PrGraph, ranks: RDD[Array[Double]], alpha: Double,
-                        tol: Double, changedAcc: LongAccumulator,
-                        hotPr: Broadcast[Array[Double]]): Step[Array[Double]] =
-    exchange(g, rankGather(g, ranks, hotPr), ranks, hotPr) { (vm, inIdx, blocks, old) =>
-      val acc = fold(Sum, vm.nRecv, inIdx, blocks)
+                        tol: Double, changedAcc: LongAccumulator): Step[Array[Double]] =
+    program(g, ranks, Sum, PerDegree, ranks)(identity) { (vm, acc, old) =>
       val nV = vm.ids.length
       val newPr = new Array[Double](nV)
       var changed = 0L
@@ -1226,7 +1207,7 @@ object GatherScatter {
    */
   def pageRank(g: PrGraph, alpha: Double, iterations: Int): RDD[RankBlock] =
     iterate(g, Step(initState(g, 1, (_, _) => 0.3)), iterations, counted = false)(RankBlock) {
-      (ranks, _, _) => superstep(g, ranks, alpha, tol = -1.0, null, mirror(g, ranks)(scalarAt))
+      (ranks, _, _) => superstep(g, ranks, alpha, tol = -1.0, null)
     }._1
 
   /**
@@ -1243,10 +1224,8 @@ object GatherScatter {
     val base = initState(g, 1, (id, _) => if (isSource(id)) 1.0 else 0.0)
       .persist(StorageLevel.MEMORY_AND_DISK)
     // init pr0 = s; persisted here, so the loop leaves `base` to this caller
-    val ranks = iterate(g, Step(base), iterations, counted = false)(RankBlock) { (ranks, _, _) =>
-      val hotPr = mirror(g, ranks)(scalarAt)
-      exchange(g, rankGather(g, ranks, hotPr), base, hotPr) { (vm, inIdx, blocks, b) =>
-        val acc = fold(Sum, vm.nRecv, inIdx, blocks)
+    try iterate(g, Step(base), iterations, counted = false)(RankBlock) { (ranks, _, _) =>
+      program(g, ranks, Sum, PerDegree, base)(identity) { (vm, acc, b) =>
         val nV = vm.ids.length
         val newPr = new Array[Double](nV)
         var i = 0
@@ -1257,8 +1236,7 @@ object GatherScatter {
         newPr
       }
     }._1
-    base.unpersist(blocking = false)
-    ranks
+    finally base.unpersist(blocking = false)
   }
 
   /**
@@ -1275,44 +1253,46 @@ object GatherScatter {
                         cp: Option[CheckpointConfig] = None): (RDD[RankBlock], Int) =
     iterate[Array[Double], RankBlock](g, Step(initState(g, 1, (_, _) => 0.3)), maxIterations,
         counted = true, cp, identity, identity)(RankBlock) {
-      (ranks, _, changed) => superstep(g, ranks, alpha, tol, changed, mirror(g, ranks)(scalarAt))
+      (ranks, _, changed) => superstep(g, ranks, alpha, tol, changed)
     }
 
   // ---- the (min, +) semiring on the same static exchange -----------------
   //
   // GraphMat's core claim is vertex-programs-as-semiring-SpMV
   // (`include/GMDP/...`, VLDB'15 §3). The PageRank path above is the (+, ×)
-  // instance; this is the (min, +) instance through the same `gather` with
-  // ⊕ = Min: ⊗ = v(src) + delta (+ w(e) when weighted), absent
-  // contributions = +∞, the semiring zero; apply: min(old, acc) with a
-  // changed count; loop to the exact fixpoint. Two bundled users: HashMin
-  // connected components (delta = 0, bidirectional edges —
-  // `src/ConnectedComponents.cpp`) and BFS levels (delta = 1, out-edges —
-  // `src/BFS.cpp:40-156`). Unlike PageRank's float ⊕, min is idempotent, so
-  // a task retry or speculative duplicate cannot corrupt the fixpoint at
-  // all; the one-sided accumulator argument of `iterate`'s scaladoc holds
-  // here too.
+  // instance; this is the (min, +) instance through the same `program` with
+  // ⊕ = Min and ⊗ = `Plus(delta)`, v(src) + delta (`Plus(0, weighted)`,
+  // v(src) + w(e), for SSSP); absent contributions = +∞, the semiring zero;
+  // apply: min(old, acc) with a changed count; loop to the exact fixpoint.
+  // Two bundled users: HashMin connected components (delta = 0,
+  // bidirectional edges — `src/ConnectedComponents.cpp`) and BFS levels
+  // (delta = 1, out-edges — `src/BFS.cpp:40-156`). Unlike PageRank's float
+  // ⊕, min is idempotent, so a task retry or speculative duplicate cannot
+  // corrupt the fixpoint at all; the one-sided accumulator argument of
+  // `iterate`'s scaladoc holds here too.
   //
   // Values ride the rank plumbing as Doubles; vertex LABELS (CC) must
   // therefore be exact in a Double — enforced as ids < 2^53 at init.
   //
-  // Internal per-superstep state: values plus "did any vertex here change
-  // last superstep". Because min is MONOTONE and IDEMPOTENT, a partition
-  // whose vertices are all unchanged would re-send contributions every
-  // receiver has already folded — min(old, same) = old — so its ⊗ is null
-  // and it skips its whole gather: a partition-granularity sparse frontier
-  // (GraphMat's ACTIVE_ONLY sparse vectors, `src/BFS.cpp` frontier
-  // semantics, at block grain). On single-source BFS/SSSP most partitions
-  // go quiet after the first superstep and each level touches only the
-  // frontier's blocks. The hub-shard edges are gated separately: hub
-  // sources are HOMED elsewhere, so their edges fire when the MIRROR
-  // changed, even in otherwise-quiet partitions.
+  // Internal per-superstep state: values plus, per vertex, "did it change
+  // last superstep". Only a vertex that changed sends its value; the rest
+  // send +∞, and a partition where none changed skips its whole gather: a
+  // per-vertex sparse frontier (GraphMat's ACTIVE_ONLY sparse vectors,
+  // `src/BFS.cpp` frontier semantics), the same send rule as delta PageRank
+  // and the peel. It gives the results and changed counts of a run where
+  // every vertex sends every superstep: a vertex that did not change last
+  // superstep already sent its current value in the superstep after it
+  // last changed (or in superstep 0, where every vertex sends), and min
+  // values never rise, so a resend cannot lower any receiver. On
+  // single-source BFS/SSSP each level touches only the frontier's blocks.
+  // Hubs follow the same rule through the mirror: a hub that did not
+  // change sends +∞, and its shard edges stay quiet.
 
   /** Run the (min, +) propagation from `init` to its exact fixpoint.
     * Returns (value blocks, supersteps run). Vertices never reached keep
     * their init value (+∞ for single-source inits). With `cp` (see
-    * [[CheckpointConfig]]), only VALUES are saved — resume re-activates every
-    * partition, which is sound because min is monotone and idempotent
+    * [[CheckpointConfig]]), only VALUES are saved — resume marks every
+    * vertex changed, which is sound because min is monotone and idempotent
     * (re-sent contributions fold to the values already held), so a resumed
     * run reaches the identical fixpoint with identical changed counts, at
     * the cost of one dense gather on its first superstep. */
@@ -1322,56 +1302,38 @@ object GatherScatter {
                   cp: Option[CheckpointConfig] = None): (RDD[RankBlock], Int) = {
     require(!useWeights || g.weighted,
       "weighted (min,+) needs build(..., weighted = true)")
-    val sc = g.csr.sparkContext
-    // superstep 0 marks every partition active (correct for any init, and —
-    // see scaladoc — for any RESUMED state); thereafter a partition stays
-    // active only while its vertices change
-    val active = (a: Array[Double]) => (a, true)
-    // the hub MIRROR's own frontier: hot shard edges fire only on supersteps
-    // where some hot vertex's value actually moved (compared driver-side —
-    // the mirror is tiny by construction)
-    var prevHot: Array[Double] = null
-    // unweighted: fold the uniform delta into the per-src ⊗ once; weighted:
-    // the ⊗ is per EDGE (v(src) + w(e)), and the gather adds w(e)
-    val base = if (useWeights) 0.0 else delta
-    iterate[(Array[Double], Boolean), RankBlock](g,
-        Step(init.mapPartitions(_.map(active), preservesPartitioning = true)), maxIterations,
-        counted = true, cp, _._1, active)((ids, v) => RankBlock(ids, v._1)) { (vals, _, changed) =>
-      val cur = if (g.hotIds.isEmpty) null else hubMirror(g, vals)((v, ls) => scalarAt(v._1, ls))
-      val hotActive = cur != null && (prevHot == null || !java.util.Arrays.equals(prevHot, cur))
-      prevHot = cur
-      val hotV = if (cur == null) null else sc.broadcast(cur)
-      val gathered = gather(g, vals, Min, useWeights)((v, blk, vm) =>
-        if (!v._2) null
-        else {
-          val c = new Array[Double](blk.srcs.length)
-          var i = 0
-          while (i < c.length) { c(i) = v._1(vm.srcPrIdx(i)) + base; i += 1 }
-          c
-        }, blk =>
-        if (!hotActive) null
-        else {
-          val h = hotValues(blk, hotV.value)
-          var i = 0
-          while (i < h.length) { h(i) += base; i += 1 }
-          h
-        })
-      exchange(g, gathered, vals, hotV) { (vm, inIdx, blocks, o) =>
-        val old = o._1
-        val acc = fold(Min, vm.nRecv, inIdx, blocks)
+    // superstep 0 marks every vertex changed (correct for any init, and —
+    // see scaladoc — for any RESUMED state)
+    val all = (a: Array[Double]) => (a, Array.fill(a.length)(true))
+    val send = (v: (Array[Double], Array[Boolean])) => {
+      val (x, moved) = v
+      val m = new Array[Double](x.length)
+      var any = false
+      var i = 0
+      while (i < m.length) {
+        if (moved(i)) { m(i) = x(i); any = true } else m(i) = Double.PositiveInfinity
+        i += 1
+      }
+      if (any) m else null
+    }
+    val times = if (useWeights) Plus(0.0, weighted = true) else Plus(delta)
+    iterate[(Array[Double], Array[Boolean]), RankBlock](g,
+        Step(init.mapPartitions(_.map(all), preservesPartitioning = true)), maxIterations,
+        counted = true, cp, _._1, all)((ids, v) => RankBlock(ids, v._1)) { (vals, _, changed) =>
+      program(g, vals, Min, times, vals)(send) { case (vm, acc, (old, _)) =>
         val nV = vm.ids.length
         val out = new Array[Double](nV)
+        val moved = new Array[Boolean](nV)
         var n = 0L
         var i = 0
         while (i < vm.nRecv) {
-          val nv = if (acc(i) < old(i)) acc(i) else old(i)
-          out(i) = nv
-          if (nv < old(i)) n += 1
+          if (acc(i) < old(i)) { out(i) = acc(i); moved(i) = true; n += 1 }
+          else out(i) = old(i)
           i += 1
         }
         while (i < nV) { out(i) = old(i); i += 1 }
         changed.add(n)
-        (out, n > 0L)
+        (out, moved)
       }
     }
   }
@@ -1611,7 +1573,9 @@ object GatherScatter {
                        cp: Option[CheckpointConfig] = None): (RDD[RankBlock], Int) =
     iterate[Array[Double], RankBlock](g, Step(idLabels(g)), iterations,
         counted = true, cp, identity, identity)(RankBlock) {
-      (labels, _, changed) => labelStep(g, labels, changed, mirror(g, labels)(scalarAt))
+      (labels, _, changed) => labelStep(g, labels, changed,
+        if (g.hotIds.isEmpty) null
+        else labels.sparkContext.broadcast(hubMirror(g, labels)((l, ls) => ls.map(li => l(li)))))
     }
 
   private def singleSourceInit(g: PrGraph, source: Long): RDD[Array[Double]] =

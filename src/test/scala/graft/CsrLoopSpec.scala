@@ -260,6 +260,29 @@ class CsrLoopSpec extends AnyFunSuite {
     }
   }
 
+  test("a CSR run whose superstep job fails frees what it persisted") {
+    // a layout with a cut that claims none fails its first superstep job
+    var leaks = Seq.empty[String]
+    for (undirected <- Seq(false, true)) withGraph(chains, undirected) { g =>
+      assert(g.cut > 0L)
+      val bad = g.copy(cut = 0L)
+      val runs: Seq[(String, () => Any)] =
+        if (undirected) Seq("connectedComponents" -> (() => GatherScatter.connectedComponents(bad)))
+        else Seq(
+          "pageRankConverged" -> (() => GatherScatter.pageRankConverged(bad, 0.3, 1e-5)),
+          "personalizedPageRank" -> (() => GatherScatter.personalizedPageRank(bad, isChainHead, 0.3, 10)))
+      for ((name, run) <- runs) {
+        val before = s.sparkContext.getPersistentRDDs.keySet.toSet
+        val e = intercept[org.apache.spark.SparkException](run())
+        assert(e.getMessage.contains("cut-free"), s"$name: ${e.getMessage}")
+        val left = s.sparkContext.getPersistentRDDs.keySet.toSet -- before
+        left.foreach(id => s.sparkContext.getPersistentRDDs(id).unpersist(false))
+        if (left.nonEmpty) leaks :+= s"$name left ${left.size} persisted RDDs"
+      }
+    }
+    assert(leaks.isEmpty, leaks.mkString("; "))
+  }
+
   test("a cut-free pageRankConverged runs one stage per job") {
     // chains inside conversation-shaped ids (c << 20 | i): keyShift 20
     // keeps every chain in one partition, so the layout has no cut
