@@ -197,16 +197,13 @@ object DeltaStepping {
     //    a full light+heavy pass through every empty bucket, `:163-178`;
     //    processing an empty bucket is a provable no-op: every vertex sends
     //    +inf, which never relaxes).
-    //  - each round frees the previous round's checkpointed states (their
-    //    storage is RDD-level, invisible to Dataset.unpersist) — without
-    //    this a many-bucket run pins one state snapshot per phase per round.
-    val sc = graph.edges.sparkSession.sparkContext
-    var prevRdds: Iterable[org.apache.spark.rdd.RDD[_]] = Nil
+    //  - each round releases the previous round's two runs — without this
+    //    a many-bucket run pins one state snapshot per phase per round.
+    var prev: Seq[RunResult] = Nil
     var bid = 0L
     var rounds = 0
     var done = false
     while (!done && rounds < maxBuckets) {
-      val rddsBefore = sc.getPersistentRDDs.keySet
       // light phase to convergence (setAllActive before each run, `:166`)
       val light = Superstep.run(lightG, state.withColumn("active", lit(true)),
         spec(bid.toInt, -1))
@@ -218,12 +215,14 @@ object DeltaStepping {
       val nxt = state.agg(
         min(when(col("bucket") > bid && col("bucket") =!= Long.MaxValue,
           col("bucket"))).as("nxt")).head()
-      prevRdds.foreach(_.unpersist(blocking = false))
-      prevRdds = sc.getPersistentRDDs.collect {
-        case (id, r) if !rddsBefore.contains(id) => r
-      }
+      prev.foreach(_.release())
+      prev = Seq(light, heavy)
       if (nxt.isNullAt(0)) done = true else bid = nxt.getLong(0)
     }
+    // the last heavy run's state is the result; nothing else reads the
+    // last light run or the two subgraphs' views
+    prev.headOption.foreach(_.release())
+    lightG.unpersistAll(); heavyG.unpersistAll()
     (state.select("id", "dist", "bucket"), rounds)
   }
 }

@@ -86,32 +86,15 @@ object Betweenness {
           just2.as("just"),
           exists(just2, x => x).as("_changed"))
       })
-    // track the forward run's checkpointed state so it can be freed once the
-    // backward phase has consumed it (its storage is RDD-level, invisible to
-    // Dataset.unpersist — same pattern as DeltaStepping's round cleanup)
-    val sc = graph.edges.sparkSession.sparkContext
-    // materialize the clustered edge view AND the vertex cache BEFORE the
-    // baseline snapshot so the diff below can never free the graph's own
-    // reusable caches (the vertex buffer RDD only registers on first action)
-    graph.edgesBySrc.count()
-    graph.vertices.count()
-    val rddsBefore = sc.getPersistentRDDs.keySet
-    val forward = Superstep.run(graph, init, fwd).state
-    // snapshot the forward phase's RDD ids NOW — the backward run persists
-    // its own checkpoints after this point and those must survive (the last
-    // one backs the returned frame)
-    val fwdRddIds = sc.getPersistentRDDs.keySet -- rddsBefore
-    def freeForward(): Unit =
-      sc.getPersistentRDDs
-        .filter { case (k, _) => fwdRddIds.contains(k) }
-        .values.foreach(_.unpersist(blocking = false))
+    val fwdRun = Superstep.run(graph, init, fwd)
+    val forward = fwdRun.state
 
     val maxRow = forward.agg(max(array_max(col("dep")))).head()
     val maxD = if (maxRow.isNullAt(0)) 0 else maxRow.getInt(0)
     if (maxD <= 0) {
       // sources reach nothing (or the graph is empty): betweenness is zero
       val out = forward.select(col("id"), lit(0.0).as("bc")).localCheckpoint()
-      freeForward()
+      fwdRun.release()
       return out
     }
 
@@ -148,7 +131,7 @@ object Betweenness {
     val back = Superstep.run(graph, bInit, bwd).state
     // backward's supersteps are all materialized (eager per-superstep
     // checkpoints) — the forward state has no remaining reader
-    freeForward()
+    fwdRun.release()
 
     // bc(v) = sum_k delta_k(v), excluding each source's own row
     back.select(col("id"),

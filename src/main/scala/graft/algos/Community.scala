@@ -21,8 +21,10 @@ object Modularity {
   /**
    * One-row (m, n_communities, modularity) for `labels` = (id, label).
    * Degrees count the undirected simple view (each canon edge contributes
-   * one to both endpoints); vertices absent from `labels` would silently
-   * drop edges, so callers pass a label per vertex (LP/CC output does).
+   * one to both endpoints). Every edge endpoint needs exactly one label
+   * (LP/CC output has one per vertex): a missing label would silently drop
+   * edges and a repeated one would count them twice, so either fails the
+   * call with an IllegalArgumentException.
    */
   def score(graph: LinkGraph, labels: DataFrame): DataFrame = {
     // `tagged` feeds THREE consumers (edge count, degree fold, intra fold);
@@ -33,10 +35,19 @@ object Modularity {
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .filter(col("a") =!= col("b")).distinct()
-    val la = labels.select(col("id").as("a"), col("label").as("la"))
-    val lb = labels.select(col("id").as("b"), col("label").as("lb"))
-    val tagged = canon.join(la, "a").join(lb, "b").localCheckpoint()
-    val m = tagged.count().toDouble
+    // one row per labelled id with its label count; the outer joins keep
+    // an unlabelled endpoint as a null count
+    def tag(end: String) = labels.groupBy(col("id").as(end))
+      .agg(first("label").as(s"l$end"), count(lit(1)).as(s"n$end"))
+    val tagged = canon.join(tag("a"), Seq("a"), "left_outer")
+      .join(tag("b"), Seq("b"), "left_outer").localCheckpoint()
+    // the edge count and the label check are one job
+    val counts = tagged.agg(count(lit(1)),
+      count(when(coalesce(col("na"), lit(0L)) =!= 1L ||
+                 coalesce(col("nb"), lit(0L)) =!= 1L, 1))).head()
+    require(counts.getLong(1) == 0L,
+      s"Modularity.score: ${counts.getLong(1)} edges have an endpoint without exactly one label")
+    val m = counts.getLong(0).toDouble
     // d_c: every canon edge credits 1 to each endpoint's community
     val degSum = tagged.select(explode(array(col("la"), col("lb"))).as("c"))
       .groupBy("c").agg(count(lit(1)).as("d"))

@@ -2,9 +2,8 @@ package graft.algos
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
-import graft.core.LinkGraph
+import graft.core.{LinkGraph, StorageScope}
 
 /**
  * HITS (Kleinberg's hubs-and-authorities) by synchronous power iteration
@@ -38,43 +37,38 @@ object Hits {
     * — without it each half's plan nests the entire iteration history and
     * ANALYSIS time grows per iteration (measured: half walls 0.6 s → 9.5 s
     * by iteration 5); the old eager form truncated too but paid a second
-    * action per half (4 jobs/iteration → now 2). Checkpoint storage is
-    * RDD-level (invisible to Dataset.unpersist), so each iteration's
-    * leftovers are freed one iteration behind via a getPersistentRDDs
-    * diff; the final pair stays for the caller (session sweep frees it). */
+    * action per half (4 jobs/iteration → now 2). Each iteration's two
+    * raw-sum caches and two checkpoints sit in one [[StorageScope]], freed
+    * one iteration behind; the final pair stays for the caller (session
+    * sweep frees it). */
   def run(graph: LinkGraph, iterations: Int = 5): DataFrame = {
     require(iterations >= 1, "HITS needs at least one iteration")
     val verts = graph.vertices // cached by LinkGraph
-    val sc = graph.edges.sparkSession.sparkContext
     var hub = verts.select(col("id"), lit(1.0).as("hub"))
     var auth: DataFrame = null
-    var lastIterIds: Set[Int] = Set.empty
+    var last = new StorageScope
     for (it <- 1 to iterations) {
-      val before = sc.getPersistentRDDs.keySet
+      val scope = new StorageScope
       // authority half: pull hub mass along in-edges (join keyed on src —
       // the CSR view — then aggregate on dst); the norm agg is the action
-      val araw = graph.edgesBySrc
+      val araw = scope.persist(graph.edgesBySrc
         .join(hub.withColumnRenamed("id", "src"), "src")
-        .groupBy(col("dst").as("id")).agg(sum("hub").as("x"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .groupBy(col("dst").as("id")).agg(sum("hub").as("x")))
       val an = math.sqrt(araw.agg(sum(col("x") * col("x"))).head().getDouble(0))
-      auth = verts.join(araw, Seq("id"), "left_outer")
-        .select(col("id"), (coalesce(col("x"), lit(0.0)) / an).as("auth"))
-        .localCheckpoint(false) // lazy: flat plan now, materialized by the next agg
+      // lazy: flat plan now, materialized by the next agg
+      auth = scope.checkpoint(verts.join(araw, Seq("id"), "left_outer")
+        .select(col("id"), (coalesce(col("x"), lit(0.0)) / an).as("auth")), eager = false)
       // hub half: pull authority mass along out-edges
-      val hraw = graph.edgesByDst
+      val hraw = scope.persist(graph.edgesByDst
         .join(auth.withColumnRenamed("id", "dst"), "dst")
-        .groupBy(col("src").as("id")).agg(sum("auth").as("x"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .groupBy(col("src").as("id")).agg(sum("auth").as("x")))
       val hn = math.sqrt(hraw.agg(sum(col("x") * col("x"))).head().getDouble(0))
-      hub = verts.join(hraw, Seq("id"), "left_outer")
-        .select(col("id"), (coalesce(col("x"), lit(0.0)) / hn).as("hub"))
-        .localCheckpoint(false)
+      hub = scope.checkpoint(verts.join(hraw, Seq("id"), "left_outer")
+        .select(col("id"), (coalesce(col("x"), lit(0.0)) / hn).as("hub")), eager = false)
       // everything the PREVIOUS iteration pinned has now had its last read
       // (its hub checkpoint was materialized by this iteration's first agg)
-      lastIterIds.foreach(id =>
-        sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-      lastIterIds = (sc.getPersistentRDDs.keySet -- before).toSet
+      last.free()
+      last = scope
     }
     hub.join(auth, "id").select(col("id"), col("hub"), col("auth"))
   }

@@ -3,8 +3,8 @@ package graft.algos
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.core.LinkGraph
-import graft.engine.{Activity, Direction, Reduce, Superstep, VertexProgramSpec}
+import graft.core.{LinkGraph, StorageScope}
+import graft.engine.{Activity, Direction, Reduce, RunResult, Superstep, VertexProgramSpec}
 import graft.functions.VectorBitOr.vector_bitor
 
 /**
@@ -94,10 +94,16 @@ object Neighborhood {
       st.agg(sum(estimate(col("sk"), k))).head().getDouble(0)
     val out = Seq.newBuilder[(Int, Double)]
     out += ((0, total(state)))
+    // each hop's run reads the last hop's state once, at its start
+    var last: Option[RunResult] = None
     for (h <- 1 to maxH) {
-      state = Superstep.run(graph, state, spec(1)).state
+      val run = Superstep.run(graph, state, spec(1))
+      last.foreach(_.release())
+      last = Some(run)
+      state = run.state
       out += ((h, total(state)))
     }
+    last.foreach(_.release())
     out.result()
   }
 
@@ -110,16 +116,23 @@ object Neighborhood {
     var state = initState(graph, k)
     var acc = state
       .select(col("id"), lit(0.0).as("hc"), estimate(col("sk"), k).as("eprev"))
+    // the last hop's run and sum are read once more, by this hop's
+    var last: Option[RunResult] = None
+    var lastAcc = new StorageScope
     for (h <- 1 to maxH) {
-      state = Superstep.run(graph, state, spec(1)).state
-      acc = acc
+      val run = Superstep.run(graph, state, spec(1))
+      state = run.state
+      val accScope = new StorageScope
+      acc = accScope.checkpoint(acc
         .join(state.select(col("id"), estimate(col("sk"), k).as("eh")), "id")
         .select(
           col("id"),
           (col("hc") + greatest(lit(0.0), col("eh") - col("eprev")) / h).as("hc"),
-          col("eh").as("eprev"))
-        .localCheckpoint(true)
+          col("eh").as("eprev")))
+      last.foreach(_.release()); lastAcc.free()
+      last = Some(run); lastAcc = accScope
     }
+    last.foreach(_.release())
     acc.select(col("id"), col("hc").as("harmonic"))
   }
 

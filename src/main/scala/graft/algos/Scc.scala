@@ -4,8 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.core.LinkGraph
-import graft.engine.{Activity, Direction, Reduce, Superstep, VertexProgramSpec}
+import graft.core.{LinkGraph, StorageScope}
+import graft.engine.{Activity, Direction, Reduce, RunResult, Superstep, VertexProgramSpec}
 
 /**
  * Strongly connected components by forward-backward min-label refinement —
@@ -43,9 +43,9 @@ import graft.engine.{Activity, Direction, Reduce, Superstep, VertexProgramSpec}
  */
 object Scc {
 
-  /** HashMin to fixpoint over `g` in `dir`; returns (id, lbl). Identical
-    * program to ConnectedComponents.run but honoring edge direction. */
-  private def minFix(g: LinkGraph, dir: Direction): DataFrame = {
+  /** HashMin to fixpoint over `g` in `dir`; state (id, active, lbl).
+    * Identical program to ConnectedComponents.run but honoring edge direction. */
+  private def minFix(g: LinkGraph, dir: Direction): RunResult = {
     val init = g.vertices.select(
       col("id"), lit(true).as("active"), col("id").as("lbl"))
     val spec = VertexProgramSpec(
@@ -60,7 +60,7 @@ object Scc {
           when(changed, col("acc")).otherwise(col("lbl")).as("lbl"),
           changed.as("_changed"))
       })
-    Superstep.run(g, init, spec).state.select("id", "lbl")
+    Superstep.run(g, init, spec)
   }
 
   /**
@@ -74,15 +74,15 @@ object Scc {
     // expensive upstream derivation (the transcript fixtures run five window
     // functions) must not be re-evaluated per round
     val edges = graph.edges.persist(StorageLevel.MEMORY_AND_DISK)
-    var state = graph.vertices
-      .select(col("id"), lit(0L).as("bf"), lit(0L).as("bb"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    var states = new StorageScope
+    var state = states.persist(graph.vertices
+      .select(col("id"), lit(0L).as("bf"), lit(0L).as("bb")))
     var round = 0
     var changed = 1L
     while (changed > 0) {
       if (round >= maxOuter) {
         edges.unpersist(blocking = false)
-        state.unpersist(blocking = false)
+        states.free()
         throw new IllegalStateException(s"Scc: no fixpoint after $maxOuter rounds")
       }
       // edges whose endpoints share a block — the only ones either phase may
@@ -94,8 +94,10 @@ object Scc {
         .filter(col("sbf") === col("dbf") && col("sbb") === col("dbb"))
         .select("src", "dst", "weight")
       val sub = LinkGraph(inBlock, graph.numPartitions)
-      val f = minFix(sub, Direction.Out).withColumnRenamed("lbl", "f")
-      val b = minFix(sub, Direction.In).withColumnRenamed("lbl", "b")
+      val fRun = minFix(sub, Direction.Out)
+      val bRun = minFix(sub, Direction.In)
+      val f = fRun.state.select(col("id"), col("lbl").as("f"))
+      val b = bRun.state.select(col("id"), col("lbl").as("b"))
       // vertices isolated in the subgraph keep themselves as both labels
       val next = state
         .join(f, Seq("id"), "left_outer")
@@ -107,13 +109,15 @@ object Scc {
            coalesce(col("b"), col("id")) =!= col("bb")).as("chg"))
         .persist(StorageLevel.MEMORY_AND_DISK)
       changed = next.filter(col("chg")).count()
-      val prev = state
       // truncate lineage at each outer round: the next round's joins stack
       // on this frame, and Superstep's own checkpoints don't cover it
-      state = next.select("id", "nbf", "nbb")
-        .toDF("id", "bf", "bb").localCheckpoint()
-      prev.unpersist(blocking = false)
+      val stateScope = new StorageScope
+      state = stateScope.checkpoint(next.select("id", "nbf", "nbb")
+        .toDF("id", "bf", "bb"))
+      states.free()
+      states = stateScope
       next.unpersist(blocking = false)
+      fRun.release(); bRun.release()
       sub.unpersistAll()
       round += 1
     }
@@ -138,18 +142,6 @@ object Scc {
   def runFast(graph: LinkGraph, maxOuter: Int = 64): DataFrame = {
     import graft.engine.GatherScatter
     val spark = graph.edges.sparkSession
-    val sc = spark.sparkContext
-    // localCheckpoint storage is RDD-level — invisible to Dataset.unpersist
-    // (see Betweenness.scala) — so each round's survivor edge set and state
-    // snapshot are freed through a getPersistentRDDs diff, or round 1's
-    // near-|E| copy (and every later round's) stays pinned until driver GC
-    def tracked(df: DataFrame): (DataFrame, Set[Int]) = {
-      val before = sc.getPersistentRDDs.keySet
-      val out = df.localCheckpoint(true)
-      (out, (sc.getPersistentRDDs.keySet -- before).toSet)
-    }
-    def freeIds(ids: Iterable[Int]): Unit =
-      ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
     val nP = graph.numPartitions
     val edges = graph.edges.persist(StorageLevel.MEMORY_AND_DISK)
     // The in-block filter's input SHRINKS round over round: an edge dropped
@@ -160,8 +152,11 @@ object Scc {
     // survivors, not the full edge table — the join input follows the
     // recursion's remainder instead of rescanning |E| every round.
     var curEdges = edges
-    var prevInBlockIds: Set[Int] = Set.empty
-    var stateIds: Set[Int] = Set.empty
+    // each round's survivor edge set and state snapshot, freed one round
+    // behind, or round 1's near-|E| copy (and every later round's) stays
+    // pinned until driver GC
+    var survivors = new StorageScope
+    var states = new StorageScope
     // done = F(v) == B(v): the shared label m both reaches v and is reached
     // by v inside the block, so m ∈ SCC(v); and F ≤ min(SCC) always (the SCC
     // min reaches v), so m IS min(SCC(v)) — v's final label. Every member of
@@ -175,18 +170,16 @@ object Scc {
     // rather than graph.vertices: the latter would materialize the graph's
     // whole clustered-view cache just to enumerate ids — runFast routes
     // nothing through that view (its fixpoints run on per-round CSR builds)
-    var state = edges
+    var state = states.persist(edges
       .select(explode(array(col("src"), col("dst"))).as("id")).distinct()
       .select(col("id"), lit(0L).as("bf"), lit(0L).as("bb"),
-        lit(false).as("done"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        lit(false).as("done")))
     var round = 0
     var changed = 1L
     while (changed > 0) {
       if (round >= maxOuter) {
         edges.unpersist(blocking = false)
-        freeIds(prevInBlockIds); freeIds(stateIds)
-        state.unpersist(blocking = false)
+        survivors.free(); states.free()
         throw new IllegalStateException(s"Scc: no fixpoint after $maxOuter rounds")
       }
       val live = state.filter(!col("done"))
@@ -200,9 +193,10 @@ object Scc {
       // edge — skip the two joins AND the ~|E| checkpoint and feed the
       // already-persisted edge table to the first fixpoints directly (r06;
       // at the 16M-edge rehearsal this join+checkpoint was ~1/3 of the leg)
-      val (inBlock, inBlockIds) =
-        if (round == 0) (edges.select("src", "dst", "weight"), Set.empty[Int])
-        else tracked(curEdges
+      val inBlockScope = new StorageScope
+      val inBlock =
+        if (round == 0) edges.select("src", "dst", "weight")
+        else inBlockScope.checkpoint(curEdges
           .join(srcB, "src").join(dstB, "dst")
           .filter(col("sbf") === col("dbf") && col("sbb") === col("dbb"))
           .select("src", "dst", "weight"))
@@ -253,27 +247,24 @@ object Scc {
         sum(when(col("nbf") === col("nbb"), 0L).otherwise(1L))).head()
       val liveLeft = if (sig.isNullAt(1)) 0L else sig.getLong(1)
       changed = if (liveLeft == 0L || sig.isNullAt(0)) 0L else sig.getLong(0)
-      val prev = state
-      val (stNew, stNewIds) = tracked(
+      val stateScope = new StorageScope
+      state = stateScope.checkpoint(
         nextP.select(col("id"), col("nbf").as("bf"), col("nbb").as("bb"),
           (col("nbf") === col("nbb")).as("done")))
-      state = stNew
-      prev.unpersist(blocking = false) // round 0's plain persist; later rounds' RDDs freed below
-      freeIds(stateIds)
-      stateIds = stNewIds
+      states.free()
+      states = stateScope
       nextP.unpersist(blocking = false)
       // this round's in-block survivors BECOME the next round's join input;
       // the previous survivor checkpoint (fully consumed by this round's
-      // derivation and fixpoints) is released one round behind, at the RDD
-      // level (Dataset.unpersist cannot see localCheckpoint storage)
-      freeIds(prevInBlockIds)
-      prevInBlockIds = inBlockIds
+      // derivation and fixpoints) is released one round behind
+      survivors.free()
+      survivors = inBlockScope
       curEdges = inBlock
       toFree.foreach(_.apply())
       round += 1
     }
     edges.unpersist(blocking = false)
-    freeIds(prevInBlockIds)
+    survivors.free()
     state.select(col("id"), col("bf").as("scc"))
   }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.core.LinkGraph
+import graft.core.{LinkGraph, StorageScope}
 
 /**
  * Message direction — the reference's `edges_t` order flag
@@ -114,9 +114,14 @@ object IterationMetrics {
     }.toVector
 }
 
+/** A run's final `state` and its record. `state` reads storage the run
+  * pinned; `release()` frees that storage once nothing reads `state` any
+  * more (callers that hand `state` on leave it to the session). */
 final case class RunResult(
     state: DataFrame, iterations: Int, converged: Boolean,
-    metrics: Seq[IterationMetrics])
+    metrics: Seq[IterationMetrics])(storage: StorageScope) {
+  def release(): Unit = storage.free()
+}
 
 object Superstep {
 
@@ -130,15 +135,12 @@ object Superstep {
     val spark = init.sparkSession
     val sc = spark.sparkContext
 
-    // `cached` is always the exact DataFrame persist() was called on (the
-    // only handle unpersist() frees); `state` may be a cheap projection of it.
-    // localCheckpoint()ed states need separate handling: their storage is an
-    // RDD-level persist that Dataset.unpersist (a CacheManager lookup) cannot
-    // free, so we capture the backing RDD handles via a before/after diff of
-    // getPersistentRDDs and unpersist those directly — otherwise every
-    // superstep's serialized blocks linger until driver GC notices. Its rows
-    // per partition are the run's lineage record.
+    // `cached` is the last materialized frame and `scope` the storage behind
+    // it; `state` may be a cheap projection of it. Each materialization gets
+    // a fresh scope and frees the previous one. Its rows per partition are
+    // the run's lineage record.
     var cached: DataFrame = null
+    var scope = new StorageScope
     Using.resource(new Checkpoints(cp, sc, spec.maxIterations, n)(() =>
         cached.queryExecution.toRdd.mapPartitions(it => Iterator.single(it.size.toLong))
           .collect().toSeq.map(rows => Seq("rows" -> rows)))) { ck =>
@@ -165,11 +167,9 @@ object Superstep {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.conf.set("spark.sql.shuffle.partitions", n.toString)
     try {
-    cached = start.repartition(n, col("id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    cached = scope.persist(start.repartition(n, col("id")))
     cached.count()
     var state = cached
-    var cachedRdds: Iterable[org.apache.spark.rdd.RDD[_]] = Nil
 
     var iter = resumed.fold(0)(_.iteration)
     var converged = resumed.exists(_.converged)
@@ -238,17 +238,14 @@ object Superstep {
         // ~|V| live row objects resident per superstep and G1 old-gen
         // collection dominates task time (measured 70-90% GC); serialized =
         // one byte buffer per partition block.
-        val rddsBefore = sc.getPersistentRDDs.keySet
-        val persisted = applied.localCheckpoint(false, StorageLevel.MEMORY_AND_DISK_SER)
+        val next = new StorageScope
+        val persisted = next.checkpoint(applied, eager = false, StorageLevel.MEMORY_AND_DISK_SER)
         changed =
           if (spec.trackChanges) persisted.filter(col("_changed")).count()
           else { persisted.count(); -1L }
 
-        cached.unpersist()
-        cachedRdds.foreach(_.unpersist(blocking = false))
-        cachedRdds = sc.getPersistentRDDs.collect {
-          case (id, r) if !rddsBefore.contains(id) => r
-        }
+        scope.free()
+        scope = next
         cached = persisted
         state = persisted.drop("_changed")
         sinceMat = 0
@@ -264,17 +261,16 @@ object Superstep {
       if (ck.commit(iter, converged, changed, (System.nanoTime() - t0) / 1000000)(
             cp.get.store.writeState(state, _))) {
         // the run continues from the snapshot it just wrote
-        val reloaded = cp.get.store.readState(spark, ck.statePath(iter))
-          .persist(StorageLevel.MEMORY_AND_DISK)
+        val next = new StorageScope
+        val reloaded = next.persist(cp.get.store.readState(spark, ck.statePath(iter)))
         reloaded.count()
-        cached.unpersist()
-        cachedRdds.foreach(_.unpersist(blocking = false))
-        cachedRdds = Nil
+        scope.free()
+        scope = next
         cached = reloaded
         state = reloaded
       }
     }
-    RunResult(state, iter, converged, ck.metrics)
+    RunResult(state, iter, converged, ck.metrics)(scope)
     } finally {
       // exception-safe: a failed superstep must not leave the whole session
       // with AQE off (the toggles are loop-scoped, not session-scoped)

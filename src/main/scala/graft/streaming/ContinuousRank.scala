@@ -1,12 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.algos.DeltaPageRank
-import graft.core.LinkGraph
+import graft.core.{LinkGraph, StorageScope}
 
 /**
  * Continuous PageRank over a GROWING link graph — the streaming composition
@@ -31,33 +30,21 @@ object ContinuousRank {
     * State is BOUNDED (r06): each micro-batch folds into ONE materialized
     * accumulated-edge table and ONE rank snapshot; everything the previous
     * batch pinned — the old accumulated copy, the old snapshot, the refresh
-    * run's intermediate checkpoints and the batch graph's clustered views —
-    * is freed before `update` returns, so the logical plan size and the
-    * pinned-block count stay CONSTANT in the batch count. (The former
-    * ArrayBuffer-of-checkpoints union grew linearly and pinned every
-    * historical batch for the query's life.) localCheckpoint storage is
-    * RDD-level — invisible to `Dataset.unpersist` — so frees go through a
-    * before/after diff of `getPersistentRDDs` (the Betweenness pattern).
-    * The graph's partition count follows the accumulated edge count
-    * (LinkGraph.partitionsForRows): early small batches don't pay a
+    * run's storage and the batch graph's clustered views — is freed before
+    * `update` returns, so the logical plan size and the pinned-block count
+    * stay CONSTANT in the batch count. (The former ArrayBuffer-of-checkpoints
+    * union grew linearly and pinned every historical batch for the query's
+    * life.) The accumulated table and the snapshot each live in their own
+    * [[StorageScope]], and the refresh run is released through its
+    * `RunResult`. The graph's partition count follows the accumulated edge
+    * count (LinkGraph.partitionsForRows): early small batches don't pay a
     * full-width shuffle per superstep, and growth re-widens it. */
   final class RankMaintainer(numPartitions: Int = 0, alpha: Double = 0.3) {
     private var acc: Option[DataFrame] = None
-    private var accRdds: Set[Int] = Set.empty
+    private var accScope = new StorageScope
     private var accRows = 0L
     private var ranks: Option[DataFrame] = None
-    private var rankRdds: Set[Int] = Set.empty
-
-    /** Eager localCheckpoint + the RDD ids it pinned (for RDD-level free). */
-    private def tracked(df: DataFrame): (DataFrame, Set[Int]) = {
-      val sc = df.sparkSession.sparkContext
-      val before = sc.getPersistentRDDs.keySet
-      val out = df.localCheckpoint(true)
-      (out, (sc.getPersistentRDDs.keySet -- before).toSet)
-    }
-
-    private def free(sc: SparkContext, ids: Iterable[Int]): Unit =
-      ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
+    private var rankScope = new StorageScope
 
     /** Fold one micro-batch of `(src, dst[, weight])` edges in and return the
       * refreshed `(id, pagerank)`. A micro-batch DataFrame is only valid
@@ -68,37 +55,39 @@ object ContinuousRank {
         if (batchEdges.columns.contains("weight"))
           batchEdges.select(col("src"), col("dst"), col("weight"))
         else batchEdges.select(col("src"), col("dst"))
-      val sc = cols.sparkSession.sparkContext
-      val (mat, matIds) = tracked(cols)
+      val matScope = new StorageScope
+      val mat = matScope.checkpoint(cols)
       val matRows = mat.count()
-      if (matRows == 0L) { free(sc, matIds); return current }
+      if (matRows == 0L) { matScope.free(); return current }
       accRows += matRows
-      val (merged, mergedIds) = acc match {
+      val merged = acc match {
         case Some(prev) =>
-          val (u, ids) = tracked(prev.unionByName(mat))
+          val mergedScope = new StorageScope
+          val u = mergedScope.checkpoint(prev.unionByName(mat))
           // both inputs are folded into the fresh checkpoint — free them
-          free(sc, accRdds); free(sc, matIds)
-          (u, ids)
-        case None => (mat, matIds)
+          accScope.free(); matScope.free()
+          accScope = mergedScope
+          u
+        case None => accScope = matScope; mat
       }
-      acc = Some(merged); accRdds = mergedIds
+      acc = Some(merged)
       val parts =
         if (numPartitions > 0) numPartitions
         else LinkGraph.partitionsForRows(mat.sparkSession, accRows)
       val g = LinkGraph(merged, parts)
-      val beforeRun = sc.getPersistentRDDs.keySet
       val res = ranks match {
         case Some(prev) => DeltaPageRank.warmStart(g, prev, alpha)
         case None       => DeltaPageRank.run(g, alpha)
       }
-      val (next, nextIds) = tracked(res.state.select(col("id"), col("pagerank")))
-      // this batch's graph views (Dataset-level caches) and the refresh
-      // run's remaining checkpoints (RDD-level) are fully consumed by `next`
+      val nextScope = new StorageScope
+      val next = nextScope.checkpoint(res.state.select(col("id"), col("pagerank")))
+      // this batch's graph views and the refresh run's storage are fully
+      // consumed by `next`
       g.unpersistAll()
-      free(sc, sc.getPersistentRDDs.keySet -- beforeRun -- nextIds)
+      res.release()
       // the previous batch's rank snapshot has no remaining reader
-      free(sc, rankRdds)
-      ranks = Some(next); rankRdds = nextIds
+      rankScope.free()
+      ranks = Some(next); rankScope = nextScope
       next
     }
 
@@ -112,9 +101,8 @@ object ContinuousRank {
     /** Release every cache/checkpoint the maintainer still holds. Callers
       * must materialize anything they need from `current` first. */
     def close(): Unit = synchronized {
-      val sc = org.apache.spark.sql.SparkSession.active.sparkContext
-      free(sc, accRdds); acc = None; accRdds = Set.empty; accRows = 0L
-      free(sc, rankRdds); ranks = None; rankRdds = Set.empty
+      accScope.free(); acc = None; accRows = 0L
+      rankScope.free(); ranks = None
     }
   }
 
